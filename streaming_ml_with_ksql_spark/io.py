@@ -116,17 +116,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 if f.dataType.typeName() == "timestamp_ntz"]
     for c in ntz_cols:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
-    try:
-        # Driver-side exact row count from the parquet footer (no Spark
-        # job) — operators/sizing.py uses it to right-size CPU-kernel
-        # fan-out width without a count() job. Attached to the FINAL
-        # frame (withColumn returns new objects). Best-effort: any
-        # failure just drops the hint and sizing falls back to count().
-        import pyarrow.parquet as _pq
-
-        setattr(df, "_sg_row_hint", _pq.ParquetFile(path).metadata.num_rows)
-    except Exception:
-        pass
     return df
 
 

@@ -75,9 +75,9 @@ def _coerce(col: Column, typ: str, name: str) -> Column:
     """Signature type mapping (reference: MlflowModelResolver.java:62-76):
     string→string, integer/long→int, anything else is an error."""
     if typ == "string":
-        return col.cast("string").alias(name)
+        return col.cast("string")
     if typ in ("integer", "long"):
-        return col.cast("int").alias(name)
+        return col.cast("int")
     raise ValueError(f"Unsupported signature type for {name}: {typ}")
 
 
@@ -92,10 +92,11 @@ def score(
     """Score a DataFrame whose columns already match the model signature by
     name — the preferred whole-frame path (SURVEY.md U2 option 1)."""
     model, signature = resolve_model(model_name, stage, models_dir)
-    sig_names = {s["name"] for s in signature["inputs"]}
-    prepared = df.select(
-        *[F.col(c) for c in df.columns if c not in sig_names],
-        *[_coerce(F.col(s["name"]), s["type"], s["name"]) for s in signature["inputs"]],
+    prepared = df.withColumns(
+        {
+            s["name"]: _coerce(F.col(s["name"]), s["type"], s["name"])
+            for s in signature["inputs"]
+        }
     )
     out_name = signature["outputs"][0]["name"]
     scored = model.transform(prepared)
@@ -122,36 +123,42 @@ def predict_arrays(
     (error→NULL, PredictUdf.java:60-63) — implemented as a validity
     predicate + dummy fill so the whole frame still scores in one JVM pass
     rather than per-row try/except, and the model never sees nulls.
+
+    Caller columns that share a signature name step aside under a private
+    name while the filled model inputs take it, and come back untouched;
+    scoring itself is :func:`score`.
     """
-    model, signature = resolve_model(model_name, stage, models_dir)
+    _, signature = resolve_model(model_name, stage, models_dir)
     str_names = [s["name"] for s in signature["inputs"] if s["type"] == "string"]
     int_names = [s["name"] for s in signature["inputs"] if s["type"] != "string"]
+    clash = {c: f"__in_{c}" for c in df.columns if c in str_names + int_names}
+    strs = F.col(clash.get(str_array_col, str_array_col))
+    ints = F.col(clash.get(int_array_col, int_array_col))
 
     # F.get (not getItem): out-of-bounds must yield NULL, not an ANSI
     # INVALID_ARRAY_INDEX error — NULLs then trip the validity predicate.
-    raw_str = [F.get(F.col(str_array_col), i) for i in range(len(str_names))]
-    raw_int = [
-        F.get(F.col(int_array_col), i).cast("int") for i in range(len(int_names))
-    ]
+    raw_str = [F.get(strs, i) for i in range(len(str_names))]
+    raw_int = [F.get(ints, i).cast("int") for i in range(len(int_names))]
     valid = (
-        F.col(str_array_col).isNotNull()
-        & (F.size(str_array_col) >= len(str_names))
-        & F.col(int_array_col).isNotNull()
-        & (F.size(int_array_col) >= len(int_names))
+        strs.isNotNull()
+        & (F.size(strs) >= len(str_names))
+        & ints.isNotNull()
+        & (F.size(ints) >= len(int_names))
     )
     for c in raw_str + raw_int:
         valid = valid & c.isNotNull()
 
-    exploded = df.withColumn("__valid", valid)
-    for n, c in zip(str_names, raw_str):
-        exploded = exploded.withColumn(n, F.coalesce(c, F.lit("UNKNOWN")))
-    for n, c in zip(int_names, raw_int):
-        exploded = exploded.withColumn(n, F.coalesce(c, F.lit(0)))
-
-    out_name = signature["outputs"][0]["name"]
-    scored = model.transform(exploded)
-    result = scored.withColumn(
-        output_col,
-        F.when(F.col("__valid"), F.col(out_name)).otherwise(F.lit(None).cast("string")),
+    fills = {n: F.coalesce(c, F.lit("UNKNOWN")) for n, c in zip(str_names, raw_str)}
+    fills.update({n: F.coalesce(c, F.lit(0)) for n, c in zip(int_names, raw_int)})
+    inputs = df.withColumnsRenamed(clash).withColumns({"__valid": valid, **fills})
+    scored = score(
+        inputs, model_name, stage=stage, models_dir=models_dir, output_col="__pred"
     )
-    return result.select(*df.columns, output_col)
+    pred = F.when(F.col("__valid"), F.col("__pred")).otherwise(
+        F.lit(None).cast("string")
+    )
+    return (
+        scored.withColumn(output_col, pred)
+        .drop("__valid", "__pred", *fills)
+        .withColumnsRenamed({v: k for k, v in clash.items()})
+    )

@@ -48,6 +48,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import sizing
+from .text import EXPAND_ROWS_PER_TASK
+
 __all__ = [
     "train_bpe",
     "train_bpe_sampled",
@@ -75,12 +78,12 @@ FIXED_MERGES: tuple[tuple[str, str], ...] = (
 
 def _words(docs: DataFrame, text_col: str) -> DataFrame:
     """Corpus → one row per word occurrence (lowercased, whitespace
-    split, SEP scrubbed). Fanned out first (text._fan_out rationale):
-    tokenize/merge cost follows rows × chars, not input bytes."""
-    from .text import _fan_out
-
+    split, SEP scrubbed). Fanned out first (text.EXPAND_ROWS_PER_TASK
+    rationale): tokenize/merge cost follows rows × chars, not input bytes."""
     cleaned = F.replace(F.lower(F.col(text_col)), F.lit(SEP), F.lit(""))
-    return _fan_out(docs.select("doc_id", text_col), source=docs).select(
+    return sizing.fan_out(
+        docs.select("doc_id", text_col), rows_per_task=EXPAND_ROWS_PER_TASK
+    ).select(
         F.col("doc_id"),
         F.explode(F.split(cleaned, r"\s+")).alias("w"),
     ).filter(F.length("w") > 0)

@@ -27,10 +27,10 @@ Reference parity: the reference's ML surface is train-then-score
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from . import sizing
 
 __all__ = ["quantize_vectors", "kmeans_fixed_point", "dbscan_from_pairs"]
 
@@ -39,12 +39,10 @@ __all__ = ["quantize_vectors", "kmeans_fixed_point", "dbscan_from_pairs"]
 # distributed assign/update loop — the graph-kernel discipline (r14,
 # guide §4.2): every operation is exact int64 arithmetic, so the kernel
 # replays the loop bit-for-bit while saving iters x (broadcast-assign +
-# posexplode-update + centroid checkpoint) jobs. ~160 MB of int64 cells;
-# env-overridable. Larger inputs keep the distributed loop (the bound is
-# a data-size constant, not a core-count constant).
-KMEANS_SINGLE_TASK_MAX_CELLS = int(
-    os.environ.get("SPARK_GRAFT_KMEANS_SINGLE_TASK_CELLS", "20000000")
-)
+# posexplode-update + centroid checkpoint) jobs. ~160 MB of int64 cells.
+# Larger inputs keep the distributed loop (the bound is a data-size
+# constant, not a core-count constant).
+KMEANS_SINGLE_TASK_MAX_CELLS = 20_000_000
 
 # Rep-row + directed-edge count below which dbscan_from_weighted_pairs
 # resolves the rep-level roles/labels in ONE Arrow task (weighted
@@ -53,10 +51,8 @@ KMEANS_SINGLE_TASK_MAX_CELLS = int(
 # relational cascade bit-for-bit) instead of ~10 join/aggregate jobs
 # whose decision frames are re-executed per consumer. Members (the
 # corpus-scale side) are NEVER collected — they attach by one broadcast
-# join. Env-overridable; larger graphs keep the relational path.
-DBSCAN_SINGLE_TASK_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_DBSCAN_SINGLE_TASK_ROWS", "1000000")
-)
+# join. Larger graphs keep the relational path.
+DBSCAN_SINGLE_TASK_MAX_ROWS = 1_000_000
 
 
 def _dbscan_single_task_kernel(min_neighbors: int):
@@ -268,28 +264,29 @@ def kmeans_fixed_point(
     pts = quantize_vectors(
         emb, id_col=id_col, vec_col=vec_col, scale=scale
     ).localCheckpoint(eager=True)
-    if single_task is None:
-        # ONE aggregate on the materialized frame sizes the gate
-        # (ADVICE r14): ragged frames (min dim != max dim) would crash
-        # np.asarray in the kernel, so they provably fall through to the
-        # distributed loop; the cell bound charges the n x k distance
-        # matrix as well as the n x dims point matrix.
-        row = pts.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.size("qv")).alias("dmin"),
-            F.max(F.size("qv")).alias("dmax"),
-        ).first()
-        n, dmin, dmax = row["n"], row["dmin"], row["dmax"]
-        rect = dmin is not None and dmin == dmax
-        single_task = (
-            rect
-            and 0 < n * (max(dmax, 1) + k) < KMEANS_SINGLE_TASK_MAX_CELLS
-        )
-    if single_task:
-        return pts.coalesce(1).mapInPandas(
-            _kmeans_single_task_kernel(k, iters),
-            "vec_id long, cid long, dist long",
-        )
+    # ONE aggregate on the materialized frame sizes the gate (ADVICE
+    # r14): ragged frames (min dim != max dim) would crash np.asarray in
+    # the kernel, so they provably fall through to the distributed loop;
+    # the cell bound charges the n x k distance matrix as well as the
+    # n x dims point matrix.
+    row = pts.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(F.size("qv")).alias("dmin"),
+        F.max(F.size("qv")).alias("dmax"),
+    ).first()
+    n, dmin, dmax = row["n"], row["dmin"], row["dmax"]
+    fast = sizing.single_task(
+        pts,
+        _kmeans_single_task_kernel(k, iters),
+        "vec_id long, cid long, dist long",
+        name="kmeans",
+        max_rows=KMEANS_SINGLE_TASK_MAX_CELLS,
+        rows=n * (max(dmax or 0, 1) + k),
+        requires=dmin is not None and dmin == dmax,
+        force=single_task,
+    )
+    if fast is not None:
+        return fast
     cent = (
         pts.orderBy("vec_id")
         .limit(k)
@@ -494,20 +491,20 @@ def dbscan_from_weighted_pairs(
         F.col(a_col).cast("long").alias("u"),
         F.col(b_col).cast("long").alias("v"),
     ).localCheckpoint(eager=True)
-    if single_task is None:
-        single_task = (
-            mw.count() + 2 * e.count() < DBSCAN_SINGLE_TASK_MAX_ROWS
-        )
-    if single_task:
-        inp = mw.select(
-            "u", "m", F.lit(None).cast("long").alias("v")
-        ).unionByName(
-            e.select("u", F.lit(None).cast("long").alias("m"), "v")
-        )
-        rep_lab = inp.coalesce(1).mapInPandas(
-            _dbscan_single_task_kernel(min_neighbors),
-            "u long, role string, cluster_id long",
-        )
+    inp = mw.select("u", "m", F.lit(None).cast("long").alias("v")).unionByName(
+        e.select("u", F.lit(None).cast("long").alias("m"), "v")
+    )
+    rep_lab = sizing.single_task(
+        inp,
+        _dbscan_single_task_kernel(min_neighbors),
+        "u long, role string, cluster_id long",
+        name="dbscan",
+        max_rows=DBSCAN_SINGLE_TASK_MAX_ROWS,
+        # rep rows plus both directions of every eps edge
+        rows=mw.count() + 2 * e.count(),
+        force=single_task,
+    )
+    if rep_lab is not None:
         return members.join(F.broadcast(rep_lab), "u").select(
             F.col("id").alias(id_col), "role", "cluster_id"
         )

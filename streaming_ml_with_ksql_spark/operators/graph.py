@@ -48,10 +48,10 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from . import sizing
 
 __all__ = [
     "connected_components",
@@ -156,18 +156,13 @@ def _star_contract(
 
 # Directed-edge count below which connected_components takes the
 # single-task Arrow union-find fast path instead of the iterative loops
-# (~16 MB of edge longs; one executor task). Overridable for tests and
-# deployments via SPARK_GRAFT_CC_SINGLE_TASK_EDGES.
-CC_SINGLE_TASK_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_CC_SINGLE_TASK_EDGES", "1000000")
-)
+# (~16 MB of edge longs; one executor task).
+CC_SINGLE_TASK_MAX_EDGES = 1_000_000
 
 # Edge count below which hits_bipartite broadcast-hints its (vertex-
 # bounded) score frames into the per-round joins; above it the shuffled
-# joins stand. Env-overridable for deployments (guide §3.1).
-HITS_BROADCAST_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_HITS_BROADCAST_EDGES", "2000000")
-)
+# joins stand (guide §3.1).
+HITS_BROADCAST_MAX_EDGES = 2_000_000
 
 # Directed-edge count below which the iterative integer score loops
 # (pagerank, bfs_hops, hits_bipartite) take their single-task Arrow
@@ -177,10 +172,8 @@ HITS_BROADCAST_MAX_EDGES = int(
 # independent of summation order and partitioning, so one vectorized
 # numpy task replays the distributed loop bit-for-bit while saving
 # iters × (join + groupBy + checkpoint) jobs of fixed overhead.
-# Env-overridable for deployments; larger graphs keep the loops.
-ITER_SINGLE_TASK_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_ITER_SINGLE_TASK_EDGES", "1000000")
-)
+# Larger graphs keep the loops.
+ITER_SINGLE_TASK_MAX_EDGES = 1_000_000
 
 
 def _prep_sym_edges(batches):
@@ -428,18 +421,23 @@ def connected_components(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).localCheckpoint(eager=True)
     n_directed = e.count()
-    if n_directed < CC_SINGLE_TASK_MAX_EDGES:
+    # Schema follows the edge id type: integer graphs stay long,
+    # string-vertex graphs (part_entity_groups) stay string — the
+    # kernel's min/union order is the same in both (lexicographic for
+    # str == Spark F.min == DuckDB min).
+    id_t = e.schema["u"].dataType.simpleString()
+    resolved = sizing.single_task(
+        e,
+        _cc_single_task_kernel,
+        f"id {id_t}, component {id_t}",
+        name="cc",
+        max_rows=CC_SINGLE_TASK_MAX_EDGES,
+        rows=n_directed,
+    )
+    if resolved is not None:
         if stats is not None:
             stats["rounds"] = 0
             stats["single_task"] = True
-        # Schema follows the edge id type: integer graphs stay long,
-        # string-vertex graphs (part_entity_groups) stay string — the
-        # kernel's min/union order is the same in both (lexicographic
-        # for str == Spark F.min == DuckDB min).
-        id_t = e.schema["u"].dataType.simpleString()
-        resolved = e.coalesce(1).mapInPandas(
-            _cc_single_task_kernel, f"id {id_t}, component {id_t}"
-        )
         return (
             vertices.select(F.col(id_col))
             .join(
@@ -819,14 +817,18 @@ def pagerank(
     # partitioning-free — one vectorized kernel task replays the loop
     # bit-for-bit (pinned by parity test). Larger graphs loop unchanged
     # (the threshold is an edge-count bound, not a core-count constant).
-    if single_task is None:
-        single_task = 2 * p0.count() < ITER_SINGLE_TASK_MAX_EDGES
-    if single_task:
-        id_t = p0.schema["src"].dataType.simpleString()
-        return p0.coalesce(1).mapInPandas(
-            _pagerank_single_task_kernel(iters, scale),
-            f"node {id_t}, pr long",
-        )
+    id_t = p0.schema["src"].dataType.simpleString()
+    fast = sizing.single_task(
+        p0,
+        _pagerank_single_task_kernel(iters, scale),
+        f"node {id_t}, pr long",
+        name="pagerank",
+        # each pair symmetrizes into two directed edges
+        max_rows=ITER_SINGLE_TASK_MAX_EDGES // 2,
+        force=single_task,
+    )
+    if fast is not None:
+        return fast
     edges = p0.unionByName(
         p0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
@@ -931,14 +933,17 @@ def bfs_hops(
     # Single-task Arrow fast path — see pagerank (the min-propagation
     # twin: int64 min is commutative, so the kernel's reduceat equals
     # the loop's groupBy-min on any partitioning; parity-pinned).
-    if single_task is None:
-        single_task = 2 * p0.count() < ITER_SINGLE_TASK_MAX_EDGES
-    if single_task:
-        id_t = p0.schema["src"].dataType.simpleString()
-        return p0.coalesce(1).mapInPandas(
-            _bfs_single_task_kernel(iters, seed_mod),
-            f"node {id_t}, d long",
-        )
+    id_t = p0.schema["src"].dataType.simpleString()
+    fast = sizing.single_task(
+        p0,
+        _bfs_single_task_kernel(iters, seed_mod),
+        f"node {id_t}, d long",
+        name="bfs",
+        max_rows=ITER_SINGLE_TASK_MAX_EDGES // 2,
+        force=single_task,
+    )
+    if fast is not None:
+        return fast
     edges = p0.unionByName(
         p0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
@@ -1083,22 +1088,25 @@ def hits_bipartite(
     # vectorized kernel per returned side replays it bit-for-bit
     # (parity-pinned) instead of 2×rounds eager join+groupBy+checkpoint
     # jobs. Larger graphs keep the distributed rounds below.
-    if single_task is None:
-        single_task = n_edges < ITER_SINGLE_TASK_MAX_EDGES
-    if single_task:
-        ct = edges.schema[c].dataType.simpleString()
-        pt = edges.schema[p].dataType.simpleString()
-        e1 = edges.select(c, p)
-        return (
-            e1.coalesce(1).mapInPandas(
-                _hits_single_task_kernel(rounds, scale, "hub", c, p),
-                f"{c} {ct}, hs long",
-            ),
-            e1.coalesce(1).mapInPandas(
-                _hits_single_task_kernel(rounds, scale, "auth", c, p),
-                f"{p} {pt}, as_ long",
-            ),
+    gate = dict(
+        max_rows=ITER_SINGLE_TASK_MAX_EDGES, rows=n_edges, force=single_task
+    )
+    hubs = sizing.single_task(
+        edges,
+        _hits_single_task_kernel(rounds, scale, "hub", c, p),
+        f"{c} {edges.schema[c].dataType.simpleString()}, hs long",
+        name="hits_hub",
+        **gate,
+    )
+    if hubs is not None:
+        auths = sizing.single_task(
+            edges,
+            _hits_single_task_kernel(rounds, scale, "auth", c, p),
+            f"{p} {edges.schema[p].dataType.simpleString()}, as_ long",
+            name="hits_auth",
+            **gate,
         )
+        return hubs, auths
     # Scale-adaptive join strategy (guide §3.1): the score frames are
     # bounded by the vertex sets, so when the edge list is small enough
     # that its vertex sides certainly fit a broadcast, hint them — each

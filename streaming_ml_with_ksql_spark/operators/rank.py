@@ -36,15 +36,15 @@ future exact-quantile operator.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from . import sizing
 
 __all__ = [
     "global_row_number",
     "parallel_ntile",
-    "ntile_scores_single_task",
+    "ntile_scores",
 ]
 
 _LOW33 = (1 << 33) - 1
@@ -140,32 +140,33 @@ def parallel_ntile(
     return ranked.withColumn(out_col, tile.cast("int")).drop("__grn", "__tot")
 
 
-# Row count below which ntile_scores_single_task may be used instead of
-# repeated parallel_ntile passes (one Arrow task replaces per-score
-# range-shuffle + offsets jobs). Env-overridable; callers gate on a
-# MEASURED count of an already-materialized frame and keep the
-# distributed path above it.
-NTILE_SINGLE_TASK_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_NTILE_SINGLE_TASK_ROWS", "2000000")
-)
+# Row count below which ntile_scores runs every score in one Arrow task
+# instead of repeated parallel_ntile passes (one task replaces per-score
+# range-shuffle + offsets jobs).
+NTILE_SINGLE_TASK_MAX_ROWS = 2_000_000
 
 
-def ntile_scores_single_task(
+def ntile_scores(
     df: DataFrame,
     n_tiles: int,
     specs: list[tuple[str, list[tuple[str, str]]]],
+    *,
+    single_task: bool | None = None,
 ) -> DataFrame:
-    """ALL of ``specs``' NTILE scores in ONE Arrow task — the r14
-    single-task fast path for bounded decision frames (the RFM
-    customer aggregate): each spec is ``(out_col, [(key_col, "asc" |
+    """ALL of ``specs``' NTILE scores over a bounded decision frame (the
+    RFM customer aggregate): each spec is ``(out_col, [(key_col, "asc" |
     "desc"), ...])`` over NUMERIC NON-NULL key columns forming a total
-    order. Replays parallel_ntile's exact integer bucket arithmetic
-    (``q = total div n``, first ``r`` buckets hold ``q+1`` rows) over a
-    numpy lexsort permutation — a total order has exactly one sorted
+    order. The input frame should be materialized (localCheckpoint) by
+    the caller, so sizing it is a cached-RDD count.
+
+    Below ``NTILE_SINGLE_TASK_MAX_ROWS`` (r14 fast path) ONE Arrow task
+    replays parallel_ntile's exact integer bucket arithmetic (``q =
+    total div n``, first ``r`` buckets hold ``q+1`` rows) over a numpy
+    lexsort permutation — a total order has exactly one sorted
     permutation, so the ranks (and therefore every score) are identical
-    to the distributed range-shuffle path at any partitioning (pinned
-    by parity test). The input frame should be materialized
-    (localCheckpoint) by the caller; one task sees all rows."""
+    to the distributed range-shuffle path at any partitioning (pinned by
+    parity test). Above it, one parallel_ntile pass per spec runs with
+    its range-shuffle width sized to ~1M rows per partition."""
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     ) + ", " + ", ".join(f"{out} int" for out, _ in specs)
@@ -201,4 +202,22 @@ def ntile_scores_single_task(
             pdf[out] = tile.astype(np.int32)
         yield pdf[names]
 
-    return df.coalesce(1).mapInPandas(kern, out_schema)
+    fast = sizing.single_task(
+        df,
+        kern,
+        out_schema,
+        name="ntile",
+        max_rows=NTILE_SINGLE_TASK_MAX_ROWS,
+        force=single_task,
+    )
+    if fast is not None:
+        return fast
+    rows = sizing.row_bound(df)
+    parts = None
+    if rows is not None:
+        n_max = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        parts = max(1, min(n_max, rows // 1_000_000 + 1))
+    for out, keys in specs:
+        order = [F.col(c).desc() if d == "desc" else F.col(c).asc() for c, d in keys]
+        df = parallel_ntile(df, n_tiles, order, out, num_partitions=parts)
+    return df

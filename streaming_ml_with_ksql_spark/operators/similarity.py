@@ -42,6 +42,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from . import sizing
+
 __all__ = [
     "cosine_sim",
     "brute_force_topk",
@@ -1845,6 +1847,11 @@ def cluster_quality(
     )
 
 
+# Candidate count below which mmr_diverse_topk runs its greedy picks in
+# one Arrow task (pure-Python integer dot products: O(cand_n * k * dim)).
+MMR_SINGLE_TASK_MAX_ROWS = 10_000
+
+
 def _mmr_single_task_kernel(k: int):
     """Greedy MMR over ONE bounded candidate batch — the single-task
     fast path of mmr_diverse_topk (r14, guide §4.2: the per-pick
@@ -1896,7 +1903,7 @@ def mmr_diverse_topk(
     query_id: int = 0,
     cand_n: int = 20,
     k: int = 8,
-    single_task: bool = True,
+    single_task: bool | None = None,
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein,
     SIGIR 1998) — the diversity stage between candidate retrieval and
@@ -1963,23 +1970,25 @@ def mmr_diverse_topk(
         .limit(cand_n)
         .localCheckpoint(eager=True)
     )
-    if single_task:
-        # The k-1 per-pick checkpoint jobs collapse into ONE Arrow task
-        # over the cand_n-row frame; the distributed loop below stays
-        # for parity testing (and would be the path if cand_n ever grew
-        # beyond a task's reach — it cannot: cand_n is a serving cutoff).
-        return (
-            cand.coalesce(1)
-            .mapInPandas(
-                _mmr_single_task_kernel(k),
-                "pick_order int, vec_id long, rel long, score long",
-            )
-            .select(
-                "pick_order",
-                "vec_id",
-                F.col("rel").cast("double").alias("rel_d"),
-                F.col("score").cast("double").alias("score_d"),
-            )
+    # The k-1 per-pick checkpoint jobs collapse into ONE Arrow task over
+    # the cand_n-row frame (at most cand_n rows by the limit, so the
+    # bound costs nothing); the distributed loop below is the path for a
+    # cand_n beyond one task's reach.
+    fast = sizing.single_task(
+        cand,
+        _mmr_single_task_kernel(k),
+        "pick_order int, vec_id long, rel long, score long",
+        name="mmr",
+        max_rows=MMR_SINGLE_TASK_MAX_ROWS,
+        rows=cand_n,
+        force=single_task,
+    )
+    if fast is not None:
+        return fast.select(
+            "pick_order",
+            "vec_id",
+            F.col("rel").cast("double").alias("rel_d"),
+            F.col("score").cast("double").alias("score_d"),
         )
     sel = (
         cand.orderBy(F.col("rel").desc(), F.col("vec_id").asc())

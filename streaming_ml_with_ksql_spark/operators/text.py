@@ -23,10 +23,9 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from . import sizing
 
@@ -203,25 +202,13 @@ def doc_fingerprint(documents: DataFrame, *, n: int = 3, k: int = 5) -> DataFram
 # MinHash + banded LSH near-dup detection
 # ---------------------------------------------------------------------------
 
-def _fan_out(
-    df: DataFrame,
-    *,
-    rows_per_task: int = 160,
-    source: DataFrame | None = None,
-) -> DataFrame:
-    """Spread rows across a size-aware partition count before a CPU-bound
-    expansion stage. Input partitioning follows *bytes* (one small parquet
-    file → one partition), but shingling/hashing cost follows
-    *rows × tokens* — an explicit partition count keeps AQE from coalescing
-    the byte-small, CPU-heavy stage onto one core, while the
-    ``ceil(rows / rows_per_task)`` cap (VERDICT r4) keeps small frames
-    from paying full-width task-scheduling overhead. ``source`` is the
-    ancestor frame carrying io.load_table's footer row hint."""
-    return sizing.fan_out(
-        df,
-        rows_per_task=rows_per_task,
-        approx_rows=sizing.row_hint(source if source is not None else df),
-    )
+# Docs per task ahead of a CPU-bound shingling/hashing expansion. Input
+# partitioning follows *bytes* (one small parquet file → one partition),
+# but the expansion's cost follows *rows × tokens* — an explicit
+# partition count keeps AQE from coalescing the byte-small, CPU-heavy
+# stage onto one core, while the ``ceil(rows / 160)`` cap (VERDICT r4)
+# keeps small frames from paying full-width task-scheduling overhead.
+EXPAND_ROWS_PER_TASK = 160
 
 
 def _doc_shingles(
@@ -231,9 +218,9 @@ def _doc_shingles(
     for consumers that are duplicate-insensitive (MinHash mins) — at
     100 TB the global distinct is a full-corpus shuffle worth avoiding."""
     toks = tokens_col(F.col("text"))
-    ds = _fan_out(documents.select("doc_id", "text"), source=documents).select(
-        "doc_id", F.explode(shingles(toks, n)).alias("shingle")
-    )
+    ds = sizing.fan_out(
+        documents.select("doc_id", "text"), rows_per_task=EXPAND_ROWS_PER_TASK
+    ).select("doc_id", F.explode(shingles(toks, n)).alias("shingle"))
     return ds.distinct() if distinct else ds
 
 
@@ -356,30 +343,62 @@ def minhash_candidate_pairs_between(
 # relational DAG's ~12 jobs (signature agg + persist build, banding
 # self-join with its broadcast re-execution, candidate distinct, the
 # semi-join + distinct + two-sided intersection join, two size joins)
-# are pure scheduling overhead. Env-overridable; larger corpora keep the
-# distributed cascade unchanged (the bound is a data bound from the
-# parquet footer hint, not a core-count constant).
+# are pure scheduling overhead. Larger corpora keep the distributed
+# cascade unchanged (the bound is a data bound from sizing.row_bound,
+# not a core-count constant).
 # Default measured from the 10x replicated-corpus stress (r15): each
 # stress replica is an EXACT duplicate, so candidate cliques grow
 # quadratically with the multiplier — the kernel reads flat vs the
 # distributed cascade at 4x (20k docs: 14.5 vs 15.6 s) and LOSES at 10x
 # (50k docs: 24.2 vs 15.7 s), while winning 2.3x at 1x (5k real docs:
 # 1.6 vs 3.7 s). 20k bounds the kernel at the measured worst-case
-# break-even; real (less dup-heavy) corpora cross over far higher —
-# raise via env when the corpus is known clean.
-MINHASH_SINGLE_TASK_MAX_DOCS = int(
-    os.environ.get("SPARK_GRAFT_MINHASH_SINGLE_TASK_DOCS", "20000")
-)
+# break-even; real (less dup-heavy) corpora cross over far higher.
+MINHASH_SINGLE_TASK_MAX_DOCS = 20_000
 
 # Same gate for the exact inverted-index pair family (ngram_jaccard) —
 # its pair volume is Σ_s df(s)² on both paths, so the doc bound is the
-# shared safety envelope. Separately overridable.
-NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS = int(
-    os.environ.get(
-        "SPARK_GRAFT_NGRAM_PAIRS_SINGLE_TASK_DOCS",
-        str(MINHASH_SINGLE_TASK_MAX_DOCS),
+# shared safety envelope.
+NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS = MINHASH_SINGLE_TASK_MAX_DOCS
+
+# Output of both doc-pair kernels: exact integer counts, finished into a
+# jaccard by _jaccard_pairs.
+_PAIR_COUNTS_SCHEMA = "doc_a long, doc_b long, n_inter long, n_a long, n_b long"
+
+
+def _integral_ids(documents: DataFrame) -> bool:
+    """The doc-pair kernels read ``doc_id`` as int64; string-keyed corpora
+    take the distributed path."""
+    return isinstance(documents.schema["doc_id"].dataType, IntegralType)
+
+
+def _with_sizes(inter: DataFrame, sizes: DataFrame) -> DataFrame:
+    """Attach each side's distinct-shingle count (``sizes.n_sh``) to a
+    distributed (doc_a, doc_b, n_inter) pair frame as n_a / n_b."""
+    return (
+        inter.join(
+            sizes.select(F.col("doc_id"), F.col("n_sh").alias("n_a")),
+            F.col("doc_a") == F.col("doc_id"),
+        )
+        .drop("doc_id")
+        .join(
+            sizes.select(F.col("doc_id"), F.col("n_sh").alias("n_b")),
+            F.col("doc_b") == F.col("doc_id"),
+        )
+        .drop("doc_id")
     )
-)
+
+
+def _jaccard_pairs(counts: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, n_inter, n_a, n_b) → (doc_a, doc_b, jaccard) pairs
+    at or above ``threshold``. Every route of every jaccard pair operator
+    finishes here, so the division and 6-dp round are the same Spark
+    expressions and kernel and distributed floats agree bitwise."""
+    jac = F.round(
+        F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
+    )
+    return counts.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
 
 
 def _minhash_pairs_kernel(num_hashes: int, bands: int, rows: int):
@@ -498,13 +517,14 @@ def near_dup_pairs_minhash(
     Output: (doc_a, doc_b, jaccard). The verify join touches only candidate
     pairs — never all pairs.
 
-    Below ``MINHASH_SINGLE_TASK_MAX_DOCS`` (footer row hint; r15) the
-    whole cascade — signatures, banding, candidates, exact intersection
-    counts — runs in ONE Arrow task emitting integer counts, and only
-    the jaccard division/round/threshold stay as Spark expressions
-    (bit-identical floats by construction); parity vs the distributed
-    cascade is pinned in tests/test_round15.py. Larger corpora (or a
-    hint-less input frame) take the distributed plan below unchanged.
+    Below ``MINHASH_SINGLE_TASK_MAX_DOCS`` (sizing.row_bound of
+    ``documents``; r15) the whole cascade — signatures, banding,
+    candidates, exact intersection counts — runs in ONE Arrow task
+    emitting integer counts, and only the jaccard division/round/threshold
+    stay as Spark expressions (bit-identical floats by construction);
+    parity vs the distributed cascade is pinned in tests/test_round15.py.
+    Larger, unbounded or string-keyed corpora take the distributed plan
+    below unchanged.
 
     Plan shape (the 100 TB concerns):
     - NO global distinct over the shingle set: signatures use the raw
@@ -519,27 +539,18 @@ def near_dup_pairs_minhash(
       shuffles candidate shingles only, never the corpus."""
     ds_raw = _doc_shingles(documents, n, distinct=False)
     dsh = ds_raw.select("doc_id", "shingle", _shingle_h(F.col("shingle")).alias("h"))
-    if single_task is None:
-        est = sizing.row_hint(documents)
-        single_task = est is not None and 0 < est < MINHASH_SINGLE_TASK_MAX_DOCS
-    if single_task:
-        # repartition(1), NOT coalesce(1): coalesce would fuse the
-        # tokenize + shingle explode + md5 upstream into the single
-        # kernel task (measured 6.2 s vs 3.7 distributed at sf0.1);
-        # the round-robin exchange keeps the scan parallel and ships
-        # only the skinny (doc_id, shingle, h) rows to the one task.
-        pk = dsh.repartition(1).mapInPandas(
-            _minhash_pairs_kernel(num_hashes, bands, rows),
-            "doc_a long, doc_b long, n_inter long, n_a long, n_b long",
-        )
-        jac_k = F.round(
-            F.col("n_inter")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-            6,
-        )
-        return pk.select("doc_a", "doc_b", jac_k.alias("jaccard")).filter(
-            F.col("jaccard") >= threshold
-        )
+    pk = sizing.single_task(
+        dsh,
+        _minhash_pairs_kernel(num_hashes, bands, rows),
+        _PAIR_COUNTS_SCHEMA,
+        name="minhash",
+        max_rows=MINHASH_SINGLE_TASK_MAX_DOCS,
+        rows=sizing.row_bound(documents),
+        requires=_integral_ids(documents),
+        force=single_task,
+    )
+    if pk is not None:
+        return _jaccard_pairs(pk, threshold)
     # persist: the signature aggregate is the expensive full-corpus pass
     # (shingle explode + one md5 per shingle row), and it is consumed by
     # THREE subtrees — the banding self-join's shuffle side, its broadcast
@@ -576,25 +587,7 @@ def near_dup_pairs_minhash(
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    with_sizes = (
-        inter.join(
-            sizes.select(F.col("doc_id"), F.col("n_sh").alias("n_a")),
-            F.col("doc_a") == F.col("doc_id"),
-        )
-        .drop("doc_id")
-        .join(
-            sizes.select(F.col("doc_id"), F.col("n_sh").alias("n_b")),
-            F.col("doc_b") == F.col("doc_id"),
-        )
-        .drop("doc_id")
-    )
-    jac = F.round(
-        F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
-    )
-    return (
-        with_sizes.select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_pairs(_with_sizes(inter, sizes), threshold)
 
 
 def _ngram_pairs_kernel():
@@ -680,11 +673,12 @@ def ngram_jaccard_pairs(
     counting common shingles per pair and joining per-doc set sizes yields
     the exact coefficient. The n² cross product never materializes.
 
-    Below ``NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS`` (footer row hint; r15)
-    the whole index → pair-count → size-attach cascade runs in ONE
-    Arrow task emitting exact integer counts (jaccard stays a Spark
-    expression); parity pinned in tests/test_round15.py. Larger or
-    hint-less inputs take the distributed plan unchanged.
+    Below ``NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS`` (sizing.row_bound of
+    ``documents``; r15) the whole index → pair-count → size-attach
+    cascade runs in ONE Arrow task emitting exact integer counts (jaccard
+    stays a Spark expression); parity pinned in tests/test_round15.py.
+    Larger, unbounded or string-keyed inputs take the distributed plan
+    unchanged.
 
     Scale shape: one shuffle keyed by shingle; cost is Σ_s df(s)² over
     shingle document-frequencies, not |docs|². At 100 TB add a df cap in
@@ -692,25 +686,18 @@ def ngram_jaccard_pairs(
     they cannot push a pair over any useful threshold alone and dominate
     the join cost); the testdata's unique texts need no cap.
     """
-    if single_task is None:
-        est = sizing.row_hint(documents)
-        single_task = (
-            est is not None and 0 < est < NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS
-        )
-    if single_task:
-        raw = _doc_shingles(documents, n, distinct=False)
-        pk = raw.repartition(1).mapInPandas(
-            _ngram_pairs_kernel(),
-            "doc_a long, doc_b long, n_inter long, n_a long, n_b long",
-        )
-        jac_k = F.round(
-            F.col("n_inter")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-            6,
-        )
-        return pk.select("doc_a", "doc_b", jac_k.alias("jaccard")).filter(
-            F.col("jaccard") >= threshold
-        )
+    pk = sizing.single_task(
+        _doc_shingles(documents, n, distinct=False),
+        _ngram_pairs_kernel(),
+        _PAIR_COUNTS_SCHEMA,
+        name="ngram_pairs",
+        max_rows=NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS,
+        rows=sizing.row_bound(documents),
+        requires=_integral_ids(documents),
+        force=single_task,
+    )
+    if pk is not None:
+        return _jaccard_pairs(pk, threshold)
     ds = _doc_shingles(documents, n)
     sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (
@@ -725,25 +712,7 @@ def ngram_jaccard_pairs(
         )
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    with_sizes = (
-        inter.join(
-            sizes.select(F.col("doc_id"), F.col("n_sh").alias("n_a")),
-            F.col("doc_a") == F.col("doc_id"),
-        )
-        .drop("doc_id")
-        .join(
-            sizes.select(F.col("doc_id"), F.col("n_sh").alias("n_b")),
-            F.col("doc_b") == F.col("doc_id"),
-        )
-        .drop("doc_id")
-    )
-    jac = F.round(
-        F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
-    )
-    return (
-        with_sizes.select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_pairs(_with_sizes(inter, sizes), threshold)
 
 
 def ngram_containment_pairs(
@@ -782,19 +751,7 @@ def ngram_containment_pairs(
         )
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    with_sizes = (
-        inter.join(
-            sizes.select(F.col("doc_id"), F.col("n_sh").alias("n_a")),
-            F.col("doc_a") == F.col("doc_id"),
-        )
-        .drop("doc_id")
-        .join(
-            sizes.select(F.col("doc_id"), F.col("n_sh").alias("n_b")),
-            F.col("doc_b") == F.col("doc_id"),
-        )
-        .drop("doc_id")
-    )
-    out = with_sizes.select(
+    out = _with_sizes(inter, sizes).select(
         "doc_a",
         "doc_b",
         F.expr("n_inter * 1000000L div n_a").alias("cont_a_in_b_ppm"),
@@ -831,9 +788,9 @@ def simhash_fingerprint(documents: DataFrame, *, bits: int = 32) -> DataFrame:
     (doc,bit) then (doc); entirely JVM expressions.
     """
     toks = tokens_col(F.col("text"))
-    dt = _fan_out(documents.select("doc_id", "text"), source=documents).select(
-        "doc_id", F.explode(F.array_distinct(toks)).alias("tok")
-    )
+    dt = sizing.fan_out(
+        documents.select("doc_id", "text"), rows_per_task=EXPAND_ROWS_PER_TASK
+    ).select("doc_id", F.explode(F.array_distinct(toks)).alias("tok"))
     h = F.conv(F.substring(F.md5(F.col("tok")), 1, bits // 4), 16, 10).cast("long")
     dt = dt.select("doc_id", h.alias("h"))
     bit = F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("bit")
@@ -943,11 +900,6 @@ def clean_corpus(
             & (F.col("__punct") <= max_punct_ratio)
         )
     )
-    # carry the source row hint (an upper bound — filters only shrink)
-    # so the near-dup stage can size its single-task gate without a count
-    hint = sizing.row_hint(documents)
-    if hint is not None:
-        setattr(kept, sizing.ROW_HINT_ATTR, hint)
     losers = (
         near_dup_pairs_minhash(kept, n=n, threshold=jaccard_threshold)
         .select(F.col("doc_b").alias("doc_id"))
@@ -1233,7 +1185,7 @@ def repetition_stats(
         # left join emits NULL — the final expressions below are
         # provably equal on both encodings (coalesce(x, 0) and
         # greatest(x, 1) send 0 and NULL to the same values), and the
-        # parity is pinned in tests/test_round14.py.
+        # parity is pinned in tests/test_round15.py.
         id_t = base.schema["doc_id"].dataType.simpleString()
         joined = base.mapInPandas(
             _rep_stats_kernel(),
@@ -1297,7 +1249,9 @@ def decontaminate(
     groupBy), so the only shuffle carries the contaminated docs' matched
     shingles — a vanishing fraction of the corpus. Output is (doc_id,
     n_shared_shingles) for contaminated docs only."""
-    train_sh = _fan_out(documents.select(id_col, "text"), source=documents).select(
+    train_sh = sizing.fan_out(
+        documents.select(id_col, "text"), rows_per_task=EXPAND_ROWS_PER_TASK
+    ).select(
         id_col, F.explode(shingles(tokens_col(F.col("text")), n)).alias("shingle")
     )
     bench_sh = (
@@ -1386,25 +1340,7 @@ def ngram_jaccard_pairs_prefix(
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    with_sizes = (
-        inter.join(
-            sizes.select(F.col("doc_id"), F.col("n_sh").alias("n_a")),
-            F.col("doc_a") == F.col("doc_id"),
-        )
-        .drop("doc_id")
-        .join(
-            sizes.select(F.col("doc_id"), F.col("n_sh").alias("n_b")),
-            F.col("doc_b") == F.col("doc_id"),
-        )
-        .drop("doc_id")
-    )
-    jac = F.round(
-        F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
-    )
-    return (
-        with_sizes.select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_pairs(_with_sizes(inter, sizes), threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1811,7 +1747,10 @@ def duplicate_span_positions(
     """
     toks = tokens_col(F.col("text"))
     grams = (
-        _fan_out(documents.select("doc_id", "text"), source=documents)
+        sizing.fan_out(
+            documents.select("doc_id", "text"),
+            rows_per_task=EXPAND_ROWS_PER_TASK,
+        )
         .select("doc_id", toks.alias("t"))
         .filter(F.size("t") >= k)
         .select(
@@ -1898,7 +1837,10 @@ def passage_dedup_stats(
     toks = tokens_col(F.col("text"))
     n_pass = F.ceil(F.size("t") / F.lit(p)).cast("int")
     passages = (
-        _fan_out(documents.select("doc_id", "text"), source=documents)
+        sizing.fan_out(
+            documents.select("doc_id", "text"),
+            rows_per_task=EXPAND_ROWS_PER_TASK,
+        )
         .select("doc_id", toks.alias("t"))
         .select(
             "doc_id",

@@ -389,9 +389,10 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     date), frequency, and exact-DECIMAL monetary total, quintile-scored
     with deterministic (metric, custkey) NTILE tie-breaks and mapped to
     named segments. The three quintile scores come from
-    ``operators.rank.parallel_ntile`` — range-shuffle + local sort +
-    broadcast prefix offsets — NOT an unpartitioned NTILE window, so the
-    customer-sized frame never moves through a single partition
+    ``operators.rank.ntile_scores`` — one Arrow task while the frame is
+    bounded, else ``parallel_ntile``'s range-shuffle + local sort +
+    broadcast prefix offsets — NOT an unpartitioned NTILE window, so a
+    large customer frame never moves through a single partition
     (VERDICT r6 #2; the DuckDB oracle keeps the plain NTILE, proving the
     distributed arithmetic reproduces it exactly)."""
     o = _t(spark, sf_dir, "orders")
@@ -422,38 +423,19 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Scale-adaptive quintile scoring (guide §2.2/§4.2): below a
     # measured-count bound (the checkpointed frame's count is a
-    # cached-RDD read) ALL THREE ntile scores compute in ONE Arrow task
-    # (rank_ops.ntile_scores_single_task — the exact same integer
-    # bucket arithmetic over a total order, parity-pinned), replacing
-    # 3 x (range-sample + shuffle + offsets) jobs of scheduling
-    # overhead on a 4-scalars-per-customer frame. Above the bound the
-    # distributed parallel_ntile path runs with its range-shuffle width
-    # sized to the measured row count (~1M rows/partition).
-    n_cust = rfm.count()
-    if n_cust < rank_ops.NTILE_SINGLE_TASK_MAX_ROWS:
-        scored = rank_ops.ntile_scores_single_task(
-            rfm,
-            5,
-            [
-                ("r_score", [("recency_days", "asc"), ("c_custkey", "asc")]),
-                ("f_score", [("frequency", "desc"), ("c_custkey", "asc")]),
-                ("m_score", [("monetary", "desc"), ("c_custkey", "asc")]),
-            ],
-        )
-    else:
-        default_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        ntile_parts = max(1, min(default_parts, n_cust // 1_000_000 + 1))
-        scored = rfm
-        for cols, out in (
-            ([F.col("recency_days").asc(), F.col("c_custkey").asc()], "r_score"),
-            ([F.col("frequency").desc(), F.col("c_custkey").asc()], "f_score"),
-            ([F.col("monetary").desc(), F.col("c_custkey").asc()], "m_score"),
-        ):
-            scored = rank_ops.parallel_ntile(
-                scored, 5, cols, out, num_partitions=ntile_parts
-            )
+    # cached-RDD read) ALL THREE ntile scores compute in ONE Arrow task,
+    # replacing 3 x (range-sample + shuffle + offsets) jobs of scheduling
+    # overhead on a 4-scalars-per-customer frame; above it the
+    # distributed parallel_ntile passes run (rank_ops.ntile_scores).
+    scored = rank_ops.ntile_scores(
+        rfm,
+        5,
+        [
+            ("r_score", [("recency_days", "asc"), ("c_custkey", "asc")]),
+            ("f_score", [("frequency", "desc"), ("c_custkey", "asc")]),
+            ("m_score", [("monetary", "desc"), ("c_custkey", "asc")]),
+        ],
+    )
     scored = scored.select(
         "c_custkey",
         "recency_days",

@@ -420,11 +420,6 @@ def q_corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     train = docs.filter(F.col("doc_id") % 97 != 0)
-    # propagate the footer row hint (upper bound) so the near-dup stage
-    # inside clean_corpus can size its single-task gate without a count
-    from ..operators import sizing as _sizing
-
-    setattr(train, _sizing.ROW_HINT_ATTR, _sizing.row_hint(docs))
     clean = text.clean_corpus(train)
     contaminated = text.decontaminate(train, bench, n=4)
     # persist the survivor id SET (one long per doc): `final_docs` feeds
@@ -437,14 +432,11 @@ def q_corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .persist()
     )
-    final_docs = docs.join(keep_ids, "doc_id")
-    # carry the base table's footer row hint onto the derived frame: an
-    # upper bound (survivors <= documents) that lets bpe_tokenize's
-    # fan-out size itself without a count() that would re-execute the
-    # clean+decontaminate DAG (ADVICE r5)
-    from ..operators import sizing
-
-    setattr(final_docs, sizing.ROW_HINT_ATTR, sizing.row_hint(docs))
+    # left_semi, not inner: the same rows (keep_ids is a set of distinct
+    # doc ids), and sizing.row_bound sees through a semi join to the
+    # documents footer, so bpe_tokenize's fan-out sizes itself without a
+    # count() that would re-execute the clean+decontaminate DAG (ADVICE r5)
+    final_docs = docs.join(keep_ids, "doc_id", "left_semi")
     counts = bpe.bpe_tokenize(final_docs, bpe.FIXED_MERGES)
     # Pack straight off the token-count frame (r15, guide §2.4): the old
     # `final_docs.join(counts)` re-scanned documents + re-attached
@@ -1300,16 +1292,12 @@ def q_corpus_rag_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     train = docs.filter(F.col("doc_id") % 97 != 0)
-    # propagate the footer row hint (upper bound) so the near-dup stage
-    # inside clean_corpus can size its single-task gate without a count
-    from ..operators import sizing as _sizing
-
-    setattr(train, _sizing.ROW_HINT_ATTR, _sizing.row_hint(docs))
     clean = text.clean_corpus(train)
     contaminated = text.decontaminate(train, bench, n=4)
     final_docs = docs.join(
         clean.join(contaminated, "doc_id", "left_anti").select("doc_id"),
         "doc_id",
+        "left_semi",
     )
     return text.chunk_tokens_sliding(final_docs)
 

@@ -27,6 +27,9 @@ __all__ = [
     "to_kafka",
 ]
 
+# Shuffle width of a run_to_memory drain's stateful operators.
+STATE_PARTITIONS = 8
+
 
 def run_to_memory(
     stream_df: DataFrame,
@@ -34,7 +37,6 @@ def run_to_memory(
     *,
     output_mode: str = "append",
     timeout_sec: int = 300,
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Run the streaming query to completion over currently-available data
     (``trigger(availableNow)``) into an in-memory table; return that table.
@@ -44,36 +46,22 @@ def run_to_memory(
     recorded stream deterministically, including watermark finalization
     no-data batches.
 
-    ``state_partitions`` sizes the stateful operators' shuffle (and hence
-    the state-store instance count, fixed for the query's lifetime at
-    start): stateful streaming exchanges are exempt from AQE coalescing,
-    so without this every micro-batch pays task + state-commit overhead
-    across the full batch session width regardless of key volume (r14:
-    32 state partitions for a ~150-key replay cost ~1.6x wall time vs 8;
-    results are partitioning-invariant — guide §2.2, fewer/larger
-    partitions where a runtime coalescer cannot act). Defaults to
-    ``SPARK_GRAFT_STREAM_STATE_PARTS`` (env) or 8; a production deployment
-    sizes it to key cardinality x update rate, the same way it would pick
-    ``spark.sql.shuffle.partitions`` for any long-lived streaming job.
-    The session conf is restored after the drain (it only matters at
-    query start).
+    The stateful operators run at ``STATE_PARTITIONS`` shuffle partitions
+    (the state-store instance count is fixed at query start): stateful
+    streaming exchanges are exempt from AQE coalescing, so the batch
+    session width would make every micro-batch pay task + state-commit
+    overhead regardless of key volume (r14: 32 state partitions for a
+    ~150-key replay cost ~1.6x wall time vs 8; results are
+    partitioning-invariant).
 
     NOT re-entrant (ADVICE r14): the width is applied by mutating the
     session-global ``spark.sql.shuffle.partitions`` for the drain's
-    duration, so a batch query planned CONCURRENTLY in the same session
-    would silently pick up the reduced width. Safe under this repo's
-    single-threaded bench/test discipline; a multi-threaded caller must
-    serialize drains (Spark exposes no per-query streaming state-width
-    option to scope it otherwise)."""
-    import os
-
+    duration (restored after), so a batch query planned CONCURRENTLY in
+    the same session would silently pick up the reduced width; a
+    multi-threaded caller must serialize drains."""
     spark = stream_df.sparkSession
-    if state_partitions is None:
-        state_partitions = int(
-            os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "8")
-        )
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     try:
         q = (
             stream_df.writeStream.format("memory")

@@ -76,6 +76,39 @@ def test_predict_arrays_error_to_null(spark, frame):
     assert out2.filter(F.col("prediction").isNotNull()).count() == 0
 
 
+def test_predict_arrays_keeps_caller_columns_named_like_signature(spark):
+    """A caller column sharing a signature name comes back untouched: the
+    array elements feed the model, not the caller's column, and an
+    invalid row's dummy fill never leaks into it."""
+    df = spark.createDataFrame(
+        [
+            (1, "MINE", 7, ["BUILDING"], [0, 0, 0, 1]),
+            (2, "MINE", 7, None, None),
+        ],
+        "id long, c_mktsegment string, views_in_window long, "
+        "s array<string>, i array<int>",
+    )
+    rows = {
+        r["id"]: r
+        for r in ml_predict.predict_arrays(df, MODEL, "s", "i").collect()
+    }
+    assert [r["c_mktsegment"] for r in rows.values()] == ["MINE", "MINE"]
+    assert [r["views_in_window"] for r in rows.values()] == [7, 7]
+    expected = ml_predict.score(
+        spark.createDataFrame(
+            [("BUILDING", 0, 0, 0, 1)],
+            "c_mktsegment string, views_in_window int, clicks_in_window int, "
+            "purchases_in_window int, events_in_window int",
+        ),
+        MODEL,
+    ).first()["prediction"]
+    assert rows[1]["prediction"] == expected
+    assert rows[2]["prediction"] is None
+    assert list(rows[1].asDict()) == [
+        "id", "c_mktsegment", "views_in_window", "s", "i", "prediction"
+    ]
+
+
 def test_predict_arrays_positional_binding(spark, frame):
     """Ints bind by position, not name (PredictUdf.java:48-56): swapping two
     positions must change which feature the threshold sees."""

@@ -21,6 +21,9 @@ argued in an idiom entry.
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
 from streaming_ml_with_ksql_spark import registry
 
 SF = "/root/testdata/sf0.001"
@@ -300,4 +303,44 @@ def test_probe_anchor_rejects_mislabeled_id_suffix(spark):
     assert (
         _lint_one(good, require_probe_build=True)
         == "unbounded BNLJ build side"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Source lint: one way to size a frame, one way to feed a single-task kernel
+# ---------------------------------------------------------------------------
+
+_PKG = Path(registry.__file__).resolve().parent.parent
+# Deployment settings (cores, driver memory, data dir) are the only env
+# reads; every operator bound is a module constant tests can monkeypatch.
+_ENV_READERS = {"session.py", "io.py"}
+_ENV_READ = re.compile(r"\bos\.(environ\b|getenv\()")
+_ONE_TASK_FEED = re.compile(
+    r"\.(coalesce|repartition)\(\s*1\s*\)\s*\.mapInPandas\b"
+)
+
+
+def _package_sources():
+    for path in sorted(_PKG.rglob("*.py")):
+        yield path, path.read_text()
+
+
+def test_env_reads_only_in_session_and_io():
+    offenders = [
+        str(path.relative_to(_PKG))
+        for path, src in _package_sources()
+        if path.name not in _ENV_READERS and _ENV_READ.search(src)
+    ]
+    assert not offenders, f"env reads outside session.py/io.py: {offenders}"
+
+
+def test_single_task_feeds_only_in_sizing():
+    offenders = [
+        str(path.relative_to(_PKG))
+        for path, src in _package_sources()
+        if path.name != "sizing.py" and _ONE_TASK_FEED.search(src)
+    ]
+    assert not offenders, (
+        f"one-partition mapInPandas feeds outside operators/sizing.py "
+        f"(route through sizing.single_task): {offenders}"
     )

@@ -71,14 +71,11 @@ def test_ntile_scores_single_task_matches_parallel_ntile(spark):
     df = spark.createDataFrame(
         rows, "id long, v double, f long"
     ).localCheckpoint(eager=True)
-    fast = rank.ntile_scores_single_task(
-        df,
-        5,
-        [
-            ("a_t", [("v", "desc"), ("id", "asc")]),
-            ("b_t", [("f", "asc"), ("id", "asc")]),
-        ],
-    )
+    specs = [
+        ("a_t", [("v", "desc"), ("id", "asc")]),
+        ("b_t", [("f", "asc"), ("id", "asc")]),
+    ]
+    fast = rank.ntile_scores(df, 5, specs, single_task=True)
     slow = rank.parallel_ntile(
         df, 5, [F.col("v").desc(), F.col("id").asc()], "a_t"
     )
@@ -86,6 +83,8 @@ def test_ntile_scores_single_task_matches_parallel_ntile(spark):
         slow, 5, [F.col("f").asc(), F.col("id").asc()], "b_t"
     )
     cols = ["id", "v", "f", "a_t", "b_t"]
-    assert sorted(map(tuple, fast.select(cols).collect())) == sorted(
-        map(tuple, slow.select(cols).collect())
-    )
+    expected = sorted(map(tuple, slow.select(cols).collect()))
+    assert sorted(map(tuple, fast.select(cols).collect())) == expected
+    # ntile_scores' own distributed route is the same parallel_ntile chain
+    routed = rank.ntile_scores(df, 5, specs, single_task=False)
+    assert sorted(map(tuple, routed.select(cols).collect())) == expected

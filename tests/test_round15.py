@@ -136,18 +136,52 @@ def test_minhash_single_task_matches_distributed_planted(spark):
     assert fast == slow and (1, 3) in fast and fast[(1, 3)] == 1.0
 
 
-def test_minhash_gate_uses_row_hint(spark):
-    """No hint -> distributed; small hint -> kernel (MapInPandas node)."""
-    from streaming_ml_with_ksql_spark.operators import sizing
+def _has_kernel(df) -> bool:
+    return "MapInPandas" in df._jdf.queryExecution().optimizedPlan().toString()
 
+
+def test_minhash_gate_uses_row_bound(spark):
+    """Unbounded input (rows can grow through a join) -> distributed;
+    a small local frame -> kernel, with no hint from the caller."""
     df = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "a b c d e g")], "doc_id long, text string"
     )
-    auto = text.near_dup_pairs_minhash(df)  # hint-less derived frame
-    assert "MapInPandas" not in auto._jdf.queryExecution().executedPlan().toString()
-    setattr(df, sizing.ROW_HINT_ATTR, 2)
-    auto2 = text.near_dup_pairs_minhash(df)
-    assert "MapInPandas" in auto2._jdf.queryExecution().executedPlan().toString()
+    unbounded = df.join(df.select("doc_id"), "doc_id")
+    assert not _has_kernel(text.near_dup_pairs_minhash(unbounded))
+    assert _has_kernel(text.near_dup_pairs_minhash(df))
+
+
+PLANTED_PAIR_DOCS = [
+    (3, "a b c d e f g zz"),
+    (7, "a b c d e f g h"),
+    (9, "a b c d e f g h"),
+    (11, "q r s t u v w x"),
+    (12, "the quick brown fox jumps over the lazy dog again and again"),
+    (13, "the quick brown fox jumps over the lazy dog again and again too"),
+]
+
+
+@pytest.mark.parametrize(
+    "pairs", [text.near_dup_pairs_minhash, text.ngram_jaccard_pairs]
+)
+def test_pair_kernels_send_string_ids_to_distributed(spark, pairs):
+    """The doc-pair kernels read int64 doc ids: a small string-keyed
+    corpus must take the distributed path, and give the integer kernel's
+    pairs under the same (order-preserving) string keys."""
+    ints = spark.createDataFrame(PLANTED_PAIR_DOCS, "doc_id long, text string")
+    strs = ints.select(
+        F.format_string("d%02d", "doc_id").alias("doc_id"), "text"
+    )
+    kernel = pairs(ints)
+    assert _has_kernel(kernel)
+    auto = pairs(strs)
+    assert not _has_kernel(auto)
+    expected = {
+        (f"d{r['doc_a']:02d}", f"d{r['doc_b']:02d}"): r["jaccard"]
+        for r in kernel.collect()
+    }
+    got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in auto.collect()}
+    assert got == expected and ("d07", "d09") in got
 
 
 def test_ngram_pairs_single_task_matches_distributed_sf001(spark):

@@ -1,20 +1,72 @@
-"""Size-aware fan-out (operators/sizing.py, VERDICT r4 fix): cheap
-kernels must stop paying full-width task overhead on small frames, heavy
-kernels must keep the full configured width, and io.load_table's footer
-row hint must make the sizing free (no count job needed)."""
+"""Plan-derived sizing (operators/sizing.py): ``row_bound`` reads a frame's
+row bound from its own plan (parquet footer for scan-shaped plans, exact
+count for materialized leaves, None otherwise) without executing derived
+DAGs; ``fan_out`` sizes CPU-kernel width from it; ``single_task`` is the
+one router to a single-task kernel."""
 
 from __future__ import annotations
 
+import logging
+
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from streaming_ml_with_ksql_spark import io as sio
-from streaming_ml_with_ksql_spark.operators import multimodal, sizing
+from streaming_ml_with_ksql_spark import registry
+from streaming_ml_with_ksql_spark.operators import (
+    clustering,
+    graph,
+    multimodal,
+    rank,
+    similarity,
+    sizing,
+    text,
+)
 
 
-def test_load_table_attaches_footer_row_hint(spark, sf_small):
+@F.udf(LongType())
+def _boom(v):
+    raise RuntimeError("sizing executed a derived DAG to size it")
+
+
+def _identity(batches):
+    yield from batches
+
+
+def test_row_bound_reads_parquet_footer(spark, sf_small):
+    """Scan, filter, select, aggregate and the left side of a semi join
+    all read the documents footer — no Spark job, so a poison pill in the
+    plan never detonates."""
     docs = sio.load_table(spark, sf_small, "documents")
-    hint = sizing.row_hint(docs)
-    assert hint == docs.count()  # exact, from parquet footer metadata
+    n = docs.count()
+    for df in (
+        docs,
+        docs.filter(F.col("doc_id") % 97 != 0).select("doc_id", "text"),
+        docs.filter(_boom(F.col("doc_id")) > 0),
+        docs.groupBy("lang").count(),
+        docs.join(docs.select("doc_id").filter(_boom("doc_id") > 0), "doc_id", "left_semi"),
+    ):
+        assert sizing.row_bound(df) == n
+    assert sizing.row_bound(docs.agg(F.count("doc_id"))) == 1
+
+
+def test_row_bound_none_when_rows_can_grow(spark, sf_small):
+    docs = sio.load_table(spark, sf_small, "documents")
+    assert sizing.row_bound(docs.select(F.explode(F.split("text", " ")))) is None
+    assert sizing.row_bound(docs.join(docs.select("doc_id"), "doc_id")) is None
+    assert sizing.row_bound(docs.select("doc_id").mapInPandas(_identity, "doc_id long")) is None
+    assert sizing.row_bound(docs.union(docs)) is None
+
+
+def test_row_bound_counts_materialized_leaves(spark):
+    local = spark.createDataFrame(pd.DataFrame({"a": range(7)}))
+    assert sizing.row_bound(local) == 7
+    ckpt = spark.range(40).filter(F.col("id") % 2 == 0).localCheckpoint(eager=True)
+    assert sizing.row_bound(ckpt) == 20
+    assert sizing.row_bound(ckpt.filter(F.col("id") < 10)) == 5
+    assert sizing.row_bound(spark.range(100)) == 100
 
 
 def test_fan_out_clamps_small_frames(spark):
@@ -28,13 +80,14 @@ def test_fan_out_clamps_small_frames(spark):
     )  # explicit override wins
 
 
-def test_fan_out_uses_hint_over_count(spark):
-    df = spark.range(10)
+def test_fan_out_sizes_from_row_bound(spark, sf_small):
+    """A filtered scan keeps the footer row count as its (over)estimate —
+    the safe direction, since an overestimate only adds partitions."""
+    docs = sio.load_table(spark, sf_small, "documents")
     n_max = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # an (over)estimated ancestor hint widens the fan-out — the safe
-    # direction after filters drop rows
-    wide = sizing.fan_out(df, rows_per_task=10, approx_rows=100)
-    assert wide.rdd.getNumPartitions() == min(n_max, 10)
+    narrow = docs.filter(F.col("doc_id") < 0).select("doc_id")
+    width = sizing.fan_out(narrow, rows_per_task=100).rdd.getNumPartitions()
+    assert width == min(n_max, -(-docs.count() // 100))
 
 
 def test_cheap_codec_narrow_heavy_codec_wide(spark, sf_small):
@@ -65,43 +118,25 @@ def test_cheap_codec_narrow_heavy_codec_wide(spark, sf_small):
 
 
 def test_fan_out_never_counts_derived_lineage(spark):
-    """A hint-less frame whose lineage contains a join/aggregate must NOT
-    be sized by count() — that re-executes the whole upstream DAG once per
-    fan-out (ADVICE r5: corpus_curation_pipeline re-ran its
-    clean+decontaminate join DAG inside bpe_tokenize). Such frames keep
-    the full configured width; the proof that no count ran is a kernel
-    poison pill that would make the count job fail."""
-    import pyspark.sql.functions as F
-
+    """A frame whose lineage can add rows (a join) must NOT be sized by
+    count() — that re-executes the whole upstream DAG once per fan-out
+    (ADVICE r5: corpus_curation_pipeline re-ran its clean+decontaminate
+    join DAG inside bpe_tokenize). Such frames keep the full configured
+    width; the proof that no count ran is a poison pill that would make
+    any job over the frame fail."""
     n_max = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    @F.udf("long")
-    def boom(v):
-        raise RuntimeError("fan_out executed the derived DAG to size it")
-
-    a = spark.range(50).select(F.col("id"), boom(F.col("id")).alias("x"))
+    a = spark.range(50).select(F.col("id"), _boom(F.col("id")).alias("x"))
     b = spark.range(50).withColumnRenamed("id", "id2")
     derived = a.join(b, a.id == b.id2).groupBy("id").count()
-    # sizing must not trigger a job; materializing the fan-out plan lazily
-    # is fine — only .count()/.collect() would detonate the pill
-    assert not sizing._count_is_cheap(derived)
+    assert sizing.row_bound(derived) is None
     out = sizing.fan_out(derived, rows_per_task=10)
     assert out.rdd.getNumPartitions() == n_max
-
-    # scan-shaped lineage still counts (and clamps) as before
-    assert sizing._count_is_cheap(spark.range(100))
-    assert sizing.fan_out(spark.range(100), rows_per_task=50).rdd.getNumPartitions() == 2
 
 
 def test_cogroup_lineage_is_expensive(spark):
     """FlatMapCoGroupsInPandas (cogroup applyInPandas — the pq_search /
-    ivfpq_search query side) must register as expensive lineage: its
-    node name lacked the old 'FlatMapGroupsIn' substring, so a
-    cogroup-derived frame would have been count()ed — re-executing its
-    Python DAG (ADVICE r6)."""
-    import pandas as pd
-    import pyspark.sql.functions as F
-
+    ivfpq_search query side) has no bound: counting it would re-execute
+    its Python DAG (ADVICE r6)."""
     a = spark.range(10).withColumn("k", F.lit(1))
     b = spark.range(5).withColumn("k", F.lit(1))
 
@@ -111,4 +146,69 @@ def test_cogroup_lineage_is_expensive(spark):
     co = a.groupBy("k").cogroup(b.groupBy("k")).applyInPandas(
         merge, schema="n long"
     )
-    assert not sizing._count_is_cheap(co)
+    assert sizing.row_bound(co) is None
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_single_task_routes_and_feeds(spark, sf_small, caplog):
+    docs = sio.load_table(spark, sf_small, "documents").select("doc_id")
+    kw = dict(kernel=_identity, schema="doc_id long", name="probe")
+    with caplog.at_level(logging.INFO, logger=sizing.__name__):
+        lazy = sizing.single_task(docs, max_rows=10**6, **kw)
+    assert "name=probe path=kernel rows=500 bound=1000000 reason=size" in caplog.text
+    # a lazy scan is fed by a round-robin exchange, keeping the scan parallel
+    assert "Repartition 1, true" in _plan(lazy)
+    assert lazy.rdd.getNumPartitions() == 1 and lazy.count() == 500
+    # a materialized frame is coalesced: no exchange at all
+    ckpt = docs.localCheckpoint(eager=True)
+    fed = sizing.single_task(ckpt, max_rows=10**6, **kw)
+    assert "Repartition 1, false" in _plan(fed)
+    # size, requirement and bound decide; an explicit choice beats them all
+    assert sizing.single_task(docs, max_rows=500, **kw) is None
+    assert sizing.single_task(docs, max_rows=10**6, requires=False, **kw) is None
+    joined = docs.join(docs, "doc_id")
+    assert sizing.single_task(joined, max_rows=10**6, **kw) is None
+    assert sizing.single_task(docs, max_rows=0, force=True, **kw) is not None
+    assert sizing.single_task(docs, max_rows=10**6, force=False, **kw) is None
+    assert sizing.single_task(joined, max_rows=10, rows=3, **kw) is not None
+
+
+# One registry query per single-task kernel, with the module constants
+# that bound it (dbscan's distributed twin calls connected_components,
+# whose own kernel must be disabled too). Each kernel's MapInPandas is
+# visible in its query's own plan.
+GATED_QUERIES = [
+    ("minhash_near_dup_pairs", [(text, "MINHASH_SINGLE_TASK_MAX_DOCS")]),
+    ("ngram_jaccard_pairs", [(text, "NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS")]),
+    ("dedup_components", [(graph, "CC_SINGLE_TASK_MAX_EDGES")]),
+    ("pagerank_near_dup", [(graph, "ITER_SINGLE_TASK_MAX_EDGES")]),
+    ("bfs_hops_near_dup", [(graph, "ITER_SINGLE_TASK_MAX_EDGES")]),
+    ("hits_customer_part", [(graph, "ITER_SINGLE_TASK_MAX_EDGES")]),
+    ("kmeans_embedding_clusters", [(clustering, "KMEANS_SINGLE_TASK_MAX_CELLS")]),
+    (
+        "dbscan_embedding_clusters",
+        [
+            (clustering, "DBSCAN_SINGLE_TASK_MAX_ROWS"),
+            (graph, "CC_SINGLE_TASK_MAX_EDGES"),
+        ],
+    ),
+    ("customer_rfm_segments", [(rank, "NTILE_SINGLE_TASK_MAX_ROWS")]),
+    ("mmr_diverse_retrieval", [(similarity, "MMR_SINGLE_TASK_MAX_ROWS")]),
+]
+
+
+@pytest.mark.parametrize(
+    "name,bounds", GATED_QUERIES, ids=[q for q, _ in GATED_QUERIES]
+)
+def test_gated_query_routes_by_size(spark, sf_medium, monkeypatch, name, bounds):
+    """Small inputs reach the kernel with no hint or switch from the
+    caller; the same query with that kernel's bound at 0 runs its
+    distributed twin."""
+    build = registry._REGISTRY[name].spark
+    assert "MapInPandas" in _plan(build(spark, sf_medium))
+    for module, constant in bounds:
+        monkeypatch.setattr(module, constant, 0)
+    assert "MapInPandas" not in _plan(build(spark, sf_medium))
