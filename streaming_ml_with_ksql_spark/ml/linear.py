@@ -19,8 +19,8 @@ Scale shape: the weight vector lives as a 65-row (pos, wv) frame
 (64 dims + the augmented bias coordinate), BROADCAST into the score
 join; each epoch is one join + two map-side-combined groupBys over the
 exploded (vec_id, pos, xv) frame — no driver-side collect, no
-all-pairs. The exploded frame is localCheckpointed ONCE and reused by
-every epoch; per-epoch lineage is truncated through the checkpointed
+all-pairs. The exploded frame is materialized ONCE and reused by
+every epoch; per-epoch lineage is truncated through the materialized
 weight frame. At petabyte positive-counts the y*x sums need
 DECIMAL(38) — documented, exact through ~1e5 rows x 4 epochs in BIGINT
 here (|w| stays < ~1e10 micro-units, dots < ~1e18).
@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators import sizing
 
 __all__ = ["batch_perceptron_trajectory", "fit_stump"]
 
@@ -75,14 +77,14 @@ def batch_perceptron_trajectory(
                 "pos", "xv"
             ),
         )
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "perceptron rows, read every epoch")
     )
     dims = px.agg(F.max("pos")).collect()[0][0] + 1  # 64 + bias
     n_total = px.where(F.col("pos") == 0).count()
 
     w = spark.range(dims).select(
         F.col("id").cast("int").alias("pos"), F.lit(0).cast("long").alias("wv")
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "perceptron weights, epoch 0")
 
     stats = []
     for k in range(epochs + 1):
@@ -109,7 +111,7 @@ def batch_perceptron_trajectory(
                     "wv"
                 ),
             )
-            .localCheckpoint(eager=True)
+            .transform(sizing.materialize, "perceptron weights, per epoch")
         )
     out = spark.createDataFrame(stats, "epoch int, n_mis long")
     return out.select(
@@ -249,7 +251,7 @@ def gbdt_stump_rounds(
     scalar (the decision_tree_depth2 contract). Per-round passes are
     O(rows); nothing is quadratic.
     """
-    wide = wide.localCheckpoint(eager=True)
+    wide = sizing.materialize(wide, "gbdt rows, read every round")
     head = wide.agg(
         F.count(F.lit(1)).alias("n"), F.sum(y_col).alias("sy")
     ).collect()[0]
@@ -381,7 +383,7 @@ def gbdt_tree2_rounds(
     scalars, nothing quadratic. MSE per stage is non-increasing: each
     child stump's cells refine the root partition, and truncated cell
     means never increase SSE at lr=1 (n·a·(a − 2m) ≤ 0 per cell)."""
-    wide = wide.localCheckpoint(eager=True)
+    wide = sizing.materialize(wide, "gbdt rows, read every round")
     head = wide.agg(
         F.count(F.lit(1)).alias("n"), F.sum(y_col).alias("sy")
     ).collect()[0]
@@ -465,7 +467,7 @@ def gbdt_tree2_rounds(
         mses.append(sse // n_rows)
         if m == rounds:
             break
-        resid = wide.select(r, *feature_cols).localCheckpoint(eager=True)
+        resid = sizing.materialize(wide.select(r, *feature_cols), "gbdt residuals")
         root = best_split(resid)
         rfid, rthr = int(root["fid"]), int(root["thr"])
         rcol = F.col(feature_cols[rfid - 1])

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators import sizing
+
 __all__ = ["classification_report", "roc_auc_binary",
            "calibration_bins", "spearman_correlation"]
 
@@ -45,7 +47,7 @@ def classification_report(
     cells = (
         pairs.groupBy("label", "pred")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "report cells, read four times")
     )
     classes = (
         cells.select(F.col("label").alias("class"))

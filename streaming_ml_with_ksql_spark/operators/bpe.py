@@ -15,8 +15,8 @@ Scale design:
 - Each merge round is ONE pair-count aggregation (map-side combined
   groupBy over exploded adjacent pairs), ONE 1-row argmax collect (the
   chosen pair — a driver action over one row, not a corpus collect), and
-  ONE column rewrite; the frame is localCheckpointed per round to keep
-  the iterative lineage flat (same rationale as operators/graph.py).
+  ONE column rewrite; the frame is materialized per round to keep the
+  iterative lineage flat (same rationale as operators/graph.py).
 - Applying a learned merge table is pure Catalyst: every symbol is
   individually DELIMITED as SEP+s+SEP (word 'ab' → '␁a␁␁b␁') and each
   merge (a,b) is one replace(SEP+a+SEP + SEP+b+SEP → SEP+ab+SEP) —
@@ -142,7 +142,7 @@ def train_bpe(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(_char_sep(F.col("w")).alias("s"), "cnt")
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "bpe word counts, read every merge")
     )
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
@@ -175,7 +175,7 @@ def train_bpe(
                 "s", F.lit(SEP + a + SEP + SEP + b + SEP), F.lit(SEP + a + b + SEP)
             ).alias("s"),
             "cnt",
-        ).localCheckpoint(eager=True)
+        ).transform(sizing.materialize, "bpe word counts, per merge")
     return merges
 
 

@@ -16,7 +16,7 @@ Scale shape: the N x k assignment join broadcasts the k-row centroid
 frame (k-means' canonical distributed form); the update is ONE
 posexplode + groupBy(cid, pos) over N*d rows — partial aggregation
 map-side combines before the k*d-row shuffle. The centroid frame is
-localCheckpointed per iteration to truncate iterative lineage. No
+materialized per iteration to truncate iterative lineage. No
 driver-side collect anywhere; at 100 TB the same plan holds with
 centroids still k rows.
 
@@ -263,7 +263,7 @@ def kmeans_fixed_point(
     unrolled oracle does."""
     pts = quantize_vectors(
         emb, id_col=id_col, vec_col=vec_col, scale=scale
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "kmeans points, size the gate")
     # ONE aggregate on the materialized frame sizes the gate (ADVICE
     # r14): ragged frames (min dim != max dim) would crash np.asarray in
     # the kernel, so they provably fall through to the distributed loop;
@@ -291,7 +291,7 @@ def kmeans_fixed_point(
         pts.orderBy("vec_id")
         .limit(k)
         .select(F.col("vec_id").alias("cid"), F.col("qv").alias("cv"))
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "kmeans seed centroids")
     )
     for _ in range(iters):
         asg = _assign(pts, cent)
@@ -314,7 +314,7 @@ def kmeans_fixed_point(
         cent = (
             cent.join(newc, "cid", "left")
             .select("cid", F.coalesce("ncv", "cv").alias("cv"))
-            .localCheckpoint(eager=True)
+            .transform(sizing.materialize, "kmeans centroids, per round")
         )
     return _assign(pts, cent)
 
@@ -400,7 +400,7 @@ def dbscan_from_pairs(
 
     e = pairs.select(
         F.col(a_col).cast("long").alias("u"), F.col(b_col).cast("long").alias("v")
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "dbscan pair edges")
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     core = deg.where(F.col("d") >= min_neighbors).select("u")
@@ -479,18 +479,18 @@ def dbscan_from_weighted_pairs(
     members = members.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(rep_col).cast("long").alias("u"),
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "weighted dbscan members")
     # mw materialized: the gate below needs its count, and on the
     # distributed path deg/nbr_w both consume it (guide §2.4)
     mw = (
         members.groupBy("u")
         .agg(F.count(F.lit(1)).alias("m"))
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "weighted dbscan multiplicities, size the gate")
     )
     e = rep_pairs.select(
         F.col(a_col).cast("long").alias("u"),
         F.col(b_col).cast("long").alias("v"),
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "weighted dbscan rep edges")
     inp = mw.select("u", "m", F.lit(None).cast("long").alias("v")).unionByName(
         e.select("u", F.lit(None).cast("long").alias("m"), "v")
     )

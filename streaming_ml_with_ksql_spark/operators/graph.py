@@ -36,11 +36,11 @@ Scale notes:
   corpus, so this is the difference between 25 corpus-wide shuffles and
   25 shuffles of a frame that fits in a few executors.
 - State per round is (vertex, label) — two longs — never adjacency lists.
-- Each round localCheckpoints the label frame: truncates the iterative
-  lineage (plan size would otherwise grow linearly and re-run every prior
-  round), keeps the convergence `count()` cheap. On a production cluster
-  use `spark.sparkContext.setCheckpointDir` + `checkpoint()` instead —
-  localCheckpoint does not survive executor loss.
+- Each round cuts the label frame's lineage with `sizing.materialize`
+  (plan size would otherwise grow linearly and re-run every prior round),
+  which keeps the convergence `count()` cheap. It is a local checkpoint
+  and does not survive executor loss; a reliable checkpoint for a
+  production cluster is a change to `materialize` alone.
 - The convergence check is a driver-side count of CHANGED labels (labels
   only decrease, so `new < old` counts them) — an O(1)-row action per
   round, not a collect of the frame.
@@ -133,7 +133,7 @@ def _star_contract(
             .unionByName(mins2.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v")),
             "u",
-        ).distinct().localCheckpoint(eager=False)
+        ).distinct().transform(sizing.materialize, "star round", eager=False)
         # Deterministic fixed-point test (not a probabilistic checksum):
         # same cardinality + empty one-way difference ⇔ identical sets.
         # The count compare is a free precheck — when cardinality moved,
@@ -419,7 +419,7 @@ def connected_components(
         raise ValueError(f"unknown algorithm: {algorithm!r}")
     e = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "cc edge list, sizes the gate")
     n_directed = e.count()
     # Schema follows the edge id type: integer graphs stay long,
     # string-vertex graphs (part_entity_groups) stay string — the
@@ -461,7 +461,7 @@ def connected_components(
             )
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
+            .transform(sizing.materialize, "star contraction canonical edges")
         )
         n_edges = canon.count()
         default_parts = int(
@@ -525,7 +525,7 @@ def connected_components(
             "v",
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "cc symmetric edges, loop input")
     )
     # Iterate over edge-touched vertices only; edge-free vertices are
     # singleton components and join back once at the end.
@@ -533,7 +533,7 @@ def connected_components(
         _part(sym.select("u"), "u")
         .distinct()
         .withColumn("label", F.col("u"))
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "cc labels, round 0")
     )
     # The loop's shuffle width is scoped with EXPLICIT per-frame
     # repartition(loop_parts, ...) calls, never by mutating the session's
@@ -577,7 +577,7 @@ def connected_components(
                 ),
             ),
             "u",
-        ).localCheckpoint(eager=False)
+        ).transform(sizing.materialize, "cc labels, per round", eager=False)
         changed = stepped.filter(F.col("chg")).count()
         labels = stepped.select("u", "label")
         if changed == 0:
@@ -741,7 +741,7 @@ def kcore_vertices(
     und = canon.unionAll(
         canon.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    cur = und.localCheckpoint(eager=True)
+    cur = sizing.materialize(und, "kcore edges, round 0")
     for _ in range(max_rounds):
         deg = cur.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
         bad = deg.filter(F.col("deg") < k).select("u")
@@ -750,7 +750,7 @@ def kcore_vertices(
         cur = (
             cur.join(bad, "u", "left_anti")
             .join(bad.select(F.col("u").alias("v")), "v", "left_anti")
-            .localCheckpoint(eager=True)
+            .transform(sizing.materialize, "kcore edges, per peel")
         )
     else:
         raise RuntimeError(f"k-core peeling did not converge in {max_rounds} rounds")
@@ -809,7 +809,7 @@ def pagerank(
     # two longs per pair, O(|pairs|).
     p0 = pairs.select(
         F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "pagerank edge list, sizes the gate")
     # Single-task Arrow fast path (r14, guide §4.2): the pair list is
     # already materialized; when the symmetrized edge set fits one loop
     # partition, the iters × (join + groupBy + checkpoint) fixed job
@@ -841,12 +841,12 @@ def pagerank(
     ewd = (
         edges.join(deg, "src")
         .repartition(loop_parts, "src")
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "pagerank weighted edges, loop input")
     )
     nodes = (
         ewd.select(F.col("src").alias("node"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "pagerank nodes, loop input")
     )
     nn = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
     pr = nodes.crossJoin(F.broadcast(nn)).select(
@@ -882,7 +882,7 @@ def pagerank(
         # should pass checkpoint_every=1 to restore per-round
         # materialization (ADVICE r10).
         if i % checkpoint_every == checkpoint_every - 1 or i == iters - 1:
-            pr = pr.localCheckpoint(eager=True)
+            pr = sizing.materialize(pr, "pagerank ranks")
     return pr
 
 
@@ -929,7 +929,7 @@ def bfs_hops(
     # two longs per pair, O(|pairs|).
     p0 = pairs.select(
         F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "bfs edge list, sizes the gate")
     # Single-task Arrow fast path — see pagerank (the min-propagation
     # twin: int64 min is commutative, so the kernel's reduceat equals
     # the loop's groupBy-min on any partitioning; parity-pinned).
@@ -952,11 +952,11 @@ def bfs_hops(
             pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
         loop_parts = max(1, default_parts // 4)
-    ew = edges.repartition(loop_parts, "src").localCheckpoint(eager=True)
+    ew = sizing.materialize(edges.repartition(loop_parts, "src"), "bfs edges")
     nodes = (
         ew.select(F.col("src").alias("node"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "bfs nodes, loop input")
     )
     dist = nodes.select(
         "node",
@@ -980,7 +980,7 @@ def bfs_hops(
         # batching rounds per eager job cuts the loop's fixed job
         # overhead; data-dominated callers pass 1 (ADVICE r10).
         if i % checkpoint_every == checkpoint_every - 1 or i == iters - 1:
-            dist = dist.localCheckpoint(eager=True)
+            dist = sizing.materialize(dist, "bfs distances")
     return dist
 
 
@@ -1015,13 +1015,13 @@ def propagate_labels(
     """
     e = pairs.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "label propagation edges, loop input")
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     labels = seeds.select(
         F.col(id_col).alias("u"),
         F.col(label_col).alias("lbl"),
         F.lit(0).alias("round"),
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "label propagation labels, round 0")
     for k in range(1, rounds + 1):
         votes = (
             sym.join(
@@ -1040,7 +1040,7 @@ def propagate_labels(
             .where(F.col("rn") == 1)
             .select("u", "lbl", F.lit(k).alias("round"))
         )
-        labels = labels.unionByName(newly).localCheckpoint(eager=True)
+        labels = sizing.materialize(labels.unionByName(newly), "propagation round")
     return labels.select(
         F.col("u").alias(id_col), F.col("lbl").alias(label_col), "round"
     )
@@ -1080,7 +1080,7 @@ def hits_bipartite(
     # two single-task kernel scans — or the 2×rounds distributed joins —
     # would otherwise re-execute an expensive lazy edge plan per
     # consumer. Both downstream paths read only (c, p).
-    edges = edges.select(c, p).localCheckpoint(eager=True)
+    edges = sizing.materialize(edges.select(c, p), "hits edge list, sizes the gate")
     n_edges = edges.count()
     # Single-task Arrow fast path (r14, guide §4.2) — see pagerank: the
     # whole rounds×(sum, rescale, sum, rescale) recurrence is exact
@@ -1125,7 +1125,7 @@ def hits_bipartite(
         # materialize the summed frame ONCE: it feeds both the max
         # aggregate and the rescaled projection — without this the
         # edge-join aggregation would execute twice per call
-        df = df.localCheckpoint(eager=True)
+        df = sizing.materialize(df, "hits scores, read by max and rescale")
         m = df.agg(F.max(col).alias("m")).select(
             F.greatest(
                 F.lit(1).cast("long"),
@@ -1185,7 +1185,7 @@ def propagate_labels_weighted(
     """
     e = rep_pairs.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "weighted propagation rep edges")
     sym = (
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         # sibling votes: same-rep labeled groups reach the rep's block
@@ -1195,17 +1195,17 @@ def propagate_labels_weighted(
             .distinct()
             .select("u", F.col("u").alias("v"))
         )
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "weighted propagation graph, loop input")
     )
     voters = seed_groups.select(
         F.col(id_col).alias("u"),
         F.col(label_col).alias("lbl"),
         F.col(weight_col).cast("long").alias("w"),
         F.lit(0).alias("round"),
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "weighted propagation voters, round 0")
     pending = unlabeled.select(
         F.col(id_col).alias("u"), F.col(weight_col).cast("long").alias("w")
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "weighted propagation pending, round 0")
     for k in range(1, rounds + 1):
         votes = (
             sym.join(
@@ -1225,10 +1225,10 @@ def propagate_labels_weighted(
         )
         newly_w = newly.join(pending, "u").select(
             "u", "lbl", "w", F.lit(k).alias("round")
-        ).localCheckpoint(eager=True)
-        voters = voters.unionByName(newly_w).localCheckpoint(eager=True)
+        ).transform(sizing.materialize, "weighted propagation new labels")
+        voters = sizing.materialize(voters.unionByName(newly_w), "voters round")
         pending = pending.join(newly_w.select("u"), "u", "left_anti")
-        pending = pending.localCheckpoint(eager=True)
+        pending = sizing.materialize(pending, "weighted propagation pending, per round")
     return voters.select(
         F.col("u").alias(id_col),
         F.col("lbl").alias(label_col),

@@ -20,7 +20,7 @@ ops:
 5. global row number = prefix offset + local index + 1, attached with a
    broadcast join on partition id.
 
-The ranged frame is pinned with ``localCheckpoint`` before steps 4/5:
+The ranged frame is pinned with ``sizing.materialize`` before steps 4/5:
 the counts branch and the join branch must observe IDENTICAL partition
 ids and local indexes, and without pinning, adaptive execution may plan
 the two consumers of the reused exchange differently (different
@@ -81,7 +81,7 @@ def global_row_number(
         df.repartitionByRange(p, *order_cols)
         .sortWithinPartitions(*order_cols)
         .withColumn("__mid", F.monotonically_increasing_id())
-        .localCheckpoint()
+        .transform(sizing.materialize, "pin row ids for both readers")
     )
     ranged = ranged.withColumn(
         "__pid", F.shiftright(F.col("__mid"), 33).cast("long")

@@ -1968,7 +1968,7 @@ def mmr_diverse_topk(
     cand = (
         rel.orderBy(F.col("rel").desc(), F.col("vec_id").asc())
         .limit(cand_n)
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "mmr candidates, size the gate")
     )
     # The k-1 per-pick checkpoint jobs collapse into ONE Arrow task over
     # the cand_n-row frame (at most cand_n rows by the limit, so the
@@ -1998,7 +1998,7 @@ def mmr_diverse_topk(
             F.col("rel").alias("score"),
             F.lit(1).alias("pick_order"),
         )
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "mmr first pick")
     )
     for t in range(2, k + 1):
         pen = (
@@ -2021,7 +2021,7 @@ def mmr_diverse_topk(
             .orderBy(F.col("score").desc(), F.col("vec_id").asc())
             .limit(1)
         )
-        sel = sel.unionByName(pick).localCheckpoint(eager=True)
+        sel = sizing.materialize(sel.unionByName(pick), "mmr picks, per round")
     return sel.select(
         "pick_order",
         "vec_id",

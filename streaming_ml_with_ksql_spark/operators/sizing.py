@@ -23,16 +23,22 @@ lazy plan keeps the upstream scan parallel and ships only the kernel's
 rows to the task (r15: coalescing a lazy tokenize/explode plan into the
 kernel task measured 4x slower); ``coalesce(1)`` over a materialized frame
 skips a pointless exchange.
+
+``materialize`` is the only lineage cut: a local checkpoint, never a
+CacheManager persist that stays pinned until ``clearCache``. Cut only where
+recomputing costs more: iterative state, several consumers, or a frame a
+kernel gate must size exactly (a materialized leaf).
 """
 
 from __future__ import annotations
 
 import logging
+import time
 from typing import Callable
 
 from pyspark.sql import DataFrame
 
-__all__ = ["row_bound", "fan_out", "single_task"]
+__all__ = ["row_bound", "fan_out", "single_task", "materialize"]
 
 log = logging.getLogger(__name__)
 
@@ -165,3 +171,21 @@ def single_task(
         return None
     lazy = not _materialized(df._jdf.queryExecution().analyzed())
     return (df.repartition(1) if lazy else df.coalesce(1)).mapInPandas(kernel, schema)
+
+
+def materialize(df: DataFrame, why: str, *, eager: bool = True) -> DataFrame:
+    """``df`` as a local checkpoint, computed now in jobs described
+    ``materialize:<why>`` and logged with its seconds. ``eager=False``
+    leaves the final stage to the first action (e.g. a per-round
+    convergence count); adaptive execution still runs the plan's shuffle
+    stages here."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"materialize:{why}")
+    t0 = time.perf_counter()
+    try:
+        out = df.localCheckpoint(eager=eager)
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+    log.info("materialize why=%s eager=%s s=%.3f", why, eager, time.perf_counter() - t0)
+    return out

@@ -531,7 +531,7 @@ def near_dup_pairs_minhash(
       exploded pairs (min is duplicate-insensitive) and per-doc distinct
       sizes ride along as count_distinct in the SAME groupBy — the only
       full-corpus shuffle is that one aggregation.
-    - The (tiny) candidate-pair frame is persisted — it is read twice
+    - The (tiny) candidate-pair frame is materialized — it is read twice
       (candidate-doc list, verification) and recomputing it would re-run
       the banding self-join.
     - Verification narrows the shingle table to candidate docs with a
@@ -551,24 +551,25 @@ def near_dup_pairs_minhash(
     )
     if pk is not None:
         return _jaccard_pairs(pk, threshold)
-    # persist: the signature aggregate is the expensive full-corpus pass
+    # materialize: the signature aggregate is the expensive full-corpus pass
     # (shingle explode + one md5 per shingle row), and it is consumed by
     # THREE subtrees — the banding self-join's shuffle side, its broadcast
     # build side (broadcast builds never reuse a sibling exchange, so the
     # whole pipeline re-executed for it), and the per-doc `sizes` frame.
     # r14 plan audit measured the corpus explode running 3x per execution;
-    # persisting the (doc_id, n_sh, mh0..mh11) frame — 13 longs per doc,
-    # O(|docs|) — makes it one pass (guide §2.4/§5: reuse > recompute when
-    # the cached frame is keys+metadata, never the corpus payload).
+    # materializing the (doc_id, n_sh, mh0..mh11) frame — 13 longs per
+    # doc, O(|docs|) — makes it one pass (guide §2.4/§5: reuse > recompute
+    # when the reused frame is keys+metadata, never the corpus payload).
     sig = dsh.groupBy("doc_id").agg(
         F.count_distinct(F.col("shingle")).alias("n_sh"),
         *[
             F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"mh{i}")
             for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
         ],
-    ).persist()
+    ).transform(sizing.materialize, "minhash signatures, read twice", eager=False)
     sizes = sig.select("doc_id", "n_sh")
-    cands = minhash_candidate_pairs(sig, bands=bands, rows=rows).persist()
+    cands = minhash_candidate_pairs(sig, bands=bands, rows=rows)
+    cands = sizing.materialize(cands, "minhash pairs, read twice", eager=False)
     cand_docs = (
         cands.select(F.col("doc_a").alias("doc_id"))
         .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
@@ -1174,7 +1175,10 @@ def repetition_stats(
     ``tokens``: name of a precomputed token-array column — lets a
     composite (doc_quality_score) tokenize the corpus ONCE and share the
     materialized scan across its stages instead of re-splitting text per
-    stage (VERDICT r8 #6)."""
+    stage (VERDICT r8 #6). Precondition: no token contains whitespace
+    (as with ``tokens_col``): the kernel identifies a bigram by its pair
+    of token codes, which matches the relational path's space-joined
+    bigram string only for whitespace-free tokens."""
     toks = F.col(tokens) if tokens else tokens_col(F.col("text"))
     base = documents.select("doc_id", toks.alias("t"))
 
@@ -1322,7 +1326,7 @@ def ngram_jaccard_pairs_prefix(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .distinct()
-        .persist()
+        .transform(sizing.materialize, "prefix pairs, read twice", eager=False)
     )
     cand_docs = (
         cands.select(F.col("doc_a").alias("doc_id"))
@@ -1688,11 +1692,11 @@ def ngram_lm_score(
     )
     # TWO corpus passes instead of three (r14, guide §2.3/§2.4/§8): the
     # model counts fold exactly from the per-doc counts (count == sum of
-    # m), so bg/ctx/voc all derive from ONE persisted model-scale
+    # m), so bg/ctx/voc all derive from ONE materialized model-scale
     # aggregate instead of three independent explode+shuffle passes over
     # the corpus. voc is exact: every token of a >=2-token doc is w1 of
     # some bigram or w2 of the last one, so distinct(w1) ∪ distinct(w2)
-    # IS the distinct token set. Only bg is persisted — it is bounded by
+    # IS the distinct token set. Only bg is materialized — it is bounded by
     # DISTINCT corpus bigrams (model-scale); doc_big is one row per
     # (doc, bigram) — corpus-scale — and caching it costs more bytes than
     # the corpus text itself (guide §8's decision-frame rule: persist
@@ -1706,7 +1710,8 @@ def ngram_lm_score(
     # (w1, w2) == sum(m) over the per-doc counts, and the direct groupBy
     # map-side-combines one shuffle instead of paying the (doc, w1, w2)
     # exchange first — the model pass drops an Exchange.
-    bg = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")).persist()
+    bg = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
+    bg = sizing.materialize(bg, "bigram counts, read thrice", eager=False)
     ctx = bg.groupBy("w1").agg(F.sum("c12").alias("c1"))
     voc = (
         bg.select(F.col("w1").alias("w"))
@@ -2434,20 +2439,22 @@ def winnowing_pairs(
         % F.lit(1 << 28),
     )
     hcol = F.col("hs")
-    fps = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.size(hcol) - (w - 1)),
-            lambda i: F.array_min(F.slice(hcol, i, w)),
-        )
-    )
+    # Explode the window STARTS, then take each window's min: exploding
+    # an array of minima lets Catalyst infer size(fps) > 0 and push it
+    # below the Project, which inlines the md5 shingle hash into the
+    # window-min lambda once per window (O(n^2) md5 per document).
     per_doc = (
         documents.select("doc_id", hs.alias("hs"))
-        .where(F.size(F.col("hs")) >= w)
-        .select("doc_id", fps.alias("fps"))
-        .select("doc_id", F.explode("fps").alias("fp"))
+        .where(F.size(hcol) >= w)
+        .select(
+            "doc_id", "hs",
+            F.explode(F.sequence(F.lit(1), F.size(hcol) - (w - 1))).alias("i"),
+        )
+        .select("doc_id", F.array_min(F.slice(hcol, F.col("i"), w)).alias("fp"))
+        .distinct()
         # read twice below (df_tbl + kept): materialize so the md5
         # shingle-hash + window-min fingerprinting runs once
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "winnowing fingerprints, read twice")
     )
     df_tbl = per_doc.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
     kept = per_doc.join(

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import sizing
+
 __all__ = [
     "multi_resolution_rollup",
     "minute_partials",
@@ -435,7 +437,7 @@ def isotonic_daily_fit(
     d = (
         daily.crossJoin(F.broadcast(d0))
         .select(F.datediff("day", "d0").alias("t"), "y")
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "isotonic daily series")
     )
     a, b, c = d.alias("a"), d.alias("b"), d.alias("c")
     pairs = a.crossJoin(F.broadcast(b)).where(F.col("a.t") <= F.col("b.t")).select(

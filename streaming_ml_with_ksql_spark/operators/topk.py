@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from . import sizing
+
 __all__ = [
     "heavy_hitters",
     "cms_cells",
@@ -144,7 +146,7 @@ def cms_estimates(df: DataFrame, key_col: str, *, min_count: int) -> DataFrame:
         df.groupBy(F.col(key_col).cast("string").alias("__k"))
         .agg(F.count(F.lit(1)).alias("exact_n"))
         .select("__k", "exact_n", *_cms_hash_cols(F.col("__k")))
-        .localCheckpoint(eager=False)
+        .transform(sizing.materialize, "cms per-key counts, read twice", eager=False)
     )
     # Derive the grid from the SAME per-key aggregate (rename exact_n to
     # the cell weight) — calling cms_cells(df) here would re-scan and

@@ -42,6 +42,7 @@ from ..operators import (
     multimodal,
     rolling,
     similarity,
+    sizing,
     text,
     timeseries,
     topk,

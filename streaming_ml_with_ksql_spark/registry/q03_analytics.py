@@ -419,7 +419,7 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         # parallel_ntile's repartitionByRange samples its input and then
         # shuffles it — two executions of the orders scan+groupBy without
         # this (guide §2.4; the decision-frame rule — 4 scalars/customer).
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "rfm aggregate, sizes the ntile gate")
     )
     # Scale-adaptive quintile scoring (guide §2.2/§4.2): below a
     # measured-count bound (the checkpointed frame's count is a

@@ -407,16 +407,14 @@ def q_hll_partition_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("day", "ts").cast("date").cast("string"),
     )
     bucket, rho = hll_hash_cols(key)
-    # materialized: v feeds BOTH register paths (regs_day and direct) —
-    # without the checkpoint the md5/rho scan executes twice (the r7
-    # frames-read-twice discipline; at 100x the duplicated hash scan is
-    # this query's dominant cost).
+    # v feeds BOTH register paths (regs_day and direct); at sf0.1 running
+    # its md5/rho scan twice measured cheaper than materializing it.
     v = ev.select(
         "event_type",
         F.date_trunc("day", "ts").cast("date").alias("day"),
         bucket.alias("bucket"),
         rho.alias("rho"),
-    ).localCheckpoint(eager=True)
+    )
     regs_day = v.groupBy("event_type", "day", "bucket").agg(
         F.least(F.max("rho").cast("long"), F.lit(40)).alias("reg")
     )

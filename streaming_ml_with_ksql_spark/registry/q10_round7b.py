@@ -534,7 +534,7 @@ def q_link_prediction_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(
             pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
         )
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "copurchase edges, read twice")
     )
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
@@ -612,7 +612,6 @@ def q_seasonal_decompose_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         daily.crossJoin(F.broadcast(d0))
         .select(F.datediff("day", "d0").alias("t"), "y")
-        .localCheckpoint(eager=True)
     )
     b = d.select(F.col("t").alias("t2"), F.col("y").alias("y2"))
     tr = (
@@ -984,7 +983,7 @@ def q_seasonal_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("y_micro_d").cast("long").alias("y"),
             F.col("resid_micro_d").cast("long").alias("resid"),
         )
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "seasonal residuals")
     )
     n = dec.agg(F.count(F.lit(1)).alias("n"))
     b = dec.select(F.col("resid").alias("r2"), F.col("t").alias("t2"))
@@ -1096,7 +1095,7 @@ def q_bootstrap_revenue_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         daily.crossJoin(F.broadcast(d0))
         .select(F.datediff("day", "d0").alias("t"), "y", "n")
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "daily series")
     )
     n_rows = d.select("n").limit(1)
     spark_b = spark.range(200).select(F.col("id").alias("b"))
@@ -1139,7 +1138,7 @@ def q_bootstrap_revenue_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid.join(F.broadcast(d), F.col("t") == F.col("hv") % F.col("n"))
         .groupBy("b")
         .agg(F.sum("y").alias("s"))
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "bootstrap resample sums")
     )
     c = res.select(F.col("b").alias("b2"), F.col("s").alias("s2"))
     rk = (

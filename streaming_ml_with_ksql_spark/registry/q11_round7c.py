@@ -85,7 +85,7 @@ def q_dbscan_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     wemb = Window.partitionBy("embedding")
     tagged = em.select(
         "vec_id", "embedding", F.min("vec_id").over(wemb).alias("rep")
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "dbscan duplicate-collapsed vectors")
     members = tagged.select("vec_id", "rep")
     rep_pairs = similarity.embedding_near_dup_pairs_blocked(
         tagged.filter(F.col("vec_id") == F.col("rep")).select(
@@ -965,9 +965,7 @@ def q_decision_tree_depth2_events(spark: SparkSession, sf_dir: str) -> DataFrame
     per-node training accuracy."""
     from ..ml import linear
 
-    base = _event_stump_base(_t(spark, sf_dir, "events")).localCheckpoint(
-        eager=True
-    )
+    base = _event_stump_base(_t(spark, sf_dir, "events"))
     root = linear.fit_stump(_stack_features(base)).collect()[0]
     fid, thr = int(root["fid_d"]), int(root["thr_d"])
     pred = F.expr(
@@ -1491,7 +1489,7 @@ def q_label_propagation_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rep",
         "lang",
         (F.col("doc_id") % 5 == 0).alias("is_seed"),
-    ).localCheckpoint(eager=True)
+    )
     rep_pairs = text.ngram_jaccard_pairs(
         docs.join(
             reps.select(F.col("rep").alias("doc_id")), "doc_id", "left_semi"
@@ -1690,7 +1688,7 @@ def q_markov_absorption_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("next_type").alias("nx"),
             F.expr("(n * 1000000L) div tot").alias("p_ppm"),
         )
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "markov transition matrix")
     )
     reach = m.select("s").distinct().select(
         "s", F.lit(0).cast("long").alias("ppm")

@@ -79,7 +79,7 @@ def q_conformal_forecast_interval(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     t0 = daily.agg(F.min("t").alias("t0"))
     f = f.crossJoin(F.broadcast(t0))
-    cal = f.where(F.col("t") < F.col("t0") + 365).localCheckpoint(eager=True)
+    cal = f.where(F.col("t") < F.col("t0") + 365)
     hold = f.where(F.col("t") >= F.col("t0") + 365)
     nk = cal.agg(F.count(F.lit(1)).alias("n")).select(
         "n",
@@ -203,7 +203,6 @@ def q_cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("y"),
         )
-        .localCheckpoint(eager=True)
     )
     g = ux.agg(
         F.count(F.lit(1)).alias("n"), F.sum("x").alias("sx")
@@ -506,7 +505,7 @@ def q_naive_bayes_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "CAST(datediff(date_trunc('day', ts), d0) AS INT) % 7"
         ).alias("wd"),
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "naive bayes rows")
     nc = x.groupBy("c").agg(F.count(F.lit(1)).alias("n"))
     ch = x.groupBy("c", "hb").agg(F.count(F.lit(1)).alias("hcnt"))
     cw = x.groupBy("c", "wd").agg(F.count(F.lit(1)).alias("wcnt"))
@@ -662,7 +661,7 @@ def q_mahalanobis_order_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         (F.col("p") - F.col("mp")).alias("dx"),
         (F.col("q") - F.col("mq")).alias("dy"),
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "mahalanobis deviations")
     cov = dev.agg(
         F.sum(F.expr("dx * dx")).alias("sxx"),
         F.sum(F.expr("dx * dy")).alias("sxy"),
@@ -936,7 +935,7 @@ def q_ransac_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("t")
     ).agg(
         F.expr("sum(CAST(floor(o_totalprice) AS BIGINT))").alias("y")
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "ransac daily series")
     b = daily.select(F.col("t").alias("t2"), F.col("y").alias("y2"))
     rk = (
         daily.join(b, F.col("t2") <= F.col("t"))
@@ -1178,7 +1177,7 @@ def q_reuse_distance_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     seq = op.join(ordpos, ["c", "ok"]).select(
         "c", "part", "pos"
-    ).localCheckpoint(eager=True)
+    )
     wp = Window.partitionBy("c", "part").orderBy("pos")
     re = (
         seq.withColumn("prev", F.lag("pos").over(wp))
@@ -1268,7 +1267,7 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pa").alias("src"), F.col("pb").alias("dst")
     ).unionByName(
         pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    ).localCheckpoint(eager=True)
+    )
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
     )
@@ -1537,7 +1536,7 @@ def q_randomization_test_weekend_value(spark: SparkSession, sf_dir: str) -> Data
             F.expr("CAST(floor(value * CAST(1000000 AS DOUBLE)) AS BIGINT)")
         ).alias("y"),
         F.count(F.lit(1)).alias("n"),
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "randomization test cells")
 
     def meandiff(grp_col: str):
         wy = F.sum(F.when(F.expr(grp_col), F.col("y")).otherwise(0))
@@ -1675,7 +1674,7 @@ def q_wasserstein_weekend_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = lab.groupBy("v").agg(
         F.sum(F.when(F.col("we"), 1).otherwise(0)).alias("a"),
         F.sum(F.when(~F.col("we"), 1).otherwise(0)).alias("b"),
-    ).localCheckpoint(eager=True)
+    )
     n = h.agg(F.sum("a").alias("na"), F.sum("b").alias("nb"))
     y = h.select(
         F.col("v").alias("v2"), F.col("a").alias("a2"), F.col("b").alias("b2")
@@ -1934,7 +1933,7 @@ def q_ktruss_copurchase_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.join(keep.withColumnRenamed("node", "pa"), "pa")
         .join(keep.withColumnRenamed("node", "pb"), "pb")
         .select(F.col("pa").alias("a"), F.col("pb").alias("b"))
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "ktruss edges, round 0")
     )
     n0 = e.count()  # driver-bounded scalar (edge count)
     sup = None
@@ -1958,13 +1957,13 @@ def q_ktruss_copurchase_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("ed.a", "ed.b")
             .groupBy("a", "b")
             .agg(F.count(F.lit(1)).alias("sup"))
-            .localCheckpoint(eager=True)
+            .transform(sizing.materialize, "ktruss support, per peel")
         )
         e = (
             e.join(sup, ["a", "b"])
             .where(F.col("sup") >= 2)
             .select("a", "b")
-            .localCheckpoint(eager=True)
+            .transform(sizing.materialize, "ktruss edges, per peel")
         )
     nf = e.count()
     h = (
@@ -2008,7 +2007,7 @@ def q_streaming_wasserstein_ingest(spark: SparkSession, sf_dir: str) -> DataFram
         per_cell,
         f"reg_stream_wasser_{next(_STREAM_SEQ)}",
         output_mode="complete",
-    ).localCheckpoint(eager=True)
+    )
     n = h.agg(F.sum("a").alias("na"), F.sum("b").alias("nb"))
     y = h.select(
         F.col("v").alias("v2"), F.col("a").alias("a2"), F.col("b").alias("b2")

@@ -754,10 +754,6 @@ def q_item_item_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lift_ppm"),
         )
     )
-    # sc is read twice (the union's two branches re-execute the heaviest
-    # stage — the within-order self-join pair aggregation — without this
-    # pin; ADVICE r8 / the repo's materialization rule).
-    sc = sc.localCheckpoint(eager=True)
     sym = sc.select(
         F.col("pa").alias("p"), F.col("pb").alias("q"), "lift_ppm"
     ).unionByName(
@@ -771,7 +767,6 @@ def q_item_item_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("u", "p")
         .distinct()
-        .localCheckpoint(eager=True)  # read twice: candidates + ownership
     )
     cand = (
         up.where(F.col("u") % 50 == 0)

@@ -436,10 +436,10 @@ def q_incremental_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
 
     docs = _t(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % 10 == 0
-    sig = minhash_signatures(docs).localCheckpoint(eager=True)
+    sig = sizing.materialize(minhash_signatures(docs), "minhash signatures, read twice")
     cands = minhash_candidate_pairs_between(
         sig.filter(is_new), sig.filter(~is_new)
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "incremental candidate pairs")
     ds = _doc_shingles(docs, 3)
     cand_docs = (
         cands.select(F.col("new_doc").alias("doc_id"))
@@ -513,7 +513,7 @@ def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
 
     docs = _t(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 10 != 0)
-    old_sig = minhash_signatures(old).localCheckpoint(eager=True)
+    old_sig = minhash_signatures(old)
 
     from ..operators.text import minhash_coeffs
 
@@ -539,9 +539,7 @@ def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         f"reg_stream_incdedup_{next(_STREAM_SEQ)}",
         output_mode="append",
     )
-    cands = drained.select("new_doc", "old_doc").distinct().localCheckpoint(
-        eager=True
-    )
+    cands = drained.select("new_doc", "old_doc").distinct()
 
     ds = _doc_shingles(docs, 3)
     cand_docs = (
@@ -677,7 +675,7 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     pairs = text.ngram_jaccard_pairs(docs).select(
         "doc_a", "doc_b"
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "leakage pair list")
     naive = text.hash_split(docs).select("doc_id", "split")
     # Derive the group split from the AUDIT'S OWN checkpointed pair
     # frame (calling q_group_aware_split would re-run the heaviest
@@ -1005,7 +1003,7 @@ def q_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (anchor, positive, negative) triple with both cosines and the
     margin — the quantity a triplet loss drives positive. One probe-
     broadcast scan scores the corpus once; both picks are keyed top-1s
-    over the same scored frame (localCheckpoint'd — two readers).
+    over the same scored frame.
     Margin is a difference of two 6dp-rounded doubles: exact-identical
     cross-engine."""
     from ..operators.similarity import (
@@ -1050,7 +1048,6 @@ def q_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn")
             ).alias("cosine"),
         )
-        .localCheckpoint(eager=True)  # two readers: positive + negative
     )
     pos = _keyed_topk(
         scored.filter(F.col("rel") == 1), "anchor_id", "cosine", "cand_id", 1
@@ -1616,7 +1613,7 @@ def q_streaming_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         cells,
         f"reg_stream_colprof_{next(_STREAM_SEQ)}",
         output_mode="complete",
-    ).localCheckpoint(eager=True)
+    ).transform(sizing.materialize, "streamed column profile cells")
     return _profile_from_cells(drained)
 
 
@@ -1706,7 +1703,6 @@ def q_mrr_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn")
             ).alias("cosine"),
         )
-        .localCheckpoint(eager=True)  # read twice: top-rel + rank count
     )
     top_rel = _keyed_topk(
         scored.filter(F.col("rel") == 1),

@@ -174,36 +174,20 @@ def _prf_bm25_micro(base, stats, dftbl, terms):
 
 
 def _prf_frames(spark: SparkSession, sf_dir: str):
-    """Shared PRF stage frames: checkpointed token scan (read five times
-    across the stages — the doc_quality materialization rule), corpus
-    stats, the df table (per-doc array_distinct explode, so no global
-    DISTINCT shuffle), and the top-5 expansion-term frame."""
+    """Shared PRF stage frames: the token scan, corpus stats, the df
+    table (per-doc array_distinct explode, so no global DISTINCT
+    shuffle), and the top-5 expansion-term frame."""
     docs = _t(spark, sf_dir, "documents")
     toks = text.tokens_col(F.col("text"))
-    base = docs.select(
-        "doc_id", toks.alias("t"), F.size(toks).alias("dl")
-    ).localCheckpoint(eager=True)
-    # Materialize the 1-row corpus stats: it is crossJoin-broadcast into
-    # every scoring stage, and broadcast builds cannot share a sibling
-    # subtree — each build would otherwise re-aggregate the full token
-    # RDD (an ExistingRDD scan cannot column-prune, so every pass pays
-    # full token-array deserialization; guide §2.4/§5). The limit(1) is
-    # a semantic no-op (a global aggregate is exactly one row) that
-    # restores the logical maxRows bound the checkpoint erases — the
-    # plan lint proves BNLJ build sides bounded through it.
-    stats = (
-        base.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("dl").cast("double").alias("sum_dl"),
-        )
-        .localCheckpoint(eager=True)
-        .limit(1)
+    base = docs.select("doc_id", toks.alias("t"), F.size(toks).alias("dl"))
+    stats = base.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("dl").cast("double").alias("sum_dl"),
     )
     dftbl = (
         base.select(F.explode(F.array_distinct("t")).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
-        .localCheckpoint(eager=True)
     )
     # .limit pins logical maxRows: createDataFrame yields an RDD-backed
     # scan Catalyst cannot bound, and the plan lint (rightly) rejects a
@@ -211,16 +195,14 @@ def _prf_frames(spark: SparkSession, sf_dir: str):
     seeds = spark.createDataFrame(
         [(t, 1) for t in _PRF_SEEDS], "term string, w int"
     ).limit(len(_PRF_SEEDS))
-    # Score the seed terms ONCE and materialize the per-(doc, term)
-    # micro frame (r15, guide §2.4): it is bounded by |seed hits| (≤ 2
-    # rows per doc — keys+metadata, never corpus payload) and feeds both
-    # the stage-1 feedback ranking here and the stage-2 re-scoring
+    # Score the seed terms ONCE into the per-(doc, term) micro frame (r15,
+    # guide §2.4): it is bounded by |seed hits| (≤ 2 rows per doc —
+    # keys+metadata, never corpus payload) and feeds both the stage-1
+    # feedback ranking here and the stage-2 re-scoring
     # (seeds carry weight 2 there: floor(raw·1e6)·2 == micro·2, so the
     # stage-2 fan-out only scores the 5 expansion terms instead of
     # re-scanning every token array for the seeds too).
-    seed_micro = _prf_bm25_micro(base, stats, dftbl, seeds).localCheckpoint(
-        eager=True
-    )
+    seed_micro = _prf_bm25_micro(base, stats, dftbl, seeds)
     s1 = seed_micro.groupBy("doc_id").agg(F.sum("micro").alias("s0"))
     fb = s1.orderBy(F.col("s0").desc(), F.col("doc_id").asc()).limit(
         _PRF_N_FB
@@ -283,12 +265,12 @@ def q_prf_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     floored to micro-units BEFORE the per-doc sum, so the final scores
     are order-free BIGINT sums — exactly hashable cross-engine — while
     ranking is unchanged for any realistic score gap. Scale shape: two
-    bounded broadcast term fan-outs (2 and 7 rows) over the checkpointed
-    token scan; the only shuffles are the df/doc-score groupBys."""
+    bounded broadcast term fan-outs (2 and 7 rows) over the token scan;
+    the only shuffles are the df/doc-score groupBys."""
     base, stats, dftbl, seeds, expterms, seed_micro = _prf_frames(
         spark, sf_dir
     )
-    # Stage-2 scoring reuses the checkpointed seed micros (x the integer
+    # Stage-2 scoring reuses the stage-1 seed micros (x the integer
     # Rocchio seed weight — exactly floor(raw*1e6)*w, the oracle's
     # per-term value) and fans out over the 5 expansion terms only;
     # seed and expansion term sets are disjoint by construction (the
@@ -349,14 +331,9 @@ def q_sequential_pattern_support(
     equi-joins and groupBys, intermediate width bounded by |types|^2
     (25 rows/user), no window, no broadcast growth."""
     ev = _t(spark, sf_dir, "events")
-    # Materialize the distinct event frame ONCE: it is read three times
-    # (the a-aggregate and the b/c joins), and without this the full
-    # events scan + distinct shuffle executes per consumer (guide §2.4).
-    e = (
-        ev.select("user_id", "event_type", "ts")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # e is read three times (the a-aggregate and the b/c joins); at sf0.1
+    # recomputing it measured no slower than materializing it.
+    e = ev.select("user_id", "event_type", "ts").distinct()
     a = e.groupBy(
         "user_id", F.col("event_type").alias("step_a")
     ).agg(F.min("ts").alias("t1"))
@@ -640,7 +617,7 @@ def q_streaming_calibration_ingest(
         cells,
         f"reg_stream_calib_{next(_STREAM_SEQ)}",
         output_mode="complete",
-    ).localCheckpoint(eager=True)
+    )
     return _brier_from_cells(drained)
 
 
@@ -703,7 +680,7 @@ def q_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     diagnostic a tokenizer-budget planner reads)."""
     docs = _t(spark, sf_dir, "documents")
     toks = text.tokens_col(F.col("text"))
-    d = docs.select("doc_id", toks.alias("t")).localCheckpoint(eager=True)
+    d = sizing.materialize(docs.select("doc_id", toks.alias("t")), "heaps doc tokens")
     mx = d.agg(F.max("doc_id").alias("m"))
     # .limit(5) pins logical maxRows (RDD-backed literal frame + 1-row
     # aggregate cross join — bounded by construction, provable for the
@@ -903,7 +880,7 @@ def q_stump_cv_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " TIMESTAMP '2024-01-01') AS BIGINT)"
             ).alias("f3"),
         )
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "stump cv rows")
     )
     feat = base.selectExpr(
         "fold", "y", "stack(3, 1L, f1, 2L, f2, 3L, f3) AS (fid, v)"
@@ -911,7 +888,7 @@ def q_stump_cv_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = (
         feat.groupBy("fold", "fid", "v")
         .agg(F.count(F.lit(1)).alias("c"), F.sum("y").alias("s"))
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "stump cv histogram")
     )
     tot = hist.groupBy("fid", "v").agg(
         F.sum("c").alias("tc"), F.sum("s").alias("ts_")
@@ -927,7 +904,7 @@ def q_stump_cv_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("tc") - F.coalesce(F.col("c"), F.lit(0))).alias("c"),
             (F.col("ts_") - F.coalesce(F.col("s"), F.lit(0))).alias("s"),
         )
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "stump cv complement histogram")
     )
     ttot = trainhist.groupBy("fold", "fid").agg(
         F.sum("c").alias("n_t"), F.sum("s").alias("s_t")
@@ -1589,7 +1566,7 @@ def q_streaming_pivot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         wide,
         f"reg_stream_pivot_{next(_STREAM_SEQ)}",
         output_mode="complete",
-    ).localCheckpoint(eager=True)
+    )
     return drained.select(
         "week_d",
         *[

@@ -700,9 +700,9 @@ def q_hll_merge_registers_exact(
     partials (the per-partition sketches a petabyte pipeline stores
     instead of raw keys) max-merged upward must equal the single-pass
     register table bit-for-bit, because max is associative and
-    commutative. The Spark side REALLY materializes the daily partials
-    (eager localCheckpoint between the two aggregations, so the plan is
-    genuinely two-level — partial sketch build, then merge); the oracle
+    commutative. The Spark side builds the daily partials in one
+    aggregation and max-merges them in a second (the plan is genuinely
+    two-level — partial sketch build, then merge); the oracle
     computes the direct single-pass registers, so the driver hash-check
     IS the merge≡direct proof on this round's testdata. Exact
     counterpart to hll_partition_merge (rows-only by design — Spark's
@@ -729,7 +729,6 @@ def q_hll_merge_registers_exact(
         )
         .groupBy("day", "event_type", "bucket")
         .agg(F.max("rho").alias("r"))
-        .localCheckpoint(eager=True)
     )
     return (
         daily.groupBy("event_type", "bucket")

@@ -439,7 +439,7 @@ def q_streaming_cusum_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         daily,
         f"reg_stream_cusum_{next(_STREAM_SEQ)}",
         output_mode="complete",
-    ).localCheckpoint(eager=True)
+    )
     t = d.agg(F.expr("sum(cents) div count(*)").alias("target"))
     d2 = d.select(F.col("day").alias("day2"), F.col("cents").alias("cents2"))
     p = (
@@ -1043,7 +1043,7 @@ def q_streaming_mann_whitney_ingest(spark: SparkSession, sf_dir: str) -> DataFra
         hist,
         f"reg_stream_mw_{next(_STREAM_SEQ)}",
         output_mode="complete",
-    ).localCheckpoint(eager=True)
+    )
     cells = drained.groupBy("s").agg(
         F.sum(F.expr("CASE WHEN wk = 1 THEN c ELSE 0 END")).alias("n1c"),
         F.sum("c").alias("tc"),
@@ -1107,7 +1107,7 @@ def q_streaming_welch_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         g,
         f"reg_stream_welch_{next(_STREAM_SEQ)}",
         output_mode="complete",
-    ).localCheckpoint(eager=True)
+    )
     p = drained.agg(
         F.expr("max(CASE WHEN wk = 1 THEN n END)").alias("n1"),
         F.expr("max(CASE WHEN wk = 0 THEN n END)").alias("n0"),
@@ -1402,7 +1402,7 @@ def q_ablation_grid_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
             " WHEN c_doc_id = group_id THEN 'dup_rep'"
             " ELSE 'dup_member' END AS tier",
         )
-        .localCheckpoint(eager=True)
+        .transform(sizing.materialize, "ablation grid assignments")
     )
     tot = base.agg(F.count(F.lit(1)).alias("n"))
     cells = base.groupBy("qcell").agg(F.count(F.lit(1)).alias("t"))
@@ -1723,7 +1723,7 @@ def q_mase_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("sum(CAST(floor(o_totalprice * 100) AS BIGINT))").alias(
             "cents"
         )
-    ).localCheckpoint(eager=True)
+    )
     d2 = d.select(F.col("day").alias("day2"), F.col("cents").alias("cents2"))
 
     def mae(days: int):
@@ -1834,7 +1834,7 @@ def q_brown_forsythe_value_by_type(spark: SparkSession, sf_dir: str) -> DataFram
         "event_type",
         "CAST(floor(value * 100) AS BIGINT) AS c",
         "CAST(floor(value * 10) AS BIGINT) AS d",
-    ).localCheckpoint(eager=True)
+    )
     nt = t.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     dcells = t.groupBy("event_type", "d").agg(
         F.count(F.lit(1)).alias("tc")
@@ -2024,7 +2024,7 @@ def q_streaming_kruskal_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         cells_s,
         f"reg_stream_kw_{next(_STREAM_SEQ)}",
         output_mode="complete",
-    ).localCheckpoint(eager=True)
+    )
     c2 = cells.select(F.col("s").alias("s2"), F.col("tc").alias("tc2"))
     wb = (
         cells.join(F.broadcast(c2), F.col("s2") < F.col("s"), "left")

@@ -307,7 +307,8 @@ def test_probe_anchor_rejects_mislabeled_id_suffix(spark):
 
 
 # ---------------------------------------------------------------------------
-# Source lint: one way to size a frame, one way to feed a single-task kernel
+# Source lint: one way to size a frame, one way to feed a single-task kernel,
+# one way to materialize
 # ---------------------------------------------------------------------------
 
 _PKG = Path(registry.__file__).resolve().parent.parent
@@ -318,6 +319,7 @@ _ENV_READ = re.compile(r"\bos\.(environ\b|getenv\()")
 _ONE_TASK_FEED = re.compile(
     r"\.(coalesce|repartition)\(\s*1\s*\)\s*\.mapInPandas\b"
 )
+_MATERIALIZE = re.compile(r"\.(localCheckpoint|persist|cache|checkpoint)\(")
 
 
 def _package_sources():
@@ -343,4 +345,18 @@ def test_single_task_feeds_only_in_sizing():
     assert not offenders, (
         f"one-partition mapInPandas feeds outside operators/sizing.py "
         f"(route through sizing.single_task): {offenders}"
+    )
+
+
+def test_materialize_only_in_sizing():
+    offenders = [
+        f"{path.relative_to(_PKG)}:{n}"
+        for path, src in _package_sources()
+        if path.name != "sizing.py"
+        for n, line in enumerate(src.splitlines(), 1)
+        if _MATERIALIZE.search(line)
+    ]
+    assert not offenders, (
+        f"lineage cuts outside operators/sizing.py "
+        f"(route through sizing.materialize): {offenders}"
     )

@@ -695,6 +695,36 @@ def test_round7d_second_wave_plan_shapes(spark):
     assert "Window" not in plan
 
 
+def _call_args(plan: str, fn: str) -> list[str]:
+    """Argument text of every ``fn(...)`` call in a plan string."""
+    out = []
+    for m in re.finditer(re.escape(fn) + r"\(", plan):
+        depth, i = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        out.append(plan[m.end() : i - 1])
+    return out
+
+
+def test_winnowing_window_min_never_rehashes(spark, monkeypatch):
+    """The window minima read the hashed shingle array; the md5 hash never
+    sits under array_min, where it would run once per window (O(n^2) md5
+    per document). The fingerprint frame is observed before any
+    materialization cuts it out of the plan."""
+    from streaming_ml_with_ksql_spark import io as io_mod
+    from streaming_ml_with_ksql_spark.operators import sizing, text
+
+    monkeypatch.setattr(sizing, "materialize", lambda df, why, **kw: df)
+    docs = io_mod.load_table(spark, SF, "documents")
+    plan = (
+        text.winnowing_pairs(docs)._jdf.queryExecution().optimizedPlan().toString()
+    )
+    mins = _call_args(plan, "array_min")
+    assert mins and "md5" in plan
+    assert not [a for a in mins if "md5" in a]
+
+
 def test_round7d_third_wave_plan_shapes(spark):
     """Later-wave operators: fingerprint joins stay keyed, per-key
     windows never single-partition, loops run on checkpointed frames."""

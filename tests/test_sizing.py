@@ -2,14 +2,17 @@
 row bound from its own plan (parquet footer for scan-shaped plans, exact
 count for materialized leaves, None otherwise) without executing derived
 DAGs; ``fan_out`` sizes CPU-kernel width from it; ``single_task`` is the
-one router to a single-task kernel."""
+one router to a single-task kernel; ``materialize`` is the one lineage
+cut."""
 
 from __future__ import annotations
 
 import logging
+import time
 
 import pandas as pd
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
@@ -174,6 +177,76 @@ def test_single_task_routes_and_feeds(spark, sf_small, caplog):
     assert sizing.single_task(docs, max_rows=0, force=True, **kw) is not None
     assert sizing.single_task(docs, max_rows=10**6, force=False, **kw) is None
     assert sizing.single_task(joined, max_rows=10, rows=3, **kw) is not None
+
+
+def _group_jobs(sc, group: str) -> list[int]:
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_materialize_is_a_counted_leaf(spark):
+    """The result is a checkpoint leaf: row_bound counts it exactly and
+    single_task coalesces it instead of adding an exchange."""
+    df = sizing.materialize(spark.range(40).filter(F.col("id") % 2 == 0), "probe")
+    leaf = df._jdf.queryExecution().analyzed()
+    assert leaf.getClass().getSimpleName() == "LogicalRDD"
+    assert sizing.row_bound(df) == 20
+    fed = sizing.single_task(
+        df, _identity, "id long", name="probe", max_rows=10**6
+    )
+    assert "Repartition 1, false" in _plan(fed)
+
+
+def test_materialize_lazy_runs_no_job_until_action(spark):
+    """An exchange-free frame runs nothing until it is read (a frame with
+    a shuffle would still run its shuffle stage under adaptive
+    execution)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("materialize-lazy", "lazy materialize probe")
+    try:
+        df = sizing.materialize(spark.range(100).filter(F.col("id") > 9), "lazy", eager=False)
+        assert _group_jobs(sc, "materialize-lazy") == []
+        assert df.count() == 90
+        assert _group_jobs(sc, "materialize-lazy")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_materialize_names_its_job_and_restores_the_description(spark, caplog):
+    sc = spark.sparkContext
+    sc.setJobGroup("materialize-eager", "caller description")
+    try:
+        with caplog.at_level(logging.INFO, logger=sizing.__name__):
+            sizing.materialize(spark.range(10), "probe edges")
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+        (job,) = _group_jobs(sc, "materialize-eager")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert "materialize why=probe edges eager=True s=" in caplog.text
+    store = sc._jsc.sc().statusStore()
+    deadline = time.monotonic() + 30
+    while True:  # the status store is filled by the async listener bus
+        try:
+            desc = store.job(job).description()
+            break
+        except Py4JJavaError:  # not recorded yet
+            if time.monotonic() > deadline:
+                raise
+            time.sleep(0.1)
+    assert desc.get() == "materialize:probe edges"
+
+
+def test_queries_leave_the_cache_manager_empty(spark, sf_small):
+    """Intra-query reuse is a local checkpoint, never a CacheManager
+    entry that only clearCache would release."""
+    from bench import _run
+
+    spark.catalog.clearCache()
+    qs = registry.queries()
+    for name in ("corpus_curation_pipeline", "ngram_lm_score"):
+        _run(qs[name](spark, sf_small))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 # One registry query per single-task kernel, with the module constants

@@ -261,6 +261,69 @@ def test_checkpoint_recovery_exactly_once(spark, sf_small, tmp_path):
     assert _rows(final, cols) == _rows(expected, cols)
 
 
+def test_scored_serving_path_recovers_exactly_once(spark, sf_medium, tmp_path):
+    """The reference's serving path (hopping window -> dimension join ->
+    predict -> JSONL collection), stopped between micro-batches and
+    restarted from its checkpoint over the full directory, writes the
+    same collection as one uninterrupted run: no window lost, none
+    written twice."""
+    import os
+    import shutil
+
+    from streaming_ml_with_ksql_spark.streaming.queries import (
+        enrich_and_score_stream,
+    )
+    from streaming_ml_with_ksql_spark.streaming.sinks import (
+        foreach_batch_jsonl_collection,
+    )
+
+    events = io_mod.load_table(spark, sf_medium, "events")
+    full_dir = str(tmp_path / "full")
+    shard_table_to_dir(events, full_dir, num_shards=4, order_col="ts")
+    parts = sorted(f for f in os.listdir(full_dir) if f.startswith("part-"))
+    live_dir = str(tmp_path / "live")
+    os.makedirs(live_dir)
+    for f in parts[:2]:
+        shutil.copy2(os.path.join(full_dir, f), os.path.join(live_dir, f))
+    customers = io_mod.load_table(spark, sf_medium, "customer").select(
+        F.col("c_custkey").alias("cust_id"), "c_name", "c_nationkey"
+    )
+
+    def run(src_dir, name):
+        agg = hopping_window_stream(
+            stream_parquet_dir(spark, src_dir), watermark_delay=WM_DELAY
+        )
+        q = (
+            enrich_and_score_stream(agg, customers, dim_key="cust_id")
+            .writeStream.foreachBatch(
+                foreach_batch_jsonl_collection(str(tmp_path / name))
+            )
+            .option("checkpointLocation", str(tmp_path / f"{name}_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(300)
+
+    def collection(name):
+        coll = tmp_path / name
+        return sorted(
+            line
+            for f in sorted(os.listdir(coll))
+            if f.endswith(".jsonl")
+            for line in (coll / f).read_text().splitlines()
+        )
+
+    run(live_dir, "resumed")
+    first = collection("resumed")
+    for f in parts[2:]:
+        shutil.copy2(os.path.join(full_dir, f), os.path.join(live_dir, f))
+    run(live_dir, "resumed")
+    run(full_dir, "uninterrupted")
+    resumed = collection("resumed")
+    assert first and len(resumed) > len(first)
+    assert resumed == collection("uninterrupted")
+
+
 def test_streaming_hll_registers_equal_batch(spark, sf_small):
     """Max registers are order-insensitive, so the drained streaming HLL
     must equal the batch sketch register-for-register (and its DuckDB
