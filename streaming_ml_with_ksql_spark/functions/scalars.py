@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["timestamp_to_string", "epoch_ms_to_string", "as_array"]
+__all__ = ["timestamp_to_string", "as_array"]
 
 
 def timestamp_to_string(col: Column | str, fmt: str = "HH:mm:ss") -> Column:
@@ -23,13 +23,6 @@ def timestamp_to_string(col: Column | str, fmt: str = "HH:mm:ss") -> Column:
     pinned to UTC (session.py)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.date_format(c, fmt)
-
-
-def epoch_ms_to_string(col: Column | str, fmt: str = "HH:mm:ss") -> Column:
-    """KSQL ``TIMESTAMPTOSTRING`` for the reference's native representation —
-    epoch-millis BIGINT (ROWTIME; reference: generator.py:183, README.md:43-44)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(F.timestamp_millis(c.cast("long")), fmt)
 
 
 def as_array(*cols: Column | str) -> Column:

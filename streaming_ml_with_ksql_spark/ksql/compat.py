@@ -47,10 +47,10 @@ one row at a time what transform does in one vectorized pass.
 
 Batch/stream duality: topics may be bound to *streaming* DataFrames (file
 replay or Kafka). The same translated plans then come out unbounded —
-``CREATE TABLE`` dispatches to the stateful ``latest_per_key_stream``
-twin, CSAS registers the continuous relation for downstream statements to
-compose against (exactly how KSQL chains persistent queries through
-topics), and a top-level ``SELECT ... EMIT CHANGES`` over a streaming
+``CREATE TABLE``'s ``latest_per_key`` becomes a stateful ``max_by``
+changelog, CSAS registers the continuous relation for downstream
+statements to compose against (exactly how KSQL chains persistent queries
+through topics), and a top-level ``SELECT ... EMIT CHANGES`` over a streaming
 relation is the push query: it drains the plan through a memory sink
 (complete mode for aggregating plans — KSQL's every-refinement changelog —
 append otherwise) and returns the materialized table.
@@ -67,7 +67,6 @@ from pyspark.sql import functions as F
 
 from ..ml import predict as ml_predict
 from ..operators.dedup import latest_per_key
-from ..streaming import queries as stream_queries
 from ..streaming import sinks as stream_sinks
 
 __all__ = ["KsqlCompat"]
@@ -430,13 +429,9 @@ class KsqlCompat:
                     f"TABLE {name}: need KEY/PARTITION BY and an event-time "
                     "column to materialize latest-per-key"
                 )
-            if df.isStreaming:
-                # stateful twin: continuously-updated max_by changelog
-                df = stream_queries.latest_per_key_stream(
-                    df, key, ts_col, tiebreak=key
-                )
-            else:
-                df = latest_per_key(df, key, ts_col)
+            # one operator for both: on a stream its max_by keeps one
+            # struct per key in the state store (a changelog)
+            df = latest_per_key(df, key, ts_col)
         self._register(_Relation(name.lower(), df, ts_col, key))
 
     def _register(self, rel: _Relation) -> None:

@@ -13,6 +13,7 @@ LeapFrame was only ever simulating this one row at a time). The API
 preserves the UDF's contract:
 
 - model resolved by (name, stage) from a registry dir, cached per process
+  and stage directory
   (the ConcurrentHashMap at PredictUdf.java:33 becomes a module-level dict);
 - inputs arrive as an array<string> + array<int> pair in signature order
   (README.md:68 ``predict('Bot Detector', as_array(...), as_array(...))``);
@@ -35,6 +36,8 @@ from pyspark.ml import PipelineModel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .registry import dir_name
+
 __all__ = ["resolve_model", "score", "predict_arrays", "clear_model_cache"]
 
 DEFAULT_MODELS_DIR = os.path.join(
@@ -42,9 +45,9 @@ DEFAULT_MODELS_DIR = os.path.join(
     "models",
 )
 
-# name → (model, signature); per-process lazy cache
+# stage directory → (model, signature); per-process lazy cache
 # (reference: PredictUdf.java:33,43-45).
-_CACHE: dict[tuple[str, str], tuple[PipelineModel, dict]] = {}
+_CACHE: dict[str, tuple[PipelineModel, dict]] = {}
 
 
 def clear_model_cache() -> None:
@@ -56,19 +59,17 @@ def resolve_model(
 ) -> tuple[PipelineModel, dict]:
     """Resolve a named+staged model from the local registry
     (reference: MlflowModelResolver.java:44-56,115-117 — stage-resolved
-    lazy fetch, cached)."""
-    key = (name, stage)
-    if key not in _CACHE:
-        # Registry display names allow spaces/case ('Bot Detector',
-        # reference README.md:68); the on-disk registry uses normalized
-        # directory names.
-        dir_name = name.replace(" ", "_").lower()
-        root = os.path.join(models_dir or DEFAULT_MODELS_DIR, dir_name, stage)
+    lazy fetch, cached per stage directory, so a display name and its
+    directory name share one entry and each registry root has its own)."""
+    root = os.path.abspath(
+        os.path.join(models_dir or DEFAULT_MODELS_DIR, dir_name(name), stage)
+    )
+    if root not in _CACHE:
         model = PipelineModel.load(os.path.join(root, "model"))
         with open(os.path.join(root, "MLmodel.json")) as f:
             signature = json.load(f)["signature"]
-        _CACHE[key] = (model, signature)
-    return _CACHE[key]
+        _CACHE[root] = (model, signature)
+    return _CACHE[root]
 
 
 def _coerce(col: Column, typ: str, name: str) -> Column:

@@ -30,12 +30,15 @@ import shutil
 
 from pyspark.ml import PipelineModel
 
-__all__ = ["ModelRegistry", "STAGES"]
+__all__ = ["ModelRegistry", "STAGES", "dir_name"]
 
 STAGES = ("None", "Staging", "Production", "Archived")
 
 
-def _dir_name(name: str) -> str:
+def dir_name(name: str) -> str:
+    """On-disk directory of a model name: registry display names allow
+    spaces and case ('Bot Detector', reference README.md:68); the layout
+    uses 'bot_detector'."""
     return name.replace(" ", "_").lower()
 
 
@@ -45,7 +48,7 @@ class ModelRegistry:
 
     # ------------------------------------------------------------------
     def _versions_dir(self, name: str) -> str:
-        return os.path.join(self.root, _dir_name(name), "versions")
+        return os.path.join(self.root, dir_name(name), "versions")
 
     def _version_path(self, name: str, version: int) -> str:
         return os.path.join(self._versions_dir(name), f"v{version}")
@@ -54,7 +57,7 @@ class ModelRegistry:
         return os.path.join(self._version_path(name, version), "MLmodel.json")
 
     def _stage_slot(self, name: str, stage: str) -> str:
-        return os.path.join(self.root, _dir_name(name), stage)
+        return os.path.join(self.root, dir_name(name), stage)
 
     def list_versions(self, name: str) -> list[int]:
         d = self._versions_dir(name)

@@ -254,7 +254,6 @@ def kmeans_fixed_point(
     scale: int = 10**6,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    single_task: bool | None = None,
 ) -> DataFrame:
     """Run ``iters`` Lloyd iterations; returns the final assignment
     (vec_id, cid, dist). Seeds = the quantized vectors of the k
@@ -283,7 +282,6 @@ def kmeans_fixed_point(
         max_rows=KMEANS_SINGLE_TASK_MAX_CELLS,
         rows=n * (max(dmax or 0, 1) + k),
         requires=dmin is not None and dmin == dmax,
-        force=single_task,
     )
     if fast is not None:
         return fast
@@ -413,7 +411,6 @@ def dbscan_from_pairs(
         src="u",
         dst="v",
         id_col=id_col,
-        algorithm="star",
     )
     core_lab = comp.select(
         F.col(id_col).alias("u"), F.col("component").alias("cluster_id")
@@ -450,7 +447,6 @@ def dbscan_from_weighted_pairs(
     a_col: str = "vec_a",
     b_col: str = "vec_b",
     min_neighbors: int = 2,
-    single_task: bool | None = None,
 ) -> DataFrame:
     """dbscan_from_pairs with EXACT-duplICATE points collapsed to
     weighted representatives — the scale fix for duplicate-heavy
@@ -502,7 +498,6 @@ def dbscan_from_weighted_pairs(
         max_rows=DBSCAN_SINGLE_TASK_MAX_ROWS,
         # rep rows plus both directions of every eps edge
         rows=mw.count() + 2 * e.count(),
-        force=single_task,
     )
     if rep_lab is not None:
         return members.join(F.broadcast(rep_lab), "u").select(
@@ -528,7 +523,6 @@ def dbscan_from_weighted_pairs(
         src="u",
         dst="v",
         id_col="id",
-        algorithm="star",
     )
     core_lab = comp.select(
         F.col("id").alias("u"), F.col("component").alias("cluster_id")

@@ -2,8 +2,8 @@
 
 ``latest_per_key`` reproduces the reference's ``CREATE TABLE users`` —
 changelog-compaction keeping the newest row per key (reference:
-README.md:29; upsert semantics of a KSQL table). The batch idiom is a
-row_number window; the streaming twin lives in streaming/.
+README.md:29; upsert semantics of a KSQL table). One ``max_by``
+aggregation serves batch and streaming frames alike.
 
 The dedup family (exact + near-dup) is part of the north-star
 training-data-pipeline surface; near-dup variants live in text.py /
@@ -13,16 +13,15 @@ Scale notes:
 - `latest_per_key` is one shuffle on the key; with AQE skew-split a hot key
   (one user with 1e9 updates) is handled. For CDC-shaped input where only
   the latest matters, `max_by`-style aggregation (commutative, partial-agg
-  friendly) beats full sort: we use `F.max_by(struct, ts)` when the caller
-  asks for agg mode — it map-side combines, so the shuffle carries one row
-  per key per input partition.
+  friendly) beats full sort: `F.max_by(struct, ts)` map-side combines, so
+  the shuffle carries one row per key per input partition.
 - `dedup_exact` hashes wide payload columns down to a fingerprint before the
   shuffle: at 100 TB you shuffle 16-byte digests, not document bodies.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["latest_per_key", "dedup_exact", "distinct_keys"]
@@ -34,27 +33,20 @@ def latest_per_key(
     ts: str,
     *,
     tiebreak: str | None = None,
-    use_window: bool = False,
 ) -> DataFrame:
     """Latest row per key — KSQL TABLE semantics (reference: README.md:29).
 
-    Default implementation is `max_by` aggregation: commutative + partial
-    aggregation ⇒ map-side combine before the shuffle, the right shape at
-    100 TB. ``use_window=True`` switches to the row_number idiom (needed when
-    downstream wants additional window-derived columns).
+    One ``max_by`` aggregation: commutative + partial aggregation ⇒
+    map-side combine before the shuffle, the right shape at 100 TB. The
+    same plan runs on a streaming frame (update/complete output mode): the
+    state store keeps one struct per key, a continuously-updated
+    changelog.
 
     ``tiebreak`` orders rows with equal timestamps (defaults to the first
     key column — deterministic results require *some* total order).
     """
     keys = [key] if isinstance(key, str) else list(key)
     tb = tiebreak or keys[0]
-    if use_window:
-        w = Window.partitionBy(*keys).orderBy(F.col(ts).desc(), F.col(tb).desc())
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
     payload = [c for c in df.columns if c not in keys]
     ord_expr = F.struct(F.col(ts), F.col(tb))
     # One atomic max_by over the whole payload struct — picking columns

@@ -8,24 +8,16 @@ training-data pipeline at 100 TB needs the component step too, because
 near-duplication is transitive in practice (A≈B, B≈C ⇒ A,B,C are one
 group even when A,C alone miss the threshold).
 
-Two algorithms, selected by ``algorithm=``:
-
-- ``"propagation"`` (default): iterative min-label propagation — every
-  vertex starts with its own id as label; each round every vertex takes
-  the min of its own and its neighbors' labels; converged when no label
-  changes. Rounds needed = graph diameter, which for near-dup clusters
-  is small (clusters are dense blobs, not paths); per-round cost is ONE
-  shuffle join + ONE groupBy.
-- ``"star"``: alternating large-star / small-star (Kiveris et al.,
-  "Connected Components in MapReduce and Beyond", SoCC'14 — public
-  algorithm, independently implemented here). Each round rewrites the
-  EDGE set: large-star hangs every strictly-larger neighbor of u onto
-  min(Γ(u) ∪ {u}); small-star hangs u and its smaller neighbors onto
-  their min. The graph contracts toward a star forest in O(log d)
-  rounds, so a 10⁶-vertex adversarial path needs ~20 rounds, not 10⁶.
-  Two shuffle joins + two groupBys per round — pick it when components
-  may be long chains (URL redirect graphs, citation chains); for dense
-  near-dup blobs propagation's cheaper round wins.
+One distributed loop, alternating large-star / small-star (Kiveris et
+al., "Connected Components in MapReduce and Beyond", SoCC'14 — public
+algorithm, independently implemented here). Each round rewrites the EDGE
+set: large-star hangs every strictly-larger neighbor of u onto
+min(Γ(u) ∪ {u}); small-star hangs u and its smaller neighbors onto their
+min. The graph contracts toward a star forest in O(log d) rounds, so a
+10⁶-vertex adversarial path needs ~20 rounds, not the 10⁶ that min-label
+propagation would. Two shuffle joins + two groupBys per round. Graphs
+under ``CC_SINGLE_TASK_MAX_EDGES`` directed edges skip the loop for an
+exact single-task union-find kernel.
 
 Scale notes:
 - The iteration runs ONLY over the edge-induced subgraph: a vertex with no
@@ -35,18 +27,21 @@ Scale notes:
   left-join. Near-dup edge sets are orders of magnitude smaller than the
   corpus, so this is the difference between 25 corpus-wide shuffles and
   25 shuffles of a frame that fits in a few executors.
-- State per round is (vertex, label) — two longs — never adjacency lists.
-- Each round cuts the label frame's lineage with `sizing.materialize`
+- State per round is the contracted edge set (u, v) — two longs per
+  edge — never adjacency lists.
+- Each round cuts the edge frame's lineage with `sizing.materialize`
   (plan size would otherwise grow linearly and re-run every prior round),
   which keeps the convergence `count()` cheap. It is a local checkpoint
   and does not survive executor loss; a reliable checkpoint for a
   production cluster is a change to `materialize` alone.
-- The convergence check is a driver-side count of CHANGED labels (labels
-  only decrease, so `new < old` counts them) — an O(1)-row action per
-  round, not a collect of the frame.
+- The convergence check compares the round's edge set with the previous
+  one: a count, and an `exceptAll(...).isEmpty()` only when the counts
+  match — O(1)-row actions per round, never a collect of the frame.
 """
 
 from __future__ import annotations
+
+import logging
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -60,14 +55,15 @@ __all__ = [
     "pagerank",
 ]
 
+log = logging.getLogger(__name__)
 
-def _star_contract(
-    e: DataFrame, loop_parts: int, max_iter: int, stats: dict | None
-) -> DataFrame:
+
+def _star_contract(e: DataFrame, loop_parts: int) -> tuple[DataFrame, int]:
     """Alternating large-star/small-star over a canonical directed edge set
     (u, v) with u > v, no self-loops, distinct. Returns the converged star
-    forest's (u, label) frame. Every intermediate is localCheckpointed —
-    same lineage-truncation rationale as the propagation loop."""
+    forest's (u, label) frame and the rounds it took; raises when
+    ``CC_MAX_ROUNDS`` rounds do not reach the fixed point, so a truncated
+    contraction never passes for components."""
     # Partitioning helper: at loop_parts == 1 use coalesce(1) — its
     # SinglePartition output satisfies every ClusteredDistribution, so
     # EnsureRequirements inserts NO exchange for the round's groupBys and
@@ -89,10 +85,8 @@ def _star_contract(
     def _bcast(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if loop_parts == 1 else df
 
-    rounds = 0
     prev_count = None
-    for _ in range(max_iter):
-        rounds += 1
+    for rounds in range(1, CC_MAX_ROUNDS + 1):
         # large-star: symmetric neighborhoods; every neighbor v > u hangs
         # onto m(u) = min(Γ(u) ∪ {u}). m ≤ u < v keeps the u > v invariant.
         # Not checkpointed: small-star consumes it within the same round,
@@ -145,19 +139,24 @@ def _star_contract(
         )
         e, prev_count = stepped, n
         if converged:
-            break
-    if stats is not None:
-        stats["rounds"] = rounds
-    # At the fixed point e IS a star forest: one (vertex, root) edge per
-    # non-root vertex. The groupBy-min is a safety net, not a correctness
-    # requirement.
-    return e.groupBy("u").agg(F.min("v").alias("label"))
+            # At the fixed point e IS a star forest: one (vertex, root)
+            # edge per non-root vertex. The groupBy-min is a safety net,
+            # not a correctness requirement.
+            return e.groupBy("u").agg(F.min("v").alias("label")), rounds
+    raise RuntimeError(
+        f"star contraction did not converge in {CC_MAX_ROUNDS} rounds"
+    )
 
 
 # Directed-edge count below which connected_components takes the
-# single-task Arrow union-find fast path instead of the iterative loops
+# single-task Arrow union-find fast path instead of star contraction
 # (~16 MB of edge longs; one executor task).
 CC_SINGLE_TASK_MAX_EDGES = 1_000_000
+
+# Round cap of star contraction. It converges in O(log d) rounds (a
+# 600-vertex path takes under 16), so hitting the cap means a defect, and
+# _star_contract raises rather than return a partial labelling.
+CC_MAX_ROUNDS = 25
 
 # Edge count below which hits_bipartite broadcast-hints its (vertex-
 # bounded) score frames into the per-round joins; above it the shuffled
@@ -351,8 +350,8 @@ def _cc_single_task_kernel(batches):
     single-task Arrow fast path of connected_components. Union-by-min +
     path compression: find(x) returns the MINIMUM vertex id of x's
     component (the larger root is always attached under the smaller), so
-    the output (vertex, label) is identical to the converged distributed
-    loops at any iteration order. Id-type generic: ``.tolist()`` yields
+    the output (vertex, label) is identical to the converged star
+    contraction at any iteration order. Id-type generic: ``.tolist()`` yields
     Python ints for integer ids and str for string ids, and ``<``/``min``
     on str is the same lexicographic order Spark's ``F.min`` and DuckDB's
     ``min`` apply (the part_entity_groups string-vertex contract)."""
@@ -394,14 +393,11 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     id_col: str = "id",
-    max_iter: int = 25,
-    algorithm: str = "propagation",
-    stats: dict | None = None,
 ) -> DataFrame:
     """(id, component) for every vertex; component = min vertex id reachable
     via undirected ``edges``. Vertices absent from ``edges`` are singleton
-    components of themselves. ``algorithm`` picks the iteration shape (see
-    module docstring); ``stats``, if given, receives {"rounds": n}.
+    components of themselves. Each call logs one line with its path
+    (kernel or star), rounds and directed edge count.
 
     Single-task fast path (r14, guide §4.2/§8): the edge list is already
     materialized and counted for loop sizing; when it fits one loop
@@ -410,13 +406,11 @@ def connected_components(
     (5+ materialize/convergence jobs of multi-stage shuffles) dwarfs the
     work, so components are computed EXACTLY by one executor-side Arrow
     union-find task over the bounded edge frame — no driver collect, no
-    loop, identical min-label output (pinned by test against both loops).
-    Larger graphs take the distributed loops unchanged."""
+    loop, identical min-label output (pinned by test against the star
+    loop). Larger graphs take star contraction."""
     # Materialize the edge list ONCE before symmetrizing: `edges` is
     # usually an expensive lazy plan (a near-dup pair join), and the
     # two-branch union would otherwise execute it twice.
-    if algorithm not in ("propagation", "star"):
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
     e = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).transform(sizing.materialize, "cc edge list, sizes the gate")
@@ -435,26 +429,11 @@ def connected_components(
         rows=n_directed,
     )
     if resolved is not None:
-        if stats is not None:
-            stats["rounds"] = 0
-            stats["single_task"] = True
-        return (
-            vertices.select(F.col(id_col))
-            .join(
-                F.broadcast(
-                    resolved.select(
-                        F.col("id").alias(id_col), "component"
-                    )
-                ),
-                id_col,
-                "left",
-            )
-            .select(
-                id_col,
-                F.coalesce("component", F.col(id_col)).alias("component"),
-            )
+        path, rounds = "kernel", 0
+        labels = F.broadcast(
+            resolved.select(F.col("id").alias(id_col), "component")
         )
-    if algorithm == "star":
+    else:
         canon = (
             e.select(
                 F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
@@ -463,133 +442,27 @@ def connected_components(
             .distinct()
             .transform(sizing.materialize, "star contraction canonical edges")
         )
-        n_edges = canon.count()
         default_parts = int(
             canon.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
-        loop_parts = max(1, min(default_parts, n_edges // 1_000_000 + 1))
+        loop_parts = max(1, min(default_parts, canon.count() // 1_000_000 + 1))
         # Pass the checkpointed canon directly: the first round's `mins`
         # repartitions by u anyway, so the former
         # repartition+localCheckpoint here was a third materialization of
         # the same edge set (one extra job + copy per call — r14).
-        stars = _star_contract(canon, loop_parts, max_iter, stats)
-        resolved = stars.select(
+        stars, rounds = _star_contract(canon, loop_parts)
+        path = "star"
+        labels = stars.select(
             F.col("u").alias(id_col), F.col("label").alias("component")
         )
-        return (
-            vertices.select(F.col(id_col))
-            .join(resolved, id_col, "left")
-            .select(
-                id_col,
-                F.coalesce("component", F.col(id_col)).alias("component"),
-            )
-        )
-    # Size the loop's partitioning to the MEASURED edge count. AQE cannot
-    # re-plan inside an iterative checkpointed loop, so without this
-    # every round shuffles a possibly tiny frame across the full
-    # spark.sql.shuffle.partitions, and fixed per-task scheduling
-    # overhead dominates wall time. ~1M edge rows per partition; large
-    # graphs keep the session's parallelism. The estimate is
-    # 2x |directed edges| (counted on the already-checkpointed e — a
-    # cached-RDD count) — an upper bound on |sym| that lets sym be
-    # built, partitioned AND checkpointed in ONE materialization instead
-    # of the former checkpoint → count → repartition → checkpoint pair
-    # (r14: two materializations + two jobs of pure setup overhead).
-    n_edges = 2 * n_directed
-    default_parts = int(
-        e.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+    log.info(
+        "connected_components path=%s rounds=%s edges=%s", path, rounds, n_directed
     )
-    loop_parts = max(1, min(default_parts, n_edges // 1_000_000 + 1))
-
-    # Same single-partition fast path as the star loop (see _star_contract):
-    # coalesce(1)'s SinglePartition output satisfies every clustered
-    # distribution, so small-graph rounds run as one narrow stage with no
-    # exchanges; large graphs keep the explicit hash partitioning.
-    def _part(df: DataFrame, *cols: str) -> DataFrame:
-        if loop_parts == 1:
-            return df.coalesce(1)
-        return df.repartition(loop_parts, *cols)
-
-    # Broadcast-hint the bounded label/min frames at loop scale — same
-    # rationale as _star_contract's _bcast (Spark 4 joins do not accept
-    # SinglePartition co-partitioning, so without the hint every round
-    # pays two exchanges per join even on one partition).
-    def _bcast(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if loop_parts == 1 else df
-
-    sym = (
-        _part(
-            e.unionByName(
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            ),
-            "v",
-        )
-        .distinct()
-        .transform(sizing.materialize, "cc symmetric edges, loop input")
-    )
-    # Iterate over edge-touched vertices only; edge-free vertices are
-    # singleton components and join back once at the end.
-    labels = (
-        _part(sym.select("u"), "u")
-        .distinct()
-        .withColumn("label", F.col("u"))
-        .transform(sizing.materialize, "cc labels, round 0")
-    )
-    # The loop's shuffle width is scoped with EXPLICIT per-frame
-    # repartition(loop_parts, ...) calls, never by mutating the session's
-    # spark.sql.shuffle.partitions: a session-global set would re-plan any
-    # concurrent work in the same session (an active streaming query, a
-    # parallel caller) at the loop's tiny width. The explicit hash
-    # partitioning also lets Catalyst elide the aggregation/join
-    # exchanges whose distribution it already satisfies.
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        nbr = (
-            _part(
-                sym.join(
-                    _bcast(
-                        labels.select(F.col("u").alias("v"), F.col("label"))
-                    ),
-                    "v",
-                ),
-                "u",
-            )
-            .groupBy("u")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        # The change flag rides INSIDE the checkpointed frame (labels
-        # only decrease, so nbr < old ⇔ changed) — the convergence
-        # check is then a filter-count over already-materialized
-        # partitions instead of a new-vs-old join shuffle per round.
-        # LAZY checkpoint fused with that count: the filter-count is the
-        # first action over the checkpoint-marked RDD, so ONE job both
-        # materializes the round and measures it (r14 — the former
-        # eager-ckpt-then-count pair was two scheduled jobs per round).
-        stepped = _part(
-            labels.join(_bcast(nbr), "u", "left").select(
-                "u",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", "label")
-                ).alias("label"),
-                (F.coalesce("nbr_label", "label") < F.col("label")).alias(
-                    "chg"
-                ),
-            ),
-            "u",
-        ).transform(sizing.materialize, "cc labels, per round", eager=False)
-        changed = stepped.filter(F.col("chg")).count()
-        labels = stepped.select("u", "label")
-        if changed == 0:
-            break
-    if stats is not None:
-        stats["rounds"] = rounds
-    resolved = labels.select(F.col("u").alias(id_col), F.col("label").alias("component"))
     # One pass over the full vertex set: resolved label where present,
     # else the vertex is its own (singleton) component.
     return (
         vertices.select(F.col(id_col))
-        .join(resolved, id_col, "left")
+        .join(labels, id_col, "left")
         .select(
             id_col,
             F.coalesce("component", F.col(id_col)).alias("component"),
@@ -604,7 +477,6 @@ def dedup_groups(
     id_col: str = "doc_id",
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    algorithm: str = "propagation",
 ) -> DataFrame:
     """Resolve a near-dup pair graph into dedup groups over the full corpus:
     (doc_id, group_id, group_size) where group_id is the component's min
@@ -616,7 +488,6 @@ def dedup_groups(
         src=a_col,
         dst=b_col,
         id_col=id_col,
-        algorithm=algorithm,
     )
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("group_size"))
     return comp.join(sizes, "component").select(
@@ -770,7 +641,6 @@ def pagerank(
     scale: int = 10**12,
     loop_parts: int | None = None,
     checkpoint_every: int = 2,
-    single_task: bool | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an undirected pair graph in INTEGER
     fixed-point — centrality for the near-dup graph (which document is
@@ -825,7 +695,6 @@ def pagerank(
         name="pagerank",
         # each pair symmetrizes into two directed edges
         max_rows=ITER_SINGLE_TASK_MAX_EDGES // 2,
-        force=single_task,
     )
     if fast is not None:
         return fast
@@ -895,7 +764,6 @@ def bfs_hops(
     iters: int = 4,
     loop_parts: int | None = None,
     checkpoint_every: int = 2,
-    single_task: bool | None = None,
 ) -> DataFrame:
     """Multi-source BFS hop distances over an undirected pair graph —
     landmark distance labeling (seeds = vertices with id % seed_mod == 0,
@@ -940,7 +808,6 @@ def bfs_hops(
         f"node {id_t}, d long",
         name="bfs",
         max_rows=ITER_SINGLE_TASK_MAX_EDGES // 2,
-        force=single_task,
     )
     if fast is not None:
         return fast
@@ -1053,7 +920,6 @@ def hits_bipartite(
     scale: int = 1_000_000,
     hub_col: str = "c",
     auth_col: str = "p",
-    single_task: bool | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """HITS hubs-and-authorities (Kleinberg, JACM 1999) over a bipartite
     edge list — hubs on ``hub_col`` (e.g. customers), authorities on
@@ -1088,9 +954,7 @@ def hits_bipartite(
     # vectorized kernel per returned side replays it bit-for-bit
     # (parity-pinned) instead of 2×rounds eager join+groupBy+checkpoint
     # jobs. Larger graphs keep the distributed rounds below.
-    gate = dict(
-        max_rows=ITER_SINGLE_TASK_MAX_EDGES, rows=n_edges, force=single_task
-    )
+    gate = dict(max_rows=ITER_SINGLE_TASK_MAX_EDGES, rows=n_edges)
     hubs = sizing.single_task(
         edges,
         _hits_single_task_kernel(rounds, scale, "hub", c, p),

@@ -36,8 +36,6 @@ def enrich_left_join(
     dim: DataFrame,
     fact_key: str,
     dim_key: str,
-    *,
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Stream–table LEFT OUTER equi-join (reference: README.md:62-70 —
     ``aggregated_events_stream LEFT JOIN users ON ... = users.rowkey``).
@@ -46,8 +44,7 @@ def enrich_left_join(
     left-join semantics. No pre-rekey needed (reference: README.md:28;
     SURVEY.md J2/J3) — broadcast replaces co-partitioning.
     """
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return facts.join(d, facts[fact_key] == d[dim_key], "left")
+    return facts.join(F.broadcast(dim), facts[fact_key] == dim[dim_key], "left")
 
 
 def semi_join(left: DataFrame, right: DataFrame, on: list[str] | str) -> DataFrame:

@@ -150,8 +150,6 @@ def ntile_scores(
     df: DataFrame,
     n_tiles: int,
     specs: list[tuple[str, list[tuple[str, str]]]],
-    *,
-    single_task: bool | None = None,
 ) -> DataFrame:
     """ALL of ``specs``' NTILE scores over a bounded decision frame (the
     RFM customer aggregate): each spec is ``(out_col, [(key_col, "asc" |
@@ -208,7 +206,6 @@ def ntile_scores(
         out_schema,
         name="ntile",
         max_rows=NTILE_SINGLE_TASK_MAX_ROWS,
-        force=single_task,
     )
     if fast is not None:
         return fast

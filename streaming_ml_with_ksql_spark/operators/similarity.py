@@ -1903,7 +1903,6 @@ def mmr_diverse_topk(
     query_id: int = 0,
     cand_n: int = 20,
     k: int = 8,
-    single_task: bool | None = None,
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein,
     SIGIR 1998) — the diversity stage between candidate retrieval and
@@ -1981,7 +1980,6 @@ def mmr_diverse_topk(
         name="mmr",
         max_rows=MMR_SINGLE_TASK_MAX_ROWS,
         rows=cand_n,
-        force=single_task,
     )
     if fast is not None:
         return fast.select(

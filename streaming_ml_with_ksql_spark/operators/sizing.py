@@ -113,19 +113,18 @@ def row_bound(df: DataFrame) -> int | None:
             return None
 
 
-def fan_out(
-    df: DataFrame, *, rows_per_task: int = 512, parallelism: int | None = None
-) -> DataFrame:
+def fan_out(df: DataFrame, *, rows_per_task: int = 512) -> DataFrame:
     """Round-robin ``df`` across ``min(shuffle_partitions,
     ceil(row_bound / rows_per_task))`` partitions; an unbounded frame keeps
-    the full configured width. ``parallelism`` overrides the computation."""
-    if parallelism is None:
-        n_max = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        rows = row_bound(df)
-        parallelism = n_max if rows is None else max(
-            1, min(n_max, -(-rows // rows_per_task))
-        )
-    return df.repartition(parallelism)
+    the full configured width. Each call logs one line with the width."""
+    n_max = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    rows = row_bound(df)
+    width = n_max if rows is None else max(1, min(n_max, -(-rows // rows_per_task)))
+    log.info(
+        "fan_out width=%s rows=%s rows_per_task=%s max=%s",
+        width, rows, rows_per_task, n_max,
+    )
+    return df.repartition(width)
 
 
 def single_task(
@@ -137,7 +136,6 @@ def single_task(
     max_rows: int,
     rows: int | None = None,
     requires: bool | None = None,
-    force: bool | None = None,
 ) -> DataFrame | None:
     """``df.mapInPandas(kernel, schema)`` over ONE partition when the route
     is the kernel, else None: the caller runs its distributed twin.
@@ -146,16 +144,15 @@ def single_task(
     measure of the input (edges, cells, ...) and defaults to
     ``row_bound(df)``, and an unknown bound stays distributed. ``requires``
     False (a kernel precondition such as integral ids) also stays
-    distributed. ``force`` — an operator's explicit ``single_task=`` —
-    wins over all of these; parity tests use it. Sizing jobs run under the
-    job description ``single_task:<name>``; each decision logs one line."""
+    distributed. The route is a function of the input alone: tests force
+    one by patching the operator's ``max_rows`` constant. Sizing jobs run
+    under the job description ``single_task:<name>``; each decision logs
+    one line."""
     sc = df.sparkSession.sparkContext
     prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(f"single_task:{name}")
     try:
-        if force is not None:
-            route, reason = force, "explicit"
-        elif requires is False:
+        if requires is False:
             route, reason = False, "requirement unmet"
         else:
             rows = row_bound(df) if rows is None else rows
@@ -163,14 +160,18 @@ def single_task(
             reason = "size" if rows is not None else "no bound"
     finally:
         sc.setLocalProperty("spark.job.description", prev)
+    feed = None
+    if route:
+        materialized = _materialized(df._jdf.queryExecution().analyzed())
+        feed = "coalesce" if materialized else "repartition"
     log.info(
-        "single_task name=%s path=%s rows=%s bound=%s reason=%s",
-        name, "kernel" if route else "distributed", rows, max_rows, reason,
+        "single_task name=%s path=%s rows=%s bound=%s reason=%s feed=%s",
+        name, "kernel" if route else "distributed", rows, max_rows, reason, feed,
     )
-    if not route:
+    if feed is None:
         return None
-    lazy = not _materialized(df._jdf.queryExecution().analyzed())
-    return (df.repartition(1) if lazy else df.coalesce(1)).mapInPandas(kernel, schema)
+    one = df.coalesce(1) if feed == "coalesce" else df.repartition(1)
+    return one.mapInPandas(kernel, schema)
 
 
 def materialize(df: DataFrame, why: str, *, eager: bool = True) -> DataFrame:

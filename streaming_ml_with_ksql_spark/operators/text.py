@@ -511,7 +511,6 @@ def near_dup_pairs_minhash(
     bands: int = 4,
     rows: int = 3,
     threshold: float = 0.8,
-    single_task: bool | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidates verified with exact n-gram Jaccard ≥ threshold.
     Output: (doc_a, doc_b, jaccard). The verify join touches only candidate
@@ -547,7 +546,6 @@ def near_dup_pairs_minhash(
         max_rows=MINHASH_SINGLE_TASK_MAX_DOCS,
         rows=sizing.row_bound(documents),
         requires=_integral_ids(documents),
-        force=single_task,
     )
     if pk is not None:
         return _jaccard_pairs(pk, threshold)
@@ -662,8 +660,7 @@ def _ngram_pairs_kernel():
 
 
 def ngram_jaccard_pairs(
-    documents: DataFrame, *, n: int = 3, threshold: float = 0.5,
-    single_task: bool | None = None,
+    documents: DataFrame, *, n: int = 3, threshold: float = 0.5
 ) -> DataFrame:
     """EXACT n-gram Jaccard near-dup pairs via an inverted shingle index —
     the deterministic member of the dedup family (MinHash approximates the
@@ -695,7 +692,6 @@ def ngram_jaccard_pairs(
         max_rows=NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS,
         rows=sizing.row_bound(documents),
         requires=_integral_ids(documents),
-        force=single_task,
     )
     if pk is not None:
         return _jaccard_pairs(pk, threshold)

@@ -291,7 +291,7 @@ _DEDUP_COMPONENTS_ORACLE = r"""
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CONNECTED COMPONENTS: exact n-gram Jaccard pairs resolved
     into transitive dedup groups (doc_id, group_id = component min id,
-    group_size) by iterative min-label propagation — the step between pair
+    group_size) by graph.connected_components — the step between pair
     emission and "keep one representative". The oracle recomputes the same
     components with a recursive CTE, so the fixpoint itself is
     hash-checked against an independent engine."""
@@ -302,16 +302,14 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("dedup_components_star", _DEDUP_COMPONENTS_ORACLE)
 def q_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same dedup-group resolution through the ALTERNATING large-star /
-    small-star contraction (Kiveris et al. SoCC'14, graph.py): the edge
-    set itself is rewritten toward a star forest in O(log d) rounds
-    instead of O(d) label-propagation sweeps — the shape to pick when
-    components can be long chains. Registered against the identical
-    recursive-CTE oracle as dedup_components, so both algorithms are
-    pinned answer-identical by an independent engine."""
+    """The same code as dedup_components, kept under its registered name:
+    graph.connected_components has one distributed loop, the alternating
+    large-star / small-star contraction (Kiveris et al. SoCC'14), which
+    rewrites the edge set toward a star forest in O(log d) rounds.
+    Registered against the identical recursive-CTE oracle."""
     docs = _t(spark, sf_dir, "documents")
     pairs = text.ngram_jaccard_pairs(docs)
-    return graph.dedup_groups(docs, pairs, algorithm="star")
+    return graph.dedup_groups(docs, pairs)
 
 
 @register(
@@ -635,10 +633,8 @@ def q_embedding_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Abbas et al. 2023): cosine near-dup pairs resolved into transitive
     keep-one-representative groups. Reuses the exact-rescored pair
     generator (bit-identical to the all-pairs SQL); components come from
-    the star-contraction variant (answer-identical min-id labels,
-    O(log d) rounds vs propagation's O(d) — the faster twin by ~0.6x in
-    BENCH r5/r6), so the fixpoint is hash-checked against DuckDB's
-    recursive CTE."""
+    graph.connected_components (min-id labels), so the fixpoint is
+    hash-checked against DuckDB's recursive CTE."""
     emb = _t(spark, sf_dir, "embeddings")
     pairs = similarity.embedding_near_dup_pairs_blocked(emb)
     return graph.dedup_groups(
@@ -647,7 +643,6 @@ def q_embedding_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="vec_id",
         a_col="vec_a",
         b_col="vec_b",
-        algorithm="star",
     )
 
 

@@ -208,9 +208,7 @@ def q_streaming_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     converging to the same answer as the batch latest_per_key query."""
     stream = _replay_events(spark, sf_dir)
     return stream_sinks.run_to_memory(
-        stream_queries.latest_per_key_stream(
-            stream, "user_id", "ts", tiebreak="event_id"
-        ),
+        dedup.latest_per_key(stream, "user_id", "ts", tiebreak="event_id"),
         f"reg_stream_latest_{next(_STREAM_SEQ)}",
         output_mode="complete",
     ).select("event_id", "ts", "user_id", "event_type", "value", "props")

@@ -985,7 +985,6 @@ def q_image_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="doc_id",
         a_col="doc_a",
         b_col="doc_b",
-        algorithm="star",
     )
 
 

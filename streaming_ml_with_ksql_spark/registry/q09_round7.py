@@ -46,7 +46,6 @@ def q_streaming_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="doc_id",
         a_col="doc_a",
         b_col="doc_b",
-        algorithm="star",
     )
 
 

@@ -12,7 +12,6 @@ operators (applyInPandasWithState).
 from .queries import (
     enrich_and_score_stream,
     hopping_window_stream,
-    latest_per_key_stream,
 )
 from .sinks import foreach_batch_parquet, run_to_memory
 from .source import shard_table_to_dir, stream_parquet_dir
@@ -21,7 +20,6 @@ from .stateful import latest_per_key_stateful, sessionize_stream
 __all__ = [
     "enrich_and_score_stream",
     "hopping_window_stream",
-    "latest_per_key_stream",
     "foreach_batch_parquet",
     "run_to_memory",
     "shard_table_to_dir",

@@ -7,7 +7,8 @@ Structured Streaming:
   ``F.window(ts, size, slide)`` groupBy — identical epoch-aligned grid to
   the batch flagship, so batch ≡ stream up to watermark finalization;
 - ``CREATE TABLE users`` latest-per-key materialization (README.md:29) →
-  ``max_by`` aggregation in update/complete mode;
+  the batch ``operators.dedup.latest_per_key`` itself: its ``max_by``
+  aggregation runs unchanged on a stream in update/complete mode;
 - the enrichment LEFT JOIN + predict projection (README.md:62-70) →
   stream-static broadcast join + whole-frame model transform.
 
@@ -26,11 +27,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..ml import predict as ml_predict
-from ..operators import windows
+from ..operators import joins, windows
 
 __all__ = [
     "hopping_window_stream",
-    "latest_per_key_stream",
     "enrich_and_score_stream",
     "interval_join_stream",
 ]
@@ -52,30 +52,6 @@ def hopping_window_stream(
         events.withWatermark(ts_col, watermark_delay),
         ts_col=ts_col,
         **agg_kwargs,
-    )
-
-
-def latest_per_key_stream(
-    df: DataFrame,
-    key: str | list[str],
-    ts: str,
-    *,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Streaming KSQL-TABLE materialization (reference: README.md:29):
-    continuously-updated latest row per key via ``max_by`` over the payload
-    struct — commutative, so Spark keeps one struct per key in the state
-    store and map-side-combines each micro-batch. Run in update or
-    complete output mode (it is a changelog, not an append stream)."""
-    keys = [key] if isinstance(key, str) else list(key)
-    tb = tiebreak or keys[0]
-    payload = [c for c in df.columns if c not in keys]
-    ord_expr = F.struct(F.col(ts), F.col(tb))
-    picked = df.groupBy(*keys).agg(
-        F.max_by(F.struct(*[F.col(c) for c in payload]), ord_expr).alias("__row")
-    )
-    return picked.select(*keys, *[F.col(f"__row.{c}").alias(c) for c in payload]).select(
-        *df.columns
     )
 
 
@@ -148,9 +124,7 @@ def enrich_and_score_stream(
     option 1); it composes with streaming frames because the fitted
     pipeline is pure column expressions.
     """
-    joined = agg_stream.join(
-        F.broadcast(dim), agg_stream[fact_key] == dim[dim_key], "left"
-    )
+    joined = joins.enrich_left_join(agg_stream, dim, fact_key, dim_key)
     if model_name is None:
         return joined
     return ml_predict.score(joined, model_name, models_dir=models_dir)

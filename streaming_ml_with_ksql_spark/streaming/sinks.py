@@ -17,7 +17,7 @@ final predictions topic to MongoDB through a sink connector
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 __all__ = [
     "run_to_memory",
@@ -79,7 +79,6 @@ def run_to_memory(
             )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    spark = SparkSession.getActiveSession()
     return spark.table(name)
 
 

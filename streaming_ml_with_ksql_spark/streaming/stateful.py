@@ -11,7 +11,8 @@ timeouts, expressed over Arrow-batched pandas groups:
   sessions (the stateful twin of operators.windows.session_window_agg);
 - ``latest_per_key_stateful``: changelog compaction as an explicit state
   machine — emits a key's row only when it changes (delta stream), unlike
-  the agg-based latest_per_key_stream which re-emits per micro-batch.
+  the agg-based operators.dedup.latest_per_key, which re-emits per
+  micro-batch.
 
 Scale notes: state lives in the executor state store partitioned by key
 (HDFS/RocksDB-backed); each micro-batch ships only the touched groups

@@ -187,6 +187,34 @@ def test_model_registry_lifecycle(spark, tmp_path):
     ml_predict.clear_model_cache()
 
 
+def test_resolve_model_cache_keys_on_the_stage_directory(spark, tmp_path):
+    """The same model name under another registry root is that root's
+    model, not the shipped one; a display name and its directory name
+    share one cache entry."""
+    import json
+    import os
+    import shutil
+
+    ml_predict.clear_model_cache()
+    shipped, shipped_sig = ml_predict.resolve_model(MODEL)
+    slot = tmp_path / MODEL / "Production"
+    shutil.copytree(
+        os.path.join(ml_predict.DEFAULT_MODELS_DIR, MODEL, "Production", "model"),
+        slot / "model",
+    )
+    other_sig = {
+        "inputs": shipped_sig["inputs"][:1],
+        "outputs": shipped_sig["outputs"],
+    }
+    (slot / "MLmodel.json").write_text(json.dumps({"signature": other_sig}))
+    try:
+        _, sig = ml_predict.resolve_model(MODEL, models_dir=str(tmp_path))
+        assert sig == other_sig != shipped_sig
+        assert ml_predict.resolve_model("Bot Detector")[0] is shipped
+    finally:
+        ml_predict.clear_model_cache()
+
+
 def test_classification_report_known_matrix(spark):
     """Hand-checked confusion matrix: labels/predictions with a class
     that is never predicted (recall only), one never true (precision

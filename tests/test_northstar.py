@@ -3,10 +3,13 @@ families, embedding similarity (SURVEY.md Phase 4 / BASELINE.json)."""
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
 from tests.oracle import assert_query_matches
+from tests.routes import cc_runs, kernel_and_distributed
 
 NORTHSTAR_ORACLED = [
     "text_stats",
@@ -76,11 +79,36 @@ def test_connected_components_chain_and_singletons(spark):
     assert all(comp[i] == i for i in (0, 1, 12, 13, 14))
 
 
-def test_star_contraction_logarithmic_rounds_and_parity(spark):
+def test_connected_components_long_chain_through_the_loop(
+    spark, monkeypatch, caplog
+):
+    """A 60-vertex chain on the distributed route is one component
+    labelled 0: a long chain is the worst case for a loop whose rounds
+    grow with the diameter, and a round cap must never pass a partial
+    labelling off as components."""
+    from streaming_ml_with_ksql_spark.operators import graph
+
+    n = 60
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
+    )
+    vertices = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    monkeypatch.setattr(graph, "CC_SINGLE_TASK_MAX_EDGES", 0)
+    with caplog.at_level(logging.INFO, logger=graph.__name__):
+        comp = graph.connected_components(edges, vertices)
+    assert sorted(map(tuple, comp.collect())) == [(i, 0) for i in range(n)]
+    ((path, rounds),) = cc_runs(caplog)
+    assert path == "star" and 1 <= rounds < graph.CC_MAX_ROUNDS
+
+
+def test_star_contraction_logarithmic_rounds_and_parity(
+    spark, monkeypatch, caplog
+):
     """Large-star/small-star must (a) collapse an adversarial 600-vertex
-    path in O(log d) rounds — far under the diameter that propagation
-    would need — and (b) agree with propagation label-for-label on a
-    random graph with self-loops, parallel edges and singletons."""
+    path in O(log d) rounds — far under the diameter that min-label
+    propagation would need — and (b) agree with the single-task
+    union-find kernel label-for-label on a random graph with self-loops,
+    parallel edges and singletons."""
     import random
 
     from streaming_ml_with_ksql_spark.operators import graph
@@ -90,56 +118,29 @@ def test_star_contraction_logarithmic_rounds_and_parity(spark):
         [(i, i + 1) for i in range(n - 1)], "src long, dst long"
     )
     vertices = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    # Force the distributed loops (r14 added a single-task union-find
-    # fast path below CC_SINGLE_TASK_MAX_EDGES; this test pins the LOOP
-    # behavior, the fast path has its own parity test below).
-    orig = graph.CC_SINGLE_TASK_MAX_EDGES
-    graph.CC_SINGLE_TASK_MAX_EDGES = 0
-    try:
-        st: dict = {}
-        comp = graph.connected_components(
-            edges, vertices, max_iter=40, algorithm="star", stats=st
-        )
-        assert comp.filter(F.col("component") != 0).count() == 0
-        assert st["rounds"] <= 16, st  # ~2*log2(600); propagation needs 599
+    with monkeypatch.context() as m:
+        m.setattr(graph, "CC_SINGLE_TASK_MAX_EDGES", 0)
+        with caplog.at_level(logging.INFO, logger=graph.__name__):
+            comp = graph.connected_components(edges, vertices)
+    assert comp.filter(F.col("component") != 0).count() == 0
+    ((path, rounds),) = cc_runs(caplog)
+    assert path == "star" and rounds <= 16  # ~2*log2(600); propagation needs 599
 
-        random.seed(7)
-        ee = [
-            (random.randrange(80), random.randrange(80)) for _ in range(120)
-        ]
-        edges2 = spark.createDataFrame(ee + [(5, 5)], "src long, dst long")
-        verts2 = spark.createDataFrame([(i,) for i in range(100)], "id long")
-        a = sorted(
-            map(
-                tuple,
-                graph.connected_components(
-                    edges2, verts2, algorithm="star"
-                ).collect(),
-            )
-        )
-        b = sorted(
-            map(
-                tuple,
-                graph.connected_components(
-                    edges2, verts2, algorithm="propagation"
-                ).collect(),
-            )
-        )
-        assert a == b
-    finally:
-        graph.CC_SINGLE_TASK_MAX_EDGES = orig
-    # Single-task Arrow union-find fast path: label-for-label identical
-    # to both distributed loops on the same graph (min-reachable-id).
-    c = sorted(
-        map(
-            tuple,
-            graph.connected_components(edges2, verts2).collect(),
-        )
+    random.seed(7)
+    ee = [(random.randrange(80), random.randrange(80)) for _ in range(120)]
+    edges2 = spark.createDataFrame(ee + [(5, 5)], "src long, dst long")
+    verts2 = spark.createDataFrame([(i,) for i in range(100)], "id long")
+    kernel, star = kernel_and_distributed(
+        monkeypatch,
+        [(graph, "CC_SINGLE_TASK_MAX_EDGES")],
+        lambda: graph.connected_components(edges2, verts2),
     )
-    assert c == a
+    assert sorted(map(tuple, kernel.collect())) == sorted(
+        map(tuple, star.collect())
+    )
 
 
-def test_connected_components_string_ids_fast_path_parity(spark):
+def test_connected_components_string_ids_fast_path_parity(spark, monkeypatch):
     """String-vertex graphs (the part_entity_groups contract) must work on
     the single-task fast path — r14's first kernel hard-coded int ids and
     crashed the full driver sweep on 'large ring' — and agree label-for-
@@ -157,23 +158,13 @@ def test_connected_components_string_ids_fast_path_parity(spark):
          ("zinc plate",), ("zinc plait",), ("lone part",)],
         "id string",
     )
-    fast = sorted(
-        map(tuple, graph.connected_components(edges, verts).collect())
+    fast, loop = kernel_and_distributed(
+        monkeypatch,
+        [(graph, "CC_SINGLE_TASK_MAX_EDGES")],
+        lambda: graph.connected_components(edges, verts),
     )
-    orig = graph.CC_SINGLE_TASK_MAX_EDGES
-    graph.CC_SINGLE_TASK_MAX_EDGES = 0
-    try:
-        loop = sorted(
-            map(
-                tuple,
-                graph.connected_components(
-                    edges, verts, algorithm="star"
-                ).collect(),
-            )
-        )
-    finally:
-        graph.CC_SINGLE_TASK_MAX_EDGES = orig
-    assert fast == loop
+    fast = sorted(map(tuple, fast.collect()))
+    assert fast == sorted(map(tuple, loop.collect()))
     lab = dict(fast)
     assert lab["large ring"] == "aqua ring"  # lexicographic min of the chain
     assert lab["zinc plait"] == "zinc plait" and lab["zinc plate"] == "zinc plait"
@@ -297,7 +288,7 @@ def test_shuffle_shard_is_a_total_order(spark, sf_medium):
     out.unpersist()
 
 
-def test_pagerank_single_task_matches_distributed_loop(spark):
+def test_pagerank_single_task_matches_distributed_loop(spark, monkeypatch):
     """r14 fast path: the one-Arrow-task integer PageRank kernel must
     reproduce the distributed per-round loop rank-for-rank (both are
     exact BIGINT arithmetic, so equality is bitwise). Graph: two rings
@@ -309,17 +300,17 @@ def test_pagerank_single_task_matches_distributed_loop(spark):
     pairs += [(10 + i, 10 + (i + 1) % 5) for i in range(5)]
     pairs += [(3, 12), (4, 4), (0, 1)]  # bridge, self-loop, duplicate
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    fast = sorted(
-        map(tuple, graph.pagerank(df, iters=6, single_task=True).collect())
+    fast, loop = kernel_and_distributed(
+        monkeypatch,
+        [(graph, "ITER_SINGLE_TASK_MAX_EDGES")],
+        lambda: graph.pagerank(df, iters=6),
     )
-    loop = sorted(
-        map(tuple, graph.pagerank(df, iters=6, single_task=False).collect())
-    )
-    assert fast == loop
+    fast = sorted(map(tuple, fast.collect()))
+    assert fast == sorted(map(tuple, loop.collect()))
     assert len(fast) == 12
 
 
-def test_pagerank_single_task_string_ids(spark):
+def test_pagerank_single_task_string_ids(spark, monkeypatch):
     """The textrank word-graph contract: string vertices must ride the
     fast path and agree with the distributed loop."""
     from streaming_ml_with_ksql_spark.operators import graph
@@ -329,14 +320,15 @@ def test_pagerank_single_task_string_ids(spark):
          ("delta", "beta")],
         "w1 string, w2 string",
     )
-    fast = sorted(map(tuple, graph.pagerank(
-        df, a_col="w1", b_col="w2", iters=6, single_task=True).collect()))
-    loop = sorted(map(tuple, graph.pagerank(
-        df, a_col="w1", b_col="w2", iters=6, single_task=False).collect()))
-    assert fast == loop
+    fast, loop = kernel_and_distributed(
+        monkeypatch,
+        [(graph, "ITER_SINGLE_TASK_MAX_EDGES")],
+        lambda: graph.pagerank(df, a_col="w1", b_col="w2", iters=6),
+    )
+    assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, loop.collect()))
 
 
-def test_bfs_hops_single_task_matches_distributed_loop(spark):
+def test_bfs_hops_single_task_matches_distributed_loop(spark, monkeypatch):
     """r14 fast path: the min-propagation kernel must reproduce the
     distributed loop including NULLs for vertices unreached within
     ``iters`` (chain longer than the horizon) and the seed set
@@ -346,23 +338,19 @@ def test_bfs_hops_single_task_matches_distributed_loop(spark):
     # seed 0; chain 0-1-2-...-8 (7,8 beyond 4 hops -> NULL); island 21-22
     pairs = [(i, i + 1) for i in range(8)] + [(21, 22)]
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    fast = sorted(
-        map(tuple, graph.bfs_hops(df, seed_mod=10, iters=4,
-                                  single_task=True).collect()),
-        key=lambda t: t[0],
+    fast, loop = kernel_and_distributed(
+        monkeypatch,
+        [(graph, "ITER_SINGLE_TASK_MAX_EDGES")],
+        lambda: graph.bfs_hops(df, seed_mod=10, iters=4),
     )
-    loop = sorted(
-        map(tuple, graph.bfs_hops(df, seed_mod=10, iters=4,
-                                  single_task=False).collect()),
-        key=lambda t: t[0],
-    )
-    assert fast == loop
+    fast = sorted(map(tuple, fast.collect()), key=lambda t: t[0])
+    assert fast == sorted(map(tuple, loop.collect()), key=lambda t: t[0])
     d = dict(fast)
     assert d[0] == 0 and d[4] == 4
     assert d[7] is None and d[8] is None and d[21] is None
 
 
-def test_hits_single_task_matches_distributed_loop(spark):
+def test_hits_single_task_matches_distributed_loop(spark, monkeypatch):
     """r14 fast path: the HITS kernel (sum + integer rescale per round)
     must reproduce both score frames of the distributed rounds exactly,
     including the rescale divisor derived from the per-round max."""
@@ -373,8 +361,11 @@ def test_hits_single_task_matches_distributed_loop(spark):
          (4, 104)],
         "c long, p long",
     ).localCheckpoint(eager=True)
-    fh, fa = graph.hits_bipartite(edges, rounds=3, single_task=True)
-    lh, la = graph.hits_bipartite(edges, rounds=3, single_task=False)
+    (fh, fa), (lh, la) = kernel_and_distributed(
+        monkeypatch,
+        [(graph, "ITER_SINGLE_TASK_MAX_EDGES")],
+        lambda: graph.hits_bipartite(edges, rounds=3),
+    )
     assert sorted(map(tuple, fh.collect())) == sorted(map(tuple, lh.collect()))
     assert sorted(map(tuple, fa.collect())) == sorted(map(tuple, la.collect()))
 

@@ -10,6 +10,7 @@ the query still passes its oracle but would fall over at 1000× the data.
 
 from __future__ import annotations
 
+import logging
 import re
 
 from streaming_ml_with_ksql_spark import registry
@@ -305,33 +306,32 @@ def test_jpeg_decode_is_narrow_map(spark):
     assert plan.index("Exchange") > plan.rindex("MapInPandas")
 
 
-def test_star_contraction_edges_stay_partitioned(spark):
-    """The star algorithm's output over the sf0.001 near-dup graph must
-    come from the measured tiny loop width (no 32-wide shuffles of a
-    KB-sized label frame), like the propagation loop before it."""
-    from pyspark.sql import functions as F
-
+def test_star_contraction_edges_stay_partitioned(spark, monkeypatch, caplog):
+    """The star loop's output over the sf0.001 near-dup graph must come
+    from the measured tiny loop width (no 32-wide shuffles of a KB-sized
+    label frame). The kernel bound is patched to 0 so the loop runs."""
     from streaming_ml_with_ksql_spark import io as sio
     from streaming_ml_with_ksql_spark.operators import graph, text
+    from tests.routes import cc_runs
 
     docs = sio.load_table(spark, SF, "documents")
     pairs = text.ngram_jaccard_pairs(docs)
-    st: dict = {}
-    comp = graph.connected_components(
-        pairs,
-        docs.select("doc_id"),
-        src="doc_a",
-        dst="doc_b",
-        id_col="doc_id",
-        algorithm="star",
-        stats=st,
-    )
+    monkeypatch.setattr(graph, "CC_SINGLE_TASK_MAX_EDGES", 0)
+    with caplog.at_level(logging.INFO, logger=graph.__name__):
+        comp = graph.connected_components(
+            pairs,
+            docs.select("doc_id"),
+            src="doc_a",
+            dst="doc_b",
+            id_col="doc_id",
+        )
     # the final resolve join sees the checkpointed 1-partition label RDD
     plan = spark._jvm.PythonSQLUtils.explainString(
         comp._jdf.queryExecution(), "formatted"
     )
     assert "Scan ExistingRDD" in plan
-    assert st == {} or st.get("rounds", 0) <= 6  # dense blobs converge fast
+    ((path, rounds),) = cc_runs(caplog)
+    assert path == "star" and 1 <= rounds <= 6  # dense blobs converge fast
 
 
 def test_quantile_sketch_partial_agg_and_pruned_scan(spark):

@@ -8,6 +8,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from streaming_ml_with_ksql_spark.operators import rank
+from tests.routes import kernel_and_distributed
 
 
 def _frame(spark, n: int):
@@ -59,7 +60,7 @@ def test_rank_plans_have_no_partitionless_window(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_ntile_scores_single_task_matches_parallel_ntile(spark):
+def test_ntile_scores_single_task_matches_parallel_ntile(spark, monkeypatch):
     """r14 fast path: the one-Arrow-task multi-spec NTILE kernel must
     reproduce the distributed parallel_ntile pass-for-pass (same exact
     integer bucket arithmetic over the same total order), including
@@ -75,7 +76,11 @@ def test_ntile_scores_single_task_matches_parallel_ntile(spark):
         ("a_t", [("v", "desc"), ("id", "asc")]),
         ("b_t", [("f", "asc"), ("id", "asc")]),
     ]
-    fast = rank.ntile_scores(df, 5, specs, single_task=True)
+    fast, routed = kernel_and_distributed(
+        monkeypatch,
+        [(rank, "NTILE_SINGLE_TASK_MAX_ROWS")],
+        lambda: rank.ntile_scores(df, 5, specs),
+    )
     slow = rank.parallel_ntile(
         df, 5, [F.col("v").desc(), F.col("id").asc()], "a_t"
     )
@@ -86,5 +91,4 @@ def test_ntile_scores_single_task_matches_parallel_ntile(spark):
     expected = sorted(map(tuple, slow.select(cols).collect()))
     assert sorted(map(tuple, fast.select(cols).collect())) == expected
     # ntile_scores' own distributed route is the same parallel_ntile chain
-    routed = rank.ntile_scores(df, 5, specs, single_task=False)
     assert sorted(map(tuple, routed.select(cols).collect())) == expected

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from streaming_ml_with_ksql_spark.operators import clustering, text
+from tests.routes import DBSCAN_BOUNDS, has_kernel, kernel_and_distributed
 
 
 EDGE_DOCS = [
@@ -79,7 +80,7 @@ def test_classification_report_one_pass_values(spark):
     assert rows["c"]["n_pred_d"] == 0.0 and rows["c"]["f1"] == 0.0
 
 
-def test_dbscan_kernel_drops_foreign_edge_endpoints(spark):
+def test_dbscan_kernel_drops_foreign_edge_endpoints(spark, monkeypatch):
     """ADVICE r14: an eps-pair endpoint absent from the weight frame is
     dropped by the relational inner join; the kernel must do the same
     instead of attributing it to the lexically-next rep."""
@@ -91,20 +92,24 @@ def test_dbscan_kernel_drops_foreign_edge_endpoints(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 7)], "vec_a long, vec_b long"
     )
-    fast = clustering.dbscan_from_weighted_pairs(
-        members, pairs, min_neighbors=2, single_task=True
-    )
-    slow = clustering.dbscan_from_weighted_pairs(
-        members, pairs, min_neighbors=2, single_task=False
+    fast, slow = kernel_and_distributed(
+        monkeypatch,
+        DBSCAN_BOUNDS,
+        lambda: clustering.dbscan_from_weighted_pairs(
+            members, pairs, min_neighbors=2
+        ),
     )
     fa = {r["vec_id"]: (r["role"], r["cluster_id"]) for r in fast.collect()}
     sl = {r["vec_id"]: (r["role"], r["cluster_id"]) for r in slow.collect()}
     assert fa == sl and set(fa) == {1, 4, 5, 2, 10}
 
 
-def _minhash_both(df, **kw):
-    fast = text.near_dup_pairs_minhash(df, single_task=True, **kw)
-    slow = text.near_dup_pairs_minhash(df, single_task=False, **kw)
+def _minhash_both(monkeypatch, df, **kw):
+    fast, slow = kernel_and_distributed(
+        monkeypatch,
+        [(text, "MINHASH_SINGLE_TASK_MAX_DOCS")],
+        lambda: text.near_dup_pairs_minhash(df, **kw),
+    )
     key = lambda r: (r["doc_a"], r["doc_b"])  # noqa: E731
     return (
         {key(r): r["jaccard"] for r in fast.collect()},
@@ -112,15 +117,15 @@ def _minhash_both(df, **kw):
     )
 
 
-def test_minhash_single_task_matches_distributed_sf001(spark):
+def test_minhash_single_task_matches_distributed_sf001(spark, monkeypatch):
     from streaming_ml_with_ksql_spark import io
 
     docs = io.load_table(spark, "/root/testdata/sf0.01", "documents")
-    fast, slow = _minhash_both(docs)
+    fast, slow = _minhash_both(monkeypatch, docs)
     assert fast == slow and len(fast) > 0
 
 
-def test_minhash_single_task_matches_distributed_planted(spark):
+def test_minhash_single_task_matches_distributed_planted(spark, monkeypatch):
     """Planted near-dups + exact dups + disjoint docs; jaccard doubles
     must agree bitwise (the division/round run in Spark on both paths)."""
     base = "the quick brown fox jumps over the lazy dog again and again"
@@ -132,12 +137,8 @@ def test_minhash_single_task_matches_distributed_planted(spark):
         (5, "short doc"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    fast, slow = _minhash_both(df)
+    fast, slow = _minhash_both(monkeypatch, df)
     assert fast == slow and (1, 3) in fast and fast[(1, 3)] == 1.0
-
-
-def _has_kernel(df) -> bool:
-    return "MapInPandas" in df._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_minhash_gate_uses_row_bound(spark):
@@ -147,8 +148,8 @@ def test_minhash_gate_uses_row_bound(spark):
         [(1, "a b c d e f"), (2, "a b c d e g")], "doc_id long, text string"
     )
     unbounded = df.join(df.select("doc_id"), "doc_id")
-    assert not _has_kernel(text.near_dup_pairs_minhash(unbounded))
-    assert _has_kernel(text.near_dup_pairs_minhash(df))
+    assert not has_kernel(text.near_dup_pairs_minhash(unbounded))
+    assert has_kernel(text.near_dup_pairs_minhash(df))
 
 
 PLANTED_PAIR_DOCS = [
@@ -173,9 +174,9 @@ def test_pair_kernels_send_string_ids_to_distributed(spark, pairs):
         F.format_string("d%02d", "doc_id").alias("doc_id"), "text"
     )
     kernel = pairs(ints)
-    assert _has_kernel(kernel)
+    assert has_kernel(kernel)
     auto = pairs(strs)
-    assert not _has_kernel(auto)
+    assert not has_kernel(auto)
     expected = {
         (f"d{r['doc_a']:02d}", f"d{r['doc_b']:02d}"): r["jaccard"]
         for r in kernel.collect()
@@ -184,23 +185,28 @@ def test_pair_kernels_send_string_ids_to_distributed(spark, pairs):
     assert got == expected and ("d07", "d09") in got
 
 
-def test_ngram_pairs_single_task_matches_distributed_sf001(spark):
+def _ngram_both(monkeypatch, df):
+    fast, slow = kernel_and_distributed(
+        monkeypatch,
+        [(text, "NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS")],
+        lambda: text.ngram_jaccard_pairs(df),
+    )
+    key = lambda r: (r["doc_a"], r["doc_b"])  # noqa: E731
+    return (
+        {key(r): r["jaccard"] for r in fast.collect()},
+        {key(r): r["jaccard"] for r in slow.collect()},
+    )
+
+
+def test_ngram_pairs_single_task_matches_distributed_sf001(spark, monkeypatch):
     from streaming_ml_with_ksql_spark import io
 
     docs = io.load_table(spark, "/root/testdata/sf0.01", "documents")
-    key = lambda r: (r["doc_a"], r["doc_b"])  # noqa: E731
-    fast = {
-        key(r): r["jaccard"]
-        for r in text.ngram_jaccard_pairs(docs, single_task=True).collect()
-    }
-    slow = {
-        key(r): r["jaccard"]
-        for r in text.ngram_jaccard_pairs(docs, single_task=False).collect()
-    }
+    fast, slow = _ngram_both(monkeypatch, docs)
     assert fast == slow and len(fast) > 0
 
 
-def test_ngram_pairs_single_task_planted(spark):
+def test_ngram_pairs_single_task_planted(spark, monkeypatch):
     rows = [
         (7, "a b c d e f g h"),
         (3, "a b c d e f g zz"),   # high overlap with 7 (and id 3 < 7)
@@ -208,15 +214,7 @@ def test_ngram_pairs_single_task_planted(spark):
         (11, "q r s t u v w x"),   # disjoint
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    key = lambda r: (r["doc_a"], r["doc_b"])  # noqa: E731
-    fast = {
-        key(r): r["jaccard"]
-        for r in text.ngram_jaccard_pairs(df, single_task=True).collect()
-    }
-    slow = {
-        key(r): r["jaccard"]
-        for r in text.ngram_jaccard_pairs(df, single_task=False).collect()
-    }
+    fast, slow = _ngram_both(monkeypatch, df)
     assert fast == slow and (7, 9) in fast and fast[(7, 9)] == 1.0
 
 

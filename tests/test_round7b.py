@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from streaming_ml_with_ksql_spark import io as io_mod
 from streaming_ml_with_ksql_spark.operators import graph as graph_ops
+from tests.routes import kernel_and_distributed
 
 
 def test_bfs_hops_path_graph_distances(spark):
@@ -412,7 +413,7 @@ def test_bootstrap_ci_brackets_point_and_matches_python(spark, sf_small):
     assert r["n_days_d"] == float(n)
 
 
-def test_kmeans_single_task_matches_distributed_loop(spark, sf_small):
+def test_kmeans_single_task_matches_distributed_loop(spark, sf_small, monkeypatch):
     """r14 fast path: the one-Arrow-task integer Lloyd kernel must
     reproduce the distributed assign/update loop assignment-for-
     assignment (exact BIGINT arithmetic on both paths, including the
@@ -421,16 +422,12 @@ def test_kmeans_single_task_matches_distributed_loop(spark, sf_small):
     from streaming_ml_with_ksql_spark.operators import clustering
 
     emb = io_mod.load_table(spark, sf_small, "embeddings")
-    fast = sorted(
-        (r["vec_id"], r["cid"], r["dist"])
-        for r in clustering.kmeans_fixed_point(
-            emb, k=7, iters=3, single_task=True
-        ).collect()
+    fast, loop = kernel_and_distributed(
+        monkeypatch,
+        [(clustering, "KMEANS_SINGLE_TASK_MAX_CELLS")],
+        lambda: clustering.kmeans_fixed_point(emb, k=7, iters=3),
     )
-    loop = sorted(
-        (r["vec_id"], r["cid"], r["dist"])
-        for r in clustering.kmeans_fixed_point(
-            emb, k=7, iters=3, single_task=False
-        ).collect()
+    rows = lambda df: sorted(  # noqa: E731
+        (r["vec_id"], r["cid"], r["dist"]) for r in df.collect()
     )
-    assert fast == loop
+    assert rows(fast) == rows(loop)

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from streaming_ml_with_ksql_spark.sources import arrow_ipc
+from tests.routes import kernel_and_distributed
 
 
 DDL = "k bigint, name string, v double"
@@ -334,11 +335,11 @@ def test_mmr_matches_python_reference_greedy(spark):
     assert out == _py_mmr(q8, 0, 12, 5)
 
 
-def test_mmr_single_task_matches_distributed_loop(spark):
+def test_mmr_single_task_matches_distributed_loop(spark, monkeypatch):
     """r14 fast path: the one-Arrow-task greedy kernel must reproduce the
     distributed per-pick loop row-for-row (both are exact BIGINT
     arithmetic, so equality is bitwise, not approximate)."""
-    from streaming_ml_with_ksql_spark.operators.similarity import mmr_diverse_topk
+    from streaming_ml_with_ksql_spark.operators import similarity
 
     vecs = {
         v: [float(((v * 5 + i * 17) % 13) - 6) for i in range(8)]
@@ -348,18 +349,12 @@ def test_mmr_single_task_matches_distributed_loop(spark):
         [(v, vecs[v], 0) for v in sorted(vecs)],
         "vec_id long, embedding array<float>, label int",
     )
-    fast = sorted(
-        map(tuple, mmr_diverse_topk(emb, cand_n=15, k=6).collect())
+    fast, loop = kernel_and_distributed(
+        monkeypatch,
+        [(similarity, "MMR_SINGLE_TASK_MAX_ROWS")],
+        lambda: similarity.mmr_diverse_topk(emb, cand_n=15, k=6),
     )
-    loop = sorted(
-        map(
-            tuple,
-            mmr_diverse_topk(
-                emb, cand_n=15, k=6, single_task=False
-            ).collect(),
-        )
-    )
-    assert fast == loop
+    assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, loop.collect()))
 
 
 def test_mmr_first_pick_is_pure_relevance_and_picks_distinct(spark, sf_medium):

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from streaming_ml_with_ksql_spark import io as io_mod
 from streaming_ml_with_ksql_spark.sources import warc_py
 from tests.oracle import assert_query_matches
+from tests.routes import DBSCAN_BOUNDS, kernel_and_distributed
 
 ROUND8 = [
     "warc_gz_source_roundtrip",
@@ -595,7 +596,9 @@ def test_item_recommendations_exclude_owned_and_rank(spark, sf_medium):
         assert scores == sorted(scores, reverse=True)
 
 
-def test_weighted_dbscan_single_task_matches_relational_path(spark, sf_small):
+def test_weighted_dbscan_single_task_matches_relational_path(
+    spark, sf_small, monkeypatch
+):
     """r14 fast path: the one-Arrow-task rep-level DBSCAN kernel must
     reproduce the relational join cascade row-for-row (same weighted
     degrees, min-label components, min-label borders, noise) on a
@@ -616,10 +619,14 @@ def test_weighted_dbscan_single_task_matches_relational_path(spark, sf_small):
     rep_pairs = similarity.embedding_near_dup_pairs_blocked(
         reps.select(F.col("rep").alias("vec_id"), "embedding")
     ).localCheckpoint(eager=True)
-    fast = sorted(map(tuple, clustering.dbscan_from_weighted_pairs(
-        members, rep_pairs, min_neighbors=2, single_task=True).collect()))
-    rel = sorted(map(tuple, clustering.dbscan_from_weighted_pairs(
-        members, rep_pairs, min_neighbors=2, single_task=False).collect()))
-    assert fast == rel
+    fast, rel = kernel_and_distributed(
+        monkeypatch,
+        DBSCAN_BOUNDS,
+        lambda: clustering.dbscan_from_weighted_pairs(
+            members, rep_pairs, min_neighbors=2
+        ),
+    )
+    fast = sorted(map(tuple, fast.collect()))
+    assert fast == sorted(map(tuple, rel.collect()))
     roles = {r for (_, r, _) in fast}
     assert "core" in roles and "noise" in roles

@@ -72,15 +72,14 @@ def test_row_bound_counts_materialized_leaves(spark):
     assert sizing.row_bound(spark.range(100)) == 100
 
 
-def test_fan_out_clamps_small_frames(spark):
+def test_fan_out_clamps_small_frames(spark, caplog):
     df = spark.range(100)
     n_max = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert sizing.fan_out(df, rows_per_task=50).rdd.getNumPartitions() == 2
+    with caplog.at_level(logging.INFO, logger=sizing.__name__):
+        assert sizing.fan_out(df, rows_per_task=50).rdd.getNumPartitions() == 2
+    assert f"fan_out width=2 rows=100 rows_per_task=50 max={n_max}" in caplog.text
     assert sizing.fan_out(df, rows_per_task=1).rdd.getNumPartitions() == n_max
     assert sizing.fan_out(df, rows_per_task=10**6).rdd.getNumPartitions() == 1
-    assert (
-        sizing.fan_out(df, parallelism=7).rdd.getNumPartitions() == 7
-    )  # explicit override wins
 
 
 def test_fan_out_sizes_from_row_bound(spark, sf_small):
@@ -169,13 +168,11 @@ def test_single_task_routes_and_feeds(spark, sf_small, caplog):
     ckpt = docs.localCheckpoint(eager=True)
     fed = sizing.single_task(ckpt, max_rows=10**6, **kw)
     assert "Repartition 1, false" in _plan(fed)
-    # size, requirement and bound decide; an explicit choice beats them all
+    # size, requirement and bound decide, and nothing else
     assert sizing.single_task(docs, max_rows=500, **kw) is None
     assert sizing.single_task(docs, max_rows=10**6, requires=False, **kw) is None
     joined = docs.join(docs, "doc_id")
     assert sizing.single_task(joined, max_rows=10**6, **kw) is None
-    assert sizing.single_task(docs, max_rows=0, force=True, **kw) is not None
-    assert sizing.single_task(docs, max_rows=10**6, force=False, **kw) is None
     assert sizing.single_task(joined, max_rows=10, rows=3, **kw) is not None
 
 

@@ -18,7 +18,6 @@ from streaming_ml_with_ksql_spark.operators import dedup, windows
 from streaming_ml_with_ksql_spark.streaming import (
     foreach_batch_parquet,
     hopping_window_stream,
-    latest_per_key_stream,
     run_to_memory,
     sessionize_stream,
     shard_table_to_dir,
@@ -82,7 +81,7 @@ def test_latest_per_key_stream_matches_batch(spark, events_stream_dir):
     semantics, reference README.md:29), with identical tiebreak."""
     stream = stream_parquet_dir(spark, events_stream_dir)
     out = run_to_memory(
-        latest_per_key_stream(stream, "user_id", "ts", tiebreak="event_id"),
+        dedup.latest_per_key(stream, "user_id", "ts", tiebreak="event_id"),
         "latest_stream_test",
         output_mode="complete",
     )
@@ -91,6 +90,27 @@ def test_latest_per_key_stream_matches_batch(spark, events_stream_dir):
     )
     cols = sorted(batch.columns)
     assert _rows(out, cols) == _rows(batch, cols)
+
+
+def test_run_to_memory_from_another_thread(spark, events_stream_dir):
+    """The active session is thread-local: a drain run on a worker thread
+    must still return its table."""
+    import threading
+
+    result: dict = {}
+
+    def drain():
+        try:
+            stream = stream_parquet_dir(spark, events_stream_dir)
+            result["rows"] = run_to_memory(stream, "thread_drain_test").count()
+        except Exception as e:  # re-raised on the test thread below
+            result["error"] = e
+
+    t = threading.Thread(target=drain)
+    t.start()
+    t.join(300)
+    assert "error" not in result, result.get("error")
+    assert result["rows"] == spark.read.parquet(events_stream_dir).count()
 
 
 def test_sessionize_stateful_matches_session_window(spark, events_stream_dir):
@@ -235,7 +255,7 @@ def test_checkpoint_recovery_exactly_once(spark, sf_small, tmp_path):
     def run_once():
         stream = stream_parquet_dir(spark, live_dir)
         q = (
-            latest_per_key_stream(stream, "user_id", "ts", tiebreak="event_id")
+            dedup.latest_per_key(stream, "user_id", "ts", tiebreak="event_id")
             .writeStream.foreachBatch(foreach_batch_parquet(sink))
             .outputMode("complete")
             .option("checkpointLocation", ckpt)
