@@ -41,9 +41,9 @@ KSQL parser. Each construct maps Spark-first:
 
 predict() is deliberately NOT a row-wise Python UDF: the projection is
 lifted out of the SQL, the rest of the query runs JVM-side, and scoring is
-the broadcast PipelineModel transform (SURVEY.md U2 option 1) — the
-reference's per-row LeapFrame (PredictUdf.java:55-58) simulated exactly
-one row at a time what transform does in one vectorized pass.
+one projection of the model compiled into a SQL expression (SURVEY.md U2) —
+the reference's per-row LeapFrame (PredictUdf.java:55-58) simulated exactly
+one row at a time what that projection does in one vectorized pass.
 
 Batch/stream duality: topics may be bound to *streaming* DataFrames (file
 replay or Kafka). The same translated plans then come out unbounded —

@@ -7,13 +7,15 @@ PredictUdf.java:43-45), build params = strings ++ ints in signature order
 (:48-54), wrap in a 1-row MLeap LeapFrame (:55-57), return the output
 column, NULL on any error (:60-63).
 
-Spark-native translation: scoring is a *DataFrame* operator —
-``PipelineModel.transform`` over the whole frame (the UDF's per-row
-LeapFrame was only ever simulating this one row at a time). The API
-preserves the UDF's contract:
+Spark-native translation: scoring is a *DataFrame* operator, and the model
+is one Catalyst expression. ``resolve_model`` reads the saved pipeline's
+stage files (metadata JSON + parquet data) without the JVM and compiles
+them into one SQL ``CASE`` over the signature columns — the role MLeap
+plays for the reference: score a Spark-trained pipeline without Spark ML.
+The API preserves the UDF's contract:
 
-- model resolved by (name, stage) from a registry dir, cached per process
-  and stage directory
+- model resolved by (name, stage) from a registry dir, compiled once and
+  cached per process and stage directory
   (the ConcurrentHashMap at PredictUdf.java:33 becomes a module-level dict);
 - inputs arrive as an array<string> + array<int> pair in signature order
   (README.md:68 ``predict('Bot Detector', as_array(...), as_array(...))``);
@@ -22,17 +24,22 @@ preserves the UDF's contract:
   anything else → error);
 - scoring failure → NULL prediction, query survives.
 
-Scale notes: transform-based scoring is a narrow map stage — no shuffle,
-stays in the JVM (the tree model is a Catalyst-evaluable pipeline), and
-broadcasts the (small) model to every executor once.
+Scale notes: scoring is one projection — no shuffle, no Python, no ML UDF
+or vector column in the plan; the model travels inside the plan as
+literals, and a plan with only built-in expressions is cheaper to plan on
+every request and every micro-batch.
 """
 
 from __future__ import annotations
 
+import glob
 import json
+import logging
 import os
+import time
+from typing import NamedTuple
 
-from pyspark.ml import PipelineModel
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -40,14 +47,16 @@ from .registry import dir_name
 
 __all__ = ["resolve_model", "score", "predict_arrays", "clear_model_cache"]
 
+log = logging.getLogger(__name__)
+
 DEFAULT_MODELS_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
     "models",
 )
 
-# stage directory → (model, signature); per-process lazy cache
-# (reference: PredictUdf.java:33,43-45).
-_CACHE: dict[str, tuple[PipelineModel, dict]] = {}
+# stage directory → (compiled SQL expression, signature); per-process lazy
+# cache (reference: PredictUdf.java:33,43-45).
+_CACHE: dict[str, tuple[str, dict]] = {}
 
 
 def clear_model_cache() -> None:
@@ -56,30 +65,204 @@ def clear_model_cache() -> None:
 
 def resolve_model(
     name: str, stage: str = "Production", models_dir: str | None = None
-) -> tuple[PipelineModel, dict]:
+) -> tuple[str, dict]:
     """Resolve a named+staged model from the local registry
     (reference: MlflowModelResolver.java:44-56,115-117 — stage-resolved
     lazy fetch, cached per stage directory, so a display name and its
-    directory name share one entry and each registry root has its own)."""
+    directory name share one entry and each registry root has its own).
+
+    Returns the pipeline compiled to one SQL expression (see
+    :func:`_compile_pipeline`) and the signature. A stage type or mode the
+    compiler does not cover raises here, before anything is scored. Each
+    compile logs one ``resolve_model name= stage= stages= tree_nodes= s=``
+    line."""
     root = os.path.abspath(
         os.path.join(models_dir or DEFAULT_MODELS_DIR, dir_name(name), stage)
     )
     if root not in _CACHE:
-        model = PipelineModel.load(os.path.join(root, "model"))
+        t0 = time.perf_counter()
         with open(os.path.join(root, "MLmodel.json")) as f:
             signature = json.load(f)["signature"]
-        _CACHE[root] = (model, signature)
+        sql, n_stages, n_nodes = _compile_pipeline(
+            os.path.join(root, "model"), signature
+        )
+        _CACHE[root] = (sql, signature)
+        log.info(
+            "resolve_model name=%s stage=%s stages=%d tree_nodes=%d s=%.3f",
+            name, stage, n_stages, n_nodes, time.perf_counter() - t0,
+        )
     return _CACHE[root]
 
 
-def _coerce(col: Column, typ: str, name: str) -> Column:
+# ---------------------------------------------------------------------------
+# Pipeline → SQL. Each stage maps its input columns' expressions to its
+# output columns' expressions, with Spark ML's semantics for the modes
+# ml/train.py fits; a column no stage produces is read from the frame.
+# ---------------------------------------------------------------------------
+
+
+class _Index(NamedTuple):
+    """A StringIndexer output: SQL for an index in ``0 .. size-1``."""
+
+    sql: str
+    size: int
+
+
+class _Tree(NamedTuple):
+    """A tree's prediction column: nodes by id over feature expressions."""
+
+    nodes: dict
+    features: list
+
+
+def _col(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _str(value: str) -> str:
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _dbl(value: float) -> str:
+    return f"{float(value)!r}D"  # repr round-trips; D makes it a DOUBLE
+
+
+def _read_stage(path: str) -> tuple[dict, list[dict]]:
+    """A saved ML stage: its metadata (params merged over their defaults)
+    and the rows of its parquet data, if it has any."""
+    with open(glob.glob(os.path.join(path, "metadata", "part-*"))[0]) as f:
+        meta = json.loads(f.readline())
+    meta["params"] = {**meta.get("defaultParamMap", {}), **meta["paramMap"]}
+    data = os.path.join(path, "data")
+    return meta, pq.read_table(data).to_pylist() if os.path.isdir(data) else []
+
+
+def _columns(params: dict, kind: str) -> list[str]:
+    return params.get(f"{kind}Cols") or [params[f"{kind}Col"]]
+
+
+def _require(params: dict, key: str, allowed: tuple, cls: str) -> None:
+    if params.get(key) not in allowed:
+        raise ValueError(f"{cls}: {key}={params.get(key)!r} is not supported")
+
+
+def _label(labels: list[str], pred: float) -> str:
+    """IndexToString of a leaf's prediction, as a SQL literal."""
+    if not 0 <= int(pred) < len(labels):
+        raise ValueError(f"IndexToString: no label for prediction {pred}")
+    return _str(labels[int(pred)])
+
+
+def _tree_sql(tree: _Tree, leaf, node_id: int = 0) -> str:
+    """Nested CASE over the tree: a continuous split goes left when
+    ``x <= threshold``, a categorical one when ``x IN (left categories)``;
+    ``leaf`` renders a leaf's prediction."""
+    node = tree.nodes[node_id]
+    if node["leftChild"] < 0:
+        return leaf(node["prediction"])
+    split = node["split"]
+    x = tree.features[split["featureIndex"]]
+    values = split["leftCategoriesOrThreshold"]
+    if split["numCategories"] < 0:
+        cond = f"{x} <= {_dbl(values[0])}"
+    else:
+        cond = f"{x} IN ({', '.join(map(_dbl, values))})"
+    left = _tree_sql(tree, leaf, node["leftChild"])
+    right = _tree_sql(tree, leaf, node["rightChild"])
+    return left if left == right else f"CASE WHEN {cond} THEN {left} ELSE {right} END"
+
+
+def _compile_pipeline(path: str, signature: dict) -> tuple[str, int, int]:
+    """Compile a saved Spark ML pipeline of StringIndexer (``keep``),
+    OneHotEncoder, VectorAssembler (``error``), DecisionTreeClassifier and
+    IndexToString stages into one SQL expression for the signature's
+    output. Returns (sql, stage count, tree node count)."""
+    meta, _ = _read_stage(path)
+    uids = meta["params"]["stageUids"]
+    width = len(str(len(uids)))
+    env: dict = {}  # column → str (SQL) | _Index | list[str] (vector) | _Tree
+    guards: list[str] = []  # raise when true (VectorAssembler 'error')
+    n_nodes = 0
+    for i, uid in enumerate(uids):
+        stage, rows = _read_stage(os.path.join(path, "stages", f"{i:0{width}d}_{uid}"))
+        cls, p = stage["class"].rsplit(".", 1)[-1], stage["params"]
+        if cls == "StringIndexerModel":
+            # unseen and NULL both take index len(labels) (simple CASE: a
+            # NULL key matches no WHEN)
+            _require(p, "handleInvalid", ("keep",), cls)
+            for c, out, labels in zip(
+                _columns(p, "input"), _columns(p, "output"), rows[0]["labelsArray"]
+            ):
+                if c in env:
+                    raise ValueError(f"{cls}: {c} is not an input column")
+                whens = " ".join(
+                    f"WHEN {_str(v)} THEN {k}" for k, v in enumerate(labels)
+                )
+                env[out] = _Index(
+                    f"CASE CAST({_col(c)} AS STRING) {whens} ELSE {len(labels)} END",
+                    len(labels) + 1,
+                )
+        elif cls == "OneHotEncoderModel":
+            _require(p, "handleInvalid", ("error",), cls)
+            for c, out, size in zip(
+                _columns(p, "input"), _columns(p, "output"), rows[0]["categorySizes"]
+            ):
+                idx = env.get(c)
+                if not isinstance(idx, _Index) or idx.size != size:
+                    raise ValueError(f"{cls}: {c} is not a {size}-value index")
+                slots = size - 1 if p["dropLast"] else size
+                env[out] = [f"IF({idx.sql} = {k}, 1.0D, 0.0D)" for k in range(slots)]
+        elif cls == "VectorAssembler":
+            _require(p, "handleInvalid", ("error",), cls)
+            features: list[str] = []
+            for c in p["inputCols"]:
+                if isinstance(env.get(c), list):
+                    features += env[c]
+                elif c in env:
+                    raise ValueError(f"{cls}: cannot assemble {c}")
+                else:
+                    x = f"CAST({_col(c)} AS DOUBLE)"
+                    guards.append(f"{x} IS NULL OR isnan({x})")
+                    features.append(x)
+            env[p["outputCol"]] = features
+        elif cls == "DecisionTreeClassificationModel":
+            features = env.get(p["featuresCol"])
+            if "thresholds" in p or not isinstance(features, list) or (
+                len(features) != stage["numFeatures"]
+            ):
+                raise ValueError(f"{cls}: unsupported thresholds or features")
+            env[p["predictionCol"]] = _Tree({r["id"]: r for r in rows}, features)
+            n_nodes += len(rows)
+        elif cls == "IndexToString":
+            tree, labels = env.get(p["inputCol"]), p.get("labels") or []
+            if not isinstance(tree, _Tree):
+                raise ValueError(f"{cls}: {p['inputCol']} is not a tree prediction")
+            env[p["outputCol"]] = _tree_sql(tree, lambda pred: _label(labels, pred))
+        else:
+            raise ValueError(f"unsupported pipeline stage {cls} ({uid})")
+    out = signature["outputs"][0]["name"]
+    if not isinstance(env.get(out), str):
+        raise ValueError(f"signature output {out} is not a compiled string column")
+    sql = env[out]
+    if guards:
+        sql = (
+            f"CASE WHEN {' OR '.join(guards)} THEN raise_error("
+            f"'VectorAssembler: NULL or NaN input with handleInvalid = error') "
+            f"ELSE {sql} END"
+        )
+    return sql, len(uids), n_nodes
+
+
+_SIGNATURE_TYPES = {"string": "STRING", "integer": "INT", "long": "INT"}
+
+
+def _coerce(name: str, typ: str) -> Column:
     """Signature type mapping (reference: MlflowModelResolver.java:62-76):
-    string→string, integer/long→int, anything else is an error."""
-    if typ == "string":
-        return col.cast("string")
-    if typ in ("integer", "long"):
-        return col.cast("int")
-    raise ValueError(f"Unsupported signature type for {name}: {typ}")
+    string→string, integer/long→int, anything else is an error. Built as
+    SQL text: each Column function costs several Py4J calls."""
+    if typ not in _SIGNATURE_TYPES:
+        raise ValueError(f"Unsupported signature type for {name}: {typ}")
+    return F.expr(f"CAST({_col(name)} AS {_SIGNATURE_TYPES[typ]})")
 
 
 def score(
@@ -91,17 +274,14 @@ def score(
     output_col: str = "prediction",
 ) -> DataFrame:
     """Score a DataFrame whose columns already match the model signature by
-    name — the preferred whole-frame path (SURVEY.md U2 option 1)."""
-    model, signature = resolve_model(model_name, stage, models_dir)
+    name — the preferred whole-frame path (SURVEY.md U2): one projection of
+    the compiled model over the coerced signature columns."""
+    sql, signature = resolve_model(model_name, stage, models_dir)
     prepared = df.withColumns(
-        {
-            s["name"]: _coerce(F.col(s["name"]), s["type"], s["name"])
-            for s in signature["inputs"]
-        }
+        {s["name"]: _coerce(s["name"], s["type"]) for s in signature["inputs"]}
     )
-    out_name = signature["outputs"][0]["name"]
-    scored = model.transform(prepared)
-    return scored.select(*df.columns, F.col(out_name).alias(output_col))
+    # "*", not df.columns: one Py4J call instead of several per column
+    return prepared.select("*", F.expr(sql).alias(output_col))
 
 
 def predict_arrays(

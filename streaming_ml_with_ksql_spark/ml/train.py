@@ -7,8 +7,11 @@ serving pipeline is rebuilt *without* the label indexer stage (reference:
 train.py:349-351) so it scores raw feature rows and emits a string label.
 
 MLeap is dropped deliberately (SURVEY.md M15): it existed only to run a
-Spark-trained model outside Spark (inside ksqlDB's JVM). A Spark-native
-engine scores with the PipelineModel directly.
+Spark-trained model outside Spark ML (inside ksqlDB's JVM). Here the saved
+PipelineModel is compiled into one SQL expression instead
+(``predict.resolve_model``), so these are the stage types and modes the
+compiler covers: change a stage or a ``handleInvalid`` mode and scoring
+raises at resolve until the compiler learns it.
 
 Determinism (SURVEY.md §7 hard part 5): fixed seeds on randomSplit and the
 classifier; the fitted model is persisted to the local registry so scoring

@@ -174,6 +174,15 @@ HITS_BROADCAST_MAX_EDGES = 2_000_000
 # Larger graphs keep the loops.
 ITER_SINGLE_TASK_MAX_EDGES = 1_000_000
 
+# The distributed pagerank / bfs loops cut their lineage every this many
+# rounds (and after the last): their integer results do not depend on the
+# cadence, and batching rounds per eager job cuts the per-round job
+# overhead that dominates them at bench scale. Un-cut rounds re-execute
+# inside the next round's lineage, so on data-dominated graphs, where the
+# duplicated shuffle exceeds the saved job overhead, 1 is better
+# (ADVICE r10).
+LOOP_CHECKPOINT_EVERY = 2
+
 
 def _prep_sym_edges(batches):
     """Consume (src, dst) Arrow batches; return the symmetrized,
@@ -632,6 +641,17 @@ def kcore_vertices(
     )
 
 
+def _loop_parts(pairs: DataFrame) -> int:
+    """Hash partitions of the pagerank / bfs loop frames: a quarter of the
+    session's shuffle partitions."""
+    parts = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    return max(1, parts // 4)
+
+
+def _cut_round(i: int, iters: int) -> bool:
+    return i % LOOP_CHECKPOINT_EVERY == LOOP_CHECKPOINT_EVERY - 1 or i == iters - 1
+
+
 def pagerank(
     pairs: DataFrame,
     *,
@@ -639,8 +659,6 @@ def pagerank(
     b_col: str = "doc_b",
     iters: int = 6,
     scale: int = 10**12,
-    loop_parts: int | None = None,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an undirected pair graph in INTEGER
     fixed-point — centrality for the near-dup graph (which document is
@@ -664,11 +682,11 @@ def pagerank(
     Scale shape: the loop runs over the edge-induced subgraph only
     (same rationale as connected_components — edgeless vertices hold
     the base rank and never change it). Per iteration: ONE shuffle join
-    (ranks onto edges, both sides hash-partitioned on src by the same
-    ``loop_parts``) + ONE groupBy(dst) — O(|E|) rows; the rank frame is
-    localCheckpointed each round to truncate the iterative lineage. A
-    fixed iteration count (not convergence polling) keeps the plan
-    deterministic and the oracle unrollable."""
+    (ranks onto edges, both sides hash-partitioned on src into the same
+    ``_loop_parts``) + ONE groupBy(dst) — O(|E|) rows; the rank frame is
+    materialized every ``LOOP_CHECKPOINT_EVERY`` rounds to truncate the
+    iterative lineage. A fixed iteration count (not convergence polling)
+    keeps the plan deterministic and the oracle unrollable."""
     # Materialize the pair list ONCE before symmetrizing (the
     # connected_components discipline): `pairs` is usually an expensive
     # lazy plan (e.g. the exact-Jaccard inverted-index self-join), and
@@ -701,11 +719,7 @@ def pagerank(
     edges = p0.unionByName(
         p0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    if loop_parts is None:
-        default_parts = int(
-            pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        loop_parts = max(1, default_parts // 4)
+    loop_parts = _loop_parts(pairs)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     ewd = (
         edges.join(deg, "src")
@@ -740,17 +754,7 @@ def pagerank(
             )
             .repartition(loop_parts, "node")
         )
-        # Checkpoint every `checkpoint_every` rounds (and the last):
-        # integer fixed-point is exact regardless of materialization
-        # cadence, so batching rounds per eager job cuts the
-        # per-iteration job overhead that dominates this loop at bench
-        # scale while still truncating the iterative lineage before it
-        # compounds. Un-checkpointed rounds re-execute inside the next
-        # round's lineage, so on DATA-dominated graphs (where the
-        # duplicated shuffle exceeds the saved job overhead) callers
-        # should pass checkpoint_every=1 to restore per-round
-        # materialization (ADVICE r10).
-        if i % checkpoint_every == checkpoint_every - 1 or i == iters - 1:
+        if _cut_round(i, iters):
             pr = sizing.materialize(pr, "pagerank ranks")
     return pr
 
@@ -762,8 +766,6 @@ def bfs_hops(
     b_col: str = "doc_b",
     seed_mod: int = 10,
     iters: int = 4,
-    loop_parts: int | None = None,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Multi-source BFS hop distances over an undirected pair graph —
     landmark distance labeling (seeds = vertices with id % seed_mod == 0,
@@ -778,12 +780,13 @@ def bfs_hops(
     CTEs (the pagerank discipline, without even a truncation caveat).
 
     Scale shape: per iteration ONE shuffle join (current labels onto
-    edges, both sides hash-partitioned on src by ``loop_parts``) + ONE
+    edges, both sides hash-partitioned on src into ``_loop_parts``) + ONE
     groupBy(dst) min — O(|E|) rows per round, frontier never
-    materialized driver-side; the label frame is localCheckpointed each
-    round to truncate iterative lineage. Fixed iteration count keeps
-    the plan deterministic and the oracle unrollable; vertices beyond
-    ``iters`` hops keep a NULL distance (reported, not dropped).
+    materialized driver-side; the label frame is materialized every
+    ``LOOP_CHECKPOINT_EVERY`` rounds to truncate iterative lineage. Fixed
+    iteration count keeps the plan deterministic and the oracle
+    unrollable; vertices beyond ``iters`` hops keep a NULL distance
+    (reported, not dropped).
 
     Returns (node, d) with d NULL when unreached within ``iters``.
     """
@@ -814,11 +817,7 @@ def bfs_hops(
     edges = p0.unionByName(
         p0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    if loop_parts is None:
-        default_parts = int(
-            pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        loop_parts = max(1, default_parts // 4)
+    loop_parts = _loop_parts(pairs)
     ew = sizing.materialize(edges.repartition(loop_parts, "src"), "bfs edges")
     nodes = (
         ew.select(F.col("src").alias("node"))
@@ -842,11 +841,7 @@ def bfs_hops(
             .select("node", F.least("d", "nd").alias("d"))
             .repartition(loop_parts, "node")
         )
-        # `checkpoint_every`-round checkpoint (pagerank cadence):
-        # integer min labels are materialization-independent, so
-        # batching rounds per eager job cuts the loop's fixed job
-        # overhead; data-dominated callers pass 1 (ADVICE r10).
-        if i % checkpoint_every == checkpoint_every - 1 or i == iters - 1:
+        if _cut_round(i, iters):
             dist = sizing.materialize(dist, "bfs distances")
     return dist
 

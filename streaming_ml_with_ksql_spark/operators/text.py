@@ -1041,6 +1041,10 @@ def stratified_sample(
 # Repetition quality metrics + benchmark decontamination
 # ---------------------------------------------------------------------------
 
+# repetition_stats runs its row-local Arrow kernel; parity tests patch this
+# to False to run the relational twin.
+REP_STATS_ROW_LOCAL = True
+
 def _rep_stats_kernel():
     """Vectorized per-partition word/bigram repetition counts — the
     row-local Arrow fast path of repetition_stats (r15, guide §4.2 +
@@ -1146,8 +1150,7 @@ def _rep_stats_kernel():
 
 
 def repetition_stats(
-    documents: DataFrame, *, tokens: str | None = None,
-    row_local: bool = True,
+    documents: DataFrame, *, tokens: str | None = None
 ) -> DataFrame:
     """Gopher-style repetition metrics per document (Rae et al. 2021,
     "Scaling Language Models" §A1.1 use line/ngram repetition filters; the
@@ -1160,11 +1163,11 @@ def repetition_stats(
       dup_bigram_frac    1 - |distinct bigrams| / n_bigrams
       top_bigram_frac    most-frequent bigram's share of n_bigrams
 
-    Shape (``row_local=True``, the default): every metric depends only
-    on its own row's token array, so ONE vectorized Arrow pass computes
-    all counts with ZERO shuffles at any scale (guide §4.2); the
-    relational explode → groupBy(doc, term) → per-doc agg path is kept
-    under ``row_local=False`` for the parity test. Ratios are exact
+    Shape: every metric depends only on its own row's token array, so
+    ONE vectorized Arrow pass computes all counts with ZERO shuffles at
+    any scale (guide §4.2); the relational explode → groupBy(doc, term)
+    → per-doc agg path is kept under ``REP_STATS_ROW_LOCAL = False`` for
+    the parity test. Ratios are exact
     integer divisions rounded at 6 dp (cross-engine canonical),
     evaluated in the same Spark expressions on both paths.
 
@@ -1178,7 +1181,7 @@ def repetition_stats(
     toks = F.col(tokens) if tokens else tokens_col(F.col("text"))
     base = documents.select("doc_id", toks.alias("t"))
 
-    if row_local:
+    if REP_STATS_ROW_LOCAL:
         # shuffle-free fast path (r15): every stat is row-local, so ONE
         # vectorized pass replaces four exchanges. The kernel emits 0
         # for the bigram counts of <2-token docs where the relational

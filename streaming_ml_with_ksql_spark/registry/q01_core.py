@@ -493,9 +493,9 @@ WITH feats AS (
     """,
 )
 def q_score_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U2 preferred path (SURVEY.md): whole-frame PipelineModel.transform —
-    the reference's per-row `predict` UDF (PredictUdf.java:39-59) done as a
-    DataFrame operator."""
+    """U2 preferred path (SURVEY.md): whole-frame scoring by the model
+    compiled into one SQL expression — the reference's per-row `predict`
+    UDF (PredictUdf.java:39-59) done as a DataFrame operator."""
     frame = ml_features.build_training_frame(
         _t(spark, sf_dir, "events"), _t(spark, sf_dir, "customer")
     )

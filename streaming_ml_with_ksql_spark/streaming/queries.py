@@ -120,9 +120,9 @@ def enrich_and_score_stream(
     The dimension is a *static* (batch) frame → stream-static join, which
     Spark plans as a broadcast hash join: no shuffle on the stream side, no
     streaming state — the scale-correct shape for a bounded dimension.
-    Scoring is the whole-frame ``PipelineModel.transform`` (SURVEY.md U2
-    option 1); it composes with streaming frames because the fitted
-    pipeline is pure column expressions.
+    Scoring is the model compiled into one column expression
+    (``ml.predict.score``, SURVEY.md U2), so it composes with streaming
+    frames and adds no UDF or vector column to the micro-batch plan.
     """
     joined = joins.enrich_left_join(agg_stream, dim, fact_key, dim_key)
     if model_name is None:

@@ -30,8 +30,10 @@ def test_tree_is_threshold_rule(spark):
     """Guards the SQL oracle for score_events: the frozen model must stay a
     single events_in_window<=4.5 split. If retraining changes this, the
     registry oracle must be re-derived."""
-    model, _ = ml_predict.resolve_model(MODEL)
-    tree = model.stages[-2]
+    from pyspark.ml import PipelineModel
+
+    root = f"{ml_predict.DEFAULT_MODELS_DIR}/{MODEL}/Production"
+    tree = PipelineModel.load(f"{root}/model").stages[-2]
     dbg = tree.toDebugString
     assert "feature 8 <= 4.5" in dbg and tree.depth == 1, dbg
 
@@ -144,13 +146,17 @@ def test_model_registry_lifecycle(spark, tmp_path):
     archived version works (rollback path); bad stages and unknown
     versions fail loudly."""
     import pytest as _pytest
+    from pyspark.ml import PipelineModel
 
     from streaming_ml_with_ksql_spark.ml import predict as ml_predict
     from streaming_ml_with_ksql_spark.ml.predict import resolve_model
     from streaming_ml_with_ksql_spark.ml.registry import ModelRegistry
     from streaming_ml_with_ksql_spark.ml.train import SIGNATURE
 
-    base_model, _sig = resolve_model("Bot Detector")  # the shipped model
+    base_model = PipelineModel.load(  # the shipped model
+        f"{ml_predict.DEFAULT_MODELS_DIR}/{MODEL}/Production/model"
+    )
+    shipped, _sig = resolve_model("Bot Detector")
     reg = ModelRegistry(str(tmp_path / "registry"))
 
     v1 = reg.register_model_version("Demo Model", base_model, SIGNATURE)
@@ -165,7 +171,7 @@ def test_model_registry_lifecycle(spark, tmp_path):
     m1, sig = resolve_model(
         "Demo Model", "Production", models_dir=str(tmp_path / "registry")
     )
-    assert sig == SIGNATURE and m1.stages
+    assert sig == SIGNATURE and m1 == shipped
 
     reg.transition("Demo Model", 2, "Production")
     assert reg.get_version_stage("Demo Model", 1) == "Archived"
@@ -178,7 +184,7 @@ def test_model_registry_lifecycle(spark, tmp_path):
     m_stage, _ = resolve_model(
         "Demo Model", "Staging", models_dir=str(tmp_path / "registry")
     )
-    assert m_stage.stages
+    assert m_stage == shipped
 
     with _pytest.raises(ValueError, match="unknown stage"):
         reg.transition("Demo Model", 1, "Canary")

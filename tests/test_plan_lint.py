@@ -360,3 +360,68 @@ def test_materialize_only_in_sizing():
         f"lineage cuts outside operators/sizing.py "
         f"(route through sizing.materialize): {offenders}"
     )
+
+
+# ---------------------------------------------------------------------------
+# Scoring lint: the served model is built-in expressions, and only training
+# and the registry hold an MLlib object
+# ---------------------------------------------------------------------------
+
+_ML_IN_PLAN = ("ScalaUDF", "VectorUDT")
+
+
+def _ml_in_plan(query_execution) -> list[str]:
+    plan = query_execution.optimizedPlan().toJSON()
+    return [name for name in _ML_IN_PLAN if name in plan]
+
+
+def test_runbook_predictions_plan_has_no_ml_udf(spark):
+    df = registry._REGISTRY["ksql_runbook_predictions"].spark(spark, SF)
+    assert not _ml_in_plan(df._jdf.queryExecution())
+
+
+def test_scored_stream_plan_has_no_ml_udf(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from streaming_ml_with_ksql_spark.io import load_table
+    from streaming_ml_with_ksql_spark.streaming import queries, source
+
+    events = load_table(spark, SF, "events")
+    events.write.parquet(str(tmp_path / "events"))
+    agg = queries.hopping_window_stream(
+        source.stream_parquet_dir(spark, str(tmp_path / "events"))
+    )
+    features = agg.select(
+        "user_id",
+        *[F.lit(0).cast("int").alias(c) for c in (
+            "views_in_window", "clicks_in_window", "purchases_in_window"
+        )],
+        F.col("n_events").cast("int").alias("events_in_window"),
+    )
+    users = load_table(spark, SF, "customer").select(
+        F.col("c_custkey").alias("cust_id"), "c_mktsegment"
+    )
+    scored = queries.enrich_and_score_stream(
+        features, users, dim_key="cust_id", model_name="bot_detector"
+    )
+    assert "prediction" in scored.columns
+    # a stream is optimized per micro-batch: lint the last one's plan
+    query = (
+        scored.writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "checkpoint"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert query.awaitTermination(300)
+    assert not _ml_in_plan(query._jsq.streamingQuery().lastExecution())
+
+
+def test_pipeline_model_only_in_training_and_registry():
+    named = [
+        str(path.relative_to(_PKG))
+        for path, src in _package_sources()
+        if "PipelineModel" in src
+    ]
+    assert sorted(named) == ["ml/registry.py", "ml/train.py"], named
+    predict_src = (_PKG / "ml" / "predict.py").read_text()
+    assert not re.search(r"^\s*(from|import) pyspark\.ml\b", predict_src, re.M)

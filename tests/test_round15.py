@@ -24,40 +24,45 @@ EDGE_DOCS = [
 ]
 
 
-def _rep_both(spark, df):
-    fast = text.repetition_stats(df).collect()
-    slow = text.repetition_stats(df, row_local=False).collect()
-    return (
-        {r["doc_id"]: tuple(r) for r in fast},
-        {r["doc_id"]: tuple(r) for r in slow},
+REP_STATS_ROUTE = [(text, "REP_STATS_ROW_LOCAL")]
+
+
+def _rep_both(monkeypatch, df, **kw):
+    """(kernel rows, relational rows) of ``repetition_stats(df, **kw)``."""
+    fast, slow = kernel_and_distributed(
+        monkeypatch, REP_STATS_ROUTE, lambda: text.repetition_stats(df, **kw)
     )
+    return fast.collect(), slow.collect()
 
 
-def test_repetition_stats_kernel_matches_relational_edge_docs(spark):
+def _by_doc(rows):
+    return {r["doc_id"]: tuple(r) for r in rows}
+
+
+def test_repetition_stats_kernel_matches_relational_edge_docs(spark, monkeypatch):
     df = spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
-    fast, slow = _rep_both(spark, df)
+    fast, slow = map(_by_doc, _rep_both(monkeypatch, df))
     assert fast == slow
     # NULL text vanishes on both paths (explode semantics)
     assert 4 not in fast
 
 
-def test_repetition_stats_kernel_matches_relational_sf001(spark):
+def test_repetition_stats_kernel_matches_relational_sf001(spark, monkeypatch):
     from streaming_ml_with_ksql_spark import io
 
     docs = io.load_table(spark, "/root/testdata/sf0.01", "documents")
-    fast, slow = _rep_both(spark, docs)
+    fast, slow = map(_by_doc, _rep_both(monkeypatch, docs))
     assert fast == slow and len(fast) == 500
 
 
-def test_repetition_stats_kernel_null_token_elements(spark):
+def test_repetition_stats_kernel_null_token_elements(spark, monkeypatch):
     """A precomputed token array with NULL elements must group all NULLs
     as one term on both paths (pd.factorize use_na_sentinel=False)."""
     df = spark.createDataFrame(
         [(1, ["a", None, "a", None, None])],
         "doc_id long, t array<string>",
     )
-    fast = text.repetition_stats(df, tokens="t").collect()
-    slow = text.repetition_stats(df, tokens="t", row_local=False).collect()
+    fast, slow = _rep_both(monkeypatch, df, tokens="t")
     assert [tuple(r) for r in fast] == [tuple(r) for r in slow]
     # 2 distinct terms: 'a' and NULL; max multiplicity 3 (the NULLs)
     assert fast[0]["distinct_word_frac"] == 0.4
