@@ -23,6 +23,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from decimal import ROUND_CEILING, Decimal
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
@@ -360,8 +362,8 @@ MINHASH_SINGLE_TASK_MAX_DOCS = 20_000
 # shared safety envelope.
 NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS = MINHASH_SINGLE_TASK_MAX_DOCS
 
-# Output of both doc-pair kernels: exact integer counts, finished into a
-# jaccard by _jaccard_pairs.
+# Output of both doc-pair kernels and of _pair_counts: exact integer
+# counts, finished into a jaccard by _jaccard_pairs.
 _PAIR_COUNTS_SCHEMA = "doc_a long, doc_b long, n_inter long, n_a long, n_b long"
 
 
@@ -369,23 +371,6 @@ def _integral_ids(documents: DataFrame) -> bool:
     """The doc-pair kernels read ``doc_id`` as int64; string-keyed corpora
     take the distributed path."""
     return isinstance(documents.schema["doc_id"].dataType, IntegralType)
-
-
-def _with_sizes(inter: DataFrame, sizes: DataFrame) -> DataFrame:
-    """Attach each side's distinct-shingle count (``sizes.n_sh``) to a
-    distributed (doc_a, doc_b, n_inter) pair frame as n_a / n_b."""
-    return (
-        inter.join(
-            sizes.select(F.col("doc_id"), F.col("n_sh").alias("n_a")),
-            F.col("doc_a") == F.col("doc_id"),
-        )
-        .drop("doc_id")
-        .join(
-            sizes.select(F.col("doc_id"), F.col("n_sh").alias("n_b")),
-            F.col("doc_b") == F.col("doc_id"),
-        )
-        .drop("doc_id")
-    )
 
 
 def _jaccard_pairs(counts: DataFrame, threshold: float) -> DataFrame:
@@ -523,21 +508,16 @@ def near_dup_pairs_minhash(
     stay as Spark expressions (bit-identical floats by construction);
     parity vs the distributed cascade is pinned in tests/test_round15.py.
     Larger, unbounded or string-keyed corpora take the distributed plan
-    below unchanged.
+    below.
 
-    Plan shape (the 100 TB concerns):
-    - NO global distinct over the shingle set: signatures use the raw
-      exploded pairs (min is duplicate-insensitive) and per-doc distinct
-      sizes ride along as count_distinct in the SAME groupBy — the only
-      full-corpus shuffle is that one aggregation.
-    - The (tiny) candidate-pair frame is materialized — it is read twice
-      (candidate-doc list, verification) and recomputing it would re-run
-      the banding self-join.
-    - Verification narrows the shingle table to candidate docs with a
-      broadcast semi-join before deduping, so the exact-Jaccard work
-      shuffles candidate shingles only, never the corpus."""
-    ds_raw = _doc_shingles(documents, n, distinct=False)
-    dsh = ds_raw.select("doc_id", "shingle", _shingle_h(F.col("shingle")).alias("h"))
+    Plan shape (the 100 TB concerns): NO global distinct over the
+    shingle set — signatures use the raw exploded pairs (min is
+    duplicate-insensitive), so the only full-corpus shuffle is that one
+    aggregation; the candidates verify through ``_pair_counts``, which
+    shuffles candidate docs' shingles only, never the corpus."""
+    dsh = _doc_shingles(documents, n, distinct=False).select(
+        "doc_id", "shingle", _shingle_h(F.col("shingle")).alias("h")
+    )
     pk = sizing.single_task(
         dsh,
         _minhash_pairs_kernel(num_hashes, bands, rows),
@@ -550,43 +530,18 @@ def near_dup_pairs_minhash(
     if pk is not None:
         return _jaccard_pairs(pk, threshold)
     # materialize: the signature aggregate is the expensive full-corpus pass
-    # (shingle explode + one md5 per shingle row), and it is consumed by
-    # THREE subtrees — the banding self-join's shuffle side, its broadcast
-    # build side (broadcast builds never reuse a sibling exchange, so the
-    # whole pipeline re-executed for it), and the per-doc `sizes` frame.
-    # r14 plan audit measured the corpus explode running 3x per execution;
-    # materializing the (doc_id, n_sh, mh0..mh11) frame — 13 longs per
-    # doc, O(|docs|) — makes it one pass (guide §2.4/§5: reuse > recompute
-    # when the reused frame is keys+metadata, never the corpus payload).
-    sig = dsh.groupBy("doc_id").agg(
-        F.count_distinct(F.col("shingle")).alias("n_sh"),
-        *[
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"mh{i}")
-            for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-        ],
-    ).transform(sizing.materialize, "minhash signatures, read twice", eager=False)
-    sizes = sig.select("doc_id", "n_sh")
+    # (shingle explode + one md5 per shingle row), and the banding
+    # self-join reads it twice — its shuffle side and its broadcast build
+    # side (broadcast builds never reuse a sibling exchange, so the whole
+    # pipeline re-executed for it). Materializing the (doc_id, mh0..mh11)
+    # frame — 12 longs per doc, O(|docs|) — makes it one pass (guide
+    # §2.4/§5: reuse > recompute when the reused frame is keys+metadata,
+    # never the corpus payload).
+    sig = minhash_signatures(documents, n=n, num_hashes=num_hashes).transform(
+        sizing.materialize, "minhash signatures, read twice", eager=False
+    )
     cands = minhash_candidate_pairs(sig, bands=bands, rows=rows)
-    cands = sizing.materialize(cands, "minhash pairs, read twice", eager=False)
-    cand_docs = (
-        cands.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    ds_c = (
-        ds_raw.join(F.broadcast(cand_docs), "doc_id", "left_semi").distinct()
-    )
-    inter = (
-        cands.join(ds_c.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            ds_c.alias("sb"),
-            (F.col("doc_b") == F.col("sb.doc_id"))
-            & (F.col("sa.shingle") == F.col("sb.shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return _jaccard_pairs(_with_sizes(inter, sizes), threshold)
+    return _jaccard_pairs(_pair_counts(documents, n, cands), threshold)
 
 
 def _ngram_pairs_kernel():
@@ -597,8 +552,8 @@ def _ngram_pairs_kernel():
     the relational path is structural: the per-shingle doc lists ARE the
     self-join's matches, pairs are enumerated with real doc_a < doc_b,
     and n_inter counts distinct shared shingles exactly like the
-    join-then-count. Pair volume is Σ_s df(s)² on BOTH paths — the
-    single-task gate bounds it here, the df-cap note covers 100 TB."""
+    join-then-count. Pair volume is Σ_s df(s)² on BOTH paths; the
+    single-task gate bounds it here."""
 
     def kern(batches):
         import numpy as np
@@ -659,6 +614,69 @@ def _ngram_pairs_kernel():
     return kern
 
 
+def _pair_counts(
+    documents: DataFrame, n: int, cands: DataFrame | None = None
+) -> DataFrame:
+    """EXACT shingle overlap of document pairs: (doc_a, doc_b, n_inter,
+    n_a, n_b), n_inter the distinct n-gram shingles the pair shares and
+    n_a / n_b each side's distinct-shingle count. The one exact verify of
+    the set-similarity pair operators: each finishes through
+    ``_jaccard_pairs`` or its own integer projection. A pair sharing no
+    shingle emits no row.
+
+    ``cands=None``: every pair sharing a shingle, doc_a < doc_b — the
+    inverted-index self-join, one shuffle keyed by shingle, cost
+    Σ_s df(s)² over shingle document frequencies, never |docs|². Below
+    ``NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS`` (sizing.row_bound of
+    ``documents``) with integral ids it runs as the ngram_pairs kernel
+    in ONE Arrow task (parity pinned in tests/test_round15.py).
+
+    ``cands`` (doc_a, doc_b), distinct: exactly those pairs, in the
+    order given.
+    The candidate frame is read twice (candidate-doc list, verify), so
+    it is cut once; the shingle table is narrowed to candidate docs by a
+    broadcast semi-join BEFORE its distinct, so the verify shuffles
+    candidate shingles only, never the corpus."""
+    if cands is None:
+        pk = sizing.single_task(
+            _doc_shingles(documents, n, distinct=False),
+            _ngram_pairs_kernel(),
+            _PAIR_COUNTS_SCHEMA,
+            name="ngram_pairs",
+            max_rows=NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS,
+            rows=sizing.row_bound(documents),
+            requires=_integral_ids(documents),
+        )
+        if pk is not None:
+            return pk
+        ds = _doc_shingles(documents, n)
+    else:
+        cands = sizing.materialize(cands, "candidate pairs, read twice", eager=False)
+        cand_docs = (
+            cands.select(F.col("doc_a").alias("doc_id"))
+            .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
+            .distinct()
+        )
+        ds = (
+            _doc_shingles(documents, n, distinct=False)
+            .join(F.broadcast(cand_docs), "doc_id", "left_semi")
+            .distinct()
+        )
+    a = ds.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b = ds.select(F.col("doc_id").alias("doc_b"), "shingle")
+    if cands is None:
+        shared = a.join(b, "shingle").where(F.col("doc_a") < F.col("doc_b"))
+    else:
+        shared = cands.join(a, "doc_a").join(b, ["doc_b", "shingle"])
+    sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    return (
+        shared.groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+        .join(sizes.toDF("doc_a", "n_a"), "doc_a")
+        .join(sizes.toDF("doc_b", "n_b"), "doc_b")
+    )
+
+
 def ngram_jaccard_pairs(
     documents: DataFrame, *, n: int = 3, threshold: float = 0.5
 ) -> DataFrame:
@@ -667,49 +685,11 @@ def ngram_jaccard_pairs(
     same coefficient with probabilistic candidates).
 
     Completeness: any pair with jaccard ≥ threshold > 0 shares at least one
-    shingle, so the index self-join enumerates a superset of all matches;
-    counting common shingles per pair and joining per-doc set sizes yields
-    the exact coefficient. The n² cross product never materializes.
-
-    Below ``NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS`` (sizing.row_bound of
-    ``documents``; r15) the whole index → pair-count → size-attach
-    cascade runs in ONE Arrow task emitting exact integer counts (jaccard
-    stays a Spark expression); parity pinned in tests/test_round15.py.
-    Larger, unbounded or string-keyed inputs take the distributed plan
-    unchanged.
-
-    Scale shape: one shuffle keyed by shingle; cost is Σ_s df(s)² over
-    shingle document-frequencies, not |docs|². At 100 TB add a df cap in
-    the `ds` stage (drop boilerplate shingles shared by thousands of docs —
-    they cannot push a pair over any useful threshold alone and dominate
-    the join cost); the testdata's unique texts need no cap.
-    """
-    pk = sizing.single_task(
-        _doc_shingles(documents, n, distinct=False),
-        _ngram_pairs_kernel(),
-        _PAIR_COUNTS_SCHEMA,
-        name="ngram_pairs",
-        max_rows=NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS,
-        rows=sizing.row_bound(documents),
-        requires=_integral_ids(documents),
-    )
-    if pk is not None:
-        return _jaccard_pairs(pk, threshold)
-    ds = _doc_shingles(documents, n)
-    sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        ds.alias("a")
-        .join(
-            ds.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return _jaccard_pairs(_with_sizes(inter, sizes), threshold)
+    shingle, so the index self-join (``_pair_counts`` without candidates;
+    a single-task kernel on small integral-id corpora) enumerates a
+    superset of all matches with their exact counts. The n² cross product
+    never materializes."""
+    return _jaccard_pairs(_pair_counts(documents, n), threshold)
 
 
 def ngram_containment_pairs(
@@ -723,32 +703,18 @@ def ngram_containment_pairs(
     "On the resemblance and containment of documents", SEQUENCES 1997;
     public method, independently implemented).
 
-    Same inverted-shingle-index shape as ngram_jaccard_pairs (one
-    shuffle keyed by shingle, Σ df(s)² pair cost, no n² cross product;
-    at 100 TB add the same df cap). All three coefficients are emitted
-    as INTEGER ppm (n_inter * 1e6 div size) — the micro-unit
-    discipline; round(x, 6) on small-denominator rationals hits exact
-    decimal halves (e.g. 5/128) where the engines disagree.
+    The pair counts are ngram_jaccard_pairs' own (``_pair_counts``
+    without candidates: same kernel gate, same index self-join); only
+    the projection differs. All three coefficients are emitted as
+    INTEGER ppm (n_inter * 1e6 div size) — the micro-unit discipline;
+    round(x, 6) on small-denominator rationals hits exact decimal halves
+    (e.g. 5/128) where the engines disagree.
 
     Output: (doc_a, doc_b) with doc_a < doc_b, containment of each
     side, jaccard_ppm, kept when EITHER direction's containment clears
     ``threshold_ppm``.
     """
-    ds = _doc_shingles(documents, n)
-    sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        ds.alias("a")
-        .join(
-            ds.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    out = _with_sizes(inter, sizes).select(
+    out = _pair_counts(documents, n).select(
         "doc_a",
         "doc_b",
         F.expr("n_inter * 1000000L div n_a").alias("cont_a_in_b_ppm"),
@@ -1270,80 +1236,64 @@ def decontaminate(
     )
 
 
+def _prefix_shingles(documents: DataFrame, n: int, threshold: float) -> DataFrame:
+    """(doc_id, shingle) rows of each doc's PPJoin prefix: its first
+    |d| - need + 1 distinct shingles in the global (df, shingle) order,
+    need = ⌈t_lo·|d|⌉.
+
+    t_lo is the lowest jaccard ``_jaccard_pairs`` still keeps: its 6-dp
+    HALF_UP round keeps J iff J >= t6 - 5e-7, t6 being ``threshold``
+    rounded up to 6 dp. need is computed in exact integer arithmetic on
+    t_lo in 1e-7 units — a double ceil drops pairs (0.55 * 100 is
+    55.00000000000001, so a 100-shingle doc would get a 45-shingle prefix
+    where 46 are needed)."""
+    t6 = Decimal(repr(threshold)).quantize(Decimal("1e-6"), ROUND_CEILING)
+    lo = max(int(t6.scaleb(7)) - 5, 0)
+    ds = _doc_shingles(documents, n)
+    df_tbl = ds.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    by_doc = Window.partitionBy("doc_id")
+    ranked = ds.join(df_tbl, "shingle").select(
+        "doc_id",
+        "shingle",
+        F.row_number().over(by_doc.orderBy("df", "shingle")).alias("rk"),
+        F.count(F.lit(1)).over(by_doc).alias("n_sh"),
+    )
+    need = F.expr(f"(n_sh * {lo} + 9999999) div 10000000")
+    return ranked.where(F.col("rk") <= F.col("n_sh") - need + 1).select(
+        "doc_id", "shingle"
+    )
+
+
 def ngram_jaccard_pairs_prefix(
     documents: DataFrame, *, n: int = 3, threshold: float = 0.5
 ) -> DataFrame:
     """EXACT n-gram Jaccard pairs via PREFIX FILTERING (PPJoin family,
     Xiao et al., "Efficient Similarity Joins for Near Duplicate
-    Detection", WWW'08): identical output to ngram_jaccard_pairs, at a
-    fraction of the index self-join cost.
+    Detection", WWW'08): identical output to ngram_jaccard_pairs, with a
+    smaller candidate index.
 
-    Why it is exact: J(a,b) >= t implies |a ∩ b| >= t/(1+t)·(|a|+|b|)
-    >= t·|a|, so a can share at most |a| - ceil(t·|a|) shingles outside
-    any fixed subset of that size + 1 — order both docs' shingles by a
-    GLOBAL canonical order (ascending document frequency, ties by value)
-    and any qualifying pair must collide inside their first
-    |d| - ceil(t·|d|) + 1 shingles. Rare-first ordering makes those
-    prefixes the LOW-df shingles, so the index self-join's Σ df² runs
-    over the rare end of the distribution — the frequent shingles that
-    dominate the plain inverted index's cost never enter the index.
+    Why it is exact: a kept pair has J(a,b) >= t_lo (see
+    ``_prefix_shingles``), so |a ∩ b| >= t_lo·max(|a|,|b|), i.e. at least
+    need(a) and need(b). Order both docs' shingles by a GLOBAL canonical
+    order (ascending document frequency, ties by value): the pair's first
+    shared shingle in that order is followed by at least need - 1 more
+    shared ones in each doc, so it lies in both prefixes. Rare-first ordering
+    makes those prefixes the LOW-df shingles, so the candidate self-join's
+    Σ df² runs over the rare end of the distribution.
 
-    Plan: one groupBy for global df, one window (per-doc rank by
-    (df, shingle)) to cut prefixes, prefix-index self-join for candidate
-    pairs, then the usual exact verification narrowed to candidate docs
-    via broadcast semi-join. At 100 TB the df frame is itself large but
-    bounded by vocabulary, and the rank window shuffles (doc, shingle,
-    df) triples once."""
-    ds = _doc_shingles(documents, n)  # distinct (doc_id, shingle)
-    sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    df_tbl = ds.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    ranked = (
-        ds.join(df_tbl, "shingle")
-        .join(sizes, "doc_id")
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy(
-                    F.col("df").asc(), F.col("shingle").asc()
-                )
-            ),
-        )
-    )
-    # prefix length = |d| - ceil(t*|d|) + 1
-    prefix = ranked.filter(
-        F.col("rk")
-        <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    ).select("doc_id", "shingle")
+    Plan: one groupBy for global df, one window per doc to cut prefixes,
+    the prefix-index self-join for distinct candidate pairs, then the
+    exact verify (``_pair_counts`` with candidates)."""
+    prefix = _prefix_shingles(documents, n, threshold)
+    a = prefix.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b = prefix.select(F.col("doc_id").alias("doc_b"), "shingle")
     cands = (
-        prefix.alias("a")
-        .join(
-            prefix.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-        .transform(sizing.materialize, "prefix pairs, read twice", eager=False)
-    )
-    cand_docs = (
-        cands.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
+        a.join(b, "shingle")
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
         .distinct()
     )
-    ds_c = ds.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-    inter = (
-        cands.join(ds_c.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            ds_c.alias("sb"),
-            (F.col("doc_b") == F.col("sb.doc_id"))
-            & (F.col("sa.shingle") == F.col("sb.shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return _jaccard_pairs(_with_sizes(inter, sizes), threshold)
+    return _jaccard_pairs(_pair_counts(documents, n, cands), threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1744,10 +1694,10 @@ def duplicate_span_positions(
 
     Scale shape: one narrow pass emits (doc, pos, md5(gram)) — grouping
     on the 32-char digest, never the raw k-token text, keeps the shuffle
-    payload fixed-width — then ONE groupBy builds the gram frequency
-    index and one equi-join annotates the positions. Cost is
-    Σ_g occ(g) like the inverted shingle index, not |docs|²; at 100 TB
-    add a document-frequency cap exactly as in ngram_jaccard_pairs.
+    payload fixed-width — then windows over ONE gram_md5 shuffle count
+    each gram's documents and occurrences. Cost is Σ_g occ(g),
+    linear in positions: no document pair is ever enumerated, so a
+    frequent gram costs its occurrences, not their square.
     """
     toks = tokens_col(F.col("text"))
     grams = (

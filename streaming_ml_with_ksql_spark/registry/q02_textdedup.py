@@ -237,18 +237,16 @@ def q_ngram_jaccard_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PPJoin-style prefix-filtered exact Jaccard join — only each doc's
     rarest |d|-⌈t|d|⌉+1 shingles enter the index self-join, so the
     frequent shingles that dominate Σ df² never generate candidates.
+    Candidates verify through the same exact pair count
+    (text._pair_counts) as every other pair operator.
 
-    Crossover note (measured, sf0.1 AND 10× replicated corpus): candidate
-    volume drops ~2.8×, but wall time is WORSE in both regimes — 266 s vs
-    30 s at 10× (50 k docs, every doc a 10-clique near-dup) — because the
-    global df rank (row_number over every (doc, shingle) pair) grows
-    faster than the candidate savings in THIS implementation. The prefix
-    trick only pays when the rank stage is amortized (a persisted,
-    incrementally-maintained df index) or df skew is far more extreme
-    than 10× replication; `ngram_jaccard_pairs` stays the default at
-    every scale measured. Both remain registered because they must stay
-    answer-identical (same oracle), and the measurement itself is the
-    planner guidance."""
+    No crossover is on record against today's plain operator. The one
+    measured (candidate volume ~2.8× lower, wall time 266 s vs 30 s at
+    10× replication) compared the distributed index self-join, before
+    `ngram_jaccard_pairs` gained its single-task kernel: below 20k
+    integral-id docs the plain operator now runs in one Arrow task,
+    which this operator has no route to. Both stay registered because
+    they must stay answer-identical (same oracle)."""
     return text.ngram_jaccard_pairs_prefix(_t(spark, sf_dir, "documents"))
 
 

@@ -393,8 +393,9 @@ def q_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric near-dup detection: Broder containment in integer ppm
     over the exact inverted shingle index (operators/text.py
     ngram_containment_pairs) — catches the excerpt/quotation dups whose
-    Jaccard stays low because the union is source-dominated. Same
-    one-shuffle index shape as ngram_jaccard_pairs."""
+    Jaccard stays low because the union is source-dominated. Its pair
+    counts are ngram_jaccard_pairs' own (text._pair_counts, kernel route
+    included); only the ppm projection differs."""
     return text.ngram_containment_pairs(_t(spark, sf_dir, "documents"))
 
 

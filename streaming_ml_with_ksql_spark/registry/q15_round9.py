@@ -414,6 +414,17 @@ def _incremental_dedup_oracle() -> str:
     """
 
 
+def _verify_new_old(docs: DataFrame, cands: DataFrame) -> DataFrame:
+    """(new_doc, old_doc, jaccard) for the candidate pairs with exact
+    n-gram Jaccard >= 0.8, through the text operators' one exact verify."""
+    from ..operators.text import _jaccard_pairs, _pair_counts
+
+    pairs = cands.toDF("doc_a", "doc_b")
+    return _jaccard_pairs(_pair_counts(docs, 3, pairs), 0.8).toDF(
+        "new_doc", "old_doc", "jaccard"
+    )
+
+
 @register("incremental_near_dup_ingest", _incremental_dedup_oracle())
 def q_incremental_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL near-dup screening — the shape a production ingest
@@ -428,62 +439,13 @@ def q_incremental_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     at the door. The oracle replays the banding symmetrically and
     filters to exactly-one-new — band agreement is symmetric, so the
     sets coincide."""
-    from ..operators.text import (
-        _doc_shingles,
-        minhash_candidate_pairs_between,
-        minhash_signatures,
-    )
+    from ..operators.text import minhash_candidate_pairs_between, minhash_signatures
 
     docs = _t(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % 10 == 0
     sig = sizing.materialize(minhash_signatures(docs), "minhash signatures, read twice")
-    cands = minhash_candidate_pairs_between(
-        sig.filter(is_new), sig.filter(~is_new)
-    ).transform(sizing.materialize, "incremental candidate pairs")
-    ds = _doc_shingles(docs, 3)
-    cand_docs = (
-        cands.select(F.col("new_doc").alias("doc_id"))
-        .unionByName(cands.select(F.col("old_doc").alias("doc_id")))
-        .distinct()
-    )
-    ds_c = ds.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-    sizes = ds_c.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        cands.join(
-            ds_c.select(F.col("doc_id").alias("new_doc"), "shingle"),
-            "new_doc",
-        )
-        .join(
-            ds_c.select(
-                F.col("doc_id").alias("od2"),
-                F.col("shingle").alias("shingle_b"),
-            ),
-            (F.col("old_doc") == F.col("od2"))
-            & (F.col("shingle") == F.col("shingle_b")),
-        )
-        .groupBy("new_doc", "old_doc")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    jac = F.round(
-        F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        6,
-    )
-    return (
-        inter.join(
-            sizes.select(
-                F.col("doc_id").alias("new_doc"), F.col("n_sh").alias("n_a")
-            ),
-            "new_doc",
-        )
-        .join(
-            sizes.select(
-                F.col("doc_id").alias("old_doc"), F.col("n_sh").alias("n_b")
-            ),
-            "old_doc",
-        )
-        .select("new_doc", "old_doc", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.8)
-    )
+    cands = minhash_candidate_pairs_between(sig.filter(is_new), sig.filter(~is_new))
+    return _verify_new_old(docs, cands)
 
 
 @register("streaming_incremental_dedup", _incremental_dedup_oracle())
@@ -503,7 +465,6 @@ def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     from .q06_sketchseries import _replay_documents
     from ..operators.text import (
         MINHASH_P,
-        _doc_shingles,
         _shingle_h,
         minhash_candidate_pairs_between,
         minhash_signatures,
@@ -539,52 +500,7 @@ def q_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         f"reg_stream_incdedup_{next(_STREAM_SEQ)}",
         output_mode="append",
     )
-    cands = drained.select("new_doc", "old_doc").distinct()
-
-    ds = _doc_shingles(docs, 3)
-    cand_docs = (
-        cands.select(F.col("new_doc").alias("doc_id"))
-        .unionByName(cands.select(F.col("old_doc").alias("doc_id")))
-        .distinct()
-    )
-    ds_c = ds.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-    sizes = ds_c.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        cands.join(
-            ds_c.select(F.col("doc_id").alias("new_doc"), "shingle"),
-            "new_doc",
-        )
-        .join(
-            ds_c.select(
-                F.col("doc_id").alias("od2"),
-                F.col("shingle").alias("shingle_b"),
-            ),
-            (F.col("old_doc") == F.col("od2"))
-            & (F.col("shingle") == F.col("shingle_b")),
-        )
-        .groupBy("new_doc", "old_doc")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    jac = F.round(
-        F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        6,
-    )
-    return (
-        inter.join(
-            sizes.select(
-                F.col("doc_id").alias("new_doc"), F.col("n_sh").alias("n_a")
-            ),
-            "new_doc",
-        )
-        .join(
-            sizes.select(
-                F.col("doc_id").alias("old_doc"), F.col("n_sh").alias("n_b")
-            ),
-            "old_doc",
-        )
-        .select("new_doc", "old_doc", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.8)
-    )
+    return _verify_new_old(docs, drained.select("new_doc", "old_doc").distinct())
 
 
 def _group_split_oracle() -> str:

@@ -207,37 +207,37 @@ def test_prefix_filter_reduces_candidate_volume(spark, sf_medium):
     """The PPJoin prefix index must shrink the self-join's candidate
     volume (Σ df² over indexed shingles) versus the full inverted index,
     while the answer stays identical (the shared oracle pins that)."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from streaming_ml_with_ksql_spark import io as io_mod
     from streaming_ml_with_ksql_spark.operators import text
 
     docs = io_mod.load_table(spark, sf_medium, "documents")
-    ds = text._doc_shingles(docs, 3)
-    sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    df_tbl = ds.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
 
     def volume(frame):
         c = frame.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
         return c.agg(F.sum(F.col("df") * F.col("df"))).collect()[0][0]
 
-    ranked = (
-        ds.join(df_tbl, "shingle")
-        .join(sizes, "doc_id")
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy(
-                    F.col("df").asc(), F.col("shingle").asc()
-                )
-            ),
-        )
+    prefix = text._prefix_shingles(docs, 3, 0.5)
+    assert volume(prefix) < volume(text._doc_shingles(docs, 3))
+
+
+def test_prefix_filter_keeps_pairs_at_an_exact_threshold(spark):
+    """J = 55/100 at threshold 0.55: the 100-shingle doc needs a
+    46-shingle prefix. A double ceil of 0.55 * 100 (55.00000000000001)
+    cut it at 45 and the prefix join lost the pair."""
+    from streaming_ml_with_ksql_spark.operators import text
+
+    toks = [f"w{i}" for i in range(102)]
+    docs = spark.createDataFrame(
+        [(1, " ".join(toks)), (2, " ".join(toks[-57:]))],
+        "doc_id long, text string",
     )
-    prefix = ranked.filter(
-        F.col("rk") <= F.col("n_sh") - F.ceil(F.lit(0.5) * F.col("n_sh")) + 1
-    ).select("doc_id", "shingle")
-    assert volume(prefix) < volume(ds)
+    for t in (0.5, 0.55):
+        plain = text.ngram_jaccard_pairs(docs, threshold=t).collect()
+        prefix = text.ngram_jaccard_pairs_prefix(docs, threshold=t).collect()
+        assert [tuple(r) for r in plain] == [(1, 2, 0.55)]
+        assert [tuple(r) for r in prefix] == [(1, 2, 0.55)], t
 
 
 def test_hash_split_stable_under_corpus_growth(spark, sf_small, sf_medium):

@@ -21,6 +21,7 @@ argued in an idiom entry.
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -425,3 +426,62 @@ def test_pipeline_model_only_in_training_and_registry():
     assert sorted(named) == ["ml/registry.py", "ml/train.py"], named
     predict_src = (_PKG / "ml" / "predict.py").read_text()
     assert not re.search(r"^\s*(from|import) pyspark\.ml\b", predict_src, re.M)
+
+
+# ---------------------------------------------------------------------------
+# Set-similarity lint: one exact shingle-overlap count
+# ---------------------------------------------------------------------------
+
+# Every function that joins on a shingle column, and why. The doc-pair
+# self-join and the candidate verify belong to text._pair_counts alone.
+SHINGLE_JOINS = {
+    ("operators/text.py", "_pair_counts"): "the one exact pair count",
+    ("operators/text.py", "_prefix_shingles"): "attaches global df to rank prefixes",
+    ("operators/text.py", "ngram_jaccard_pairs_prefix"): (
+        "prefix-index self-join: distinct candidate pairs, no counts"
+    ),
+    ("operators/text.py", "decontaminate"): (
+        "corpus x broadcast benchmark shingle set, no doc pairs"
+    ),
+}
+
+
+def _shingle_joins():
+    found = set()
+    for path, src in _package_sources():
+        for top in ast.parse(src).body:
+            if not isinstance(top, ast.FunctionDef):
+                continue
+            for node in ast.walk(top):
+                if not (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "join"
+                ):
+                    continue
+                args = node.args + [k.value for k in node.keywords]
+                if any(
+                    isinstance(c, ast.Constant)
+                    and isinstance(c.value, str)
+                    and "shingle" in c.value
+                    for a in args
+                    for c in ast.walk(a)
+                ):
+                    found.add((str(path.relative_to(_PKG)), top.name))
+    return found
+
+
+def test_shingle_overlap_counted_only_in_pair_counts():
+    assert _shingle_joins() == set(SHINGLE_JOINS)
+
+
+def test_registry_builds_no_shingle_table():
+    offenders = [
+        str(path.relative_to(_PKG))
+        for path, src in _package_sources()
+        if path.parent.name == "registry" and "_doc_shingles" in src
+    ]
+    assert not offenders, (
+        f"registry modules building their own shingle table "
+        f"(verify through text._pair_counts): {offenders}"
+    )

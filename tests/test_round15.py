@@ -168,7 +168,12 @@ PLANTED_PAIR_DOCS = [
 
 
 @pytest.mark.parametrize(
-    "pairs", [text.near_dup_pairs_minhash, text.ngram_jaccard_pairs]
+    "pairs",
+    [
+        text.near_dup_pairs_minhash,
+        text.ngram_jaccard_pairs,
+        text.ngram_containment_pairs,
+    ],
 )
 def test_pair_kernels_send_string_ids_to_distributed(spark, pairs):
     """The doc-pair kernels read int64 doc ids: a small string-keyed
@@ -183,23 +188,25 @@ def test_pair_kernels_send_string_ids_to_distributed(spark, pairs):
     auto = pairs(strs)
     assert not has_kernel(auto)
     expected = {
-        (f"d{r['doc_a']:02d}", f"d{r['doc_b']:02d}"): r["jaccard"]
+        (f"d{r['doc_a']:02d}", f"d{r['doc_b']:02d}"): tuple(r)[2:]
         for r in kernel.collect()
     }
-    got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in auto.collect()}
+    got = {(r["doc_a"], r["doc_b"]): tuple(r)[2:] for r in auto.collect()}
     assert got == expected and ("d07", "d09") in got
 
 
-def _ngram_both(monkeypatch, df):
+def _ngram_both(monkeypatch, df, pairs=text.ngram_jaccard_pairs):
+    """{(doc_a, doc_b): other columns} of ``pairs(df)`` on the
+    ngram_pairs kernel and on the index self-join."""
     fast, slow = kernel_and_distributed(
         monkeypatch,
         [(text, "NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS")],
-        lambda: text.ngram_jaccard_pairs(df),
+        lambda: pairs(df),
     )
     key = lambda r: (r["doc_a"], r["doc_b"])  # noqa: E731
     return (
-        {key(r): r["jaccard"] for r in fast.collect()},
-        {key(r): r["jaccard"] for r in slow.collect()},
+        {key(r): tuple(r)[2:] for r in fast.collect()},
+        {key(r): tuple(r)[2:] for r in slow.collect()},
     )
 
 
@@ -220,7 +227,30 @@ def test_ngram_pairs_single_task_planted(spark, monkeypatch):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     fast, slow = _ngram_both(monkeypatch, df)
-    assert fast == slow and (7, 9) in fast and fast[(7, 9)] == 1.0
+    assert fast == slow and fast[(7, 9)] == (1.0,)
+
+
+def test_containment_single_task_matches_distributed_sf001(spark, monkeypatch):
+    from streaming_ml_with_ksql_spark import io
+
+    docs = io.load_table(spark, "/root/testdata/sf0.01", "documents")
+    fast, slow = _ngram_both(monkeypatch, docs, text.ngram_containment_pairs)
+    assert fast == slow and len(fast) > 0
+
+
+def test_containment_single_task_planted(spark, monkeypatch):
+    source = " ".join(f"w{i}" for i in range(40))
+    rows = PLANTED_PAIR_DOCS + [
+        (20, source),
+        (21, " ".join(f"w{i}" for i in range(10, 22))),  # excerpt of 20
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    fast, slow = _ngram_both(monkeypatch, df, text.ngram_containment_pairs)
+    assert fast == slow
+    # 10 of the excerpt's 10 shingles lie in the source's 38: the excerpt
+    # is contained, the jaccard stays low
+    assert fast[(20, 21)] == (263157, 1_000_000, 263157)
+    assert fast[(7, 9)] == (1_000_000, 1_000_000, 1_000_000)
 
 
 def test_kmeans_ragged_frame_falls_through_to_distributed(spark):
