@@ -36,12 +36,14 @@ KSQL parser. Each construct maps Spark-first:
 | t.rowkey pseudo-column                 | t's recorded key column           |
 | TIMESTAMPTOSTRING(ms, fmt)             | SQL UDF → date_format(timestamp_millis) |
 | as_array(...)                          | array(...)                        |
-| predict(model, strs, ints) AS alias    | whole-frame predict_arrays (U2)   |
+| predict(model, strs, ints) AS alias    | predict_arrays: one CASE over the array elements (U2) |
 | SELECT ... EMIT CHANGES                | batch snapshot / streaming drain  |
 
-predict() is deliberately NOT a row-wise Python UDF: the projection is
-lifted out of the SQL, the rest of the query runs JVM-side, and scoring is
-one projection of the model compiled into a SQL expression (SURVEY.md U2) —
+predict() is deliberately NOT a row-wise Python UDF: its two array
+arguments are lifted out of the SQL as placeholder columns, the rest of the
+query runs JVM-side, and scoring replaces the first placeholder with the
+model compiled into one SQL expression over the array elements, at the
+position the statement wrote predict() (SURVEY.md U2) —
 the reference's per-row LeapFrame (PredictUdf.java:55-58) simulated exactly
 one row at a time what that projection does in one vectorized pass.
 
@@ -663,16 +665,17 @@ class KsqlCompat:
         pred = _extract_predict(sql)
         if pred is not None:
             sql, model_name, str_expr, int_expr, alias = pred
-            df = self.spark.sql(sql)
+            # scored into the strs placeholder: the alias keeps its position
             scored = ml_predict.predict_arrays(
-                df,
+                self.spark.sql(sql),
                 model_name,
                 "__pred_strs",
                 "__pred_ints",
                 models_dir=self.models_dir,
-                output_col=alias,
+                output_col="__pred_strs",
             )
-            return scored.drop("__pred_strs", "__pred_ints"), src
+            scored = scored.withColumnRenamed("__pred_strs", alias)
+            return scored.drop("__pred_ints"), src
         return self.spark.sql(sql), src
 
 

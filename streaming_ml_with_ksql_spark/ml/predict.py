@@ -14,11 +14,12 @@ them into one SQL ``CASE`` over the signature columns — the role MLeap
 plays for the reference: score a Spark-trained pipeline without Spark ML.
 The API preserves the UDF's contract:
 
-- model resolved by (name, stage) from a registry dir, compiled once and
-  cached per process and stage directory
+- model resolved by (name, stage) from a registry dir; its stage files are
+  read and compiled once and cached per process and stage directory
   (the ConcurrentHashMap at PredictUdf.java:33 becomes a module-level dict);
 - inputs arrive as an array<string> + array<int> pair in signature order
-  (README.md:68 ``predict('Bot Detector', as_array(...), as_array(...))``);
+  (README.md:68 ``predict('Bot Detector', as_array(...), as_array(...))``)
+  and the cached stages are compiled over those array elements directly;
 - signature types are validated/coerced exactly like
   MlflowModelResolver.java:62-76 (string→string, integer/long→int,
   anything else → error);
@@ -40,7 +41,7 @@ import time
 from typing import NamedTuple
 
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .registry import dir_name
@@ -54,9 +55,9 @@ DEFAULT_MODELS_DIR = os.path.join(
     "models",
 )
 
-# stage directory → (compiled SQL expression, signature); per-process lazy
-# cache (reference: PredictUdf.java:33,43-45).
-_CACHE: dict[str, tuple[str, dict]] = {}
+# stage directory → (compiled SQL expression, signature, parsed stages);
+# per-process lazy cache (reference: PredictUdf.java:33,43-45).
+_CACHE: dict[str, tuple[str, dict, list]] = {}
 
 
 def clear_model_cache() -> None:
@@ -71,11 +72,17 @@ def resolve_model(
     lazy fetch, cached per stage directory, so a display name and its
     directory name share one entry and each registry root has its own).
 
-    Returns the pipeline compiled to one SQL expression (see
-    :func:`_compile_pipeline`) and the signature. A stage type or mode the
-    compiler does not cover raises here, before anything is scored. Each
-    compile logs one ``resolve_model name= stage= stages= tree_nodes= s=``
-    line."""
+    Returns the pipeline compiled to one SQL expression over the signature
+    columns (see :func:`_compile_pipeline`) and the signature. A stage type
+    or mode the compiler does not cover raises here, before anything is
+    scored. Each compile logs one ``resolve_model name= stage= stages=
+    tree_nodes= s=`` line."""
+    sql, signature, _ = _resolve(name, stage, models_dir)
+    return sql, signature
+
+
+def _resolve(name: str, stage: str, models_dir: str | None) -> tuple[str, dict, list]:
+    """:func:`resolve_model` plus the parsed stages, for recompiling."""
     root = os.path.abspath(
         os.path.join(models_dir or DEFAULT_MODELS_DIR, dir_name(name), stage)
     )
@@ -83,13 +90,12 @@ def resolve_model(
         t0 = time.perf_counter()
         with open(os.path.join(root, "MLmodel.json")) as f:
             signature = json.load(f)["signature"]
-        sql, n_stages, n_nodes = _compile_pipeline(
-            os.path.join(root, "model"), signature
-        )
-        _CACHE[root] = (sql, signature)
+        stages = _read_pipeline(os.path.join(root, "model"))
+        sql, n_nodes = _compile_pipeline(stages, signature, _col)
+        _CACHE[root] = (sql, signature, stages)
         log.info(
             "resolve_model name=%s stage=%s stages=%d tree_nodes=%d s=%.3f",
-            name, stage, n_stages, n_nodes, time.perf_counter() - t0,
+            name, stage, len(stages), n_nodes, time.perf_counter() - t0,
         )
     return _CACHE[root]
 
@@ -97,7 +103,8 @@ def resolve_model(
 # ---------------------------------------------------------------------------
 # Pipeline → SQL. Each stage maps its input columns' expressions to its
 # output columns' expressions, with Spark ML's semantics for the modes
-# ml/train.py fits; a column no stage produces is read from the frame.
+# ml/train.py fits; a column no stage produces is a raw input, whose SQL the
+# caller supplies.
 # ---------------------------------------------------------------------------
 
 
@@ -137,6 +144,16 @@ def _read_stage(path: str) -> tuple[dict, list[dict]]:
     return meta, pq.read_table(data).to_pylist() if os.path.isdir(data) else []
 
 
+def _read_pipeline(path: str) -> list[tuple[dict, list[dict]]]:
+    """Every stage of a saved pipeline, in order (see :func:`_read_stage`)."""
+    uids = _read_stage(path)[0]["params"]["stageUids"]
+    width = len(str(len(uids)))
+    return [
+        _read_stage(os.path.join(path, "stages", f"{i:0{width}d}_{uid}"))
+        for i, uid in enumerate(uids)
+    ]
+
+
 def _columns(params: dict, kind: str) -> list[str]:
     return params.get(f"{kind}Cols") or [params[f"{kind}Col"]]
 
@@ -172,19 +189,16 @@ def _tree_sql(tree: _Tree, leaf, node_id: int = 0) -> str:
     return left if left == right else f"CASE WHEN {cond} THEN {left} ELSE {right} END"
 
 
-def _compile_pipeline(path: str, signature: dict) -> tuple[str, int, int]:
-    """Compile a saved Spark ML pipeline of StringIndexer (``keep``),
-    OneHotEncoder, VectorAssembler (``error``), DecisionTreeClassifier and
-    IndexToString stages into one SQL expression for the signature's
-    output. Returns (sql, stage count, tree node count)."""
-    meta, _ = _read_stage(path)
-    uids = meta["params"]["stageUids"]
-    width = len(str(len(uids)))
+def _compile_pipeline(stages: list, signature: dict, read) -> tuple[str, int]:
+    """Compile the stages of a saved Spark ML pipeline of StringIndexer
+    (``keep``), OneHotEncoder, VectorAssembler (``error``),
+    DecisionTreeClassifier and IndexToString into one SQL expression for the
+    signature's output; ``read(name)`` is the SQL of raw input ``name``.
+    Returns (sql, tree node count)."""
     env: dict = {}  # column → str (SQL) | _Index | list[str] (vector) | _Tree
     guards: list[str] = []  # raise when true (VectorAssembler 'error')
     n_nodes = 0
-    for i, uid in enumerate(uids):
-        stage, rows = _read_stage(os.path.join(path, "stages", f"{i:0{width}d}_{uid}"))
+    for stage, rows in stages:
         cls, p = stage["class"].rsplit(".", 1)[-1], stage["params"]
         if cls == "StringIndexerModel":
             # unseen and NULL both take index len(labels) (simple CASE: a
@@ -199,7 +213,7 @@ def _compile_pipeline(path: str, signature: dict) -> tuple[str, int, int]:
                     f"WHEN {_str(v)} THEN {k}" for k, v in enumerate(labels)
                 )
                 env[out] = _Index(
-                    f"CASE CAST({_col(c)} AS STRING) {whens} ELSE {len(labels)} END",
+                    f"CASE CAST({read(c)} AS STRING) {whens} ELSE {len(labels)} END",
                     len(labels) + 1,
                 )
         elif cls == "OneHotEncoderModel":
@@ -221,7 +235,7 @@ def _compile_pipeline(path: str, signature: dict) -> tuple[str, int, int]:
                 elif c in env:
                     raise ValueError(f"{cls}: cannot assemble {c}")
                 else:
-                    x = f"CAST({_col(c)} AS DOUBLE)"
+                    x = f"CAST({read(c)} AS DOUBLE)"
                     guards.append(f"{x} IS NULL OR isnan({x})")
                     features.append(x)
             env[p["outputCol"]] = features
@@ -239,7 +253,7 @@ def _compile_pipeline(path: str, signature: dict) -> tuple[str, int, int]:
                 raise ValueError(f"{cls}: {p['inputCol']} is not a tree prediction")
             env[p["outputCol"]] = _tree_sql(tree, lambda pred: _label(labels, pred))
         else:
-            raise ValueError(f"unsupported pipeline stage {cls} ({uid})")
+            raise ValueError(f"unsupported pipeline stage {cls} ({stage['uid']})")
     out = signature["outputs"][0]["name"]
     if not isinstance(env.get(out), str):
         raise ValueError(f"signature output {out} is not a compiled string column")
@@ -250,19 +264,20 @@ def _compile_pipeline(path: str, signature: dict) -> tuple[str, int, int]:
             f"'VectorAssembler: NULL or NaN input with handleInvalid = error') "
             f"ELSE {sql} END"
         )
-    return sql, len(uids), n_nodes
+    return sql, n_nodes
 
 
 _SIGNATURE_TYPES = {"string": "STRING", "integer": "INT", "long": "INT"}
 
 
-def _coerce(name: str, typ: str) -> Column:
-    """Signature type mapping (reference: MlflowModelResolver.java:62-76):
-    string→string, integer/long→int, anything else is an error. Built as
-    SQL text: each Column function costs several Py4J calls."""
+def _coerce(sql: str, name: str, typ: str) -> str:
+    """``sql`` cast to the type of signature input ``name`` (reference:
+    MlflowModelResolver.java:62-76): string→string, integer/long→int,
+    anything else is an error. Built as SQL text: each Column function
+    costs several Py4J calls."""
     if typ not in _SIGNATURE_TYPES:
         raise ValueError(f"Unsupported signature type for {name}: {typ}")
-    return F.expr(f"CAST({_col(name)} AS {_SIGNATURE_TYPES[typ]})")
+    return f"CAST({sql} AS {_SIGNATURE_TYPES[typ]})"
 
 
 def score(
@@ -278,7 +293,10 @@ def score(
     the compiled model over the coerced signature columns."""
     sql, signature = resolve_model(model_name, stage, models_dir)
     prepared = df.withColumns(
-        {s["name"]: _coerce(s["name"], s["type"]) for s in signature["inputs"]}
+        {
+            s["name"]: F.expr(_coerce(_col(s["name"]), s["name"], s["type"]))
+            for s in signature["inputs"]
+        }
     )
     # "*", not df.columns: one Py4J call instead of several per column
     return prepared.select("*", F.expr(sql).alias(output_col))
@@ -300,46 +318,24 @@ def predict_arrays(
     array<int> whose elements are *positional* against the signature
     (PredictUdf.java:48-56 — strings first, then ints, signature order).
 
-    Rows whose arrays are null / too short / null-elemented score as NULL
-    (error→NULL, PredictUdf.java:60-63) — implemented as a validity
-    predicate + dummy fill so the whole frame still scores in one JVM pass
-    rather than per-row try/except, and the model never sees nulls.
-
-    Caller columns that share a signature name step aside under a private
-    name while the filled model inputs take it, and come back untouched;
-    scoring itself is :func:`score`.
+    One projection: the model compiled with each signature input read
+    straight from its array element, under ``CASE WHEN <every array and
+    element is non-NULL>``. A row whose arrays are NULL, too short or hold
+    a NULL scores NULL (error→NULL, PredictUdf.java:60-63); ``get``, not
+    ``[]``, so a missing element is NULL and not an ANSI error. No
+    signature-named column is added, so the caller's columns are untouched.
     """
-    _, signature = resolve_model(model_name, stage, models_dir)
-    str_names = [s["name"] for s in signature["inputs"] if s["type"] == "string"]
-    int_names = [s["name"] for s in signature["inputs"] if s["type"] != "string"]
-    clash = {c: f"__in_{c}" for c in df.columns if c in str_names + int_names}
-    strs = F.col(clash.get(str_array_col, str_array_col))
-    ints = F.col(clash.get(int_array_col, int_array_col))
-
-    # F.get (not getItem): out-of-bounds must yield NULL, not an ANSI
-    # INVALID_ARRAY_INDEX error — NULLs then trip the validity predicate.
-    raw_str = [F.get(strs, i) for i in range(len(str_names))]
-    raw_int = [F.get(ints, i).cast("int") for i in range(len(int_names))]
-    valid = (
-        strs.isNotNull()
-        & (F.size(strs) >= len(str_names))
-        & ints.isNotNull()
-        & (F.size(ints) >= len(int_names))
+    _, signature, stages = _resolve(model_name, stage, models_dir)
+    strs, ints = _col(str_array_col), _col(int_array_col)
+    reads = {}
+    for array, inputs in (
+        (strs, [s for s in signature["inputs"] if s["type"] == "string"]),
+        (ints, [s for s in signature["inputs"] if s["type"] != "string"]),
+    ):
+        for k, s in enumerate(inputs):
+            reads[s["name"]] = _coerce(f"get({array}, {k})", s["name"], s["type"])
+    sql, _ = _compile_pipeline(stages, signature, reads.__getitem__)
+    valid = " AND ".join(
+        f"{x} IS NOT NULL" for x in (strs, ints, *reads.values())
     )
-    for c in raw_str + raw_int:
-        valid = valid & c.isNotNull()
-
-    fills = {n: F.coalesce(c, F.lit("UNKNOWN")) for n, c in zip(str_names, raw_str)}
-    fills.update({n: F.coalesce(c, F.lit(0)) for n, c in zip(int_names, raw_int)})
-    inputs = df.withColumnsRenamed(clash).withColumns({"__valid": valid, **fills})
-    scored = score(
-        inputs, model_name, stage=stage, models_dir=models_dir, output_col="__pred"
-    )
-    pred = F.when(F.col("__valid"), F.col("__pred")).otherwise(
-        F.lit(None).cast("string")
-    )
-    return (
-        scored.withColumn(output_col, pred)
-        .drop("__valid", "__pred", *fills)
-        .withColumnsRenamed({v: k for k, v in clash.items()})
-    )
+    return df.withColumn(output_col, F.expr(f"CASE WHEN {valid} THEN {sql} END"))

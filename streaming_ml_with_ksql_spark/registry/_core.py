@@ -83,3 +83,22 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return io_mod.load_table(spark, sf_dir, name)
 
 
+_SCRATCH_DIRS: dict[tuple[str, str], str] = {}
+
+
+def _scratch_dir(
+    kind: str, sf_dir: str, fill: Callable[[str], None] | None = None
+) -> str:
+    """A temp directory ``sgraft_<kind>_*`` per (kind, sf_dir), shared by
+    every query that replays or round-trips it: made and filled by
+    ``fill(d)`` once, or again if it is gone; removed at interpreter exit."""
+    d = _SCRATCH_DIRS.get((kind, sf_dir))
+    if d is None or not os.path.isdir(d):
+        d = tempfile.mkdtemp(prefix=f"sgraft_{kind}_")
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
+        if fill is not None:
+            fill(d)
+        _SCRATCH_DIRS[(kind, sf_dir)] = d
+    return d
+
+

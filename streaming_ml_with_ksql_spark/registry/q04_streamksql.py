@@ -8,7 +8,7 @@ order, so ``queries()`` is unchanged.
 from __future__ import annotations
 
 from ._core import *  # noqa: F401,F403
-from ._core import _REGISTRY, _t, register  # noqa: F401
+from ._core import _REGISTRY, _scratch_dir, _t, register  # noqa: F401
 from .q01_core import _HOPPING_ORACLE  # noqa: F401
 from .q03_analytics import _SESSION_GAP, _SESSION_ORACLE_BODY, _customer_envelope  # noqa: F401
 
@@ -22,21 +22,15 @@ _STREAM_SEQ = itertools.count()
 _STREAM_WM = "2 minutes"
 
 
-_REPLAY_DIRS: dict[str, str] = {}
-
-
 def _replay_events(spark: SparkSession, sf_dir: str):
-    # Memoized per sf_dir: the 4 streaming queries (x2 runs in verify/bench)
-    # share one sharded copy instead of rewriting — and leaking — a fresh
-    # tempdir per invocation. Cleaned up at interpreter exit.
-    d = _REPLAY_DIRS.get(sf_dir)
-    if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix="sgraft_replay_")
-        stream_source.shard_table_to_dir(
+    # one sharded copy per sf_dir, shared by the streaming queries
+    d = _scratch_dir(
+        "replay",
+        sf_dir,
+        lambda d: stream_source.shard_table_to_dir(
             _t(spark, sf_dir, "events"), d, num_shards=4, order_col="ts"
-        )
-        _REPLAY_DIRS[sf_dir] = d
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+        ),
+    )
     # 2 files/trigger: still a multi-batch replay (watermark advances across
     # data batches + the trailing flush batch), at half the micro-batch
     # scheduling overhead of 1-file triggers. Emission sets are invariant to
@@ -66,8 +60,6 @@ def q_streaming_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"reg_stream_hopping_{next(_STREAM_SEQ)}",
     )
 
-
-_REPLAY_LATE_DIRS: dict[str, str] = {}
 
 # Deterministic planted-late subset: a sliver of old events (every 17th id,
 # at least one day older than the stream's max event time) is delivered
@@ -102,56 +94,58 @@ def _replay_events_with_late(spark: SparkSession, sf_dir: str):
     data for the drop policy to apply in full — here the bulk batch
     itself is that raiser (its max ts beats every late window end by the
     1-day plant margin). Memoized per sf_dir like _replay_events."""
-    d = _REPLAY_LATE_DIRS.get(sf_dir)
-    if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix="sgraft_replay_late_")
-        ev = _t(spark, sf_dir, "events")
-        mx = ev.agg(F.max("ts").alias("m")).first()["m"]
-        late = (F.col("event_id") % 17 == 0) & (
-            F.col("ts") <= F.lit(mx) - F.expr("INTERVAL 1 DAY")
-        )
-        on_time = ev.filter(~late)
-        tail_ids = [
-            r["event_id"]
-            for r in on_time.orderBy(F.desc("ts"), F.desc("event_id"))
-            .limit(2)
-            .collect()
-        ]
-        # Replay batching (VERDICT r12 #6, superseding the r11 3-shard
-        # pin): 2 bulk shards + 2 files/trigger turns the 6-file/6-batch
-        # replay into 5 files / 3 micro-batches — [b1,b2], [h1,h2],
-        # [late] — HALVING the job count while provably preserving both
-        # halves of the oracle-checked semantics:
-        #   emission set — append mode emits exactly the windows whose
-        #   end the FINAL watermark (max on-time ts − delay, carried by
-        #   the heartbeats) passes, regardless of how earlier data was
-        #   batched (the same argument as _replay_events' 2-file
-        #   batching);
-        #   drop set — the odd file count pins the late file ALONE in
-        #   the last batch, whose filter watermark (SPARK-24634: state
-        #   as of the previous batch's start, i.e. data through the
-        #   bulk batch) is bulk-max-ts − 2 min, exceeding every planted
-        #   late window end by ≥ the 1-day plant margin − window −
-        #   delay. The heartbeats may now share a trigger: they are
-        #   on-time rows whose only job is raising the FINAL watermark,
-        #   which no batching changes.
-        # r11's A/B (bulk 3→1 shard at 1 file/trigger, 6→4 batches)
-        # measured no wall-time win — the change is kept for the job
-        # count (3 fewer stateful micro-batches, each a state-store
-        # commit at any scale), with the r13 A/B recorded in SURVEY §8.
-        stream_source.shard_table_to_dir(
-            on_time.filter(~F.col("event_id").isin(tail_ids)),
-            d,
-            num_shards=2,
-            order_col="ts",
-        )
-        stamp = time.time() + 3600  # strictly newer than every bulk shard
-        for i, eid in enumerate(reversed(tail_ids)):  # older heartbeat first
-            _append_stamped(on_time.filter(F.col("event_id") == eid), d, stamp + i)
-        _append_stamped(ev.filter(late), d, stamp + len(tail_ids))
-        _REPLAY_LATE_DIRS[sf_dir] = d
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+    d = _scratch_dir(
+        "replay_late", sf_dir, lambda d: _write_late_replay(spark, sf_dir, d)
+    )
     return stream_source.stream_parquet_dir(spark, d, max_files_per_trigger=2)
+
+
+def _write_late_replay(spark: SparkSession, sf_dir: str, d: str) -> None:
+    """Write _replay_events_with_late's files into ``d``."""
+    ev = _t(spark, sf_dir, "events")
+    mx = ev.agg(F.max("ts").alias("m")).first()["m"]
+    late = (F.col("event_id") % 17 == 0) & (
+        F.col("ts") <= F.lit(mx) - F.expr("INTERVAL 1 DAY")
+    )
+    on_time = ev.filter(~late)
+    tail_ids = [
+        r["event_id"]
+        for r in on_time.orderBy(F.desc("ts"), F.desc("event_id"))
+        .limit(2)
+        .collect()
+    ]
+    # Replay batching (VERDICT r12 #6, superseding the r11 3-shard
+    # pin): 2 bulk shards + 2 files/trigger turns the 6-file/6-batch
+    # replay into 5 files / 3 micro-batches — [b1,b2], [h1,h2],
+    # [late] — HALVING the job count while provably preserving both
+    # halves of the oracle-checked semantics:
+    #   emission set — append mode emits exactly the windows whose
+    #   end the FINAL watermark (max on-time ts − delay, carried by
+    #   the heartbeats) passes, regardless of how earlier data was
+    #   batched (the same argument as _replay_events' 2-file
+    #   batching);
+    #   drop set — the odd file count pins the late file ALONE in
+    #   the last batch, whose filter watermark (SPARK-24634: state
+    #   as of the previous batch's start, i.e. data through the
+    #   bulk batch) is bulk-max-ts − 2 min, exceeding every planted
+    #   late window end by ≥ the 1-day plant margin − window −
+    #   delay. The heartbeats may now share a trigger: they are
+    #   on-time rows whose only job is raising the FINAL watermark,
+    #   which no batching changes.
+    # r11's A/B (bulk 3→1 shard at 1 file/trigger, 6→4 batches)
+    # measured no wall-time win — the change is kept for the job
+    # count (3 fewer stateful micro-batches, each a state-store
+    # commit at any scale), with the r13 A/B recorded in SURVEY §8.
+    stream_source.shard_table_to_dir(
+        on_time.filter(~F.col("event_id").isin(tail_ids)),
+        d,
+        num_shards=2,
+        order_col="ts",
+    )
+    stamp = time.time() + 3600  # strictly newer than every bulk shard
+    for i, eid in enumerate(reversed(tail_ids)):  # older heartbeat first
+        _append_stamped(on_time.filter(F.col("event_id") == eid), d, stamp + i)
+    _append_stamped(ev.filter(late), d, stamp + len(tail_ids))
 
 
 # ADVICE r4: the oracle derives from _HOPPING_ORACLE by substituting its
@@ -214,26 +208,23 @@ def q_streaming_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "ts", "user_id", "event_type", "value", "props")
 
 
-_REPLAY_CDC_DIRS: dict[str, str] = {}
-
-
 def _replay_cdc_changelog(spark: SparkSession, sf_dir: str):
     """Replay the synthesized customer CDC changelog as a file stream:
     flattened change rows sharded by change timestamp (snapshot reads,
     then updates, then deletes arrive as separate micro-batches — the
     binlog order). Memoized per sf_dir like _replay_events."""
-    d = _REPLAY_CDC_DIRS.get(sf_dir)
-    if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix="sgraft_cdc_replay_")
+
+    def fill(d: str) -> None:
         changelog = cdc.unwrap_debezium(
             _customer_envelope(spark, sf_dir), keep_deletes=True
         ).withColumn("ts", F.timestamp_millis(F.col("__ts_ms")))
         stream_source.shard_table_to_dir(
             changelog, d, num_shards=3, order_col="ts"
         )
-        _REPLAY_CDC_DIRS[sf_dir] = d
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return stream_source.stream_parquet_dir(spark, d)
+
+    return stream_source.stream_parquet_dir(
+        spark, _scratch_dir("cdc_replay", sf_dir, fill)
+    )
 
 
 @register(

@@ -8,8 +8,8 @@ order, so ``queries()`` is unchanged.
 from __future__ import annotations
 
 from ._core import *  # noqa: F401,F403
-from ._core import _REGISTRY, _t, register  # noqa: F401
-from .q04_streamksql import _REPLAY_DIRS, _STREAM_SEQ, _STREAM_WM, _replay_events  # noqa: F401
+from ._core import _REGISTRY, _scratch_dir, _t, register  # noqa: F401
+from .q04_streamksql import _STREAM_SEQ, _STREAM_WM, _replay_events  # noqa: F401
 from .q05_composite import _lang_ngram_oracle  # noqa: F401
 
 # --------------------------------------------------------------------------
@@ -622,19 +622,6 @@ def q_hot_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "event_type", "window_start", "window_end")
 
 
-_FMT_DIRS: dict[str, str] = {}
-
-
-def _fmt_dir(sf_dir: str, fmt: str) -> str:
-    key = f"{fmt}:{sf_dir}"
-    d = _FMT_DIRS.get(key)
-    if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix=f"sgraft_fmt_{fmt}_")
-        _FMT_DIRS[key] = d
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
-
-
 _DOCS_ORACLE = "SELECT doc_id, text, lang, source, n_chars FROM documents"
 
 
@@ -646,7 +633,7 @@ def q_json_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     — unicode escapes included."""
     from ..sources import formats
 
-    out = formats.documents_via_jsonl(spark, sf_dir, _fmt_dir(sf_dir, "json"))
+    out = formats.documents_via_jsonl(spark, sf_dir, _scratch_dir("fmt_json", sf_dir))
     return out.select("doc_id", "text", "lang", "source", "n_chars")
 
 
@@ -657,7 +644,7 @@ def q_csv_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive; FAILFAST surfaces malformed rows instead of nulling them."""
     from ..sources import formats
 
-    out = formats.documents_via_csv(spark, sf_dir, _fmt_dir(sf_dir, "csv"))
+    out = formats.documents_via_csv(spark, sf_dir, _scratch_dir("fmt_csv", sf_dir))
     return out.select("doc_id", "text", "lang", "source", "n_chars")
 
 
@@ -1117,15 +1104,13 @@ def _pii_oracle(where: str = "") -> str:
 def _replay_documents(spark: SparkSession, sf_dir: str):
     """Sharded file-replay stream over the documents table (doc_id order),
     memoized per sf_dir like _replay_events."""
-    key = f"docs:{sf_dir}"
-    d = _REPLAY_DIRS.get(key)
-    if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix="sgraft_replay_docs_")
-        stream_source.shard_table_to_dir(
+    d = _scratch_dir(
+        "replay_docs",
+        sf_dir,
+        lambda d: stream_source.shard_table_to_dir(
             _t(spark, sf_dir, "documents"), d, num_shards=4, order_col="doc_id"
-        )
-        _REPLAY_DIRS[key] = d
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+        ),
+    )
     return stream_source.stream_parquet_dir(spark, d, max_files_per_trigger=2)
 
 

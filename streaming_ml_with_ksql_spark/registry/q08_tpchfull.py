@@ -8,10 +8,10 @@ order, so ``queries()`` is unchanged.
 from __future__ import annotations
 
 from ._core import *  # noqa: F401,F403
-from ._core import _REGISTRY, _t, register  # noqa: F401
+from ._core import _REGISTRY, _scratch_dir, _t, register  # noqa: F401
 from .q02_textdedup import _DECON_ORACLE, _MINHASH_COLS  # noqa: F401
 from .q05_composite import _CLEAN_CORPUS_ORACLE  # noqa: F401
-from .q06_sketchseries import _DOCS_ORACLE, _fmt_dir  # noqa: F401
+from .q06_sketchseries import _DOCS_ORACLE  # noqa: F401
 from .q07_layoutcorpus import _bpe_pack_oracle  # noqa: F401
 
 # --------------------------------------------------------------------------
@@ -856,9 +856,6 @@ _DHASH_CTE = """
 """
 
 
-_DHASH_DIRS: dict[str, str] = {}
-
-
 def _dhash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized per sf_dir (the ``_replay_events`` idiom, VERDICT r7 #4):
     the dHash table is a content-addressable ARTIFACT — hash once, store,
@@ -868,15 +865,13 @@ def _dhash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     also the honest 100 TB shape: perceptual hashes live beside the
     corpus like the ANN indexes, and dedup is a join against them.
     Cleaned up at interpreter exit; invalidated by sf_dir."""
-    d = _DHASH_DIRS.get(sf_dir)
-    if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix="sgraft_dhash_")
-        docs = _t(spark, sf_dir, "documents")
-        multimodal.image_dhash(
-            multimodal.synthesize_png_payload(docs)
-        ).write.mode("overwrite").parquet(d)
-        _DHASH_DIRS[sf_dir] = d
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+    d = _scratch_dir(
+        "dhash",
+        sf_dir,
+        lambda d: multimodal.image_dhash(
+            multimodal.synthesize_png_payload(_t(spark, sf_dir, "documents"))
+        ).write.mode("overwrite").parquet(d),
+    )
     return spark.read.parquet(d)
 
 
@@ -1309,7 +1304,7 @@ def q_orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     match proves the round-trip lossless."""
     from ..sources import formats
 
-    out = formats.documents_via_orc(spark, sf_dir, _fmt_dir(sf_dir, "orc"))
+    out = formats.documents_via_orc(spark, sf_dir, _scratch_dir("fmt_orc", sf_dir))
     return out.select("doc_id", "text", "lang", "source", "n_chars")
 
 

@@ -108,16 +108,17 @@ def foreach_batch_jsonl_collection(path: str):
     re-running a drained query leaves the collection byte-identical.
     Lines are sorted so the file is partition-order independent.
 
-    Rows NEVER pass through the driver (VERDICT r5, What's wrong #2):
-    each executor partition serializes its own rows with the DataFrame
-    JSON writer into a batch-scoped staging dir — the same execution
-    path a real distributed Mongo writer
+    Rows are serialized executor-side: each partition writes its own
+    rows with the DataFrame JSON writer into a batch-scoped staging dir —
+    the same execution path a real distributed Mongo writer
     (``batch_df.write.format("mongodb")``) drives, so the production
-    swap is still the writer body only. The driver's part is
-    metadata-weight: merge the already-serialized part files into ONE
-    sorted JSONL (the deterministic "collection" artifact this stand-in
-    exists to pin) and atomically rename it into place. A real Mongo
-    deployment has no merge step at all — upsert-by-_id replaces it.
+    swap is still the writer body only. No row crosses Py4J or a
+    ``collect``. The driver process then reads every JSON line of the
+    batch's part files, sorts them and writes them out as ONE JSONL file
+    (the deterministic "collection" artifact this stand-in exists to
+    pin), renamed atomically into place: that merge costs driver time
+    and memory in proportion to the batch. A real Mongo deployment has no
+    merge step at all — upsert-by-_id replaces it.
     """
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:

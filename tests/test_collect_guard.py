@@ -73,7 +73,7 @@ COLLECT_WHITELIST: dict[tuple[str, str], str] = {
     ("registry/q13_round7e.py", "q_conformal_forecast_interval"): (
         "1-row split-date scalar"
     ),
-    ("registry/q04_streamksql.py", "_replay_events_with_late"): (
+    ("registry/q04_streamksql.py", "_write_late_replay"): (
         "limit(2) late-event sample"
     ),
     # the package's single toPandas (VERDICT r8 audit): GEMM tile build

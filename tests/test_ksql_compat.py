@@ -161,6 +161,23 @@ def test_predict_statement_matches_whole_frame_scoring(engine, spark):
     assert vals & {"bot", "user"}
 
 
+def test_predict_alias_keeps_its_select_position(engine):
+    got = engine.execute(
+        """
+        SELECT
+          predict('Bot Detector', as_array(country, platform),
+                  as_array(product_views, listing_views, gallery_views, nb_orders))
+            AS prediction,
+          user_id
+        FROM aggregated_events_stream
+        LEFT JOIN users ON aggregated_events_stream.user_id = users.rowkey
+        EMIT CHANGES;
+        """
+    )
+    assert got.columns == ["prediction", "user_id"]
+    assert got.filter("prediction IS NOT NULL").count() > 0
+
+
 def test_show_and_describe_statements(engine):
     shows = {r.name: r for r in engine.execute("SHOW STREAMS;").collect()}
     assert {"USERS_STREAM", "USERS", "EVENTS", "EVENTS_IN_10_MINUTES_WINDOW"} <= set(

@@ -111,6 +111,33 @@ def test_predict_arrays_keeps_caller_columns_named_like_signature(spark):
     ]
 
 
+def test_predict_arrays_null_element_and_extra_elements(spark):
+    """A NULL element scores NULL, like a NULL or short array; elements
+    past the signature's count are not read."""
+    df = spark.createDataFrame(
+        [
+            (1, ["BUILDING", "extra"], [0, 0, 0, 9, 99]),
+            (2, [None], [0, 0, 0, 9]),
+            (3, ["BUILDING"], [0, None, 0, 9]),
+        ],
+        "id long, s array<string>, i array<int>",
+    )
+    got = {
+        r["id"]: r["prediction"]
+        for r in ml_predict.predict_arrays(df, MODEL, "s", "i").collect()
+    }
+    expected = ml_predict.score(
+        spark.createDataFrame(
+            [("BUILDING", 0, 0, 0, 9)],
+            "c_mktsegment string, views_in_window int, clicks_in_window int, "
+            "purchases_in_window int, events_in_window int",
+        ),
+        MODEL,
+    ).first()["prediction"]
+    assert got == {1: expected, 2: None, 3: None}
+    assert expected is not None
+
+
 def test_predict_arrays_positional_binding(spark, frame):
     """Ints bind by position, not name (PredictUdf.java:48-56): swapping two
     positions must change which feature the threshold sees."""

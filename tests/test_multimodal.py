@@ -761,16 +761,19 @@ def test_dhash_table_memoized_and_invalidated_by_sf_dir(spark, sf_small, sf_medi
     import os
     import shutil
 
+    from streaming_ml_with_ksql_spark.registry import _core
     from streaming_ml_with_ksql_spark.registry import q08_tpchfull as q08
 
-    q08._DHASH_DIRS.clear()
+    dirs = _core._SCRATCH_DIRS
+    dirs.pop(("dhash", sf_small), None)
+    dirs.pop(("dhash", sf_medium), None)
     t1 = sorted(map(tuple, q08._dhash_table(spark, sf_small).collect()))
-    d1 = q08._DHASH_DIRS[sf_small]
+    d1 = dirs[("dhash", sf_small)]
     q08._dhash_table(spark, sf_small)
-    assert q08._DHASH_DIRS[sf_small] == d1  # memo hit, no new dir
+    assert dirs[("dhash", sf_small)] == d1  # memo hit, no new dir
 
     q08._dhash_table(spark, sf_medium)
-    d2 = q08._DHASH_DIRS[sf_medium]
+    d2 = dirs[("dhash", sf_medium)]
     assert d2 != d1  # per-sf_dir artifact
 
     fresh = multimodal.image_dhash(
@@ -782,8 +785,8 @@ def test_dhash_table_memoized_and_invalidated_by_sf_dir(spark, sf_small, sf_medi
 
     shutil.rmtree(d1)  # stale artifact -> recompute into a new dir
     q08._dhash_table(spark, sf_small)
-    assert q08._DHASH_DIRS[sf_small] != d1
-    assert os.path.isdir(q08._DHASH_DIRS[sf_small])
+    assert dirs[("dhash", sf_small)] != d1
+    assert os.path.isdir(dirs[("dhash", sf_small)])
 
 
 def test_features_csv_face_matches_array_face(spark, sf_small):

@@ -417,6 +417,48 @@ def test_scored_stream_plan_has_no_ml_udf(spark, tmp_path):
     assert not _ml_in_plan(query._jsq.streamingQuery().lastExecution())
 
 
+# Column names of the masked four-step predict_arrays: a clash rename, the
+# validity flag and the unmasked prediction.
+_PREDICT_SCAFFOLD = re.compile(r"^(__valid|__pred|__in_.*)$")
+
+
+def _plan_names(jplan) -> set[str]:
+    names = set()
+    for node in _walk(jplan):
+        it = node.output().iterator()
+        while it.hasNext():
+            names.add(it.next().name())
+    return names
+
+
+def test_predict_arrays_is_one_projection(spark):
+    """predict_arrays adds one Project over its input whose list is the
+    input's columns plus the prediction; no scaffold column appears in it
+    or in the runbook's scored plan."""
+    from streaming_ml_with_ksql_spark.ml import predict as ml_predict
+
+    df = spark.createDataFrame(
+        [(1, "MINE", ["BUILDING"], [0, 0, 0, 1])],
+        "id long, c_mktsegment string, s array<string>, i array<int>",
+    )
+    out = ml_predict.predict_arrays(df, "bot_detector", "s", "i")
+    plan = out._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "Project"
+    assert plan.child().equals(df._jdf.queryExecution().analyzed())
+    projected = plan.projectList()
+    kinds = [
+        projected.apply(k).getClass().getSimpleName()
+        for k in range(projected.size())
+    ]
+    assert kinds == ["AttributeReference"] * len(df.columns) + ["Alias"]
+    assert out.columns == df.columns + ["prediction"]
+
+    runbook = registry._REGISTRY["ksql_runbook_predictions"].spark(spark, SF)
+    for jplan in (plan, runbook._jdf.queryExecution().analyzed()):
+        scaffold = {n for n in _plan_names(jplan) if _PREDICT_SCAFFOLD.match(n)}
+        assert not scaffold, scaffold
+
+
 def test_pipeline_model_only_in_training_and_registry():
     named = [
         str(path.relative_to(_PKG))
