@@ -8,7 +8,7 @@ KSQL parser. Each construct maps Spark-first:
 |----------------------------------------|-----------------------------------|
 | CREATE STREAM s WITH (KAFKA_TOPIC=t)   | bind topic's DataFrame, temp view |
 | TIMESTAMP='col' property               | event-time column designation     |
-| CREATE STREAM d AS SELECT ... PARTITION BY k | repartition(k) + record key |
+| CREATE STREAM d AS SELECT ... PARTITION BY k | record key (no shuffle) |
 | CREATE TABLE t WITH (KAFKA_TOPIC=...)  | latest-per-key compaction (A6)    |
 | CSAS/CTAS SELECT ...                   | translated Spark SQL              |
 | WINDOW HOPPING (SIZE a, ADVANCE BY b)  | GROUP BY window(ts, 'a', 'b')     |
@@ -36,16 +36,17 @@ KSQL parser. Each construct maps Spark-first:
 | t.rowkey pseudo-column                 | t's recorded key column           |
 | TIMESTAMPTOSTRING(ms, fmt)             | SQL UDF → date_format(timestamp_millis) |
 | as_array(...)                          | array(...)                        |
-| predict(model, strs, ints) AS alias    | predict_arrays: one CASE over the array elements (U2) |
+| predict('model', strs, ints)           | session SQL function: one CASE over the array elements (U2) |
 | SELECT ... EMIT CHANGES                | batch snapshot / streaming drain  |
 
-predict() is deliberately NOT a row-wise Python UDF: its two array
-arguments are lifted out of the SQL as placeholder columns, the rest of the
-query runs JVM-side, and scoring replaces the first placeholder with the
-model compiled into one SQL expression over the array elements, at the
-position the statement wrote predict() (SURVEY.md U2) —
-the reference's per-row LeapFrame (PredictUdf.java:55-58) simulated exactly
-one row at a time what that projection does in one vectorized pass.
+predict() is deliberately NOT a row-wise Python UDF: it is a scalar SQL
+function like the other KSQL builtins. ``predict('<model>', ...`` is
+rewritten to the name of a session temporary function whose body is the
+model compiled into one SQL expression over the array elements, so every
+statement is one ``spark.sql`` and predict() resolves in any clause, any
+number of times (SURVEY.md U2) — the reference's per-row LeapFrame
+(PredictUdf.java:55-58) simulated exactly one row at a time what that
+expression does in one vectorized pass.
 
 Batch/stream duality: topics may be bound to *streaming* DataFrames (file
 replay or Kafka). The same translated plans then come out unbounded —
@@ -456,14 +457,12 @@ class KsqlCompat:
         if m:
             # Rekey (reference: README.md:28): record-key rewrite. The
             # physical co-partitioning KSQL needs is a no-op for Spark
-            # (shuffles happen on demand); we record the key for
-            # downstream `rowkey` references and repartition so a
-            # persisted output would be key-clustered.
+            # (shuffles happen on demand, and TABLE compaction groups by
+            # the key anyway); the key is recorded for downstream
+            # `rowkey` references.
             key = m.group(1)
             select = select[: m.start()]
         df, src = self._translate_select(select)
-        if key is not None:
-            df = df.repartition(F.col(key))
         ts_col = src.ts_col if src is not None else None
         self._register(_Relation(name.lower(), df, ts_col, key or (src.key if src else None)))
         return df
@@ -652,62 +651,20 @@ class KsqlCompat:
             flags=re.IGNORECASE,
         )
 
-        # predict(...) → placeholder columns + whole-frame scoring
+        # predict('<model>', strs, ints) → that model's session SQL function,
+        # registered again by every statement that calls it
+        def sub_predict(mm: re.Match) -> str:
+            fn = ml_predict.register_sql_function(
+                self.spark, mm.group(1), self.models_dir
+            )
+            return f"{fn}("
+
         try:
-            return self._finish_select(sql, src)
+            sql = re.sub(
+                r"\bpredict\s*\(\s*'([^']*)'\s*,", sub_predict, sql,
+                flags=re.IGNORECASE,
+            )
+            return self.spark.sql(sql), src
         finally:
             if restore_view is not None:
                 restore_view.df.createOrReplaceTempView(restore_view.name)
-
-    def _finish_select(
-        self, sql: str, src: _Relation | None
-    ) -> tuple[DataFrame, _Relation | None]:
-        pred = _extract_predict(sql)
-        if pred is not None:
-            sql, model_name, str_expr, int_expr, alias = pred
-            # scored into the strs placeholder: the alias keeps its position
-            scored = ml_predict.predict_arrays(
-                self.spark.sql(sql),
-                model_name,
-                "__pred_strs",
-                "__pred_ints",
-                models_dir=self.models_dir,
-                output_col="__pred_strs",
-            )
-            scored = scored.withColumnRenamed("__pred_strs", alias)
-            return scored.drop("__pred_ints"), src
-        return self.spark.sql(sql), src
-
-
-def _extract_predict(sql: str):
-    """Find ``predict('Model', <strs>, <ints>) AS alias`` in a projection
-    (balanced-paren scan — the arguments are themselves calls) and replace
-    it with the two array expressions as placeholder columns."""
-    m = re.search(r"\bpredict\s*\(", sql, re.IGNORECASE)
-    if m is None:
-        return None
-    start = m.start()
-    i, depth = m.end(), 1
-    args, arg_start = [], m.end()
-    while i < len(sql):
-        c = sql[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                args.append(sql[arg_start:i].strip())
-                break
-        elif c == "," and depth == 1:
-            args.append(sql[arg_start:i].strip())
-            arg_start = i + 1
-        i += 1
-    if depth != 0 or len(args) != 3:
-        raise ValueError("predict() expects (model, array<string>, array<int>)")
-    model_name = args[0].strip().strip("'")
-    tail = sql[i + 1:]
-    am = re.match(r"\s+AS\s+(\w+)", tail, re.IGNORECASE)
-    alias = am.group(1) if am else "prediction"
-    end = i + 1 + (am.end() if am else 0)
-    replacement = f"{args[1]} AS __pred_strs, {args[2]} AS __pred_ints"
-    return sql[:start] + replacement + sql[end:], model_name, args[1], args[2], alias

@@ -7,7 +7,6 @@ that map the driver testdata onto the reference's Avro schemas
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import io as io_mod
 from .compat import KsqlCompat
@@ -78,39 +77,30 @@ def reference_topics(
     frozen bot_detector model sees known categories; users get CDC-style
     second versions for keys %5==0 so the TABLE compaction is exercised."""
     cust = io_mod.load_table(spark, sf_dir, "customer")
-    base = cust.select(
-        F.col("c_custkey").alias("id"),
-        F.col("c_mktsegment").alias("country"),
-        F.element_at(
-            F.array(F.lit("Windows"), F.lit("Linux"), F.lit("Android"), F.lit("iOS")),
-            (F.col("c_custkey") % 4 + 1).cast("int"),
-        ).alias("platform"),
-        (F.col("c_custkey") % 20).cast("int").alias("nb_orders"),
-        F.concat(F.lit("10.0."), F.col("c_custkey") % 256, F.lit(".1")).alias(
-            "ip_address"
-        ),
-        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("updated_at"),
+    users = (
+        "c_custkey AS id",
+        "c_mktsegment AS country",
+        "element_at(array('Windows', 'Linux', 'Android', 'iOS'), "
+        "CAST(c_custkey % 4 + 1 AS INT)) AS platform",
+        "CAST(c_custkey % 20 + {bump} AS INT) AS nb_orders",
+        "concat('10.0.', c_custkey % 256, '.1') AS ip_address",
+        "CAST('2024-01-0{day} 00:00:00' AS TIMESTAMP) AS updated_at",
     )
-    updates = (
-        base.filter(F.col("id") % 5 == 0)
-        .withColumn("nb_orders", F.col("nb_orders") + 1)
-        .withColumn("updated_at", F.lit("2024-01-02 00:00:00").cast("timestamp"))
+    base = cust.selectExpr(*(c.format(bump=0, day=1) for c in users))
+    updates = cust.where("c_custkey % 5 = 0").selectExpr(
+        *(c.format(bump=1, day=2) for c in users)
     )
-    users_topic = base.unionByName(updates)
+    users_topic = base.union(updates)
 
-    ev = io_mod.load_table(spark, sf_dir, "events")
-    expr = None
-    for k, v in EVENT_STATE_MAP.items():
-        expr = (
-            F.when(F.col("event_type") == k, v)
-            if expr is None
-            else expr.when(F.col("event_type") == k, v)
-        )
     # event types outside the reference's four Markov states (the driver
     # data has e.g. 'signup') become 'other' — counted by none of the
     # runbook's CASE arms, same as in the oracle
-    events_topic = ev.select(
-        "event_id", "user_id", "ts", expr.otherwise(F.lit("other")).alias("event")
+    whens = " ".join(f"WHEN '{k}' THEN '{v}'" for k, v in EVENT_STATE_MAP.items())
+    events_topic = io_mod.load_table(spark, sf_dir, "events").selectExpr(
+        "event_id",
+        "user_id",
+        "ts",
+        f"CASE event_type {whens} ELSE 'other' END AS event",
     )
     return {
         "mysql.demo.users": (users_topic, "updated_at"),

@@ -19,7 +19,8 @@ The API preserves the UDF's contract:
   (the ConcurrentHashMap at PredictUdf.java:33 becomes a module-level dict);
 - inputs arrive as an array<string> + array<int> pair in signature order
   (README.md:68 ``predict('Bot Detector', as_array(...), as_array(...))``)
-  and the cached stages are compiled over those array elements directly;
+  and the cached stages are compiled over those array elements directly
+  (KSQL's ``predict()`` is that expression as a session SQL function);
 - signature types are validated/coerced exactly like
   MlflowModelResolver.java:62-76 (string→string, integer/long→int,
   anything else → error);
@@ -34,6 +35,7 @@ every request and every micro-batch.
 from __future__ import annotations
 
 import glob
+import hashlib
 import json
 import logging
 import os
@@ -41,12 +43,15 @@ import time
 from typing import NamedTuple
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import dir_name
 
-__all__ = ["resolve_model", "score", "predict_arrays", "clear_model_cache"]
+__all__ = [
+    "resolve_model", "score", "predict_arrays", "register_sql_function",
+    "clear_model_cache",
+]
 
 log = logging.getLogger(__name__)
 
@@ -81,11 +86,15 @@ def resolve_model(
     return sql, signature
 
 
-def _resolve(name: str, stage: str, models_dir: str | None) -> tuple[str, dict, list]:
-    """:func:`resolve_model` plus the parsed stages, for recompiling."""
-    root = os.path.abspath(
+def _stage_dir(name: str, stage: str, models_dir: str | None) -> str:
+    return os.path.abspath(
         os.path.join(models_dir or DEFAULT_MODELS_DIR, dir_name(name), stage)
     )
+
+
+def _resolve(name: str, stage: str, models_dir: str | None) -> tuple[str, dict, list]:
+    """:func:`resolve_model` plus the parsed stages, for recompiling."""
+    root = _stage_dir(name, stage, models_dir)
     if root not in _CACHE:
         t0 = time.perf_counter()
         with open(os.path.join(root, "MLmodel.json")) as f:
@@ -302,6 +311,30 @@ def score(
     return prepared.select("*", F.expr(sql).alias(output_col))
 
 
+def _array_model(model_name: str, stage: str, models_dir: str | None,
+                 strs: str, ints: str) -> str:
+    """The model compiled over the SQL arrays ``strs`` (array<string>) and
+    ``ints`` (array<int>), whose elements are positional against the
+    signature (PredictUdf.java:48-56 — strings first, then ints, signature
+    order): ``CASE WHEN <every array and element is non-NULL> THEN <model>
+    END``. A NULL array, a short one or a NULL element scores NULL
+    (error→NULL, PredictUdf.java:60-63); ``get``, not ``[]``, so a missing
+    element is NULL and not an ANSI error."""
+    _, signature, stages = _resolve(model_name, stage, models_dir)
+    reads = {}
+    for array, inputs in (
+        (strs, [s for s in signature["inputs"] if s["type"] == "string"]),
+        (ints, [s for s in signature["inputs"] if s["type"] != "string"]),
+    ):
+        for k, s in enumerate(inputs):
+            reads[s["name"]] = _coerce(f"get({array}, {k})", s["name"], s["type"])
+    sql, _ = _compile_pipeline(stages, signature, reads.__getitem__)
+    valid = " AND ".join(
+        f"{x} IS NOT NULL" for x in (strs, ints, *reads.values())
+    )
+    return f"CASE WHEN {valid} THEN {sql} END"
+
+
 def predict_arrays(
     df: DataFrame,
     model_name: str,
@@ -314,28 +347,31 @@ def predict_arrays(
 ) -> DataFrame:
     """API-parity form of the reference UDF
     (README.md:68: ``predict('Bot Detector', as_array(country, platform),
-    as_array(product_views, ...))``): inputs are an array<string> and an
-    array<int> whose elements are *positional* against the signature
-    (PredictUdf.java:48-56 — strings first, then ints, signature order).
-
-    One projection: the model compiled with each signature input read
-    straight from its array element, under ``CASE WHEN <every array and
-    element is non-NULL>``. A row whose arrays are NULL, too short or hold
-    a NULL scores NULL (error→NULL, PredictUdf.java:60-63); ``get``, not
-    ``[]``, so a missing element is NULL and not an ANSI error. No
+    as_array(product_views, ...))``): one projection of the model compiled
+    over the two array columns' elements (see :func:`_array_model`). No
     signature-named column is added, so the caller's columns are untouched.
     """
-    _, signature, stages = _resolve(model_name, stage, models_dir)
-    strs, ints = _col(str_array_col), _col(int_array_col)
-    reads = {}
-    for array, inputs in (
-        (strs, [s for s in signature["inputs"] if s["type"] == "string"]),
-        (ints, [s for s in signature["inputs"] if s["type"] != "string"]),
-    ):
-        for k, s in enumerate(inputs):
-            reads[s["name"]] = _coerce(f"get({array}, {k})", s["name"], s["type"])
-    sql, _ = _compile_pipeline(stages, signature, reads.__getitem__)
-    valid = " AND ".join(
-        f"{x} IS NOT NULL" for x in (strs, ints, *reads.values())
+    model = _array_model(
+        model_name, stage, models_dir, _col(str_array_col), _col(int_array_col)
     )
-    return df.withColumn(output_col, F.expr(f"CASE WHEN {valid} THEN {sql} END"))
+    return df.withColumn(output_col, F.expr(model))
+
+
+def register_sql_function(
+    spark: SparkSession, model_name: str, models_dir: str | None = None
+) -> str:
+    """Register the Production model as the session's temporary SQL
+    function ``<name>(strs ARRAY<STRING>, ints ARRAY<INT>) RETURNS STRING``
+    — the reference's ``predict`` UDF (PredictUdf.java:39-41) as a Catalyst
+    expression the analyzer inlines (see :func:`_array_model`) — and return
+    its name. The name is derived from the resolved stage directory, so two
+    registry roots never share one; ``OR REPLACE`` rebinds it to the
+    current compile on every call."""
+    root = _stage_dir(model_name, "Production", models_dir)
+    name = "predict_" + hashlib.sha1(root.encode()).hexdigest()[:16]
+    model = _array_model(model_name, "Production", models_dir, "strs", "ints")
+    spark.sql(
+        f"CREATE OR REPLACE TEMPORARY FUNCTION {name}(strs ARRAY<STRING>, "
+        f"ints ARRAY<INT>) RETURNS STRING RETURN {model}"
+    )
+    return name

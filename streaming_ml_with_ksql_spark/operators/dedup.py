@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..ml.predict import _col
+
 __all__ = ["latest_per_key", "dedup_exact", "distinct_keys"]
 
 
@@ -46,17 +48,11 @@ def latest_per_key(
     key column — deterministic results require *some* total order).
     """
     keys = [key] if isinstance(key, str) else list(key)
-    tb = tiebreak or keys[0]
-    payload = [c for c in df.columns if c not in keys]
-    ord_expr = F.struct(F.col(ts), F.col(tb))
-    # One atomic max_by over the whole payload struct — picking columns
+    order = f"struct({_col(ts)}, {_col(tiebreak or keys[0])})"
+    # One atomic max_by over the whole row struct — picking columns
     # independently could stitch together fields from different tied rows.
-    picked = df.groupBy(*keys).agg(
-        F.max_by(F.struct(*[F.col(c) for c in payload]), ord_expr).alias("__row")
-    )
-    return picked.select(*keys, *[F.col(f"__row.{c}").alias(c) for c in payload]).select(
-        *df.columns
-    )
+    row = f"max_by(struct({', '.join(map(_col, df.columns))}), {order}) AS __row"
+    return df.groupBy(*map(_col, keys)).agg(F.expr(row)).select("__row.*")
 
 
 def dedup_exact(

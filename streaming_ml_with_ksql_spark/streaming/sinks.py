@@ -17,6 +17,8 @@ final predictions topic to MongoDB through a sink connector
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 
 __all__ = [
@@ -29,6 +31,8 @@ __all__ = [
 
 # Shuffle width of a run_to_memory drain's stateful operators.
 STATE_PARTITIONS = 8
+# Serializes the session-conf window around a drain's start().
+_START_LOCK = threading.Lock()
 
 
 def run_to_memory(
@@ -54,31 +58,33 @@ def run_to_memory(
     ~150-key replay cost ~1.6x wall time vs 8; results are
     partitioning-invariant).
 
-    NOT re-entrant (ADVICE r14): the width is applied by mutating the
-    session-global ``spark.sql.shuffle.partitions`` for the drain's
-    duration (restored after), so a batch query planned CONCURRENTLY in
-    the same session would silently pick up the reduced width; a
-    multi-threaded caller must serialize drains."""
+    Re-entrant: the width is applied by setting the session-global
+    ``spark.sql.shuffle.partitions`` only around ``start()`` (the query
+    clones the session conf when it starts and records the width in its
+    offset log), under a module lock, so concurrent drains neither see
+    each other's value nor leave the session at it. A batch query planned
+    on another thread during that window still picks up the width."""
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            # A partially-drained memory table would surface as a subtle
-            # row-count mismatch downstream; fail loudly instead.
-            q.stop()
-            raise TimeoutError(
-                f"streaming query {name!r} did not drain within {timeout_sec}s"
+    with _START_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+        try:
+            q = (
+                stream_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .trigger(availableNow=True)
+                .start()
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    if not q.awaitTermination(timeout_sec):
+        # A partially-drained memory table would surface as a subtle
+        # row-count mismatch downstream; fail loudly instead.
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {name!r} did not drain within {timeout_sec}s"
+        )
     return spark.table(name)
 
 

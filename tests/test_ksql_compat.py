@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from streaming_ml_with_ksql_spark.ksql import KsqlCompat
@@ -102,6 +103,21 @@ def test_users_table_is_latest_per_key(engine, topics):
     assert all(r.nb_orders == 1 for r in bumped.collect())
 
 
+def test_latest_per_key_quotes_column_names(spark):
+    """Key, ordering and payload columns whose names need backticks; the
+    output keeps the input's column order."""
+    import datetime as dt
+
+    t0, t1 = dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2)
+    df = spark.createDataFrame(
+        [("x", 1, t0, 1), ("y", 1, t1, 2), ("z", 2, t0, 4), ("w", 2, t0, 3)],
+        "`pay load` string, `user id` long, `event ts` timestamp, `seq no` int",
+    )
+    got = latest_per_key(df, "user id", "event ts", tiebreak="seq no")
+    assert got.columns == df.columns
+    assert sorted(map(tuple, got.collect())) == [("y", 1, t1, 2), ("z", 2, t0, 4)]
+
+
 def test_hopping_table_matches_native_operator(engine, spark, topics):
     got = spark.table("events_in_10_minutes_window")
     ev = topics["events"][0]
@@ -176,6 +192,45 @@ def test_predict_alias_keeps_its_select_position(engine):
     )
     assert got.columns == ["prediction", "user_id"]
     assert got.filter("prediction IS NOT NULL").count() > 0
+
+
+def test_predict_in_any_clause_any_number_of_times(engine, spark):
+    """Every predict() of a statement resolves: two in one SELECT, and one
+    in a WHERE clause, each equal to whole-frame scoring."""
+    strs = "as_array(country, platform)"
+    ints = "as_array(product_views, listing_views, gallery_views, nb_orders)"
+    swapped = "as_array(gallery_views, listing_views, product_views, nb_orders)"
+    source = (
+        "FROM aggregated_events_stream LEFT JOIN users "
+        "ON aggregated_events_stream.user_id = users.rowkey"
+    )
+    both = engine.execute(
+        f"SELECT user_id, window_start, "
+        f"predict('Bot Detector', {strs}, {ints}) AS p, "
+        f"predict('Bot Detector', {strs}, {swapped}) AS q {source};"
+    )
+    bots = engine.execute(
+        f"SELECT user_id, window_start {source} "
+        f"WHERE predict('Bot Detector', {strs}, {ints}) = 'bot';"
+    )
+    enriched = spark.sql(
+        "SELECT user_id, window_start, array(country, platform) AS s, "
+        "array(product_views, listing_views, gallery_views, nb_orders) AS i, "
+        "array(gallery_views, listing_views, product_views, nb_orders) AS j "
+        "FROM aggregated_events_stream LEFT JOIN users "
+        "ON aggregated_events_stream.user_id = users.id"
+    )
+    expected = ml_predict.predict_arrays(
+        enriched, "Bot Detector", "s", "i", output_col="p"
+    )
+    expected = ml_predict.predict_arrays(
+        expected, "Bot Detector", "s", "j", output_col="q"
+    ).drop("s", "i", "j")
+    assert _sorted_rows(both) == _sorted_rows(expected)
+    assert _sorted_rows(bots) == _sorted_rows(
+        expected.where("p = 'bot'").select("user_id", "window_start")
+    )
+    assert 0 < bots.count() < both.count()
 
 
 def test_show_and_describe_statements(engine):
@@ -500,6 +555,9 @@ def test_malformed_statements_fail_loudly(spark):
         # TABLE materialization without a key cannot compact
         ks.execute("CREATE TABLE t1 WITH (KAFKA_TOPIC='t_err');")
     ks.execute("CREATE STREAM s_ok WITH (KAFKA_TOPIC='t_err');")
+    with pytest.raises(AnalysisException, match="WRONG_NUM_ARGS"):
+        # predict() takes (model, array<string>, array<int>)
+        ks.execute("SELECT predict('Bot Detector', as_array(event)) AS p FROM s_ok;")
     with pytest.raises(ValueError, match="cannot parse|event-time"):
         # windowed statement with a malformed duration body
         ks.execute(

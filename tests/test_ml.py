@@ -138,6 +138,40 @@ def test_predict_arrays_null_element_and_extra_elements(spark):
     assert expected is not None
 
 
+def test_predict_sql_function_per_registry_root(spark, tmp_path):
+    """The registered SQL function is predict_arrays' CASE over its two
+    array arguments, and each registry root gets a function of its own."""
+    import os
+    import shutil
+
+    shutil.copytree(
+        os.path.join(ml_predict.DEFAULT_MODELS_DIR, MODEL, "Production"),
+        tmp_path / MODEL / "Production",
+    )
+    df = spark.createDataFrame(
+        [
+            (1, ["BUILDING"], [0, 0, 0, 9]),
+            (2, ["MACHINERY"], [0, 0, 0, 1]),
+            (3, ["BUILDING"], [0, None, 0, 9]),
+            (4, None, [0, 0, 0, 9]),
+        ],
+        "id long, s array<string>, i array<int>",
+    )
+    want = {r["id"]: r["prediction"] for r in ml_predict.predict_arrays(
+        df, MODEL, "s", "i"
+    ).collect()}
+    try:
+        shipped = ml_predict.register_sql_function(spark, MODEL)
+        copied = ml_predict.register_sql_function(spark, MODEL, str(tmp_path))
+        assert shipped != copied
+        for fn in (shipped, copied):
+            got = df.selectExpr("id", f"{fn}(s, i) AS prediction").collect()
+            assert {r["id"]: r["prediction"] for r in got} == want
+    finally:
+        ml_predict.clear_model_cache()
+    assert want[1] is not None and want[3] is None and want[4] is None
+
+
 def test_predict_arrays_positional_binding(spark, frame):
     """Ints bind by position, not name (PredictUdf.java:48-56): swapping two
     positions must change which feature the threshold sees."""

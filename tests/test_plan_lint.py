@@ -417,9 +417,10 @@ def test_scored_stream_plan_has_no_ml_udf(spark, tmp_path):
     assert not _ml_in_plan(query._jsq.streamingQuery().lastExecution())
 
 
-# Column names of the masked four-step predict_arrays: a clash rename, the
-# validity flag and the unmasked prediction.
-_PREDICT_SCAFFOLD = re.compile(r"^(__valid|__pred|__in_.*)$")
+# Column names of the masked four-step predict_arrays (a clash rename, the
+# validity flag and the unmasked prediction) and of KSQL predict()'s
+# placeholder columns.
+_PREDICT_SCAFFOLD = re.compile(r"^(__valid|__pred.*|__in_.*)$")
 
 
 def _plan_names(jplan) -> set[str]:
@@ -457,6 +458,18 @@ def test_predict_arrays_is_one_projection(spark):
     for jplan in (plan, runbook._jdf.queryExecution().analyzed()):
         scaffold = {n for n in _plan_names(jplan) if _PREDICT_SCAFFOLD.match(n)}
         assert not scaffold, scaffold
+
+
+def test_runbook_build_py4j_budget(spark):
+    """A warm build of the runbook's scored relation is SQL text end to end:
+    at most 250 Py4J calls (953 when predict(), the topic bindings and the
+    TABLE compaction were built from Column trees)."""
+    from scripts.py4j_calls import count_calls
+
+    query = registry.queries()["ksql_runbook_predictions"]
+    query(spark, SF).write.format("noop").mode("overwrite").save()
+    total, _, _ = count_calls(lambda: query(spark, SF))
+    assert total <= 250, total
 
 
 def test_pipeline_model_only_in_training_and_registry():

@@ -113,6 +113,83 @@ def test_run_to_memory_from_another_thread(spark, events_stream_dir):
     assert result["rows"] == spark.read.parquet(events_stream_dir).count()
 
 
+def test_concurrent_drains_keep_session_width(spark, events_stream_dir, monkeypatch):
+    """Two stateful drains on two threads: both are correct, both run at
+    STATE_PARTITIONS state partitions, and the session's shuffle width ends
+    where it started. The second drain begins after the first has started
+    and ends after it — the interleaving in which an unserialized save and
+    restore of the width leaves the session at the drain width."""
+    import threading
+
+    from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+    from streaming_ml_with_ksql_spark.streaming import sinks
+
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert width != str(sinks.STATE_PARTITIONS)
+    started = {"drain_a": threading.Event(), "drain_b": threading.Event()}
+    a_done = threading.Event()
+    queries, results = {}, {}
+    start, await_termination = DataStreamWriter.start, StreamingQuery.awaitTermination
+
+    def recording_start(self, *args, **kwargs):
+        q = start(self, *args, **kwargs)
+        queries[q.name] = q
+        started[q.name].set()
+        return q
+
+    def ordered_await(self, timeout=None):
+        gate = started["drain_b"] if self.name == "drain_a" else a_done
+        if not gate.wait(300):
+            raise TimeoutError(f"{self.name}: the other drain never got there")
+        return await_termination(self, timeout)
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", ordered_await)
+
+    def drain(name, after):
+        try:
+            if after is not None and not after.wait(300):
+                raise TimeoutError(f"{name}: the first drain never started")
+            stream = stream_parquet_dir(spark, events_stream_dir)
+            results[name] = run_to_memory(
+                dedup.latest_per_key(stream, "user_id", "ts", tiebreak="event_id"),
+                name,
+                output_mode="complete",
+            )
+        except Exception as e:  # re-raised on the test thread below
+            results[name] = e
+        finally:
+            if name == "drain_a":
+                a_done.set()
+
+    threads = [
+        threading.Thread(target=drain, args=("drain_a", None)),
+        threading.Thread(target=drain, args=("drain_b", started["drain_a"])),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(600)
+        assert not t.is_alive()
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    batch = dedup.latest_per_key(
+        spark.read.parquet(events_stream_dir), "user_id", "ts", tiebreak="event_id"
+    )
+    cols = sorted(batch.columns)
+    for name in ("drain_a", "drain_b"):
+        if isinstance(results[name], Exception):
+            raise results[name]
+        assert _rows(results[name], cols) == _rows(batch, cols)
+        widths = {
+            op["numShufflePartitions"]
+            for p in queries[name].recentProgress
+            for op in p["stateOperators"]
+        }
+        assert widths == {sinks.STATE_PARTITIONS}, (name, widths)
+
+
 def test_sessionize_stateful_matches_session_window(spark, events_stream_dir):
     """applyInPandasWithState sessionization == batch session_window for
     every session closed by the final watermark."""
