@@ -23,8 +23,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from decimal import ROUND_CEILING, Decimal
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
@@ -49,7 +47,6 @@ __all__ = [
     "stratified_sample",
     "repetition_stats",
     "decontaminate",
-    "ngram_jaccard_pairs_prefix",
     "hash_split",
     "shuffle_shard",
     "bm25_scores",
@@ -271,23 +268,31 @@ def minhash_signatures(
     return dsh.groupBy("doc_id").agg(*aggs)
 
 
+def _bands(sig: DataFrame, id_col: str, bands: int, rows: int) -> DataFrame:
+    """(id_col, band_id, band_hash): one row per band of each signature,
+    band_hash the band's ``rows`` minhashes joined by '|'. ``doc_id`` is
+    renamed to ``id_col``."""
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band_id"),
+            F.concat_ws(
+                "|", *[F.col(f"mh{b * rows + r}") for r in range(rows)]
+            ).alias("band_hash"),
+        )
+        for b in range(bands)
+    ]
+    return sig.select(
+        F.col("doc_id").alias(id_col),
+        F.explode(F.array(*band_cols)).alias("band"),
+    ).select(id_col, "band.band_id", "band.band_hash")
+
+
 def minhash_candidate_pairs(
     signatures: DataFrame, *, bands: int = 4, rows: int = 3
 ) -> DataFrame:
     """Banded LSH: docs agreeing on all `rows` minhashes of any band become
     a candidate pair. Returns distinct (doc_a, doc_b) with doc_a < doc_b."""
-    band_cols = []
-    for b in range(bands):
-        members = [F.col(f"mh{b * rows + r}") for r in range(rows)]
-        band_cols.append(
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.concat_ws("|", *members).alias("band_hash"),
-            )
-        )
-    banded = signatures.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("band")
-    ).select("doc_id", "band.band_id", "band.band_hash")
+    banded = _bands(signatures, "doc_id", bands, rows)
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
@@ -315,25 +320,9 @@ def minhash_candidate_pairs_between(
     self-joins). Returns distinct (new_doc, old_doc); pass
     ``distinct=False`` from a STREAMING caller (distinct is a stateful
     aggregate — the streaming twin dedups after the drain instead)."""
-
-    def banded(sig: DataFrame, out: str) -> DataFrame:
-        band_cols = []
-        for b in range(bands):
-            members = [F.col(f"mh{b * rows + r}") for r in range(rows)]
-            band_cols.append(
-                F.struct(
-                    F.lit(b).alias("band_id"),
-                    F.concat_ws("|", *members).alias("band_hash"),
-                )
-            )
-        return sig.select(
-            F.col("doc_id").alias(out),
-            F.explode(F.array(*band_cols)).alias("band"),
-        ).select(out, "band.band_id", "band.band_hash")
-
     out = (
-        banded(sig_new, "new_doc")
-        .join(banded(sig_old, "old_doc"), ["band_id", "band_hash"])
+        _bands(sig_new, "new_doc", bands, rows)
+        .join(_bands(sig_old, "old_doc", bands, rows), ["band_id", "band_hash"])
         .select("new_doc", "old_doc")
     )
     return out.distinct() if distinct else out
@@ -1234,66 +1223,6 @@ def decontaminate(
         .groupBy(id_col)
         .agg(F.count_distinct("shingle").alias("n_shared_shingles"))
     )
-
-
-def _prefix_shingles(documents: DataFrame, n: int, threshold: float) -> DataFrame:
-    """(doc_id, shingle) rows of each doc's PPJoin prefix: its first
-    |d| - need + 1 distinct shingles in the global (df, shingle) order,
-    need = ⌈t_lo·|d|⌉.
-
-    t_lo is the lowest jaccard ``_jaccard_pairs`` still keeps: its 6-dp
-    HALF_UP round keeps J iff J >= t6 - 5e-7, t6 being ``threshold``
-    rounded up to 6 dp. need is computed in exact integer arithmetic on
-    t_lo in 1e-7 units — a double ceil drops pairs (0.55 * 100 is
-    55.00000000000001, so a 100-shingle doc would get a 45-shingle prefix
-    where 46 are needed)."""
-    t6 = Decimal(repr(threshold)).quantize(Decimal("1e-6"), ROUND_CEILING)
-    lo = max(int(t6.scaleb(7)) - 5, 0)
-    ds = _doc_shingles(documents, n)
-    df_tbl = ds.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    by_doc = Window.partitionBy("doc_id")
-    ranked = ds.join(df_tbl, "shingle").select(
-        "doc_id",
-        "shingle",
-        F.row_number().over(by_doc.orderBy("df", "shingle")).alias("rk"),
-        F.count(F.lit(1)).over(by_doc).alias("n_sh"),
-    )
-    need = F.expr(f"(n_sh * {lo} + 9999999) div 10000000")
-    return ranked.where(F.col("rk") <= F.col("n_sh") - need + 1).select(
-        "doc_id", "shingle"
-    )
-
-
-def ngram_jaccard_pairs_prefix(
-    documents: DataFrame, *, n: int = 3, threshold: float = 0.5
-) -> DataFrame:
-    """EXACT n-gram Jaccard pairs via PREFIX FILTERING (PPJoin family,
-    Xiao et al., "Efficient Similarity Joins for Near Duplicate
-    Detection", WWW'08): identical output to ngram_jaccard_pairs, with a
-    smaller candidate index.
-
-    Why it is exact: a kept pair has J(a,b) >= t_lo (see
-    ``_prefix_shingles``), so |a ∩ b| >= t_lo·max(|a|,|b|), i.e. at least
-    need(a) and need(b). Order both docs' shingles by a GLOBAL canonical
-    order (ascending document frequency, ties by value): the pair's first
-    shared shingle in that order is followed by at least need - 1 more
-    shared ones in each doc, so it lies in both prefixes. Rare-first ordering
-    makes those prefixes the LOW-df shingles, so the candidate self-join's
-    Σ df² runs over the rare end of the distribution.
-
-    Plan: one groupBy for global df, one window per doc to cut prefixes,
-    the prefix-index self-join for distinct candidate pairs, then the
-    exact verify (``_pair_counts`` with candidates)."""
-    prefix = _prefix_shingles(documents, n, threshold)
-    a = prefix.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = prefix.select(F.col("doc_id").alias("doc_b"), "shingle")
-    cands = (
-        a.join(b, "shingle")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return _jaccard_pairs(_pair_counts(documents, n, cands), threshold)
 
 
 # ---------------------------------------------------------------------------

@@ -226,28 +226,40 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 
-# Same oracle as the plain inverted-index form: prefix filtering changes
-# the PLAN, never the answer (the exactness proof is in the operator
-# docstring).
+# Same query and oracle as ngram_jaccard_pairs: the name stays registered
+# for the callers and records that knew it.
 @register(
     "ngram_jaccard_pairs_prefix",
     _REGISTRY["ngram_jaccard_pairs"].oracle,
 )
 def q_ngram_jaccard_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PPJoin-style prefix-filtered exact Jaccard join — only each doc's
-    rarest |d|-⌈t|d|⌉+1 shingles enter the index self-join, so the
-    frequent shingles that dominate Σ df² never generate candidates.
-    Candidates verify through the same exact pair count
-    (text._pair_counts) as every other pair operator.
+    """Exact n-gram Jaccard pairs through ``text.ngram_jaccard_pairs``.
 
-    No crossover is on record against today's plain operator. The one
-    measured (candidate volume ~2.8× lower, wall time 266 s vs 30 s at
-    10× replication) compared the distributed index self-join, before
-    `ngram_jaccard_pairs` gained its single-task kernel: below 20k
-    integral-id docs the plain operator now runs in one Arrow task,
-    which this operator has no route to. Both stay registered because
-    they must stay answer-identical (same oracle)."""
-    return text.ngram_jaccard_pairs_prefix(_t(spark, sf_dir, "documents"))
+    This name used to run a PPJoin prefix filter (Xiao et al., WWW 2008):
+    a self-join over each doc's rarest |d|-⌈t|d|⌉+1 shingles for
+    candidates, then the exact verify. It was deleted because it lost to
+    the plain inverted-index self-join at every measured size, with the
+    distributed route forced on both (NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS =
+    0) and identical pair counts, 4-core host:
+
+    ===========================  =====  ===========  ===========
+    corpus                       t      index join   prefix plan
+    ===========================  =====  ===========  ===========
+    sf0.1, 5k docs (min of 3)    0.5    6.87 s       13.70 s
+    sf0.1, 5k docs (min of 3)    0.8    5.01 s       9.56 s
+    4x replicas, 20k docs (1)    0.5    32.8 s       117.6 s
+    10x replicas, 50k docs (1)   0.5    153 s        525 s
+    ===========================  =====  ===========  ===========
+
+    The prefix plan paid a global df aggregate, a per-doc window and a
+    prefix self-join before the verify; the candidates it pruned never
+    paid that back. The earlier note here (prefix 30 s against the index
+    join's 266 s at 10x replication, candidate volume ~2.8x lower) was
+    taken before the pair operators shared ``text._pair_counts``, and the
+    measurements above contradict it. Below the kernel gate the plain
+    operator also runs as one Arrow task, which the prefix plan had no
+    route to."""
+    return text.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 
 _DEDUP_COMPONENTS_ORACLE = r"""

@@ -110,7 +110,6 @@ def enrich_and_score_stream(
     fact_key: str = "user_id",
     dim_key: str,
     model_name: str | None = None,
-    feature_cols: tuple[str, ...] = (),
     models_dir: str | None = None,
 ) -> DataFrame:
     """The reference's serving query (reference: README.md:62-70):

@@ -303,6 +303,32 @@ def test_scalar_builtins_match_catalyst(engine, spark, topics):
     assert _sorted_rows(got2) == _sorted_rows(expected2)
 
 
+def test_scalar_builtins_registered_once_per_session(spark, monkeypatch):
+    """A second engine on the same session runs no CREATE statement; a new
+    session, whose temporary functions start empty, registers them."""
+    KsqlCompat(spark, {})
+    statements = []
+    sql = spark.sql
+
+    def recording_sql(query, *args, **kwargs):
+        statements.append(query)
+        return sql(query, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", recording_sql)
+    KsqlCompat(spark, {})
+    monkeypatch.undo()
+    assert not [q for q in statements if q.lstrip().upper().startswith("CREATE")]
+
+    fresh = spark.newSession()
+    assert not fresh.catalog.functionExists("GEO_DISTANCE")
+    KsqlCompat(fresh, {})
+    got = fresh.sql("SELECT TIMESTAMPTOSTRING(864000000, 'yyyy-MM-dd') AS d")
+    want = fresh.sql(
+        "SELECT date_format(timestamp_millis(864000000), 'yyyy-MM-dd') AS d"
+    )
+    assert got.collect() == want.collect()
+
+
 def test_offset_aggregates_and_topk(spark):
     """LATEST/EARLIEST_BY_OFFSET map to max_by/min_by on the designated
     event time (the same order TABLE compaction uses); TOPK(x,k) yields

@@ -203,29 +203,10 @@ def test_token_counts_budget_consistency(spark, sf_medium):
     out.unpersist()
 
 
-def test_prefix_filter_reduces_candidate_volume(spark, sf_medium):
-    """The PPJoin prefix index must shrink the self-join's candidate
-    volume (Σ df² over indexed shingles) versus the full inverted index,
-    while the answer stays identical (the shared oracle pins that)."""
-    from pyspark.sql import functions as F
-
-    from streaming_ml_with_ksql_spark import io as io_mod
-    from streaming_ml_with_ksql_spark.operators import text
-
-    docs = io_mod.load_table(spark, sf_medium, "documents")
-
-    def volume(frame):
-        c = frame.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        return c.agg(F.sum(F.col("df") * F.col("df"))).collect()[0][0]
-
-    prefix = text._prefix_shingles(docs, 3, 0.5)
-    assert volume(prefix) < volume(text._doc_shingles(docs, 3))
-
-
-def test_prefix_filter_keeps_pairs_at_an_exact_threshold(spark):
-    """J = 55/100 at threshold 0.55: the 100-shingle doc needs a
-    46-shingle prefix. A double ceil of 0.55 * 100 (55.00000000000001)
-    cut it at 45 and the prefix join lost the pair."""
+def test_ngram_jaccard_keeps_pairs_at_an_exact_threshold(spark, monkeypatch):
+    """J = 55/100 at threshold 0.55 sits exactly on the threshold, where
+    a double bound drops pairs (0.55 * 100 is 55.00000000000001): the
+    kernel route and the index self-join both keep the pair."""
     from streaming_ml_with_ksql_spark.operators import text
 
     toks = [f"w{i}" for i in range(102)]
@@ -234,10 +215,13 @@ def test_prefix_filter_keeps_pairs_at_an_exact_threshold(spark):
         "doc_id long, text string",
     )
     for t in (0.5, 0.55):
-        plain = text.ngram_jaccard_pairs(docs, threshold=t).collect()
-        prefix = text.ngram_jaccard_pairs_prefix(docs, threshold=t).collect()
-        assert [tuple(r) for r in plain] == [(1, 2, 0.55)]
-        assert [tuple(r) for r in prefix] == [(1, 2, 0.55)], t
+        kernel, index = kernel_and_distributed(
+            monkeypatch,
+            [(text, "NGRAM_PAIRS_SINGLE_TASK_MAX_DOCS")],
+            lambda: text.ngram_jaccard_pairs(docs, threshold=t),
+        )
+        assert [tuple(r) for r in kernel.collect()] == [(1, 2, 0.55)], t
+        assert [tuple(r) for r in index.collect()] == [(1, 2, 0.55)], t
 
 
 def test_hash_split_stable_under_corpus_growth(spark, sf_small, sf_medium):

@@ -491,10 +491,6 @@ def test_pipeline_model_only_in_training_and_registry():
 # self-join and the candidate verify belong to text._pair_counts alone.
 SHINGLE_JOINS = {
     ("operators/text.py", "_pair_counts"): "the one exact pair count",
-    ("operators/text.py", "_prefix_shingles"): "attaches global df to rank prefixes",
-    ("operators/text.py", "ngram_jaccard_pairs_prefix"): (
-        "prefix-index self-join: distinct candidate pairs, no counts"
-    ),
     ("operators/text.py", "decontaminate"): (
         "corpus x broadcast benchmark shingle set, no doc pairs"
     ),
