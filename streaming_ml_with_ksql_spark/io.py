@@ -3,19 +3,34 @@
 The reference sources its streams from Kafka topics with Avro schemas from a
 schema registry (reference: README.md:27,39, docker-compose.yaml:29-37); the
 driver testdata replaces those with parquet tables. Loading stays declarative
-(`spark.read.parquet`) so Catalyst retains predicate pushdown, column pruning
+(a parquet scan) so Catalyst retains predicate pushdown, column pruning
 and partition pruning — at 100 TB the scan is where most time goes, and the
 plan must show `PushedFilters` / a narrow `ReadSchema` for every query.
+
+Like the reference's registry lookup, a file's schema is resolved once.
+Spark's parquet inference runs one job per read, even for one file (~95 ms
+on 4 cores, most of a short query's build). `load_table` keeps the schema
+Spark inferred for each absolute file path, keyed by the file's stat
+identity and the session confs that change what inference returns, and a
+repeat load reads with that schema: no job. Only the schema is kept, never
+a DataFrame — a shared frame would share attribute ids and turn two loads
+of one table into an ambiguous self-join. Directories and paths that are
+not plain local files are inferred on every load.
 """
 
 from __future__ import annotations
 
+import logging
 import os
+import stat
+import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 __all__ = ["TABLES", "default_sf_dir", "load_table", "load_tables", "register_views"]
+
+log = logging.getLogger(__name__)
 
 # Timestamp columns have shipped in two physical encodings across testdata
 # generations: INT64 TIMESTAMP(NANOS) (surfaces as epoch-nanos bigint under
@@ -41,6 +56,22 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+
+# Session confs that change the schema parquet inference returns; their
+# values are part of every memo key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# Absolute file path -> (memo key, the schema Spark inferred under that key).
+# Entries are replaced whole and a hit needs the caller's own key, so
+# concurrent loads need no lock: a lost update only costs one more inference.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
 def default_sf_dir() -> str:
@@ -85,38 +116,89 @@ def _ensure_session_confs(spark: SparkSession) -> None:
         pass
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table as a DataFrame (schema from parquet footer),
-    normalizing nano-precision timestamp columns to TimestampType."""
-    _ensure_session_confs(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    for c in _NANOS_TS_COLS.get(name, ()):
-        dt = dict(df.dtypes).get(c)
-        if dt == "bigint":
+def _memo_key(spark: SparkSession, path: str) -> tuple | None:
+    """The file's stat identity plus the inference confs, or None when
+    ``path`` is not an absolute path to a plain local file (Spark resolves a
+    relative path against the JVM's working directory, which need not be
+    the one ``os.stat`` sees)."""
+    if not os.path.isabs(path):
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    conf = spark.conf
+    return (
+        st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns,
+        *(conf.get(k) for k in _INFERENCE_CONFS),
+    )
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, StructType]:
+    """A scan of ``path`` and its schema: the memoized schema when the file
+    and the inference confs are unchanged, else Spark's inference, logged
+    with its seconds and recorded."""
+    key = _memo_key(spark, path)
+    reader = spark.read.format("parquet")
+    memo = _SCHEMAS.get(path)
+    if key is not None and memo is not None and memo[0] == key:
+        return reader.schema(memo[1]).load(path), memo[1]
+    t0 = time.perf_counter()
+    df = reader.load(path)
+    schema = df.schema
+    log.info("load_table infer path=%s s=%.3f", path, time.perf_counter() - t0)
+    if key is not None:
+        _SCHEMAS[path] = (key, schema)
+    return df, schema
+
+
+def _normalized(name: str, schema: StructType) -> list[str] | None:
+    """The projection (SQL text, one item per column) that brings ``name``'s
+    timestamp columns to TimestampType, or None when none needs it."""
+    nanos = _NANOS_TS_COLS.get(name, ())
+    items, changed = [], False
+    for f in schema.fields:
+        c = "`" + f.name.replace("`", "``") + "`"
+        dt = f.dataType.simpleString()
+        if f.name in nanos and dt == "bigint":
             # Exact integer arithmetic (`div 1000` — no double round-trip,
             # which would drift at 1.7e18 nanos).
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-        elif dt == "string":
+            expr = f"timestamp_micros({c} div 1000)"
+        elif f.name in nanos and dt == "string":
             # Defensive: a future testdata generation shipping ISO-text
-            # timestamps (the physical encoding has changed every round;
-            # round 2's bench died on such a shift). UTC session pinned
-            # above makes the parse deterministic.
-            df = df.withColumn(c, F.to_timestamp(F.col(c)))
-        elif dt == "date":
+            # timestamps (the physical encoding has changed between
+            # generations, and a bench run once died on such a shift). The
+            # UTC session pinned by _ensure_session_confs makes the parse
+            # deterministic.
+            expr = f"to_timestamp({c})"
+        elif (f.name in nanos and dt == "date") or dt == "timestamp_ntz":
             # date32 → midnight-UTC instant (exact; same rendering DuckDB
-            # applies when a DATE meets a timestamp function)
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-    # TIMESTAMP_NTZ → TIMESTAMP. _ensure_session_confs pinned the session
-    # timezone to UTC, so this cast is an exact reinterpretation (naive value
-    # == UTC instant) — identical rendering, window grids, and epoch math to
-    # the NTZ form, but unlocks unix_micros() and withWatermark(), which
-    # require TimestampType (driver round 2: 6 queries died on NTZ inputs).
-    ntz_cols = [f.name for f in df.schema.fields
-                if f.dataType.typeName() == "timestamp_ntz"]
-    for c in ntz_cols:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+            # applies when a DATE meets a timestamp function).
+            # TIMESTAMP_NTZ → TIMESTAMP: with the session timezone pinned to
+            # UTC this cast is an exact reinterpretation (naive value == UTC
+            # instant) — identical rendering, window grids, and epoch math to
+            # the NTZ form, but unlocks unix_micros() and withWatermark(),
+            # which require TimestampType (6 queries once died on NTZ
+            # inputs in a vanilla session).
+            expr = f"CAST({c} AS TIMESTAMP)"
+        else:
+            items.append(c)
+            continue
+        items.append(f"{expr} AS {c}")
+        changed = True
+    return items if changed else None
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one testdata table as a DataFrame (schema from the parquet
+    footer, inferred once per file), normalizing its timestamp columns to
+    TimestampType."""
+    _ensure_session_confs(spark)
+    df, schema = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    items = _normalized(name, schema)
+    return df if items is None else df.selectExpr(*items)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

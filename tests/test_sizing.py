@@ -8,9 +8,11 @@ cut."""
 from __future__ import annotations
 
 import logging
+import shutil
 import time
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
@@ -53,6 +55,20 @@ def test_row_bound_reads_parquet_footer(spark, sf_small):
     ):
         assert sizing.row_bound(df) == n
     assert sizing.row_bound(docs.agg(F.count("doc_id"))) == 1
+
+
+def test_row_bound_of_a_schema_memo_hit_reads_the_footer(spark, sf_small, tmp_path, caplog):
+    """A repeat load reads with io's memoized schema instead of inferring
+    it; its frame is bounded by the same footer count as the first."""
+    shutil.copy(f"{sf_small}/events.parquet", tmp_path / "events.parquet")
+    n = pq.read_metadata(tmp_path / "events.parquet").num_rows
+    with caplog.at_level(logging.INFO, logger=sio.__name__):
+        miss = sio.load_table(spark, str(tmp_path), "events")
+        assert "load_table infer" in caplog.text
+        caplog.clear()
+        hit = sio.load_table(spark, str(tmp_path), "events")
+        assert "load_table infer" not in caplog.text
+    assert sizing.row_bound(miss) == sizing.row_bound(hit) == n
 
 
 def test_row_bound_none_when_rows_can_grow(spark, sf_small):
