@@ -13,10 +13,14 @@ final predictions topic to MongoDB through a sink connector
   `batch_id`). Parquet stands in for Mongo here; swapping the writer body
   to `.format("mongodb")` is the real deployment, no query change.
 - `to_kafka` — topic sink seam (untestable here: no broker/connector).
+
+`run_to_memory` and `run_foreach_batch` log one ``drain`` line per drain
+(`_await_drain`).
 """
 
 from __future__ import annotations
 
+import logging
 import threading
 
 from pyspark.sql import DataFrame
@@ -33,6 +37,38 @@ __all__ = [
 STATE_PARTITIONS = 8
 # Serializes the session-conf window around a drain's start().
 _START_LOCK = threading.Lock()
+
+log = logging.getLogger(__name__)
+
+
+def _await_drain(q, timeout_sec: int) -> None:
+    """Wait for an availableNow query to finish, then log its drain line:
+    batch count, summed trigger / addBatch / walCommit / commitOffsets
+    milliseconds, peak state rows and rows dropped by the watermark, from
+    the query's ``recentProgress`` (its last
+    ``spark.sql.streaming.numRecentProgressUpdates`` batches, 100 by
+    default). Stop it and raise if it does not finish within
+    ``timeout_sec``."""
+    label = q.name or q.id
+    if not q.awaitTermination(timeout_sec):
+        # A partially-drained sink would surface as a subtle row-count
+        # mismatch downstream; fail loudly instead.
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {label!r} did not drain within {timeout_sec}s"
+        )
+    prog = q.recentProgress
+    ms = lambda k: sum(p["durationMs"].get(k, 0) for p in prog)  # noqa: E731
+    state = [p.get("stateOperators", []) for p in prog]
+    log.info(
+        "drain query=%s batches=%d trigger_ms=%d add_batch_ms=%d "
+        "wal_commit_ms=%d commit_offsets_ms=%d state_rows_max=%d "
+        "dropped_by_watermark=%d",
+        label, len(prog), ms("triggerExecution"), ms("addBatch"),
+        ms("walCommit"), ms("commitOffsets"),
+        max((sum(o.get("numRowsTotal", 0) for o in ops) for ops in state), default=0),
+        sum(o.get("numRowsDroppedByWatermark", 0) for ops in state for o in ops),
+    )
 
 
 def run_to_memory(
@@ -78,13 +114,7 @@ def run_to_memory(
             )
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-    if not q.awaitTermination(timeout_sec):
-        # A partially-drained memory table would surface as a subtle
-        # row-count mismatch downstream; fail loudly instead.
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {name!r} did not drain within {timeout_sec}s"
-        )
+    _await_drain(q, timeout_sec)
     return spark.table(name)
 
 
@@ -144,7 +174,11 @@ def foreach_batch_jsonl_collection(path: str):
             path, f".stage-{batch_id:08d}-{os.getpid()}"
         )
         try:
-            batch_df.write.mode("overwrite").json(staging)
+            # The staging dir is deleted after the merge, so its _SUCCESS
+            # marker is never read; skip writing it (a create plus its .crc).
+            batch_df.write.mode("overwrite").option(
+                "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+            ).json(staging)
             if os.path.exists(target):  # exactly-once: collection wins
                 return
             lines: list[str] = []
@@ -182,11 +216,7 @@ def run_foreach_batch(
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"foreachBatch stream did not drain within {timeout_sec}s"
-        )
+    _await_drain(q, timeout_sec)
 
 
 def to_kafka(

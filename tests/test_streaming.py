@@ -499,6 +499,87 @@ def test_mongo_standin_collection_is_idempotent(
     assert _snapshot() == first
 
 
+def test_local_session_commits_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """A local session renames checkpoint files with the FileSystem manager
+    (File.renameTo), not the FileContext one, whose symlink resolution
+    forks /bin/readlink per call when libhadoop is absent."""
+    jvm = spark._jvm
+    managers = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    create = getattr(getattr(managers, "CheckpointFileManager$"), "MODULE$").create
+    mgr = create(
+        jvm.org.apache.hadoop.fs.Path("file:" + str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert mgr.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+
+def test_stateful_drain_keeps_checkpoint_checksums(spark, events_stream_dir, tmp_path):
+    """The faster checkpoint manager checks nothing less: after a drained
+    stateful query the state store holds Spark's checkpoint checksum file
+    (<v>.delta.crc) and Hadoop's .crc sidecar (.<v>.delta.crc) beside every
+    delta file."""
+    import os
+
+    key = "spark.sql.streaming.checkpointLocation"
+    assert spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "true"
+    # a named query checkpoints under <default location>/<name>
+    spark.conf.set(key, str(tmp_path))
+    try:
+        run_to_memory(
+            dedup.latest_per_key(
+                stream_parquet_dir(spark, events_stream_dir),
+                "user_id", "ts", tiebreak="event_id",
+            ),
+            "checksum_drain_test",
+            output_mode="complete",
+        )
+    finally:
+        spark.conf.unset(key)
+
+    deltas = []
+    for d, _, files in os.walk(tmp_path / "checksum_drain_test" / "state"):
+        for f in files:
+            if f.endswith(".delta"):
+                deltas.append(f)
+                assert {f + ".crc", f".{f}.crc"} <= set(files), (d, sorted(files))
+    assert deltas
+
+
+def test_drains_log_one_progress_line(spark, events_stream_dir, tmp_path, caplog):
+    """run_to_memory and run_foreach_batch each log one drain line with the
+    batch count, summed phase milliseconds and state-row figures."""
+    import logging
+
+    from streaming_ml_with_ksql_spark.streaming import sinks
+
+    with caplog.at_level(logging.INFO, logger=sinks.__name__):
+        run_to_memory(
+            hopping_window_stream(
+                stream_parquet_dir(spark, events_stream_dir), watermark_delay=WM_DELAY
+            ),
+            "drain_line_test",
+        )
+        run_foreach_batch(
+            stream_parquet_dir(spark, events_stream_dir),
+            foreach_batch_parquet(str(tmp_path / "sink")),
+        )
+    lines = [r.getMessage() for r in caplog.records if r.getMessage().startswith("drain ")]
+    assert len(lines) == 2, lines
+    memory, foreach = (dict(kv.split("=", 1) for kv in line.split()[1:]) for line in lines)
+    assert memory["query"] == "drain_line_test"
+    for fields in (memory, foreach):
+        nums = {k: int(v) for k, v in fields.items() if k != "query"}
+        assert set(nums) == {
+            "batches", "trigger_ms", "add_batch_ms", "wal_commit_ms",
+            "commit_offsets_ms", "state_rows_max", "dropped_by_watermark",
+        }
+        # one batch per shard file (maxFilesPerTrigger=1)
+        assert nums["batches"] >= 4
+        assert nums["trigger_ms"] >= nums["add_batch_ms"] > 0
+    assert int(memory["state_rows_max"]) > 0
+    assert int(foreach["state_rows_max"]) == 0
+
+
 def test_threshold_alert_stream_semantics(spark, tmp_path):
     """Alert-once threshold state machine: first trailing-window crossing
     emits exactly one row per key, peers at the crossing timestamp all
