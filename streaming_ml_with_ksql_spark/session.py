@@ -21,14 +21,12 @@ Scale notes (100 TB discipline):
   and Hadoop's ``.crc`` sidecars are still written and verified, and on a
   local file system both managers guard against overwrite the same way,
   check then rename (``RawLocalFs.renameInternal`` vs ``exists`` +
-  ``rename``). Cluster masters keep the FileContext manager: on HDFS only
-  ``FileContext.rename`` is an atomic no-overwrite rename.
-- ``spark.sql.streaming.pollingDelay=100ms``: a stream on the default
-  trigger that finds no new input sleeps this long before it asks its
-  source again. At Spark's 10 ms an idle file stream re-lists its directory
-  100 times a second, 0.3-0.5 of a core (4 vCPUs, 124 files); at 100 ms,
-  under 0.1. The cost is at most 100 ms before the first file after an
-  idle spell is seen; a stream with a backlog never waits.
+  ``rename``). The master stands in for the checkpoint file system, which
+  a session conf cannot see: every local-master caller here checkpoints
+  under a local path. A local driver writing ``hdfs://`` checkpoints would
+  also get the FileSystem manager, which Spark reserves for file systems
+  without a FileContext; a cluster master writing ``file://`` checkpoints
+  keeps the FileContext manager and its forks, slower but no less safe.
 """
 
 from __future__ import annotations
@@ -79,7 +77,6 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.streaming.pollingDelay", "100ms")
         # Driver testdata parquet uses INT64 TIMESTAMP(NANOS) (pandas default),
         # which Spark's reader rejects; read as long and normalize in io.py.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

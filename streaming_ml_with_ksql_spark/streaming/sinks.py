@@ -47,8 +47,8 @@ def _await_drain(q, timeout_sec: int) -> None:
     milliseconds, peak state rows and rows dropped by the watermark, from
     the query's ``recentProgress`` (its last
     ``spark.sql.streaming.numRecentProgressUpdates`` batches, 100 by
-    default). Stop it and raise if it does not finish within
-    ``timeout_sec``."""
+    default), only when the ``sinks`` logger is at INFO. Stop it and raise
+    if it does not finish within ``timeout_sec``."""
     label = q.name or q.id
     if not q.awaitTermination(timeout_sec):
         # A partially-drained sink would surface as a subtle row-count
@@ -57,6 +57,8 @@ def _await_drain(q, timeout_sec: int) -> None:
         raise TimeoutError(
             f"streaming query {label!r} did not drain within {timeout_sec}s"
         )
+    if not log.isEnabledFor(logging.INFO):
+        return  # recentProgress is a JVM round trip plus a JSON parse per batch
     prog = q.recentProgress
     ms = lambda k: sum(p["durationMs"].get(k, 0) for p in prog)  # noqa: E731
     state = [p.get("stateOperators", []) for p in prog]

@@ -580,6 +580,28 @@ def test_drains_log_one_progress_line(spark, events_stream_dir, tmp_path, caplog
     assert int(foreach["state_rows_max"]) == 0
 
 
+def test_drain_skips_progress_when_info_is_off(caplog):
+    """Below INFO a drain neither reads recentProgress (a JVM round trip and
+    a JSON parse per batch) nor logs."""
+    import logging
+
+    from streaming_ml_with_ksql_spark.streaming import sinks
+
+    class _Drained:
+        name, id = "quiet", "id"
+
+        def awaitTermination(self, timeout):
+            return True
+
+        @property
+        def recentProgress(self):
+            raise AssertionError("recentProgress read with INFO off")
+
+    with caplog.at_level(logging.WARNING, logger=sinks.__name__):
+        sinks._await_drain(_Drained(), 1)
+    assert not caplog.records
+
+
 def test_threshold_alert_stream_semantics(spark, tmp_path):
     """Alert-once threshold state machine: first trailing-window crossing
     emits exactly one row per key, peers at the crossing timestamp all
