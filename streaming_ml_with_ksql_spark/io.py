@@ -28,7 +28,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-__all__ = ["TABLES", "default_sf_dir", "load_table", "load_tables", "register_views"]
+__all__ = ["TABLES", "load_table"]
 
 log = logging.getLogger(__name__)
 
@@ -72,10 +72,6 @@ _INFERENCE_CONFS = (
 # Entries are replaced whole and a hit needs the caller's own key, so
 # concurrent loads need no lock: a lost update only costs one more inference.
 _SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
-
-
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
@@ -199,13 +195,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df, schema = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     items = _normalized(name, schema)
     return df if items is None else df.selectExpr(*items)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register testdata tables as temp views for the SQL entry points."""
-    for n in names or TABLES:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

@@ -23,8 +23,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "enrich_left_join",
-    "semi_join",
-    "anti_join",
     "as_of_join",
     "salted_join",
     "range_bucket_join",
@@ -45,17 +43,6 @@ def enrich_left_join(
     SURVEY.md J2/J3) — broadcast replaces co-partitioning.
     """
     return facts.join(F.broadcast(dim), facts[fact_key] == dim[dim_key], "left")
-
-
-def semi_join(left: DataFrame, right: DataFrame, on: list[str] | str) -> DataFrame:
-    """EXISTS — keep left rows with a match (Spark gives this free;
-    absent from the reference surface, SURVEY.md §2.9)."""
-    return left.join(right, on, "left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on: list[str] | str) -> DataFrame:
-    """NOT EXISTS — keep left rows with no match."""
-    return left.join(right, on, "left_anti")
 
 
 def salted_join(

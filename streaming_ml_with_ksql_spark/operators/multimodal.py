@@ -1,20 +1,25 @@
 """Multimodal column plumbing (north-star surface, BASELINE.json).
 
 Image/audio/video payloads are opaque ``binary`` columns with typed
-metadata; decode / feature-extraction runs as Arrow-batched pandas over
-``mapInPandas``. Four container codecs are REAL, stdlib-only, end-to-end
-in-sandbox (encode → binary column → parse):
+metadata; every one-row-in, one-row-out encode / decode / feature kernel
+is a plain per-row Python function run by ``sizing.map_rows`` (the one
+Arrow batch loop). Only the frame samplers, which emit several rows per
+video, keep their own ``mapInPandas`` loop. ``synthesize_payload(documents,
+media_type)`` writes any of the eight containers below. Four container
+codecs are REAL, stdlib-only, end-to-end in-sandbox (encode → binary
+column → parse):
 
-- **WAV** (RIFF/WAVE): `synthesize_wav_payload` / `decode_audio` /
-  `audio_features` — genuine container parse + PCM DSP features.
-- **BMP** (uncompressed DIB): `synthesize_bmp_payload` / `decode_image` /
+- **WAV** (RIFF/WAVE): `synthesize_payload(..., "audio/wav")` /
+  `decode_audio` / `audio_features` — genuine container parse + PCM DSP
+  features.
+- **BMP** (uncompressed DIB): `"image/bmp"` / `decode_image` /
   `resize_image` — header geometry, orientation-aware pixel array
   (bottom-up rows flipped, negative-height top-down handled), real pixel
   statistics and nearest-neighbor resampling.
-- **PNG**: `synthesize_png_payload` / `decode_image` — chunked container
+- **PNG**: `"image/png"` / `decode_png` — chunked container
   (CRC-verified), zlib-inflated scanlines, all five spec filter types
   (None/Sub/Up/Average/Paeth) applied on encode and inverted on decode.
-- **AVI** (RIFF): `synthesize_avi_payload` / `decode_video` /
+- **AVI** (RIFF): `"video/avi"` / `decode_video` /
   `sample_frames` — hdrl/strl/movi walk; the frame COUNT and per-frame
   byte slices come from the parsed container. Frame payloads are opaque
   compressed-tagged blobs (as in an MJPG AVI): frame-level pixel decode
@@ -22,7 +27,7 @@ in-sandbox (encode → binary column → parse):
   (`_decode_compressed` — PIL/cv2 are absent in this container).
 
 Scale notes:
-- mapInPandas streams Arrow record batches; peak executor memory is one
+- map_rows streams Arrow record batches; peak executor memory is one
   batch of binary payloads (`spark.sql.execution.arrow.maxRecordsPerBatch`
   bounds it), not one partition.
 - The decode stage is a narrow map — partitioning is inherited from the
@@ -50,17 +55,15 @@ __all__ = [
     "extract_features_csv",
     "sample_frames",
     "resize_meta",
-    "synthesize_wav_payload",
+    "synthesize_payload",
     "decode_audio",
-    "synthesize_bmp_payload",
-    "synthesize_png_payload",
-    "synthesize_avi_payload",
     "decode_image",
     "decode_png",
     "decode_video",
     "audio_features",
     "resize_image",
     "DECODED_SCHEMA",
+    "PAYLOAD_SCHEMA",
     "FEATURES_SCHEMA",
     "FEATURES_CSV_SCHEMA",
     "AUDIO_DECODED_SCHEMA",
@@ -73,32 +76,25 @@ DECODED_SCHEMA = (
     "width int, height int, n_frames int, decoder string"
 )
 
+PAYLOAD_SCHEMA = "doc_id long, media_type string, payload binary"
+
 _MEDIA_TYPES = ("image/png", "audio/wav", "video/avi")
 
 
 def _payload_bytes(doc_id: int, media_type: str) -> bytes:
     """One deterministic REAL container per (doc_id, media_type)."""
-    if media_type == "image/png":
-        return _png_bytes(doc_id)
-    if media_type == "audio/wav":
-        return _wav_bytes(doc_id)
-    if media_type == "video/avi":
-        return _avi_bytes(doc_id)
-    raise ValueError(f"no synthesizer for {media_type}")
+    if media_type not in _SYNTHESIZERS:
+        raise ValueError(f"no synthesizer for {media_type}")
+    return _SYNTHESIZERS[media_type][0](doc_id)
 
 
-def _attach_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        media = [_MEDIA_TYPES[int(d) % len(_MEDIA_TYPES)] for d in pdf["doc_id"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "media_type": media,
-                "payload": [
-                    _payload_bytes(int(d), m) for d, m in zip(pdf["doc_id"], media)
-                ],
-            }
-        )
+def _attach_payload(doc_id: int) -> dict:
+    media_type = _MEDIA_TYPES[doc_id % len(_MEDIA_TYPES)]
+    return {
+        "doc_id": doc_id,
+        "media_type": media_type,
+        "payload": _payload_bytes(doc_id, media_type),
+    }
 
 
 # Every codec kernel below spreads its 8-byte doc ids with sizing.fan_out
@@ -114,10 +110,29 @@ def attach_binary_payload(documents: DataFrame) -> DataFrame:
     payloads are synthesized — but they are GENUINE containers (PNG / WAV /
     AVI, stdlib encoders below), so the downstream decode stage exercises
     real parsers, not byte-derived fakes. Narrow Arrow map."""
-    return sizing.fan_out(
-        documents.select("doc_id"), rows_per_task=128
-    ).mapInPandas(
-        _attach_batches, schema="doc_id long, media_type string, payload binary"
+    return sizing.map_rows(
+        sizing.fan_out(documents.select("doc_id"), rows_per_task=128),
+        _attach_payload,
+        PAYLOAD_SCHEMA,
+    )
+
+
+def synthesize_payload(documents: DataFrame, media_type: str) -> DataFrame:
+    """documents → (doc_id, media_type, genuine container bytes) for one
+    of the ``_SYNTHESIZERS`` media types. Narrow Arrow map; the per-row
+    Python call is the encoder boundary, exactly where a real media
+    transcode would run. The plan's map names the container writer."""
+    write, rows_per_task = _SYNTHESIZERS[media_type]
+
+    # calls ``write`` directly, so each task unpickles only its own writer
+    def synthesize(doc_id: int) -> dict:
+        return {"doc_id": doc_id, "media_type": media_type, "payload": write(doc_id)}
+
+    synthesize.__name__ = write.__name__
+    return sizing.map_rows(
+        sizing.fan_out(documents.select("doc_id"), rows_per_task=rows_per_task),
+        synthesize,
+        PAYLOAD_SCHEMA,
     )
 
 
@@ -152,15 +167,19 @@ def _decode_compressed(doc_id: int, media_type: str, payload: bytes) -> dict:
     raise NotImplementedError("wire PIL/cv2 decode here")  # pragma: no cover
 
 
-def _decode_one(doc_id: int, media_type: str, payload: bytes) -> dict:
+def _decode_one(doc_id: int, media_type: str, payload: bytes, **_) -> dict:
     """Dispatch a REAL container parse by media type. Every type the
     in-sandbox synthesizer produces has a genuine stdlib parser; anything
-    else falls through to the import-gated compressed seam."""
+    else falls through to the import-gated compressed seam. The per-row
+    call IS the codec boundary — a real decoder is per-payload work
+    regardless; Arrow keeps the transfer vectorized."""
     import hashlib
     import io as _io
     import wave
 
     base = {
+        "doc_id": doc_id,
+        "media_type": media_type,
         "n_bytes": len(payload),
         "sha256": hashlib.sha256(payload).hexdigest(),
     }
@@ -190,31 +209,13 @@ def _decode_one(doc_id: int, media_type: str, payload: bytes) -> dict:
         meta, _px = _jpeg_parse(payload)
         return base | {"width": meta["width"], "height": meta["height"],
                        "n_frames": 1, "decoder": "stdlib-jpeg"}
-    return base | _decode_compressed(doc_id, media_type, payload)
-
-
-def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batch decode: per-row container parse inside Arrow-sized
-    batches. The per-row Python loop IS the codec boundary — a real decoder
-    is per-payload work regardless; Arrow keeps the transfer vectorized."""
-    cols = ["n_bytes", "sha256", "width", "height", "n_frames", "decoder"]
-    for pdf in batches:
-        metas = [
-            _decode_one(int(d), m, bytes(p))
-            for d, m, p in zip(pdf["doc_id"], pdf["media_type"], pdf["payload"])
-        ]
-        out = pd.DataFrame(metas, columns=cols)
-        for c in ("n_bytes", "width", "height", "n_frames"):
-            out[c] = pd.array(out[c], dtype="Int32")  # nullable (audio w/h)
-        out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
-        out.insert(1, "media_type", pdf["media_type"].to_numpy())
-        yield out
+    return base | {"n_frames": None} | _decode_compressed(doc_id, media_type, payload)
 
 
 def decode_media(with_payload: DataFrame) -> DataFrame:
-    """documents-with-payload → decoded metadata frame (mapInPandas), one
-    REAL container parse per row (PNG/BMP/WAV/AVI)."""
-    return with_payload.mapInPandas(_decode_batches, schema=DECODED_SCHEMA)
+    """documents-with-payload → decoded metadata frame, one REAL container
+    parse per row (PNG/BMP/WAV/AVI); audio rows carry null geometry."""
+    return sizing.map_rows(with_payload, _decode_one, DECODED_SCHEMA)
 
 
 FEATURES_SCHEMA = "doc_id long, media_type string, features array<double>"
@@ -245,49 +246,36 @@ def _feature_micros(payload: bytes) -> tuple[int, list[int]]:
     return len(arr), (hist * _FEATURE_MICRO // len(arr)).tolist()
 
 
-def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _features(doc_id: int, media_type: str, payload: bytes, **_) -> dict:
     """Feature-extraction kernel: a real pipeline would run an image/audio
     encoder here; the stub derives a deterministic FEATURE_DIM-dim vector
     from byte histograms so the Arrow plumbing (array<double> output
     column, batch shape) is real and testable. Each component is
     micro-int / 1e6 — ONE correctly-rounded double division, so the
     vector is bit-identical wherever it is recomputed."""
-    for pdf in batches:
-        feats = []
-        for b in pdf["payload"]:
-            _, micros = _feature_micros(bytes(b))
-            feats.append([m / 1e6 for m in micros])
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "media_type": pdf["media_type"],
-                "features": feats,
-            }
-        )
+    _, micros = _feature_micros(payload)
+    return {
+        "doc_id": doc_id,
+        "media_type": media_type,
+        "features": [m / 1e6 for m in micros],
+    }
 
 
 def extract_features(with_payload: DataFrame) -> DataFrame:
-    """Binary payload → fixed-dim feature vector (Arrow mapInPandas; the
-    encoder is the stub kernel above). Narrow map — no shuffle; the
-    output column is ``array<double>`` ready for the similarity operators."""
-    return with_payload.mapInPandas(_feature_batches, schema=FEATURES_SCHEMA)
+    """Binary payload → fixed-dim feature vector (the encoder is the stub
+    kernel above). Narrow map — no shuffle; the output column is
+    ``array<double>`` ready for the similarity operators."""
+    return sizing.map_rows(with_payload, _features, FEATURES_SCHEMA)
 
 
-def _feature_csv_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        n_bytes, csvs = [], []
-        for b in pdf["payload"]:
-            n, micros = _feature_micros(bytes(b))
-            n_bytes.append(n)
-            csvs.append(",".join(str(m) for m in micros))
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "media_type": pdf["media_type"],
-                "n_bytes": pd.array(n_bytes, dtype="int64"),
-                "features_csv": csvs,
-            }
-        )
+def _features_csv(doc_id: int, media_type: str, payload: bytes, **_) -> dict:
+    n, micros = _feature_micros(payload)
+    return {
+        "doc_id": doc_id,
+        "media_type": media_type,
+        "n_bytes": n,
+        "features_csv": ",".join(str(m) for m in micros),
+    }
 
 
 def extract_features_csv(with_payload: DataFrame) -> DataFrame:
@@ -300,7 +288,7 @@ def extract_features_csv(with_payload: DataFrame) -> DataFrame:
     (CORRECTNESS_r13: multimodal_features ERR 'unhashable type: list');
     CLAUDE.md's scalar-columns rule therefore binds ALL registered
     queries, and tests/test_round14.py enforces it structurally."""
-    return with_payload.mapInPandas(_feature_csv_batches, schema=FEATURES_CSV_SCHEMA)
+    return sizing.map_rows(with_payload, _features_csv, FEATURES_CSV_SCHEMA)
 
 
 FRAME_SAMPLE_SCHEMA = (
@@ -308,6 +296,8 @@ FRAME_SAMPLE_SCHEMA = (
 )
 
 
+# Several output rows per video (one per sampled frame), so this kernel
+# keeps its own batch loop instead of sizing.map_rows.
 def _frame_sample_batches(stride: int):
     def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         """REAL video frame sampling: sniff each payload's container magic
@@ -332,8 +322,7 @@ def _frame_sample_batches(stride: int):
                             hashlib.md5(frames[idx]).hexdigest(),
                         )
                     )
-            out = pd.DataFrame(rows, columns=cols)
-            yield out.astype({"n_frames": "int32", "frame_idx": "int32"})
+            yield pd.DataFrame(rows, columns=cols)
 
     return _batches
 
@@ -387,8 +376,6 @@ def resize_meta(
 
 WAV_SAMPLE_RATE = 8000
 
-AUDIO_PAYLOAD_SCHEMA = "doc_id long, media_type string, payload binary"
-
 AUDIO_DECODED_SCHEMA = (
     "doc_id long, n_bytes int, n_channels int, sample_width int, "
     "sample_rate int, n_samples int, duration_ms double, decoder string"
@@ -416,76 +403,36 @@ def _wav_bytes(doc_id: int) -> bytes:
     return buf.getvalue()
 
 
-def _wav_encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "media_type": "audio/wav",
-                "payload": [_wav_bytes(int(d)) for d in pdf["doc_id"]],
-            }
-        )
-
-
-def synthesize_wav_payload(documents: DataFrame) -> DataFrame:
-    """documents → (doc_id, 'audio/wav', genuine RIFF/WAVE payload bytes).
-    Narrow Arrow map; the per-row Python loop is the encoder boundary,
-    exactly where a real media transcode would run."""
-    return sizing.fan_out(
-        documents.select("doc_id"), rows_per_task=1024
-    ).mapInPandas(
-        _wav_encode_batches, schema=AUDIO_PAYLOAD_SCHEMA
-    )
-
-
-def _wav_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """REAL decode kernel: parse each payload's RIFF/WAVE container with
+def _wav_decode(doc_id: int, payload: bytes, **_) -> dict:
+    """REAL decode kernel: parse the payload's RIFF/WAVE container with
     the stdlib `wave` reader. Raises on malformed payloads (no silent
     fake fallback on this path)."""
     import io as _io
     import wave
 
-    for pdf in batches:
-        rows = []
-        for d, p in zip(pdf["doc_id"], pdf["payload"]):
-            payload = bytes(p)
-            r = wave.open(_io.BytesIO(payload), "rb")
-            try:
-                rate = r.getframerate()
-                nf = r.getnframes()
-                rows.append(
-                    {
-                        "doc_id": int(d),
-                        "n_bytes": len(payload),
-                        "n_channels": r.getnchannels(),
-                        "sample_width": r.getsampwidth(),
-                        "sample_rate": rate,
-                        "n_samples": nf,
-                        "duration_ms": (nf * 1000.0) / rate,
-                        "decoder": "stdlib-wave",
-                    }
-                )
-            finally:
-                r.close()
-        out = pd.DataFrame(rows)
-        yield out.astype(
-            {
-                "n_bytes": "int32",
-                "n_channels": "int32",
-                "sample_width": "int32",
-                "sample_rate": "int32",
-                "n_samples": "int32",
-            }
-        )
+    r = wave.open(_io.BytesIO(payload), "rb")
+    try:
+        rate = r.getframerate()
+        nf = r.getnframes()
+        return {
+            "doc_id": doc_id,
+            "n_bytes": len(payload),
+            "n_channels": r.getnchannels(),
+            "sample_width": r.getsampwidth(),
+            "sample_rate": rate,
+            "n_samples": nf,
+            "duration_ms": (nf * 1000.0) / rate,
+            "decoder": "stdlib-wave",
+        }
+    finally:
+        r.close()
 
 
 def decode_audio(with_wav_payload: DataFrame) -> DataFrame:
     """WAV payload → audio metadata via a REAL container parse (stdlib
-    `wave`), Arrow-batched mapInPandas, narrow map — the production shape
-    for audio decode at 100 TB (batch-bounded memory, no shuffle)."""
-    return with_wav_payload.mapInPandas(
-        _wav_decode_batches, schema=AUDIO_DECODED_SCHEMA
-    )
+    `wave`), Arrow-batched, narrow map — the production shape for audio
+    decode at 100 TB (batch-bounded memory, no shuffle)."""
+    return sizing.map_rows(with_wav_payload, _wav_decode, AUDIO_DECODED_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -587,45 +534,14 @@ def _nn_resample(px, w: int, h: int, dst_w: int, dst_h: int, channels: int):
     return px[row_idx][:, col_idx]
 
 
-def _bmp_encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "media_type": "image/bmp",
-                "payload": [_bmp_bytes(int(d)) for d in pdf["doc_id"]],
-            }
-        )
-
-
-def synthesize_bmp_payload(documents: DataFrame) -> DataFrame:
-    """documents → (doc_id, 'image/bmp', genuine BMP payload bytes)."""
-    return sizing.fan_out(
-        documents.select("doc_id"), rows_per_task=1024
-    ).mapInPandas(
-        _bmp_encode_batches, schema=AUDIO_PAYLOAD_SCHEMA
-    )
-
-
-def _bmp_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for d, p in zip(pdf["doc_id"], pdf["payload"]):
-            meta = _bmp_parse(bytes(p))
-            meta["doc_id"] = int(d)
-            rows.append(meta)
-        out = pd.DataFrame(rows)
-        yield out.astype(
-            {"n_bytes": "int32", "width": "int32", "height": "int32", "bpp": "int32"}
-        )
+def _bmp_decode(doc_id: int, payload: bytes, **_) -> dict:
+    return {"doc_id": doc_id} | _bmp_parse(payload)
 
 
 def decode_image(with_bmp_payload: DataFrame) -> DataFrame:
-    """BMP payload → image metadata + real pixel statistics (Arrow
-    mapInPandas, narrow map)."""
-    return with_bmp_payload.mapInPandas(
-        _bmp_decode_batches, schema=IMAGE_DECODED_SCHEMA
-    )
+    """BMP payload → image metadata + real pixel statistics (narrow Arrow
+    map)."""
+    return sizing.map_rows(with_bmp_payload, _bmp_decode, IMAGE_DECODED_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = (
@@ -633,7 +549,7 @@ AUDIO_FEATURES_SCHEMA = (
 )
 
 
-def _audio_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _audio_features(doc_id: int, payload: bytes, **_) -> dict:
     """REAL DSP kernel over REAL decoded samples: parse the WAV container,
     read the PCM frames, and compute signal features from the sample
     array — not from payload bytes. Offset-binary 8-bit PCM centers at
@@ -644,40 +560,27 @@ def _audio_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataF
 
     import numpy as np
 
-    for pdf in batches:
-        rows = []
-        for d, p in zip(pdf["doc_id"], pdf["payload"]):
-            r = wave.open(_io.BytesIO(bytes(p)), "rb")
-            try:
-                raw = r.readframes(r.getnframes())
-            finally:
-                r.close()
-            s = np.frombuffer(raw, dtype=np.uint8).astype(np.int64) - 128
-            # integer sums are exact in float64 at these sizes, so rms is
-            # one correctly-rounded sqrt of an exact ratio — cross-engine
-            # reproducible
-            rms = float(np.sqrt(float((s * s).sum()) / len(s)))
-            zc = int(((s[:-1] * s[1:]) < 0).sum())
-            rows.append(
-                {
-                    "doc_id": int(d),
-                    "n_samples": len(s),
-                    "rms": rms,
-                    "zero_crossings": zc,
-                    "peak": int(np.abs(s).max()),
-                }
-            )
-        yield pd.DataFrame(rows).astype(
-            {"n_samples": "int32", "zero_crossings": "int32", "peak": "int32"}
-        )
+    r = wave.open(_io.BytesIO(payload), "rb")
+    try:
+        raw = r.readframes(r.getnframes())
+    finally:
+        r.close()
+    s = np.frombuffer(raw, dtype=np.uint8).astype(np.int64) - 128
+    # integer sums are exact in float64 at these sizes, so rms is one
+    # correctly-rounded sqrt of an exact ratio — cross-engine reproducible
+    return {
+        "doc_id": doc_id,
+        "n_samples": len(s),
+        "rms": float(np.sqrt(float((s * s).sum()) / len(s))),
+        "zero_crossings": int(((s[:-1] * s[1:]) < 0).sum()),
+        "peak": int(np.abs(s).max()),
+    }
 
 
 def audio_features(with_wav_payload: DataFrame) -> DataFrame:
     """WAV payload → (n_samples, rms, zero_crossings, peak) computed from
-    the DECODED sample array (Arrow mapInPandas, narrow map)."""
-    return with_wav_payload.mapInPandas(
-        _audio_feature_batches, schema=AUDIO_FEATURES_SCHEMA
-    )
+    the DECODED sample array (narrow Arrow map)."""
+    return sizing.map_rows(with_wav_payload, _audio_features, AUDIO_FEATURES_SCHEMA)
 
 
 RESIZED_SCHEMA = (
@@ -686,8 +589,8 @@ RESIZED_SCHEMA = (
 )
 
 
-def _resize_batches(max_side: int):
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _resizer(max_side: int):
+    def _resize(doc_id: int, payload: bytes, **_) -> dict:
         """REAL pixel resample: decode the BMP array, nearest-neighbor
         downsample with integer floor index maps (floor keeps the index
         arithmetic bit-identical to the SQL oracle — round() differs
@@ -695,41 +598,29 @@ def _resize_batches(max_side: int):
         the resized image's mean from the actual resampled array."""
         import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for d, p in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, bpp, px = _bmp_px(bytes(p))
-                mx = max(w, h)
-                dst_w = max(1, (w * max_side) // mx) if mx > max_side else w
-                dst_h = max(1, (h * max_side) // mx) if mx > max_side else h
-                resized = _nn_resample(px, w, h, dst_w, dst_h, bpp // 8)
-                rows.append(
-                    {
-                        "doc_id": int(d),
-                        "src_w": w,
-                        "src_h": h,
-                        "dst_w": dst_w,
-                        "dst_h": dst_h,
-                        "resized_mean": float(
-                            resized.astype(np.float64).sum() / resized.size
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows).astype(
-                {"src_w": "int32", "src_h": "int32", "dst_w": "int32", "dst_h": "int32"}
-            )
+        w, h, bpp, px = _bmp_px(payload)
+        mx = max(w, h)
+        dst_w = max(1, (w * max_side) // mx) if mx > max_side else w
+        dst_h = max(1, (h * max_side) // mx) if mx > max_side else h
+        resized = _nn_resample(px, w, h, dst_w, dst_h, bpp // 8)
+        return {
+            "doc_id": doc_id,
+            "src_w": w,
+            "src_h": h,
+            "dst_w": dst_w,
+            "dst_h": dst_h,
+            "resized_mean": float(resized.astype(np.float64).sum() / resized.size),
+        }
 
-    return _batches
+    return _resize
 
 
 def resize_image(with_bmp_payload: DataFrame, *, max_side: int = 16) -> DataFrame:
     """BMP payload → nearest-neighbor downsample (long side clamped to
     ``max_side``) with the mean computed from the RESAMPLED pixel array —
-    the pixel half of resize that resize_meta only planned. Arrow
-    mapInPandas, narrow map."""
-    return with_bmp_payload.mapInPandas(
-        _resize_batches(max_side), schema=RESIZED_SCHEMA
-    )
+    the pixel half of resize that resize_meta only planned. Narrow Arrow
+    map."""
+    return sizing.map_rows(with_bmp_payload, _resizer(max_side), RESIZED_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -897,62 +788,31 @@ def _png_parse(payload: bytes):
     return w, h, bit_depth, color_type, px
 
 
-def _png_encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "media_type": "image/png",
-                "payload": [_png_bytes(int(d)) for d in pdf["doc_id"]],
-            }
-        )
-
-
-def synthesize_png_payload(documents: DataFrame) -> DataFrame:
-    """documents → (doc_id, 'image/png', genuine PNG payload bytes)."""
-    return sizing.fan_out(
-        documents.select("doc_id"), rows_per_task=128
-    ).mapInPandas(
-        _png_encode_batches, schema=AUDIO_PAYLOAD_SCHEMA
-    )
-
-
 PNG_DECODED_SCHEMA = (
     "doc_id long, width int, height int, bit_depth int, channels int, "
     "mean_pixel double, decoder string"
 )
 
 
-def _png_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _png_decode(doc_id: int, payload: bytes, **_) -> dict:
     import numpy as np
 
-    for pdf in batches:
-        rows = []
-        for d, p in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, bit_depth, color_type, px = _png_parse(bytes(p))
-            rows.append(
-                {
-                    "doc_id": int(d),
-                    "width": w,
-                    "height": h,
-                    "bit_depth": bit_depth,
-                    "channels": 3 if color_type == 2 else 1,
-                    "mean_pixel": float(px.astype(np.float64).sum() / px.size),
-                    "decoder": "stdlib-png",
-                }
-            )
-        yield pd.DataFrame(rows).astype(
-            {"width": "int32", "height": "int32", "bit_depth": "int32",
-             "channels": "int32"}
-        )
+    w, h, bit_depth, color_type, px = _png_parse(payload)
+    return {
+        "doc_id": doc_id,
+        "width": w,
+        "height": h,
+        "bit_depth": bit_depth,
+        "channels": 3 if color_type == 2 else 1,
+        "mean_pixel": float(px.astype(np.float64).sum() / px.size),
+        "decoder": "stdlib-png",
+    }
 
 
 def decode_png(with_png_payload: DataFrame) -> DataFrame:
     """PNG payload → geometry + mean channel value from the fully decoded
-    (inflated + unfiltered) pixel array. Arrow mapInPandas, narrow map."""
-    return with_png_payload.mapInPandas(
-        _png_decode_batches, schema=PNG_DECODED_SCHEMA
-    )
+    (inflated + unfiltered) pixel array. Narrow Arrow map."""
+    return sizing.map_rows(with_png_payload, _png_decode, PNG_DECODED_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1088,62 +948,30 @@ def _avi_parse(payload: bytes):
     return meta, frames
 
 
-def _avi_encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "media_type": "video/avi",
-                "payload": [_avi_bytes(int(d)) for d in pdf["doc_id"]],
-            }
-        )
-
-
-def synthesize_avi_payload(documents: DataFrame) -> DataFrame:
-    """documents → (doc_id, 'video/avi', genuine RIFF/AVI payload bytes)."""
-    return sizing.fan_out(
-        documents.select("doc_id"), rows_per_task=128
-    ).mapInPandas(
-        _avi_encode_batches, schema=AUDIO_PAYLOAD_SCHEMA
-    )
-
-
 VIDEO_DECODED_SCHEMA = (
     "doc_id long, n_bytes int, width int, height int, n_frames int, "
     "total_frame_bytes int, decoder string"
 )
 
 
-def _avi_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for d, p in zip(pdf["doc_id"], pdf["payload"]):
-            payload = bytes(p)
-            meta, frames = _avi_parse(payload)
-            rows.append(
-                {
-                    "doc_id": int(d),
-                    "n_bytes": len(payload),
-                    "width": meta["width"],
-                    "height": meta["height"],
-                    "n_frames": len(frames),
-                    "total_frame_bytes": sum(len(f) for f in frames),
-                    "decoder": "stdlib-avi",
-                }
-            )
-        yield pd.DataFrame(rows).astype(
-            {"n_bytes": "int32", "width": "int32", "height": "int32",
-             "n_frames": "int32", "total_frame_bytes": "int32"}
-        )
+def _avi_decode(doc_id: int, payload: bytes, **_) -> dict:
+    meta, frames = _avi_parse(payload)
+    return {
+        "doc_id": doc_id,
+        "n_bytes": len(payload),
+        "width": meta["width"],
+        "height": meta["height"],
+        "n_frames": len(frames),
+        "total_frame_bytes": sum(len(f) for f in frames),
+        "decoder": "stdlib-avi",
+    }
 
 
 def decode_video(with_avi_payload: DataFrame) -> DataFrame:
-    """AVI payload → container metadata via a REAL RIFF walk (Arrow
-    mapInPandas, narrow map): geometry from avih, frame count and byte
-    totals from the actual 'movi' slices."""
-    return with_avi_payload.mapInPandas(
-        _avi_decode_batches, schema=VIDEO_DECODED_SCHEMA
-    )
+    """AVI payload → container metadata via a REAL RIFF walk (narrow
+    Arrow map): geometry from avih, frame count and byte totals from the
+    actual 'movi' slices."""
+    return sizing.map_rows(with_avi_payload, _avi_decode, VIDEO_DECODED_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1189,32 +1017,14 @@ def _mjpg_avi_bytes(doc_id: int) -> bytes:
     )
 
 
-def _mjpg_encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "media_type": "video/mjpg-avi",
-                "payload": [_mjpg_avi_bytes(int(d)) for d in pdf["doc_id"]],
-            }
-        )
-
-
-def synthesize_mjpg_payload(documents: DataFrame) -> DataFrame:
-    """documents → (doc_id, 'video/mjpg-avi', RIFF/AVI bytes whose frames
-    are genuine baseline JPEGs). Heavy per row (one DCT+Huffman encode
-    per frame) → low rows-per-task keeps full fan-out width."""
-    return sizing.fan_out(
-        documents.select("doc_id"), rows_per_task=32
-    ).mapInPandas(_mjpg_encode_batches, schema=AUDIO_PAYLOAD_SCHEMA)
-
-
 MJPG_FRAME_SCHEMA = (
     "doc_id long, n_frames int, frame_idx int, frame_w int, frame_h int, "
     "mean_pixel double, decoder string"
 )
 
 
+# Several output rows per video (one per sampled frame), so this kernel
+# keeps its own batch loop instead of sizing.map_rows.
 def _mjpg_frame_decode_batches(stride: int):
     def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [
@@ -1234,10 +1044,7 @@ def _mjpg_frame_decode_batches(stride: int):
                             dec["mean_pixel"], dec["decoder"],
                         )
                     )
-            yield pd.DataFrame(rows, columns=cols).astype(
-                {"n_frames": "int32", "frame_idx": "int32",
-                 "frame_w": "int32", "frame_h": "int32"}
-            )
+            yield pd.DataFrame(rows, columns=cols)
 
     return _batches
 
@@ -1501,64 +1308,32 @@ def _mp4_parse(payload: bytes):
     return meta, frames
 
 
-def _mp4_encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "media_type": "video/mp4",
-                "payload": [_mp4_bytes(int(d)) for d in pdf["doc_id"]],
-            }
-        )
-
-
-def synthesize_mp4_payload(documents: DataFrame) -> DataFrame:
-    """documents → (doc_id, 'video/mp4', genuine ISO BMFF payload bytes)."""
-    return sizing.fan_out(
-        documents.select("doc_id"), rows_per_task=128
-    ).mapInPandas(
-        _mp4_encode_batches, schema=AUDIO_PAYLOAD_SCHEMA
-    )
-
-
 MP4_DECODED_SCHEMA = (
     "doc_id long, n_bytes int, width int, height int, n_frames int, "
     "total_frame_bytes int, duration_ms double, codec string, decoder string"
 )
 
 
-def _mp4_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for d, p in zip(pdf["doc_id"], pdf["payload"]):
-            payload = bytes(p)
-            meta, frames = _mp4_parse(payload)
-            rows.append(
-                {
-                    "doc_id": int(d),
-                    "n_bytes": len(payload),
-                    "width": meta["width"],
-                    "height": meta["height"],
-                    "n_frames": len(frames),
-                    "total_frame_bytes": sum(len(f) for f in frames),
-                    "duration_ms": meta["duration_ms"],
-                    "codec": meta["codec"],
-                    "decoder": "stdlib-bmff",
-                }
-            )
-        yield pd.DataFrame(rows).astype(
-            {"n_bytes": "int32", "width": "int32", "height": "int32",
-             "n_frames": "int32", "total_frame_bytes": "int32"}
-        )
+def _mp4_decode(doc_id: int, payload: bytes, **_) -> dict:
+    meta, frames = _mp4_parse(payload)
+    return {
+        "doc_id": doc_id,
+        "n_bytes": len(payload),
+        "width": meta["width"],
+        "height": meta["height"],
+        "n_frames": len(frames),
+        "total_frame_bytes": sum(len(f) for f in frames),
+        "duration_ms": meta["duration_ms"],
+        "codec": meta["codec"],
+        "decoder": "stdlib-bmff",
+    }
 
 
 def decode_mp4(with_mp4_payload: DataFrame) -> DataFrame:
-    """MP4 payload → container metadata via a REAL ISO BMFF walk (Arrow
-    mapInPandas, narrow map): geometry from tkhd, duration from mdhd,
-    sample count and byte totals from the resolved stsc/stco/stsz map."""
-    return with_mp4_payload.mapInPandas(
-        _mp4_decode_batches, schema=MP4_DECODED_SCHEMA
-    )
+    """MP4 payload → container metadata via a REAL ISO BMFF walk (narrow
+    Arrow map): geometry from tkhd, duration from mdhd, sample count and
+    byte totals from the resolved stsc/stco/stsz map."""
+    return sizing.map_rows(with_mp4_payload, _mp4_decode, MP4_DECODED_SCHEMA)
 
 
 def _container_parse(payload: bytes):
@@ -1962,66 +1737,35 @@ def _jpeg_bytes(doc_id: int) -> bytes:
     return _jpeg_encode_gray(img)
 
 
-def _jpeg_encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "media_type": "image/jpeg",
-                "payload": [_jpeg_bytes(int(d)) for d in pdf["doc_id"]],
-            }
-        )
-
-
-def synthesize_jpeg_payload(documents: DataFrame) -> DataFrame:
-    """documents → (doc_id, 'image/jpeg', genuine baseline JFIF bytes)."""
-    return sizing.fan_out(
-        documents.select("doc_id"), rows_per_task=64
-    ).mapInPandas(
-        _jpeg_encode_batches, schema=AUDIO_PAYLOAD_SCHEMA
-    )
-
-
 JPEG_DECODED_SCHEMA = (
     "doc_id long, width int, height int, n_components int, precision int, "
     "mean_pixel double, decoder string"
 )
 
 
-def _jpeg_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _jpeg_decode(doc_id: int, payload: bytes, **_) -> dict:
     import numpy as np
 
-    for pdf in batches:
-        rows = []
-        for d, p in zip(pdf["doc_id"], pdf["payload"]):
-            meta, px = _jpeg_parse(bytes(p))
-            rows.append(
-                {
-                    "doc_id": int(d),
-                    "width": meta["width"],
-                    "height": meta["height"],
-                    "n_components": meta["n_components"],
-                    "precision": meta["precision"],
-                    "mean_pixel": float(np.mean(px.astype(np.float64))),
-                    "decoder": "stdlib-jpeg",
-                }
-            )
-        yield pd.DataFrame(rows).astype(
-            {"width": "int32", "height": "int32",
-             "n_components": "int32", "precision": "int32"}
-        )
+    meta, px = _jpeg_parse(payload)
+    return {
+        "doc_id": doc_id,
+        "width": meta["width"],
+        "height": meta["height"],
+        "n_components": meta["n_components"],
+        "precision": meta["precision"],
+        "mean_pixel": float(np.mean(px.astype(np.float64))),
+        "decoder": "stdlib-jpeg",
+    }
 
 
 def decode_jpeg(with_jpeg_payload: DataFrame) -> DataFrame:
     """JPEG payload → geometry + decoded-pixel mean via the REAL baseline
     decode (marker walk, stream-described Huffman tables, entropy decode,
-    dequantize, IDCT). Arrow mapInPandas, narrow map — no shuffle."""
-    return with_jpeg_payload.mapInPandas(
-        _jpeg_decode_batches, schema=JPEG_DECODED_SCHEMA
-    )
+    dequantize, IDCT). Narrow Arrow map — no shuffle."""
+    return sizing.map_rows(with_jpeg_payload, _jpeg_decode, JPEG_DECODED_SCHEMA)
 
 
-def _dhash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _dhash(doc_id: int, payload: bytes) -> dict:
     """Perceptual difference-hash kernel: REAL image decode (magic-sniffed
     BMP or PNG through the in-repo codecs), channel-mean grayscale,
     nearest-neighbor 9x8 resample, then the classic dHash bits — each of
@@ -2031,47 +1775,33 @@ def _dhash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     engine — no sign-bit games with a single 64-bit hash)."""
     import numpy as np
 
-    for pdf in batches:
-        out = {"doc_id": [], "b0": [], "b1": [], "b2": [], "b3": []}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            raw = bytes(payload)
-            if raw[:2] == b"BM":
-                w, h, bpp, rows = _bmp_px(raw)
-                ch = bpp // 8
-            else:
-                w, h, _bd, color_type, rows = _png_parse(raw)
-                ch = 3 if color_type == 2 else 1
-            g = (
-                np.asarray(rows, dtype=np.float64)
-                .reshape(h, w, ch)
-                .mean(axis=2)
-            )
-            ri = (np.arange(8) * h) // 8
-            ci = (np.arange(9) * w) // 9
-            s = g[ri][:, ci]
-            bits = (s[:, 1:] > s[:, :-1]).astype(np.uint8).reshape(64)
-            out["doc_id"].append(doc_id)
-            for k in range(4):
-                out[f"b{k}"].append(
-                    int(
-                        sum(
-                            int(b) << i
-                            for i, b in enumerate(bits[k * 16 : (k + 1) * 16])
-                        )
-                    )
-                )
-        yield pd.DataFrame(out)
+    if payload[:2] == b"BM":
+        w, h, bpp, rows = _bmp_px(payload)
+        ch = bpp // 8
+    else:
+        w, h, _bd, color_type, rows = _png_parse(payload)
+        ch = 3 if color_type == 2 else 1
+    g = np.asarray(rows, dtype=np.float64).reshape(h, w, ch).mean(axis=2)
+    ri = (np.arange(8) * h) // 8
+    ci = (np.arange(9) * w) // 9
+    s = g[ri][:, ci]
+    bits = (s[:, 1:] > s[:, :-1]).astype(np.uint8).reshape(64)
+    out = {"doc_id": doc_id}
+    for k in range(4):
+        out[f"b{k}"] = sum(
+            int(b) << i for i, b in enumerate(bits[k * 16 : (k + 1) * 16])
+        )
+    return out
 
 
 def image_dhash(with_payload: DataFrame) -> DataFrame:
     """(doc_id, b0..b3) perceptual dHash table over an image payload
     column — the content-addressable artifact image dedup joins on.
     Narrow Arrow map over the payload column; size-aware fan-out."""
-    return sizing.fan_out(
-        with_payload.select("doc_id", "payload"), rows_per_task=128
-    ).mapInPandas(
-        _dhash_batches,
-        schema="doc_id long, b0 int, b1 int, b2 int, b3 int",
+    return sizing.map_rows(
+        sizing.fan_out(with_payload.select("doc_id", "payload"), rows_per_task=128),
+        _dhash,
+        "doc_id long, b0 int, b1 int, b2 int, b3 int",
     )
 
 
@@ -2353,60 +2083,30 @@ def _gif_parse(payload: bytes):
     return iw, ih, palette, indices
 
 
-def _gif_encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "media_type": "image/gif",
-                "payload": [_gif_bytes(int(d)) for d in pdf["doc_id"]],
-            }
-        )
-
-
-def synthesize_gif_payload(documents: DataFrame) -> DataFrame:
-    """documents → (doc_id, 'image/gif', genuine GIF89a payload bytes)."""
-    return sizing.fan_out(
-        documents.select("doc_id"), rows_per_task=128
-    ).mapInPandas(_gif_encode_batches, schema=AUDIO_PAYLOAD_SCHEMA)
-
-
 GIF_DECODED_SCHEMA = (
     "doc_id long, width int, height int, palette_size int, "
     "mean_index_d double, mean_red_d double, decoder string"
 )
 
 
-def _gif_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for d, p in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, palette, idx = _gif_parse(bytes(p))
-            n = len(idx)
-            sum_idx = sum(idx)
-            sum_red = sum(palette[3 * i] for i in idx)
-            rows.append(
-                {
-                    "doc_id": int(d),
-                    "width": w,
-                    "height": h,
-                    "palette_size": len(palette) // 3,
-                    "mean_index_d": float(sum_idx) / n,
-                    "mean_red_d": float(sum_red) / n,
-                    "decoder": "stdlib-gif-lzw",
-                }
-            )
-        yield pd.DataFrame(rows).astype(
-            {"width": "int32", "height": "int32", "palette_size": "int32"}
-        )
+def _gif_decode(doc_id: int, payload: bytes, **_) -> dict:
+    w, h, palette, idx = _gif_parse(payload)
+    n = len(idx)
+    return {
+        "doc_id": doc_id,
+        "width": w,
+        "height": h,
+        "palette_size": len(palette) // 3,
+        "mean_index_d": float(sum(idx)) / n,
+        "mean_red_d": float(sum(palette[3 * i] for i in idx)) / n,
+        "decoder": "stdlib-gif-lzw",
+    }
 
 
 def decode_gif(with_gif_payload: DataFrame) -> DataFrame:
     """GIF payload → geometry + palette stats from the fully LZW-decoded
-    index array. Arrow mapInPandas, narrow map."""
-    return with_gif_payload.mapInPandas(
-        _gif_decode_batches, schema=GIF_DECODED_SCHEMA
-    )
+    index array. Narrow Arrow map."""
+    return sizing.map_rows(with_gif_payload, _gif_decode, GIF_DECODED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2497,50 +2197,43 @@ def parse_exif_app1(payload: bytes) -> dict:
     return out
 
 
-def _exif_roundtrip_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for d in pdf["doc_id"]:
-            d = int(d)
-            make = f"cam-{d % 7}"
-            orientation = d % 8 + 1
-            dt = f"2024:01:{d % 28 + 1:02d} 12:00:00"
-            app1 = exif_app1_bytes(make, orientation, dt)
-            # splice into a real marker stream: SOI, APP1, EOI
-            jpeg = b"\xff\xd8" + struct.pack(">HH", 0xFFE1, len(app1) + 2) + app1 + b"\xff\xd9"
-            # parse back via a real marker walk
-            if jpeg[:2] != b"\xff\xd8":
-                raise ValueError("missing SOI")
-            pos = 2
-            fields = None
-            while pos + 4 <= len(jpeg):
-                marker, ln = struct.unpack(">HH", jpeg[pos : pos + 4])
-                if marker == 0xFFE1:
-                    fields = parse_exif_app1(jpeg[pos + 4 : pos + 2 + ln])
-                    break
-                pos += 2 + ln
-            if fields is None:
-                raise ValueError("APP1 not found")
-            rows.append(
-                {
-                    "doc_id": d,
-                    "make": fields[_EXIF_TAG_MAKE],
-                    "orientation": int(fields[_EXIF_TAG_ORIENTATION]),
-                    "shot_at": fields[_EXIF_TAG_DATETIME],
-                }
-            )
-        yield pd.DataFrame(rows).astype({"orientation": "int32"})
+def _exif_roundtrip(doc_id: int) -> dict:
+    d = doc_id
+    make = f"cam-{d % 7}"
+    orientation = d % 8 + 1
+    dt = f"2024:01:{d % 28 + 1:02d} 12:00:00"
+    app1 = exif_app1_bytes(make, orientation, dt)
+    # splice into a real marker stream: SOI, APP1, EOI
+    jpeg = b"\xff\xd8" + struct.pack(">HH", 0xFFE1, len(app1) + 2) + app1 + b"\xff\xd9"
+    # parse back via a real marker walk
+    if jpeg[:2] != b"\xff\xd8":
+        raise ValueError("missing SOI")
+    pos = 2
+    fields = None
+    while pos + 4 <= len(jpeg):
+        marker, ln = struct.unpack(">HH", jpeg[pos : pos + 4])
+        if marker == 0xFFE1:
+            fields = parse_exif_app1(jpeg[pos + 4 : pos + 2 + ln])
+            break
+        pos += 2 + ln
+    if fields is None:
+        raise ValueError("APP1 not found")
+    return {
+        "doc_id": d,
+        "make": fields[_EXIF_TAG_MAKE],
+        "orientation": int(fields[_EXIF_TAG_ORIENTATION]),
+        "shot_at": fields[_EXIF_TAG_DATETIME],
+    }
 
 
 def exif_metadata_roundtrip(documents: DataFrame) -> DataFrame:
     """doc_id → deterministic EXIF APP1 written and parsed back through
     the real TIFF-IFD codec (marker walk + byte-order dispatch +
     inline/offset value resolution). Narrow Arrow map, no shuffle."""
-    return sizing.fan_out(
-        documents.select("doc_id"), rows_per_task=256
-    ).mapInPandas(
-        _exif_roundtrip_batches,
-        schema="doc_id long, make string, orientation int, shot_at string",
+    return sizing.map_rows(
+        sizing.fan_out(documents.select("doc_id"), rows_per_task=256),
+        _exif_roundtrip,
+        "doc_id long, make string, orientation int, shot_at string",
     )
 
 
@@ -2580,46 +2273,39 @@ def _mulaw_pcm(doc_id: int, i: int) -> int:
     return ((doc_id * 37 + i * 101) % 65536) - 32768
 
 
-def _mulaw_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for d in pdf["doc_id"]:
-            doc_id = int(d)
-            n = 160 + doc_id % 241  # >= one 20 ms G.711 frame at 8 kHz
-            sum_err = max_err = sum_code = 0
-            for i in range(n):
-                s = _mulaw_pcm(doc_id, i)
-                code = mulaw_encode_sample(s)
-                rec = mulaw_decode_sample(code)
-                err = abs(s - rec)
-                sum_err += err
-                sum_code += code
-                if err > max_err:
-                    max_err = err
-            rows.append(
-                {
-                    "doc_id": doc_id,
-                    "n_samples": n,
-                    "sum_abs_err": sum_err,
-                    "max_err": max_err,
-                    "sum_code": sum_code,
-                    "decoder": "g711-mulaw",
-                }
-            )
-        yield pd.DataFrame(rows).astype(
-            {"n_samples": "int32", "max_err": "int32"}
-        )
+def _mulaw_transcode(doc_id: int) -> dict:
+    n = 160 + doc_id % 241  # >= one 20 ms G.711 frame at 8 kHz
+    sum_err = max_err = sum_code = 0
+    for i in range(n):
+        s = _mulaw_pcm(doc_id, i)
+        code = mulaw_encode_sample(s)
+        rec = mulaw_decode_sample(code)
+        err = abs(s - rec)
+        sum_err += err
+        sum_code += code
+        if err > max_err:
+            max_err = err
+    return {
+        "doc_id": doc_id,
+        "n_samples": n,
+        "sum_abs_err": sum_err,
+        "max_err": max_err,
+        "sum_code": sum_code,
+        "decoder": "g711-mulaw",
+    }
 
 
 def mulaw_transcode(documents: DataFrame) -> DataFrame:
     """Per document: synthesize the deterministic 16-bit PCM frame,
     compand through the REAL G.711 mu-law encoder, reconstruct, and
     report exact integer error statistics (sum/max absolute error, code
-    checksum). Arrow mapInPandas with size-aware fan-out; narrow map —
-    the transcode kernel shape for audio at 100 TB."""
-    return sizing.fan_out(
-        documents.select("doc_id"), rows_per_task=1024
-    ).mapInPandas(_mulaw_batches, schema=MULAW_DECODED_SCHEMA)
+    checksum). Narrow Arrow map with size-aware fan-out — the transcode
+    kernel shape for audio at 100 TB."""
+    return sizing.map_rows(
+        sizing.fan_out(documents.select("doc_id"), rows_per_task=1024),
+        _mulaw_transcode,
+        MULAW_DECODED_SCHEMA,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -2775,35 +2461,25 @@ def tiff_parse(payload: bytes) -> dict:
     }
 
 
-def _tiff_roundtrip_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for d in pdf["doc_id"]:
-            doc_id = int(d)
-            meta = tiff_parse(tiff_bytes(doc_id))
-            rows.append(
-                {
-                    "doc_id": doc_id,
-                    **meta,
-                    "mean_px_d": meta["sum_px"]
-                    / (meta["width"] * meta["height"]),
-                    "decoder": "tiff6-strips",
-                }
-            )
-        yield pd.DataFrame(rows).astype(
-            {"width": "int32", "height": "int32", "n_strips": "int32"}
-        )
+def _tiff_roundtrip(doc_id: int) -> dict:
+    meta = tiff_parse(tiff_bytes(doc_id))
+    return {
+        "doc_id": doc_id,
+        **meta,
+        "mean_px_d": meta["sum_px"] / (meta["width"] * meta["height"]),
+        "decoder": "tiff6-strips",
+    }
 
 
 def tiff_roundtrip(documents: DataFrame) -> DataFrame:
     """documents -> write + parse a REAL multi-strip baseline TIFF per
-    doc; exact integer pixel sums out. Arrow mapInPandas with size-aware
-    fan-out; narrow map."""
-    return sizing.fan_out(
-        documents.select("doc_id"), rows_per_task=1024
-    ).mapInPandas(_tiff_roundtrip_batches, schema=TIFF_DECODED_SCHEMA)
+    doc; exact integer pixel sums out. Narrow Arrow map with size-aware
+    fan-out."""
+    return sizing.map_rows(
+        sizing.fan_out(documents.select("doc_id"), rows_per_task=1024),
+        _tiff_roundtrip,
+        TIFF_DECODED_SCHEMA,
+    )
 
 
 HIST_EQ_SCHEMA = (
@@ -2812,55 +2488,48 @@ HIST_EQ_SCHEMA = (
 )
 
 
-def _hist_eq_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _hist_eq(doc_id: int, payload: bytes, **_) -> dict:
     """REAL enhancement kernel: decode the BMP payload, build the gray
     histogram, equalize eq(v) = (cdf(v) * 255) // total (integer floor
     — the cross-engine-exact variant of the classic remap), and report
     exact integer statistics of the equalized image."""
     import numpy as np
 
-    for pdf in batches:
-        rows = []
-        for d, p in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, bpp, rows_bgr = _bmp_px(bytes(p))  # rows: (h, 3w) BGR
-            gray = (
-                np.asarray(rows_bgr)
-                .reshape(h, w, bpp // 8)[:, :, 0]
-                .astype(np.int64)
-            )
-            total = h * w
-            vals, counts = np.unique(gray, return_counts=True)
-            cdf = np.cumsum(counts)
-            remap = {
-                int(v): int(c) * 255 // total for v, c in zip(vals, cdf)
-            }
-            eq = np.vectorize(remap.__getitem__)(gray)
-            rows.append(
-                {
-                    "doc_id": int(d),
-                    "width": w,
-                    "height": h,
-                    "n_levels": len(vals),
-                    "sum_eq": int(eq.sum()),
-                    "min_eq": int(eq.min()),
-                    "max_eq": int(eq.max()),
-                    "decoder": "bmp-hist-eq",
-                }
-            )
-        yield pd.DataFrame(rows).astype(
-            {
-                "width": "int32",
-                "height": "int32",
-                "n_levels": "int32",
-                "min_eq": "int32",
-                "max_eq": "int32",
-            }
-        )
+    w, h, bpp, rows_bgr = _bmp_px(payload)  # rows: (h, 3w) BGR
+    gray = np.asarray(rows_bgr).reshape(h, w, bpp // 8)[:, :, 0].astype(np.int64)
+    total = h * w
+    vals, counts = np.unique(gray, return_counts=True)
+    cdf = np.cumsum(counts)
+    remap = {int(v): int(c) * 255 // total for v, c in zip(vals, cdf)}
+    eq = np.vectorize(remap.__getitem__)(gray)
+    return {
+        "doc_id": doc_id,
+        "width": w,
+        "height": h,
+        "n_levels": len(vals),
+        "sum_eq": int(eq.sum()),
+        "min_eq": int(eq.min()),
+        "max_eq": int(eq.max()),
+        "decoder": "bmp-hist-eq",
+    }
 
 
 def hist_equalize(with_bmp_payload: DataFrame) -> DataFrame:
     """BMP payload -> histogram-equalized image statistics via a REAL
-    decode + remap kernel (Arrow mapInPandas, narrow map)."""
-    return with_bmp_payload.mapInPandas(
-        _hist_eq_batches, schema=HIST_EQ_SCHEMA
-    )
+    decode + remap kernel (narrow Arrow map)."""
+    return sizing.map_rows(with_bmp_payload, _hist_eq, HIST_EQ_SCHEMA)
+
+
+# media type -> (container writer, rows_per_task) for synthesize_payload;
+# rows_per_task is the codec's weight (see attach_binary_payload).
+_SYNTHESIZERS = {
+    "audio/wav": (_wav_bytes, 1024),
+    "image/bmp": (_bmp_bytes, 1024),
+    "image/png": (_png_bytes, 128),
+    "video/avi": (_avi_bytes, 128),
+    # heavy per row (one DCT+Huffman encode per frame): full fan-out width
+    "video/mjpg-avi": (_mjpg_avi_bytes, 32),
+    "video/mp4": (_mp4_bytes, 128),
+    "image/jpeg": (_jpeg_bytes, 64),
+    "image/gif": (_gif_bytes, 128),
+}

@@ -1,5 +1,5 @@
 """Plan-derived sizing: one way to size a frame, one way to route to a
-single-task kernel.
+single-task kernel, one way to run a per-row Python kernel.
 
 ``row_bound(df)`` reads an upper bound on a frame's rows from its own
 analyzed plan (already resolved when the DataFrame was built, so the walk
@@ -24,6 +24,13 @@ rows to the task (r15: coalescing a lazy tokenize/explode plan into the
 kernel task measured 4x slower); ``coalesce(1)`` over a materialized frame
 skips a pointless exchange.
 
+``map_rows`` is the one Arrow batch loop behind every one-row-in,
+one-row-out Python codec: ``fn`` sees each row as plain Python keyword
+arguments (NA as None) and returns a dict; the loop builds each output
+frame in the declared schema's column order and lets the declared schema
+cast it (no per-kernel ``astype``). The batch function carries ``fn``'s
+name, so the plan's ``MapInPandas`` node still names its codec.
+
 ``materialize`` is the only lineage cut: a local checkpoint, never a
 CacheManager persist that stays pinned until ``clearCache``. Cut only where
 recomputing costs more: iterative state, several consumers, or a frame a
@@ -36,9 +43,12 @@ import logging
 import time
 from typing import Callable
 
-from pyspark.sql import DataFrame
+import pandas as pd
 
-__all__ = ["row_bound", "fan_out", "single_task", "materialize"]
+from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
+
+__all__ = ["row_bound", "fan_out", "single_task", "map_rows", "materialize"]
 
 log = logging.getLogger(__name__)
 
@@ -172,6 +182,42 @@ def single_task(
         return None
     one = df.coalesce(1) if feed == "coalesce" else df.repartition(1)
     return one.mapInPandas(kernel, schema)
+
+
+def _py_values(col: pd.Series) -> list:
+    """A column's cells as plain Python objects, NA (NaN, NaT, None) as
+    None; array cells pass through."""
+    vals = col.tolist()
+    na = col.isna()
+    if na.any():
+        vals = [None if m else v for v, m in zip(vals, na.tolist())]
+    return vals
+
+
+def map_rows(
+    df: DataFrame, fn: Callable[..., dict], schema: str | StructType
+) -> DataFrame:
+    """``df.mapInPandas`` over one row at a time: ``fn(**row)`` gets each
+    row's columns as keyword arguments (plain Python values, NA as None)
+    and returns the output row as a dict keyed by ``schema``'s field
+    names, in any order. Each output frame is built in the schema's
+    column order; the declared types do the casting (an int column
+    whose batch holds a None arrives as float NaN and lands as null)."""
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    names = schema.fieldNames()
+
+    def batches(pdfs):
+        for pdf in pdfs:
+            cols = list(pdf.columns)
+            rows = [
+                fn(**dict(zip(cols, vals)))
+                for vals in zip(*(_py_values(pdf[c]) for c in cols))
+            ]
+            yield pd.DataFrame({n: [r[n] for r in rows] for n in names})
+
+    batches.__name__ = fn.__name__
+    return df.mapInPandas(batches, schema)
 
 
 def materialize(df: DataFrame, why: str, *, eager: bool = True) -> DataFrame:

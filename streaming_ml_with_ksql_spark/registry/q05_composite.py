@@ -884,7 +884,7 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     match proves the container walk sliced the exact frame bytes the
     encoder wrote, at the exact declared frame count."""
     docs = _t(spark, sf_dir, "documents")
-    return multimodal.sample_frames(multimodal.synthesize_avi_payload(docs))
+    return multimodal.sample_frames(multimodal.synthesize_payload(docs, "video/avi"))
 
 
 @register(
@@ -910,7 +910,7 @@ def q_multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode → binary column → parse round-trip recovered every field
     through a genuine RIFF parse."""
     docs = _t(spark, sf_dir, "documents")
-    return multimodal.decode_audio(multimodal.synthesize_wav_payload(docs))
+    return multimodal.decode_audio(multimodal.synthesize_payload(docs, "audio/wav"))
 
 
 @register(
@@ -945,7 +945,7 @@ def q_multimodal_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     read the actual pixel bytes (stride padding excluded) through a
     genuine DIB parse."""
     docs = _t(spark, sf_dir, "documents")
-    return multimodal.decode_image(multimodal.synthesize_bmp_payload(docs))
+    return multimodal.decode_image(multimodal.synthesize_payload(docs, "image/bmp"))
 
 
 @register(
@@ -976,7 +976,7 @@ def q_multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     — integer moment sums are exact and sqrt is IEEE correctly rounded in
     both engines, so even the RMS double hash-checks without rounding."""
     docs = _t(spark, sf_dir, "documents")
-    return multimodal.audio_features(multimodal.synthesize_wav_payload(docs))
+    return multimodal.audio_features(multimodal.synthesize_payload(docs, "audio/wav"))
 
 
 @register(
@@ -1015,7 +1015,7 @@ def q_multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     diverge between Python banker's and SQL half-up) over the known
     per-row pixel pattern, so the resampled mean hash-checks exactly."""
     docs = _t(spark, sf_dir, "documents")
-    return multimodal.resize_image(multimodal.synthesize_bmp_payload(docs))
+    return multimodal.resize_image(multimodal.synthesize_payload(docs, "image/bmp"))
 
 
 @register(
@@ -1050,7 +1050,7 @@ def q_multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (filters are lossless), so a hash match proves the decoder inverted
     every filter type over every image correctly."""
     docs = _t(spark, sf_dir, "documents")
-    return multimodal.decode_png(multimodal.synthesize_png_payload(docs))
+    return multimodal.decode_png(multimodal.synthesize_payload(docs, "image/png"))
 
 
 @register(
@@ -1089,7 +1089,7 @@ def q_multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     marker walk + entropy decode + IDCT chain, not just the geometry.
     The lossy AC path is PSNR-pinned in tests/test_multimodal.py."""
     docs = _t(spark, sf_dir, "documents")
-    return multimodal.decode_jpeg(multimodal.synthesize_jpeg_payload(docs))
+    return multimodal.decode_jpeg(multimodal.synthesize_payload(docs, "image/jpeg"))
 
 
 @register(
@@ -1121,7 +1121,8 @@ def q_multimodal_video_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame payload lengths, so a hash match proves the walk found every
     frame chunk (even-padding and all) and the header geometry."""
     docs = _t(spark, sf_dir, "documents")
-    return multimodal.decode_video(multimodal.synthesize_avi_payload(docs)).select(
+    avi = multimodal.synthesize_payload(docs, "video/avi")
+    return multimodal.decode_video(avi).select(
         "doc_id", "width", "height", "n_frames", "total_frame_bytes", "decoder"
     )
 
@@ -1163,7 +1164,7 @@ def q_multimodal_mp4_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     box walk and the sample map both recovered exactly what the writer
     laid down."""
     docs = _t(spark, sf_dir, "documents")
-    return multimodal.decode_mp4(multimodal.synthesize_mp4_payload(docs))
+    return multimodal.decode_mp4(multimodal.synthesize_payload(docs, "video/mp4"))
 
 
 @register(
@@ -1194,8 +1195,10 @@ def q_multimodal_mixed_container_sample(spark: SparkSession, sf_dir: str) -> Dat
     counts per parity, proving the dispatch picked the right parser for
     every row."""
     docs = _t(spark, sf_dir, "documents")
-    avi = multimodal.synthesize_avi_payload(docs.filter(F.col("doc_id") % 2 == 0))
-    mp4 = multimodal.synthesize_mp4_payload(docs.filter(F.col("doc_id") % 2 == 1))
+    evens = docs.filter(F.col("doc_id") % 2 == 0)
+    odds = docs.filter(F.col("doc_id") % 2 == 1)
+    avi = multimodal.synthesize_payload(evens, "video/avi")
+    mp4 = multimodal.synthesize_payload(odds, "video/mp4")
     return multimodal.sample_frames(avi.unionByName(mp4))
 
 
@@ -1241,7 +1244,7 @@ def q_multimodal_mjpg_frame_decode(spark: SparkSession, sf_dir: str) -> DataFram
     (H.264)."""
     docs = _t(spark, sf_dir, "documents")
     return multimodal.decode_mjpg_frames(
-        multimodal.synthesize_mjpg_payload(docs)
+        multimodal.synthesize_payload(docs, "video/mjpg-avi")
     )
 
 
@@ -1280,7 +1283,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver's pandas canonicalizer cannot hash array cells — it crashed
     on the old array<double> output), serializing the micro-int vector
     inside the Arrow kernel so no double is ever formatted by an
-    engine; (2) it runs over `synthesize_wav_payload` — the payload
+    engine; (2) it runs over the "audio/wav" payloads — the payload
     family whose container bytes are fully closed-form (44-byte RIFF
     header + affine sample stream, multimodal._wav_bytes), so the
     DuckDB oracle restates every byte and the histogram exactly. The
@@ -1290,7 +1293,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     extract_features (array face) == features_csv reparsed."""
     docs = _t(spark, sf_dir, "documents")
     return multimodal.extract_features_csv(
-        multimodal.synthesize_wav_payload(docs)
+        multimodal.synthesize_payload(docs, "audio/wav")
     )
 
 

@@ -869,7 +869,7 @@ def _dhash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dhash",
         sf_dir,
         lambda d: multimodal.image_dhash(
-            multimodal.synthesize_png_payload(_t(spark, sf_dir, "documents"))
+            multimodal.synthesize_payload(_t(spark, sf_dir, "documents"), "image/png")
         ).write.mode("overwrite").parquet(d),
     )
     return spark.read.parquet(d)

@@ -35,7 +35,7 @@ def q_streaming_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (README.md:41-52)."""
     docs = _t(spark, sf_dir, "documents")
     stream = _replay_documents(spark, sf_dir)
-    hashes = multimodal.image_dhash(multimodal.synthesize_png_payload(stream))
+    hashes = multimodal.image_dhash(multimodal.synthesize_payload(stream, "image/png"))
     drained = stream_sinks.run_to_memory(
         hashes, f"reg_stream_imgdedup_{next(_STREAM_SEQ)}"
     )

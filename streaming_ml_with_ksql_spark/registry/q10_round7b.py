@@ -420,7 +420,7 @@ def q_multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip breaks the hash. Arrow mapInPandas with size-aware
     fan-out; the decode is a narrow map (no shuffle)."""
     docs = _t(spark, sf_dir, "documents")
-    return multimodal.decode_gif(multimodal.synthesize_gif_payload(docs))
+    return multimodal.decode_gif(multimodal.synthesize_payload(docs, "image/gif"))
 
 
 @register(

@@ -1397,7 +1397,8 @@ def q_multimodal_hist_equalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     single wrong pixel or a biased CDF breaks the hash."""
     from ..operators import multimodal as mm
 
-    out = mm.hist_equalize(mm.synthesize_bmp_payload(_t(spark, sf_dir, "documents")))
+    bmp = mm.synthesize_payload(_t(spark, sf_dir, "documents"), "image/bmp")
+    out = mm.hist_equalize(bmp)
     return out.select(
         "doc_id",
         "width",

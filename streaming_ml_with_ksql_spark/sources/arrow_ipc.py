@@ -86,6 +86,8 @@ def encode_arrow_ipc(df: DataFrame, ddl: str) -> DataFrame:
     """
     schema = arrow_schema(ddl)
 
+    # One output row per Arrow BATCH (not per row), so this kernel keeps
+    # its own batch loop instead of sizing.map_rows.
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
@@ -106,6 +108,8 @@ def decode_arrow_ipc(payloads: DataFrame, ddl: str) -> DataFrame:
     """
     schema = arrow_schema(ddl)
 
+    # Each payload is a whole stream of rows, so this kernel keeps its own
+    # batch loop instead of sizing.map_rows.
     def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in schema]
         for pdf in batches:

@@ -18,24 +18,26 @@ put on the wire), and those bytes decode back to typed columns — the
 seam a real Kafka deployment swaps for ``from_avro``/``to_avro`` plus a
 schema-registry fetch with no query change.
 
-Scale shape: both directions are narrow Arrow ``mapInPandas`` kernels —
-one pass over the rows, no shuffle; the schema is a broadcast-sized JSON
-literal. Per-row pure-Python serialization is the honest in-sandbox cost
-(the native swap point is documented above), the same discipline as the
-image codecs.
+Scale shape: both directions are per-row kernels over ``sizing.map_rows``
+— narrow Arrow maps, one pass over the rows, no shuffle; the schema is a
+broadcast-sized JSON literal. Per-row pure-Python serialization is the
+honest in-sandbox cost (the native swap point is documented above), the
+same discipline as the image codecs.
 """
 
 from __future__ import annotations
 
 import json
 import struct
-from collections.abc import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..operators import sizing
+from .varint import read_varint, unzigzag, write_varint, zigzag
 
 __all__ = [
     "avro_schema_for",
@@ -85,38 +87,13 @@ def avro_schema_for(schema: T.StructType, *, name: str = "Value") -> str:
     )
 
 
-def _zigzag(n: int) -> int:
-    return (n << 1) ^ (n >> 63)
-
-
-def _unzigzag(n: int) -> int:
-    return (n >> 1) ^ -(n & 1)
-
-
 def _write_long(buf: bytearray, n: int) -> None:
-    z = _zigzag(int(n)) & 0xFFFFFFFFFFFFFFFF
-    while True:
-        b = z & 0x7F
-        z >>= 7
-        if z:
-            buf.append(b | 0x80)
-        else:
-            buf.append(b)
-            return
+    write_varint(buf, zigzag(int(n)))
 
 
 def _read_long(data: bytes, pos: int) -> tuple[int, int]:
-    shift, acc = 0, 0
-    end = len(data)
-    while True:
-        if pos >= end:
-            raise ValueError(f"truncated varint at byte {pos}")
-        b = data[pos]
-        pos += 1
-        acc |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return _unzigzag(acc), pos
-        shift += 7
+    u, pos = read_varint(data, pos, "varint")
+    return unzigzag(u), pos
 
 
 def _field_plan(schema_json: str):
@@ -196,31 +173,25 @@ def encode_avro_py(df: DataFrame, schema_json: str) -> DataFrame:
     Known conflation: in a NULLABLE double field, a genuine NaN value
     encodes as null — Arrow hands null doubles to the kernel as NaN, so
     the two are indistinguishable batch-side (pandas' own conflation).
-    Non-nullable doubles pass NaN through bit-exactly."""
+    For the same reason a NaN in a non-nullable double field raises as a
+    null would."""
     plan = _field_plan(schema_json)
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                buf = bytearray()
-                for (name, t, nullable), v in zip(plan, row):
-                    is_null = v is None or (
-                        not isinstance(v, (str, bytes, bytearray))
-                        and pd.isna(v)
-                    )
-                    if nullable:
-                        _write_long(buf, 0 if is_null else 1)
-                        if is_null:
-                            continue
-                    elif is_null:
-                        raise ValueError(f"null in non-nullable field {name}")
-                    _encode_value(buf, t, v)
-                out.append(bytes(buf))
-            yield pd.DataFrame({"value": out})
+    def _encode_avro(**row) -> dict:
+        buf = bytearray()
+        for name, t, nullable in plan:
+            v = row[name]
+            if nullable:
+                _write_long(buf, 0 if v is None else 1)
+                if v is None:
+                    continue
+            elif v is None:
+                raise ValueError(f"null in non-nullable field {name}")
+            _encode_value(buf, t, v)
+        return {"value": bytes(buf)}
 
     cols = [name for name, _t, _n in plan]
-    return df.select(*cols).mapInPandas(_encode, schema="value binary")
+    return sizing.map_rows(df.select(*cols), _encode_avro, "value binary")
 
 
 def decode_avro_py(
@@ -248,34 +219,26 @@ def decode_avro_py(
     }
     out_schema = ", ".join(f"{n} {spark_types[t]}" for n, t, _ in plan)
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for raw in pdf["value"]:
-                data = bytes(raw)
-                if npre and data[:npre] != pre:
-                    raise ValueError(
-                        "frame prefix mismatch: expected "
-                        f"{pre.hex()} got {data[:npre].hex()} — mixed "
-                        "schema ids in topic? group by id before decoding"
-                    )
-                pos, rec = npre, []
-                for _name, t, nullable in plan:
-                    if nullable:
-                        idx, pos = _read_long(data, pos)
-                        if idx == 0:
-                            rec.append(None)
-                            continue
-                    v, pos = _decode_value(data, pos, t)
-                    rec.append(v)
-                if pos != len(data):
-                    raise ValueError(
-                        f"trailing {len(data) - pos} bytes after record"
-                    )
-                rows.append(rec)
-            yield pd.DataFrame(rows, columns=[n for n, _t, _n in plan])
+    def _decode_avro(value: bytes) -> dict:
+        if npre and value[:npre] != pre:
+            raise ValueError(
+                "frame prefix mismatch: expected "
+                f"{pre.hex()} got {value[:npre].hex()} — mixed "
+                "schema ids in topic? group by id before decoding"
+            )
+        pos, rec = npre, {}
+        for name, t, nullable in plan:
+            if nullable:
+                idx, pos = _read_long(value, pos)
+                if idx == 0:
+                    rec[name] = None
+                    continue
+            rec[name], pos = _decode_value(value, pos, t)
+        if pos != len(value):
+            raise ValueError(f"trailing {len(value) - pos} bytes after record")
+        return rec
 
-    return df.select("value").mapInPandas(_decode, schema=out_schema)
+    return sizing.map_rows(df.select("value"), _decode_avro, out_schema)
 
 
 class LocalSchemaRegistry:
@@ -442,38 +405,30 @@ def decode_avro_resolved(
     }
     out_schema = ", ".join(f"{n} {spark_types[t]}" for n, t, _ in rplan)
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for raw in pdf["value"]:
-                data = bytes(raw)
-                if npre and data[:npre] != pre:
-                    raise ValueError(
-                        f"frame prefix mismatch: expected {pre.hex()} got "
-                        f"{data[:npre].hex()}"
-                    )
-                pos = npre
-                got: dict = {}
-                for name, wt, nullable in wplan:
-                    if nullable:
-                        idx, pos = _read_long(data, pos)
-                        if idx == 0:
-                            got[name] = None
-                            continue
-                    v, pos = _decode_value(data, pos, wt)
-                    got[name] = v
-                if pos != len(data):
-                    raise ValueError(
-                        f"trailing {len(data) - pos} bytes after record"
-                    )
-                rec = []
-                for name, rt, _nb in rplan:
-                    if name in got:
-                        wt = next(wt for wn, wt, _ in wplan if wn == name)
-                        rec.append(_promote(got[name], wt, rt))
-                    else:
-                        rec.append(rdefaults[name])
-                rows.append(rec)
-            yield pd.DataFrame(rows, columns=[n for n, _t, _n in rplan])
+    def _decode_avro_resolved(value: bytes) -> dict:
+        if npre and value[:npre] != pre:
+            raise ValueError(
+                f"frame prefix mismatch: expected {pre.hex()} got "
+                f"{value[:npre].hex()}"
+            )
+        pos = npre
+        got: dict = {}
+        for name, wt, nullable in wplan:
+            if nullable:
+                idx, pos = _read_long(value, pos)
+                if idx == 0:
+                    got[name] = None
+                    continue
+            got[name], pos = _decode_value(value, pos, wt)
+        if pos != len(value):
+            raise ValueError(f"trailing {len(value) - pos} bytes after record")
+        rec = {}
+        for name, rt, _nb in rplan:
+            if name in got:
+                wt = next(wt for wn, wt, _ in wplan if wn == name)
+                rec[name] = _promote(got[name], wt, rt)
+            else:
+                rec[name] = rdefaults[name]
+        return rec
 
-    return df.select("value").mapInPandas(_decode, schema=out_schema)
+    return sizing.map_rows(df.select("value"), _decode_avro_resolved, out_schema)

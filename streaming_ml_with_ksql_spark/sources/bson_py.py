@@ -34,11 +34,10 @@ types raise with the type byte named.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from ..operators import sizing
 
 __all__ = ["encode_document", "decode_document", "encode_bson", "decode_bson"]
 
@@ -159,36 +158,22 @@ def encode_bson(df: DataFrame, cols: list[str]) -> DataFrame:
     """rows → one BSON document payload per row (fields in declared
     column order, null = 0x0A). Narrow Arrow map, no shuffle."""
 
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def py(v):
-            return v.item() if hasattr(v, "item") else v
+    def _encode_bson(**row) -> dict:
+        return {"payload": encode_document({c: row[c] for c in cols})}
 
-        for pdf in batches:
-            payloads = [
-                encode_document(
-                    {c: (None if pd.isna(r[c]) else py(r[c])) for c in cols}
-                )
-                for r in pdf[cols].to_dict("records")
-            ]
-            yield pd.DataFrame({"payload": payloads})
-
-    return df.mapInPandas(enc, schema="payload binary")
+    return sizing.map_rows(df, _encode_bson, "payload binary")
 
 
 def decode_bson(payloads: DataFrame, cols: list[str], schema: str) -> DataFrame:
     """(payload binary) → typed columns per ``schema`` (a Spark DDL
     string matching ``cols``). Field presence is cross-checked per row."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p in pdf["payload"]:
-                doc = decode_document(bytes(p))
-                if set(doc) != set(cols):
-                    raise ValueError(
-                        f"BSON field mismatch: got {sorted(doc)}, want {sorted(cols)}"
-                    )
-                rows.append({c: doc[c] for c in cols})
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode_bson(payload: bytes, **_) -> dict:
+        doc = decode_document(payload)
+        if set(doc) != set(cols):
+            raise ValueError(
+                f"BSON field mismatch: got {sorted(doc)}, want {sorted(cols)}"
+            )
+        return doc
 
-    return payloads.mapInPandas(dec, schema=schema)
+    return sizing.map_rows(payloads, _decode_bson, schema)

@@ -52,8 +52,6 @@ __all__ = [
 # the reference's simulation start: 2022-03-15 14:00 UTC (generator.py:43)
 TS_START_MS = 1647352800000
 
-_STATES = ("main_page", "products_listing", "product_page", "product_gallery")
-
 # state -> [(threshold_on_u, next_state), ...], u in [0, 1_000_000)
 _HUMAN = {
     "main_page": ((800_000, "products_listing"), (1_000_000, "product_page")),
@@ -77,6 +75,8 @@ def _uniform(uid: int, t: int) -> int:
     return int(h[:7], 16) % 1_000_000
 
 
+# One row per (user, tick), n_ticks per input user, so the walk keeps its
+# own batch loop instead of sizing.map_rows.
 def _walk_batches(n_ticks: int):
     def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

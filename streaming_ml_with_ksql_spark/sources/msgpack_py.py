@@ -25,11 +25,10 @@ tags raise with the tag byte named.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from ..operators import sizing
 
 __all__ = ["pack_value", "unpack_value", "encode_msgpack", "decode_msgpack"]
 
@@ -174,39 +173,22 @@ def encode_msgpack(df: DataFrame, cols: list[str]) -> DataFrame:
     """rows → one MessagePack array payload per row (columns in the
     declared order, null = nil). Narrow Arrow map, no shuffle."""
 
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def py(v):
-            # numpy scalars are not Python int/bool instances — unwrap
-            return v.item() if hasattr(v, "item") else v
+    def _encode_msgpack(**row) -> dict:
+        return {"payload": _pack_row([row[c] for c in cols])}
 
-        for pdf in batches:
-            payloads = [
-                _pack_row([None if pd.isna(r[c]) else py(r[c]) for c in cols])
-                for r in pdf[cols].to_dict("records")
-            ]
-            yield pd.DataFrame({"payload": payloads})
-
-    return df.mapInPandas(enc, schema="payload binary")
+    return sizing.map_rows(df, _encode_msgpack, "payload binary")
 
 
 def decode_msgpack(payloads: DataFrame, cols: list[str], schema: str) -> DataFrame:
     """(payload binary) → typed columns per ``schema`` (a Spark DDL
     string matching ``cols``). Arity is cross-checked per row."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p in pdf["payload"]:
-                vals, end = unpack_value(bytes(p), 0)
-                if end != len(bytes(p)):
-                    raise ValueError(
-                        f"trailing bytes after msgpack row: {len(bytes(p)) - end}"
-                    )
-                if not isinstance(vals, list) or len(vals) != len(cols):
-                    raise ValueError(
-                        f"msgpack row arity mismatch: {vals!r:.60}"
-                    )
-                rows.append(dict(zip(cols, vals)))
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode_msgpack(payload: bytes, **_) -> dict:
+        vals, end = unpack_value(payload, 0)
+        if end != len(payload):
+            raise ValueError(f"trailing bytes after msgpack row: {len(payload) - end}")
+        if not isinstance(vals, list) or len(vals) != len(cols):
+            raise ValueError(f"msgpack row arity mismatch: {vals!r:.60}")
+        return dict(zip(cols, vals))
 
-    return payloads.mapInPandas(dec, schema=schema)
+    return sizing.map_rows(payloads, _decode_msgpack, schema)

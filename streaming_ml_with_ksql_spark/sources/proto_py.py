@@ -27,12 +27,12 @@ IndexError."""
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators import sizing
+from .varint import read_varint, write_varint
 
 __all__ = ["FieldSpec", "encode_proto_py", "decode_proto_py",
            "encode_confluent_proto", "decode_confluent_proto"]
@@ -47,56 +47,23 @@ _WIRE_LEN = 2
 _WIRE_FIXED32 = 5
 
 
-def _write_varint(out: bytearray, v: int) -> None:
-    """LEB128; negative int64 encodes as 2^64 + v (ten bytes), per spec."""
-    if v < 0:
-        v += 1 << 64
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
-
-
-def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
-    result = 0
-    shift = 0
-    start = pos
-    while True:
-        if pos >= len(data):
-            raise ValueError(f"truncated varint at byte {start}")
-        b = data[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-        if shift > 63:
-            raise ValueError(f"varint overruns 64 bits at byte {start}")
-    if result >= 1 << 63:  # two's-complement int64
-        result -= 1 << 64
-    return result, pos
-
-
 def _encode_row(row: dict, fields: list[FieldSpec]) -> bytes:
     out = bytearray()
     for num, name, ptype in fields:  # ascending field number = canonical
         v = row[name]
-        if v is None or (isinstance(v, float) and pd.isna(v)):
+        if v is None:
             continue  # proto3 presence: null = absent
         if ptype == "int64":
-            _write_varint(out, (num << 3) | _WIRE_VARINT)
-            _write_varint(out, int(v))
+            write_varint(out, (num << 3) | _WIRE_VARINT)
+            # negative int64 encodes as 2^64 + v (ten bytes), per spec
+            write_varint(out, int(v) & 0xFFFFFFFFFFFFFFFF)
         elif ptype == "double":
-            _write_varint(out, (num << 3) | _WIRE_FIXED64)
+            write_varint(out, (num << 3) | _WIRE_FIXED64)
             out += struct.pack("<d", float(v))
         elif ptype == "string":
             enc = str(v).encode("utf-8")
-            _write_varint(out, (num << 3) | _WIRE_LEN)
-            _write_varint(out, len(enc))
+            write_varint(out, (num << 3) | _WIRE_LEN)
+            write_varint(out, len(enc))
             out += enc
         else:
             raise ValueError(f"unsupported proto type {ptype!r}")
@@ -108,18 +75,19 @@ def _decode_payload(data: bytes, fields: list[FieldSpec]) -> dict:
     row: dict = {name: None for _, name, _ in fields}
     pos = 0
     while pos < len(data):
-        key, pos = _read_varint(data, pos)
+        key, pos = read_varint(data, pos, "varint")
         num, wire = key >> 3, key & 0x07
         if wire == _WIRE_VARINT:
-            val, pos = _read_varint(data, pos)
+            val, pos = read_varint(data, pos, "varint")
+            val -= (val >> 63) << 64  # two's-complement int64
         elif wire == _WIRE_FIXED64:
             if pos + 8 > len(data):
                 raise ValueError(f"truncated fixed64 at byte {pos}")
             (val,) = struct.unpack_from("<d", data, pos)
             pos += 8
         elif wire == _WIRE_LEN:
-            ln, pos = _read_varint(data, pos)
-            if ln < 0 or pos + ln > len(data):
+            ln, pos = read_varint(data, pos, "varint")
+            if pos + ln > len(data):
                 raise ValueError(f"truncated length-delimited at byte {pos}")
             val = data[pos : pos + ln]
             pos += ln
@@ -149,17 +117,10 @@ def encode_proto_py(df: DataFrame, fields: list[FieldSpec]) -> DataFrame:
     ordered = sorted(fields)
     cols = [name for _, name, _ in ordered]
 
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                _encode_row(
-                    {c: (None if pd.isna(r[c]) else r[c]) for c in cols}, ordered
-                )
-                for r in pdf[cols].to_dict("records")
-            ]
-            yield pd.DataFrame({"payload": payloads})
+    def _encode_proto(**row) -> dict:
+        return {"payload": _encode_row(row, ordered)}
 
-    return df.mapInPandas(enc, schema="payload binary")
+    return sizing.map_rows(df, _encode_proto, "payload binary")
 
 
 def decode_proto_py(
@@ -170,12 +131,10 @@ def decode_proto_py(
     fields surface as nulls."""
     ordered = sorted(fields)
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [_decode_payload(bytes(p), ordered) for p in pdf["payload"]]
-            yield pd.DataFrame(rows, columns=[n for _, n, _ in ordered])
+    def _decode_proto(payload: bytes, **_) -> dict:
+        return _decode_payload(payload, ordered)
 
-    return payloads.mapInPandas(dec, schema=schema)
+    return sizing.map_rows(payloads, _decode_proto, schema)
 
 
 def encode_confluent_proto(
@@ -226,18 +185,13 @@ def decode_confluent_proto(
     fields = [tuple(f) for f in _json.loads(registry.by_id(sid))]
     frame = _struct.pack(">bIb", 0, sid, 0)
 
-    def strip(batches):
-        for pdf in batches:
-            vals = []
-            for p in pdf["payload"]:
-                b = bytes(p)
-                if b[:6] != frame:
-                    raise ValueError(
-                        f"frame mismatch: expected schema id {sid} on "
-                        "every row (mixed-id topic?)"
-                    )
-                vals.append(b[6:])
-            yield pd.DataFrame({"payload": vals})
+    def _strip_confluent_frame(payload: bytes, **_) -> dict:
+        if payload[:6] != frame:
+            raise ValueError(
+                f"frame mismatch: expected schema id {sid} on "
+                "every row (mixed-id topic?)"
+            )
+        return {"payload": payload[6:]}
 
-    stripped = payloads.mapInPandas(strip, schema="payload binary")
+    stripped = sizing.map_rows(payloads, _strip_confluent_frame, "payload binary")
     return decode_proto_py(stripped, fields, schema)

@@ -35,11 +35,11 @@ raise with the nibble named.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from ..operators import sizing
+from .varint import read_varint, unzigzag, write_varint, zigzag
 
 __all__ = [
     "encode_struct",
@@ -56,50 +56,13 @@ _DOUBLE = 0x07
 _BINARY = 0x08
 
 
-def _zigzag(v: int) -> int:
-    return (v << 1) ^ (v >> 63)
-
-
-def _unzigzag(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)
-
-
-def _write_varint(u: int, out: bytearray) -> None:
-    if u < 0:
-        raise ValueError(f"varint must be non-negative: {u}")
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
-
-
-def _read_varint(data: bytes, pos: int, what: str) -> tuple[int, int]:
-    u = 0
-    shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError(f"truncated thrift varint ({what}) at byte {pos}")
-        b = data[pos]
-        pos += 1
-        u |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return u, pos
-        shift += 7
-        if shift > 70:
-            raise ValueError(f"thrift varint too long ({what}) at byte {pos}")
-
-
 def _field_header(fid: int, ftype: int, last_fid: int, out: bytearray) -> None:
     delta = fid - last_fid
     if 1 <= delta <= 15:
         out.append((delta << 4) | ftype)
     else:
         out.append(ftype)
-        _write_varint(_zigzag(fid) & 0xFFFFFFFFFFFFFFFF, out)
+        write_varint(out, zigzag(fid))
 
 
 def encode_struct(values: dict[int, object]) -> bytes:
@@ -119,18 +82,18 @@ def encode_struct(values: dict[int, object]) -> bytes:
             if not -0x8000000000000000 <= v <= 0x7FFFFFFFFFFFFFFF:
                 raise ValueError(f"int out of 64-bit range: {v}")
             _field_header(fid, _I64, last, out)
-            _write_varint(_zigzag(v) & 0xFFFFFFFFFFFFFFFF, out)
+            write_varint(out, zigzag(v))
         elif isinstance(v, float):
             _field_header(fid, _DOUBLE, last, out)
             out += struct.pack("<d", v)
         elif isinstance(v, str):
             b = v.encode("utf-8")
             _field_header(fid, _BINARY, last, out)
-            _write_varint(len(b), out)
+            write_varint(out, len(b))
             out += b
         elif isinstance(v, (bytes, bytearray)):
             _field_header(fid, _BINARY, last, out)
-            _write_varint(len(v), out)
+            write_varint(out, len(v))
             out += bytes(v)
         else:
             raise ValueError(f"unsupported type for thrift: {type(v)!r}")
@@ -157,8 +120,8 @@ def decode_struct(data: bytes) -> dict[int, object]:
         if delta:
             fid = last + delta
         else:
-            u, pos = _read_varint(data, pos, "field id")
-            fid = _unzigzag(u)
+            u, pos = read_varint(data, pos, "thrift varint (field id)")
+            fid = unzigzag(u)
         if fid <= 0:
             raise ValueError(f"invalid thrift field id {fid} at byte {pos}")
         if fid in out:
@@ -169,8 +132,8 @@ def decode_struct(data: bytes) -> dict[int, object]:
         elif ftype == _FALSE:
             out[fid] = False
         elif ftype == _I64:
-            u, pos = _read_varint(data, pos, "i64")
-            out[fid] = _unzigzag(u)
+            u, pos = read_varint(data, pos, "thrift varint (i64)")
+            out[fid] = unzigzag(u)
         elif ftype == _DOUBLE:
             if pos + 8 > len(data):
                 raise ValueError(f"truncated thrift double at byte {pos}")
@@ -179,7 +142,7 @@ def decode_struct(data: bytes) -> dict[int, object]:
         elif ftype == _BINARY:
             # string and binary share type 8 on the wire; return raw
             # bytes and let the schema-aware frame layer decode UTF-8
-            n, pos = _read_varint(data, pos, "binary length")
+            n, pos = read_varint(data, pos, "thrift varint (binary length)")
             if pos + n > len(data):
                 raise ValueError(f"truncated thrift binary at byte {pos}")
             out[fid] = bytes(data[pos : pos + n])
@@ -198,23 +161,10 @@ def encode_thrift(df: DataFrame, cols: list[str]) -> DataFrame:
     (0-based) becomes field id i+1; null = field omitted. Narrow Arrow
     map, no shuffle."""
 
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def py(v):
-            return v.item() if hasattr(v, "item") else v
+    def _encode_thrift(**row) -> dict:
+        return {"payload": encode_struct({i + 1: row[c] for i, c in enumerate(cols)})}
 
-        for pdf in batches:
-            payloads = [
-                encode_struct(
-                    {
-                        i + 1: (None if pd.isna(r[c]) else py(r[c]))
-                        for i, c in enumerate(cols)
-                    }
-                )
-                for r in pdf[cols].to_dict("records")
-            ]
-            yield pd.DataFrame({"payload": payloads})
-
-    return df.mapInPandas(enc, schema="payload binary")
+    return sizing.map_rows(df, _encode_thrift, "payload binary")
 
 
 def decode_thrift(payloads: DataFrame, cols: list[str], schema: str) -> DataFrame:
@@ -222,26 +172,15 @@ def decode_thrift(payloads: DataFrame, cols: list[str], schema: str) -> DataFram
     maps back to column i, absent field = null. Unknown ids raise (the
     declared schema is the contract, like decode_bson)."""
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p in pdf["payload"]:
-                vals = decode_struct(bytes(p))
-                if any(fid > len(cols) for fid in vals):
-                    raise ValueError(
-                        f"thrift field id beyond schema arity {len(cols)}: "
-                        f"{sorted(vals)}"
-                    )
-                rows.append(
-                    {
-                        c: (
-                            v.decode("utf-8")
-                            if isinstance(v := vals.get(i + 1), bytes)
-                            else v
-                        )
-                        for i, c in enumerate(cols)
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def _decode_thrift(payload: bytes, **_) -> dict:
+        vals = decode_struct(payload)
+        if any(fid > len(cols) for fid in vals):
+            raise ValueError(
+                f"thrift field id beyond schema arity {len(cols)}: {sorted(vals)}"
+            )
+        return {
+            c: v.decode("utf-8") if isinstance(v := vals.get(i + 1), bytes) else v
+            for i, c in enumerate(cols)
+        }
 
-    return payloads.mapInPandas(dec, schema=schema)
+    return sizing.map_rows(payloads, _decode_thrift, schema)

@@ -231,6 +231,8 @@ def decode_warc_gz(blobs: DataFrame) -> DataFrame:
     content_length, text. Narrow Arrow map — each task splits its own
     members (the boundary-parallel property .warc.gz exists for)."""
 
+    # One row per archive MEMBER, several per blob, so this kernel keeps
+    # its own batch loop instead of sizing.map_rows.
     def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []

@@ -253,6 +253,8 @@ def decode_zip(blobs: DataFrame) -> DataFrame:
     """(shard, blob) → one row per member: doc_id, method, n_bytes,
     text. Narrow Arrow map; CRC + sizes verified per member."""
 
+    # One row per archive MEMBER, several per blob, so this kernel keeps
+    # its own batch loop instead of sizing.map_rows.
     def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []

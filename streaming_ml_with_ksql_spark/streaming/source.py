@@ -26,7 +26,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["shard_table_to_dir", "stream_parquet_dir", "kafka_stream", "kafka_available"]
+__all__ = ["shard_table_to_dir", "stream_parquet_dir", "kafka_stream"]
 
 
 def shard_table_to_dir(
@@ -69,17 +69,6 @@ def stream_parquet_dir(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
-
-
-def kafka_available(spark: SparkSession) -> bool:
-    """True iff the spark-sql-kafka connector is on the classpath."""
-    try:
-        spark.readStream.format("kafka").option(
-            "kafka.bootstrap.servers", "none:9092"
-        ).option("subscribe", "probe").load()
-        return True
-    except Exception:
-        return False
 
 
 def kafka_stream(

@@ -118,7 +118,7 @@ def test_wav_roundtrip_is_real_riff(spark):
     out = {
         r.doc_id: r
         for r in multimodal.decode_audio(
-            multimodal.synthesize_wav_payload(docs)
+            multimodal.synthesize_payload(docs, "audio/wav")
         ).collect()
     }
     for i in range(12):
@@ -158,7 +158,7 @@ def test_bmp_roundtrip_is_real_dib(spark):
     out = {
         r.doc_id: r
         for r in multimodal.decode_image(
-            multimodal.synthesize_bmp_payload(docs)
+            multimodal.synthesize_payload(docs, "image/bmp")
         ).collect()
     }
     for i in range(10):
@@ -192,7 +192,7 @@ def test_audio_features_come_from_decoded_samples(spark):
     out = {
         r.doc_id: r
         for r in multimodal.audio_features(
-            multimodal.synthesize_wav_payload(docs)
+            multimodal.synthesize_payload(docs, "audio/wav")
         ).collect()
     }
     for i in range(8):
@@ -217,7 +217,7 @@ def test_resize_image_preserves_aspect_and_samples_real_pixels(spark):
     out = {
         r.doc_id: r
         for r in multimodal.resize_image(
-            multimodal.synthesize_bmp_payload(docs), max_side=16
+            multimodal.synthesize_payload(docs, "image/bmp"), max_side=16
         ).collect()
     }
     for i in range(10):
@@ -331,7 +331,7 @@ def test_png_spark_decode_matches_closed_form(spark):
     out = {
         r.doc_id: r
         for r in multimodal.decode_png(
-            multimodal.synthesize_png_payload(docs)
+            multimodal.synthesize_payload(docs, "image/png")
         ).collect()
     }
     for i in range(10):
@@ -363,7 +363,7 @@ def test_avi_roundtrip_is_real_riff_walk(spark):
 
     docs = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
     sampled = multimodal.sample_frames(
-        multimodal.synthesize_avi_payload(docs), stride=5
+        multimodal.synthesize_payload(docs, "video/avi"), stride=5
     ).collect()
     by_doc: dict[int, list] = {}
     for r in sampled:
@@ -457,8 +457,8 @@ def test_mixed_container_sampling_dispatches_by_magic(spark):
     from streaming_ml_with_ksql_spark.operators import multimodal
 
     docs = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
-    avi = multimodal.synthesize_avi_payload(docs.filter(F.col("doc_id") % 2 == 0))
-    mp4 = multimodal.synthesize_mp4_payload(docs.filter(F.col("doc_id") % 2 == 1))
+    avi = multimodal.synthesize_payload(docs.filter(F.col("doc_id") % 2 == 0), "video/avi")
+    mp4 = multimodal.synthesize_payload(docs.filter(F.col("doc_id") % 2 == 1), "video/mp4")
     rows = multimodal.sample_frames(avi.unionByName(mp4)).collect()
     assert {r.doc_id for r in rows} == set(range(10))
     for r in rows:
@@ -716,7 +716,7 @@ def test_gif_decode_distributed_matches_local(spark, sf_small):
     from streaming_ml_with_ksql_spark.operators import multimodal as mm
 
     docs = io_mod.load_table(spark, sf_small, "documents")
-    out = mm.decode_gif(mm.synthesize_gif_payload(docs)).collect()
+    out = mm.decode_gif(mm.synthesize_payload(docs, "image/gif")).collect()
     assert len(out) == docs.count()
     for r in out:
         w, h = mm._gif_dims(r["doc_id"])
@@ -777,8 +777,8 @@ def test_dhash_table_memoized_and_invalidated_by_sf_dir(spark, sf_small, sf_medi
     assert d2 != d1  # per-sf_dir artifact
 
     fresh = multimodal.image_dhash(
-        multimodal.synthesize_png_payload(
-            io_mod.load_table(spark, sf_small, "documents")
+        multimodal.synthesize_payload(
+            io_mod.load_table(spark, sf_small, "documents"), "image/png"
         )
     )
     assert t1 == sorted(map(tuple, fresh.collect()))

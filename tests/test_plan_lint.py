@@ -536,3 +536,51 @@ def test_registry_builds_no_shingle_table():
         f"registry modules building their own shingle table "
         f"(verify through text._pair_counts): {offenders}"
     )
+
+
+# ---------------------------------------------------------------------------
+# One per-row kernel loop: the codecs run their rows through sizing.map_rows
+# ---------------------------------------------------------------------------
+
+# Every function in operators/multimodal.py and sources/ that writes its own
+# Arrow batch loop, and why: each emits several rows per input row, or one
+# per batch, which sizing.map_rows (one row in, one row out) cannot express.
+OWN_BATCH_LOOPS = {
+    ("operators/multimodal.py", "_frame_sample_batches"): "one row per sampled frame",
+    ("operators/multimodal.py", "sample_frames"): "runs _frame_sample_batches",
+    ("operators/multimodal.py", "_mjpg_frame_decode_batches"): "one row per decoded frame",
+    ("operators/multimodal.py", "decode_mjpg_frames"): "runs _mjpg_frame_decode_batches",
+    ("sources/arrow_ipc.py", "encode_arrow_ipc"): "one IPC stream per Arrow batch",
+    ("sources/arrow_ipc.py", "decode_arrow_ipc"): "one row per streamed record",
+    ("sources/warc_py.py", "decode_warc_gz"): "one row per archive member",
+    ("sources/zip_py.py", "decode_zip"): "one row per archive member",
+    ("sources/generator.py", "_walk_batches"): "one row per user tick",
+    ("sources/generator.py", "synthetic_clickstream"): "runs _walk_batches",
+}
+_BATCH_LOOP = re.compile(r"mapInPandas\(|for pdf in\b")
+
+
+def _batch_loops(paths):
+    """(file, enclosing top-level function or '<module>') of every
+    ``mapInPandas(`` call and ``for pdf in`` loop in ``paths``."""
+    found = set()
+    for path in paths:
+        src = path.read_text()
+        spans = [
+            (top.lineno, top.end_lineno, top.name)
+            for top in ast.parse(src).body
+            if isinstance(top, ast.FunctionDef)
+        ]
+        for n, line in enumerate(src.splitlines(), 1):
+            if _BATCH_LOOP.search(line):
+                owner = next((f for a, b, f in spans if a <= n <= b), "<module>")
+                found.add((str(path.relative_to(_PKG)), owner))
+    return found
+
+
+def _codec_sources():
+    return [_PKG / "operators" / "multimodal.py", *sorted((_PKG / "sources").glob("*.py"))]
+
+
+def test_per_row_codecs_run_through_map_rows():
+    assert _batch_loops(_codec_sources()) == set(OWN_BATCH_LOOPS)

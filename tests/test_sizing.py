@@ -2,8 +2,8 @@
 row bound from its own plan (parquet footer for scan-shaped plans, exact
 count for materialized leaves, None otherwise) without executing derived
 DAGs; ``fan_out`` sizes CPU-kernel width from it; ``single_task`` is the
-one router to a single-task kernel; ``materialize`` is the one lineage
-cut."""
+one router to a single-task kernel; ``map_rows`` is the one per-row
+Python batch loop; ``materialize`` is the one lineage cut."""
 
 from __future__ import annotations
 
@@ -113,8 +113,8 @@ def test_cheap_codec_narrow_heavy_codec_wide(spark, sf_small):
     narrower than JPEG synthesis (DCT+Huffman) on the same 500-doc frame."""
     docs = sio.load_table(spark, sf_small, "documents")
     n_max = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    wav = multimodal.synthesize_wav_payload(docs)
-    jpg = multimodal.synthesize_jpeg_payload(docs)
+    wav = multimodal.synthesize_payload(docs, "audio/wav")
+    jpg = multimodal.synthesize_payload(docs, "image/jpeg")
     n_wav = wav.rdd.getNumPartitions()
     n_jpg = jpg.rdd.getNumPartitions()
     assert n_wav == 1  # 500 rows / 1024 rows-per-task
@@ -127,7 +127,7 @@ def test_cheap_codec_narrow_heavy_codec_wide(spark, sf_small):
     b = sorted(
         (r.doc_id, r.n_samples)
         for r in multimodal.decode_audio(
-            multimodal.synthesize_wav_payload(docs.repartition(16))
+            multimodal.synthesize_payload(docs.repartition(16), "audio/wav")
         )
         .select("doc_id", "n_samples")
         .collect()
@@ -190,6 +190,55 @@ def test_single_task_routes_and_feeds(spark, sf_small, caplog):
     joined = docs.join(docs, "doc_id")
     assert sizing.single_task(joined, max_rows=10**6, **kw) is None
     assert sizing.single_task(joined, max_rows=10, rows=3, **kw) is not None
+
+
+def _probe_row(id, label, score, **_):
+    """Reports what it was handed; returns its keys out of schema order."""
+    return {
+        "seen": f"{type(label).__name__}:{label}|{type(score).__name__}:{score}",
+        "maybe": None if label is None else len(label),
+        "id": id,
+    }
+
+
+def test_map_rows_hands_plain_values_and_orders_by_schema(spark):
+    df = spark.createDataFrame(
+        [(1, "ab", 0.5, 9), (2, None, None, 9), (3, "xyz", 2.0, 9)],
+        "id long, label string, score double, extra int",
+    )
+    out = sizing.map_rows(df, _probe_row, "id long, maybe int, seen string")
+    assert out.columns == ["id", "maybe", "seen"]
+    rows = sorted(out.collect())
+    assert [tuple(r) for r in rows] == [
+        (1, 2, "str:ab|float:0.5"),
+        (2, None, "NoneType:None|NoneType:None"),
+        (3, 3, "str:xyz|float:2.0"),
+    ]
+
+
+def test_map_rows_declared_int_with_nulls_round_trips(spark):
+    """An int column whose batch mixes ints and None (pandas makes it
+    float NaN) lands as the declared int with nulls in place."""
+    df = spark.range(6).repartition(1)
+    out = sizing.map_rows(
+        df,
+        lambda id: {"id": id, "half": None if id % 2 else id // 2},
+        "id long, half int",
+    )
+    assert out.schema["half"].dataType.simpleString() == "int"
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (0, 0), (1, None), (2, 1), (3, None), (4, 2), (5, None),
+    ]
+
+
+def _twice(id):
+    return {"id": 2 * id}
+
+
+def test_map_rows_plan_names_the_row_function(spark):
+    out = sizing.map_rows(spark.range(3), _twice, "id long")
+    assert "MapInPandas _twice(" in _plan(out)
+    assert sorted(r.id for r in out.collect()) == [0, 2, 4]
 
 
 def _group_jobs(sc, group: str) -> list[int]:
